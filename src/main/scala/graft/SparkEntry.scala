@@ -19,18 +19,20 @@ object SparkEntry {
   /** Exact, order-insensitive money aggregation: double → integer cents. */
   private def cents(c: Column): Column = round(c * 100, 0).cast("long")
 
-  /** The ASIA region key, looked up ONCE per (session, dir) and memoized:
-    * five queries anchor on it, and a per-query `.head()` serializes query
-    * submission with one tiny driver job each. */
+  /** Setup fixture, not a query result: the ASIA region key, looked up
+    * ONCE per (session, dir) and memoized. Five queries anchor on it, and a
+    * per-query `.head()` serializes query submission with one tiny driver
+    * job each. */
   private val asiaKeyCache = scala.collection.concurrent.TrieMap[(SparkSession, String), Int]()
   private def asiaKey(s: SparkSession, dir: String): Int =
     asiaKeyCache.getOrElseUpdate((s, dir),
       Tpch.table(s, dir, "region").where(col("r_name") === "ASIA")
         .select("r_regionkey").head().getInt(0))
 
-  /** Date-partitioned edge-log location, written ONCE per (session, dir)
-    * and memoized — the query entry then measures only what it
-    * demonstrates (a partition-pruned read), and the path carries the
+  /** Setup fixture, not a query result: the date-partitioned edge-log
+    * location, written ONCE per (session, dir) and memoized — the query
+    * entry then measures only what it demonstrates (a partition-pruned
+    * read), and the path carries the
     * session's applicationId so concurrent drivers (Verify + Bench, or
     * dirs whose 32-bit hashCodes collide) can never clobber each other's
     * log mid-read. */
@@ -53,8 +55,9 @@ object SparkEntry {
       log
     })
 
-  /** The learned BPE merge table, computed ONCE per (session, dir) and
-    * memoized as its collected ≤64 rows (the asiaKey pattern): q_bpe_encode
+  /** Setup fixture, not a query result: the learned BPE merge table that
+    * q_bpe_encode takes as input, computed ONCE per (session, dir) and
+    * memoized as its collected ≤64 rows (the asiaKey pattern). q_bpe_encode
     * demonstrates encoding, not re-training, so it must not re-measure the
     * learning loop — while q_bpe keeps calling [[graft.functions.TextOps.bpeMerges]]
     * fresh so the learning loop itself stays honestly timed. */
@@ -334,8 +337,7 @@ object SparkEntry {
       val gr = g(s, dir)
       val asia = gr.kind("region").where(col("r_name") === "ASIA").select("id")
       // same maxIter as q_shortest_weighted: the parent post-pass derivation
-      // adds no rounds, and the aligned bound lets both queries share one
-      // cached relaxation fixpoint under scan sharing
+      // adds no rounds, so both queries relax to the same cost column
       graft.algos.Algos.weightedShortestPathWithParent(gr.edges, asia,
         coalesce(col("quantity").cast("long"), lit(1L)), reverse = true, maxIter = 8)
     }),
@@ -1021,9 +1023,6 @@ object SparkEntry {
       val from = Tpch.table(s, dir, "customer")
         .join(asiaNations.select(col("n_nationkey")), col("c_nationkey") === col("n_nationkey"))
         .select(Vid.vid("customer", col("c_custkey")).as("id"))
-      // `to` uses the SAME source plan as q_sssp so the backward pass hits
-      // the shared BFS memo (the between query genuinely reuses the sssp
-      // distance tree — cross-query intermediate sharing, like reachCache)
       val to = gr.kind("region").where(col("r_name") === "ASIA").select("id")
       // the FK graph's diameter bounds both passes: customer→nation→region
       // forward (2), region←…←lineitem backward (4) — saved rounds are saved
@@ -1343,7 +1342,7 @@ object SparkEntry {
         Tpch.table(s, dir, "documents"), "doc_id", "text", chunkTokens = 8)),
     "q_pipeline_neardup" -> ((s, dir) => {
       // the near-dup pipeline END-TO-END, each stage independently oracled:
-      // Jaccard candidates (q_dedup_jaccard, shared pair index) →
+      // Jaccard candidates (q_dedup_jaccard's pair index) →
       // edit-distance verification (q_dedup_verify's gate) → connected-
       // component clusters with min-id keepers (q_dedup_clusters'
       // convention) — candidates the verifier rejects do NOT merge clusters
@@ -1362,8 +1361,8 @@ object SparkEntry {
         "doc_id", "text", maxDf = 50, minCos2Ppm = 500000)),
     "q_dedup_verify" -> ((s, dir) => {
       // the VERIFY stage after candidate generation: exact edit-distance
-      // similarity on the Jaccard candidate pairs only (the pair index is
-      // shared with q_dedup_jaccard under scan sharing) — O(|a|·|b|) per
+      // similarity on the Jaccard candidate pairs only (q_dedup_jaccard's
+      // pair index) — O(|a|·|b|) per
       // pair is affordable because the candidate set is keyed-join output,
       // never the corpus cross product
       val docs = Tpch.table(s, dir, "documents")

@@ -288,37 +288,13 @@ object Algos {
     * the visited set, so per-round work tracks frontier size — the same
     * shape GraphX Pregel computes, without the RDD conversion and
     * vertex-state machinery, and AQE-planned per round. */
-  /** Memoized per (session, edge plan, source plan, direction, bound) under
-    * scan sharing: different queries over the same graph genuinely reuse the
-    * same BFS tree (q_between's backward pass IS q_sssp's distance table).
-    * Keys hash the CALLER's plans — pre-checkpoint, so they repeat. */
-  private val bfsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, Int, Int, Boolean, Int), DataFrame]()
-
   def bfsDistances(vertices: DataFrame, edges: DataFrame, sources: DataFrame,
       reverse: Boolean = false, maxIter: Int = 1000)(implicit spark: SparkSession): DataFrame = {
-    def run(): DataFrame = {
-      val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
-      // duplicate edges are harmless (per-round dropDuplicates on ids): no
-      // dedup shuffle, just one narrow materialization shared by the rounds
-      val e = edges.select(col(from).as("__from"), col(to).as("__to"))
-        .localCheckpoint(eager = false)
-      bfsOnPrepared(e, sources, maxIter)
-    }
-    if (!graft.graph.Tpch.shareScans) run()
-    else {
-      if (bfsCache.size > 64) bfsCache.clear() // bound: never pin plans forever
-      bfsCache.getOrElseUpdate(
-      (spark, edges.queryExecution.analyzed.semanticHash(),
-        sources.queryExecution.analyzed.semanticHash(), reverse, maxIter),
-        run().localCheckpoint(eager = false))
-    }
-  }
-
-  /** BFS over an already-materialized (__from, __to) edge frame — lets
-    * callers running several passes over the same graph (verticesBetween)
-    * share ONE narrow edge materialization instead of one per pass. */
-  private def bfsOnPrepared(e: DataFrame, sources: DataFrame, maxIter: Int): DataFrame = {
+    val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
+    // duplicate edges are harmless (per-round dropDuplicates on ids): no
+    // dedup shuffle, just one narrow materialization shared by the rounds
+    val e = edges.select(col(from).as("__from"), col(to).as("__to"))
+      .localCheckpoint(eager = false)
     var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
       .withColumn("dist", lit(0)).localCheckpoint(eager = false)
     var frontier = dist
@@ -351,7 +327,7 @@ object Algos {
   def weightedShortestPath(edges: DataFrame, sources: DataFrame, cost: Column,
       reverse: Boolean = false, maxIter: Int = 50,
       localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame =
-    relaxLoop(edges, sources, cost, reverse, maxIter, accept = None, localMaxEdges)
+    relaxLoop(relaxEdges(edges, cost, reverse), sources, maxIter, accept = None, localMaxEdges)
 
   /** [[weightedShortestPath]] + PARENT POINTERS — the reference's
     * shortest-path returns the actual path; distributed, the path tree IS
@@ -369,10 +345,8 @@ object Algos {
     // Carrying parents through the loop would instead fire extra
     // "refinement" rounds whenever an equal-cost smaller-id predecessor
     // appears late (strictly more rounds, wider shuffles, same answer).
-    val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
-    val eRaw = edges.select(col(from).as("__from"), col(to).as("__to"), cost.cast("long").as("__w"))
-    val e = eRaw.localCheckpoint(eager = false)
-    val dist = bfsRelax(e, eRaw, sources, maxIter, localMaxEdges)
+    val e = relaxEdges(edges, cost, reverse)
+    val dist = relaxLoop(e, sources, maxIter, accept = None, localMaxEdges)
     val parents = e
       .join(dist.select(col("id").as("__from"), col("cost").as("__pc")), "__from")
       .join(dist.select(col("id").as("__to"), col("cost").as("__tc")), "__to")
@@ -382,28 +356,6 @@ object Algos {
     // edge can satisfy the invariant at cost 0
     dist.join(parents, Seq("id"), "left")
   }
-
-  /** Plain cost-relaxation fixpoint, memoized per (session, prepared-edge
-    * plan, source plan, bound) under scan sharing: the cost-only and
-    * parent-deriving shortest-path queries over the same weighted graph
-    * share one fixpoint (the prepared edge frame already embeds cost and
-    * direction, so its semantic hash is the complete cache key). */
-  private val relaxCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, Int, Int, Int, Long), DataFrame]()
-
-  /** `eKey` must be the PRE-checkpoint edge plan: a localCheckpoint wraps a
-    * fresh RDD per call, so its semantic hash never repeats across queries
-    * and would defeat the cache. */
-  private def bfsRelax(e: DataFrame, eKey: DataFrame, sources: DataFrame,
-      maxIter: Int, localMaxEdges: Long = 50000L): DataFrame =
-    if (!graft.graph.Tpch.shareScans) bfsRelaxImpl(e, sources, maxIter, localMaxEdges)
-    else {
-      if (relaxCache.size > 64) relaxCache.clear() // bound: never pin plans forever
-      relaxCache.getOrElseUpdate(
-        (e.sparkSession, eKey.queryExecution.analyzed.semanticHash(),
-          sources.queryExecution.analyzed.semanticHash(), maxIter, localMaxEdges),
-        bfsRelaxImpl(e, sources, maxIter, localMaxEdges).localCheckpoint(eager = false))
-    }
 
   /** Guarded LOCAL replay of the relaxation loop (the kCore/CC pattern):
     * the EXACT same round-synchronous recurrence — per round, min candidate
@@ -469,62 +421,6 @@ object Algos {
     Some(dist.iterator.map { case (v, c) => (v, c) }.toSeq.toDF("id", "cost"))
   }
 
-  private def bfsRelaxImpl(e: DataFrame, sources: DataFrame, maxIter: Int,
-      localMaxEdges: Long = 50000L): DataFrame = {
-    // sources are guarded too: a huge source set over a small subgraph must
-    // not be collected; type gate keeps non-long ids on the distributed path
-    if (integralCols(e, "__from", "__to") &&
-        integralCols(sources, sources.columns.head) &&
-        atMost(e, localMaxEdges) && atMost(sources, localMaxEdges)) {
-      relaxLocal(e, sources, maxIter, accept = None) match {
-        case Some(d) => return d
-        case None    => () // null ids: the distributed rounds handle them
-      }
-    }
-    var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
-      .withColumn("cost", lit(0L)).localCheckpoint(eager = false)
-    var frontier = dist
-    // Guarded frontier broadcast (guide §3.1; the Descend idiom): the
-    // checkpointed frontier blinds stats, so every round's expansion would
-    // SMJ — exchanging the FULL edge frame per round even for a one-row
-    // frontier. The round-(i-1) probe action already counts the improved
-    // set, so broadcast eligibility is FREE; the first round probes the
-    // (bounded, deduped) source set once. Past the guard the shuffle join
-    // stands — a flooded frontier on a real cluster must not be built into
-    // one hash relation.
-    val bcastRows = 1000000L
-    var frontierSmall = graft.plans.Scale.fitsBroadcast(dist, bcastRows)
-    var done = false
-    var i = 0
-    while (!done && i < maxIter) {
-      // lazy checkpoint + count = ONE action per round (the transitive-
-      // reduction rule): count completes the checkpoint the merge then reads
-      val fB = if (frontierSmall) broadcast(frontier) else frontier
-      val improved = e
-        .join(fB.withColumnRenamed("id", "__from"), "__from")
-        .select(col("__to").as("id"), (col("cost") + col("__w")).as("cost"))
-        .groupBy("id").agg(min(col("cost")).as("cost"))
-        .join(dist.withColumnRenamed("cost", "__old"), Seq("id"), "left")
-        .where(col("__old").isNull || col("cost") < col("__old"))
-        .select("id", "cost")
-        .localCheckpoint(eager = false)
-      val n = improved.count()
-      if (n == 0L) done = true
-      else {
-        frontierSmall = n <= bcastRows
-        // the anti-join build side is the improved set itself — same free
-        // count, same guard: dist (|reached|-sized) stays unshuffled
-        val impB = if (frontierSmall) broadcast(improved.select("id"))
-                   else improved.select("id")
-        dist = dist.join(impB, Seq("id"), "left_anti")
-          .unionByName(improved).localCheckpoint(eager = false)
-        frontier = improved
-      }
-      i += 1
-    }
-    dist
-  }
-
   /** fermor `shortest-path`'s full contract: lowest-cost search for vertices
     * satisfying `accept` (a predicate Column over `id`), with early exit —
     * once the cheapest accepted cost B is known and the frontier's minimum
@@ -534,28 +430,39 @@ object Algos {
   def cheapestAccepted(edges: DataFrame, sources: DataFrame, cost: Column, accept: Column,
       reverse: Boolean = false, maxIter: Int = 50,
       localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
-    val dist = relaxLoop(edges, sources, cost, reverse, maxIter, accept = Some(accept),
-      localMaxEdges)
+    val dist = relaxLoop(relaxEdges(edges, cost, reverse), sources, maxIter,
+      accept = Some(accept), localMaxEdges)
     val hits = dist.where(accept).localCheckpoint(eager = false)
     hits.join(hits.agg(min(col("cost")).as("cost")), Seq("cost"), "left_semi")
       .select("id", "cost")
   }
 
-  private def relaxLoop(edges: DataFrame, sources: DataFrame, cost: Column,
-      reverse: Boolean, maxIter: Int, accept: Option[Column],
-      localMaxEdges: Long = 50000L): DataFrame = {
+  /** The relaxation loop's edge frame: (__from, __to, __w) in the walk
+    * direction. Parallel edges are fine un-deduped: the per-round min-merge
+    * collapses them; one narrow materialization is shared by all rounds.
+    * NULL weights are dropped by construction: costs are documented
+    * strictly positive, a null __w would null the frontier's min(cost) —
+    * the drain signal — terminating the relaxation early instead of
+    * relaxing on, and the local replay reads __w as a primitive long. */
+  private def relaxEdges(edges: DataFrame, cost: Column, reverse: Boolean): DataFrame = {
     val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
-    // parallel edges are fine un-deduped: the per-round min-merge collapses
-    // them; one narrow materialization shared by all rounds. NULL weights
-    // are dropped by construction: costs are documented strictly positive,
-    // and a null __w would null the frontier's min(cost) — the drain
-    // signal — terminating the relaxation early instead of relaxing on
-    val eRaw = edges.select(col(from).as("__from"), col(to).as("__to"), cost.cast("long").as("__w"))
+    edges.select(col(from).as("__from"), col(to).as("__to"), cost.cast("long").as("__w"))
       .where(col("__w").isNotNull)
-    val e = eRaw.localCheckpoint(eager = false)
-    if (accept.isEmpty) return bfsRelax(e, eRaw, sources, maxIter, localMaxEdges)
+      .localCheckpoint(eager = false)
+  }
+
+  /** Round-synchronous delta relaxation over a [[relaxEdges]] frame: each
+    * round relaxes only edges out of the newest improved set, then
+    * min-merges into the distance table. `accept` (a predicate over `id`)
+    * adds fermor's early exit: once the frontier minimum reaches the
+    * cheapest accepted cost, nothing later can beat it. Below the guard the
+    * same recurrence replays on the driver ([[relaxLocal]]). */
+  private def relaxLoop(e: DataFrame, sources: DataFrame, maxIter: Int,
+      accept: Option[Column], localMaxEdges: Long): DataFrame = {
     // probe + collect the CHECKPOINTED frame: a derived edge graph evaluates
-    // its upstream once (the kTruss probe rule); sources guarded like edges
+    // its upstream once (the kTruss probe rule). Sources are guarded too: a
+    // huge source set over a small subgraph must not be collected; the type
+    // gate keeps non-long ids on the distributed path
     if (integralCols(e, "__from", "__to") &&
         integralCols(sources, sources.columns.head) &&
         atMost(e, localMaxEdges) && atMost(sources, localMaxEdges)) {
@@ -567,12 +474,17 @@ object Algos {
     var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
       .withColumn("cost", lit(0L)).localCheckpoint(eager = false)
     var frontier = dist
-    // guarded frontier broadcast — same rationale and guard as
-    // [[bfsRelaxImpl]]; here the frontier count rides the drain-probe agg
-    // (one extra count column on a row the probe already scans) so the
-    // guard costs zero additional jobs after the first round
+    // Guarded frontier broadcast (guide §3.1; the Descend idiom): the
+    // checkpointed frontier blinds stats, so every round's expansion would
+    // SMJ — exchanging the FULL edge frame per round even for a one-row
+    // frontier. The frontier count rides the drain-probe agg, so the guard
+    // costs no extra job after the first round, which probes the (bounded,
+    // deduped) source set once. Past the guard the shuffle join stands — a
+    // flooded frontier on a real cluster must not be built into one hash
+    // relation.
     val bcastRows = 1000000L
     var frontierSmall = graft.plans.Scale.fitsBroadcast(dist, bcastRows)
+    val accepted = accept.getOrElse(lit(false))
     var bestAccepted = Long.MaxValue
     var done = false
     var i = 0
@@ -590,10 +502,12 @@ object Algos {
       // scans every partition (completing the lazy checkpoint the merge
       // joins then read), and a null frontier minimum means no row improved
       val row = improved.agg(min(col("cost")),
-        min(when(accept.get, col("cost"))), count(lit(1))).head()
+        min(when(accepted, col("cost"))), count(lit(1))).head()
       if (row.isNullAt(0)) done = true
       else {
         frontierSmall = row.getLong(2) <= bcastRows
+        // the anti-join build side is the improved set itself — same free
+        // count, same guard: dist (|reached|-sized) stays unshuffled
         val impB = if (frontierSmall) broadcast(improved.select("id"))
                    else improved.select("id")
         dist = dist.join(impB, Seq("id"), "left_anti")
@@ -697,7 +611,7 @@ object Algos {
       // ONE bounded probe sizes the assignment AND materializes its
       // checkpoint (four readers below); a measured-small pm broadcasts
       // into the projection/universe joins, so the batch is never
-      // shuffled against |V| (guide §3.1 — the bfsRelaxImpl idiom). Past
+      // shuffled against |V| (guide §3.1 — the relaxLoop idiom). Past
       // the guard the shuffle joins stand.
       val pmN = graft.plans.Scale.oneWaveLimit(pm)(
         pm.limit(math.min(deltaMaxEdges + 1, Int.MaxValue.toLong).toInt).count())
@@ -1673,33 +1587,8 @@ object Algos {
     * signal, and the cap bounds the wedge explosion at `maxDeg²` per
     * center). Everything is keyed joins + one (id_a,id_b) agg — the
     * candidate join never goes cartesian. */
-  private val linkPredCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Long, Long, Long), DataFrame]()
-
   def linkPrediction(edges: DataFrame, minCommon: Long, maxDeg: Long,
-      scale: Long = 1000000L): DataFrame =
-    if (!graft.graph.Tpch.shareScans)
-      linkPredictionImpl(edges, minCommon, maxDeg, scale)
-    else {
-      // under the multi-query scan-sharing regime the predicted-link table
-      // is an intermediate shared by the link-prediction query and the
-      // k-truss query over the SAME base graph — compute it once per
-      // (input plan, parameters). Same contract as Dedup.pairsCache
-      // (session-keyed, two independent plan hashes, bounded size) with
-      // one difference: the callers build their input plan independently,
-      // so the raw toString carries fresh exprIds per call and would never
-      // hit — both hashes here are of the CANONICALIZED plan (exprIds
-      // normalized), which is exactly the equivalence the reuse wants.
-      val plan = edges.queryExecution.analyzed
-      val key = (edges.sparkSession, plan.semanticHash(),
-        plan.canonicalized.toString.hashCode, minCommon, maxDeg, scale)
-      if (linkPredCache.size > 32) linkPredCache.clear()
-      linkPredCache.getOrElseUpdate(key,
-        linkPredictionImpl(edges, minCommon, maxDeg, scale).localCheckpoint(eager = false))
-    }
-
-  private def linkPredictionImpl(edges: DataFrame, minCommon: Long, maxDeg: Long,
-      scale: Long): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(minCommon >= 1 && maxDeg >= 2)
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
@@ -2268,32 +2157,11 @@ object Algos {
     cur.groupBy("id").agg(sum(col(valueCol)).as(valueCol))
   }
 
-  /** Immediate dominators (fermor algo.clj `immediate-dominators`) via the
-    * iterative Cooper–Harvey–Kennedy algorithm on reverse-postorder.
-    * Dominance is DFS-order-sequential, so like the reference this runs
-    * single-node — on a CFG-scale subgraph extracted distributedly. Returns
-    * (id, idom); the entry maps to itself. */
   /** Edges reachable from `entry` — the distributed extraction step in front
     * of every driver-side DFS analysis (dominators, loop forest): a semi-join
     * BFS over a deduped edge table, so what reaches the driver is only the
     * entry's flow subgraph, not the whole 100 TB edge set. */
-  private val reachCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, Long, Int), DataFrame]()
-
-  def reachableEdges(entry: Long, edges: DataFrame, maxIter: Int = 50): DataFrame =
-    if (!graft.graph.Tpch.shareScans) reachableEdgesImpl(entry, edges, maxIter)
-    else {
-      // under the multi-query scan-sharing regime (Bench/Verify), several
-      // queries analyze the same flow subgraph (dominators, dominator-depth,
-      // loop forest) — extract it once per (session, entry, semantic plan);
-      // session-keyed so a dead session's plans are never resurrected
-      val key = (edges.sparkSession, entry, edges.queryExecution.analyzed.semanticHash())
-      if (reachCache.size > 64) reachCache.clear() // bound: never pin plans forever
-      reachCache.getOrElseUpdate(key,
-        reachableEdgesImpl(entry, edges, maxIter).localCheckpoint(eager = false))
-    }
-
-  private def reachableEdgesImpl(entry: Long, edges: DataFrame, maxIter: Int): DataFrame = {
+  def reachableEdges(entry: Long, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // no upfront dedup of the (possibly huge) edge table: duplicate edges
@@ -2438,9 +2306,6 @@ object Algos {
       .groupBy("id").agg(min("component").as("component"))
   }
 
-  private val idomCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, Long, Int), scala.collection.mutable.HashMap[Long, Long]]()
-
   /** Driver-side collect of the entry's reachable flow subgraph, GUARDED: a
     * loud failure beats an OOM'd driver. The DFS-order analyses this feeds
     * (dominators, numberings, loop forest, intervals, frontiers) are
@@ -2472,6 +2337,11 @@ object Algos {
     out
   }
 
+  /** Immediate dominators (fermor algo.clj `immediate-dominators`) via the
+    * iterative Cooper–Harvey–Kennedy algorithm on reverse-postorder.
+    * Dominance is DFS-order-sequential, so like the reference this runs
+    * single-node — on a CFG-scale subgraph extracted distributedly. Returns
+    * (id, idom); the entry maps to itself. */
   def immediateDominators(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -2479,25 +2349,10 @@ object Algos {
     // single-threaded on the driver, which at millions of CFG blocks cost
     // more than the CHK solve itself (the 10× sweep's whole q_dominators
     // overhead); RDD partitions encode in parallel across the executors
-    val arr = idomMap(entry, edges).toArray
+    val arr = idomLocal(entry, collectReachable(entry, edges)).toArray
     spark.sparkContext
       .parallelize(arr.toIndexedSeq, math.min(32, 1 + arr.length / 65536))
       .toDF("id", "idom")
-  }
-
-  /** The idom map behind [[immediateDominators]] / [[dominatorDepth]] —
-    * memoized per (session, entry, plan) under scan sharing, because the
-    * dominator-tree queries (idom, depth) share the identical CHK solve. */
-  private def idomMap(entry: Long, edges: DataFrame): scala.collection.mutable.HashMap[Long, Long] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    def solve() = idomLocal(entry, collectReachable(entry, edges))
-    if (!graft.graph.Tpch.shareScans) solve()
-    else {
-      if (idomCache.size > 64) idomCache.clear() // bound: never pin plans forever
-      idomCache.getOrElseUpdate(
-        (spark, entry, edges.queryExecution.analyzed.semanticHash()), solve())
-    }
   }
 
   /** Cooper–Harvey–Kennedy on reverse postorder, driver arrays. `es` must
@@ -2578,7 +2433,7 @@ object Algos {
   def dominatorDepth(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val idom = idomMap(entry, edges)
+    val idom = idomLocal(entry, collectReachable(entry, edges))
     // memoized depths via an ITERATIVE chain walk: recursion here would blow
     // the JVM stack on a deep linear CFG (10⁵-block chain) before the memo
     // could help
@@ -2762,7 +2617,7 @@ object Algos {
                .dropDuplicates("src", "dst"))
       .localCheckpoint(eager = false)
     // forward phase: per-level (s, v, sigma); keep each level for the sweep.
-    // Guarded broadcasts throughout (guide §3.1; the bfsRelaxImpl idiom):
+    // Guarded broadcasts throughout (guide §3.1; the relaxLoop idiom):
     // every per-level join would otherwise SMJ against the stats-blind
     // checkpoints, exchanging the FULL edge frame per level; level sizes
     // come free from the drain-probe counts, so measured-small frontiers /
@@ -2991,9 +2846,6 @@ object Algos {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // both passes go through the memoizing bfsDistances: under scan sharing
-    // a pass whose (edges, sources, direction) another query already ran
-    // (e.g. the backward pass = the sssp distance table) is free
     val fwdF = Future { bfsDistances(vertices, edges, from, maxIter = fwdMaxIter) }
     val bwdF = Future { bfsDistances(vertices, edges, to, reverse = true, maxIter = bwdMaxIter) }
     val fwd = Await.result(fwdF, Duration.Inf)
@@ -3458,7 +3310,7 @@ object Algos {
           def impliedHas(s0: Long, v0: Long) = implied.get(s0).exists(_.contains(v0))
           var nImplied = 0L
           // saturate: a force-local caller passes localMaxEdges = MaxValue
-          // (the ComparePaths convention) and 16 * MaxValue would wrap
+          // and 16 * MaxValue would wrap
           // negative, silently bailing every call to the distributed path
           val pairCap =
             if (localMaxEdges > Long.MaxValue / 16) Long.MaxValue

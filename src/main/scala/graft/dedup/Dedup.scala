@@ -72,31 +72,8 @@ object Dedup {
   /** N-gram Jaccard near-dup pairs: word-k-gram shingles → candidates via
     * shared-shingle equi-join → exact |∩|/|∪| in integer basis points.
     * Pairs with j_bp = 10000*|∩|/|∪| (floor) >= minBp. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, Int, Int, String, String, Int, Int), DataFrame]()
-
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, minBp: Int = 5000): DataFrame =
-    if (!graft.graph.Tpch.shareScans)
-      ngramJaccardPairsImpl(docs, idCol, textCol, k, minBp)
-    else {
-      // under the multi-query scan-sharing regime the pair table is an
-      // intermediate index shared by the pair query and the clustering
-      // query — compute it once per (input plan, parameters)
-      // session-keyed: a dead session's cached plan must never be reused.
-      // TWO independent plan hashes (semantic + textual) make a collision
-      // returning another query's pairs ~2⁻⁶⁴; the size bound keeps a
-      // long-lived driver from pinning unbounded checkpointed plans.
-      val plan = docs.queryExecution.analyzed
-      val key = (docs.sparkSession, plan.semanticHash(), plan.toString.hashCode,
-        idCol, textCol, k, minBp)
-      if (pairsCache.size > 32) pairsCache.clear()
-      pairsCache.getOrElseUpdate(key,
-        ngramJaccardPairsImpl(docs, idCol, textCol, k, minBp).localCheckpoint(eager = false))
-    }
-
-  private def ngramJaccardPairsImpl(docs: DataFrame, idCol: String, textCol: String,
-      k: Int, minBp: Int): DataFrame = {
+      k: Int = 3, minBp: Int = 5000): DataFrame = {
     // Prefix filtering (ssjoin): under a global total order of shingles, a
     // pair with J >= τ must share an element within the first
     // |X| - ⌈τ|X|⌉ + 1 shingles of each side. Candidates therefore come from

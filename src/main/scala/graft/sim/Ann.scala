@@ -199,20 +199,6 @@ object Ann {
       .select("id_a", "id_b", "dot")
   }
 
-  /** IVF-style approximate top-k: the second scale path next to LSH.
-    *
-    * A coarse quantizer of `nlist` leader centroids — deterministically the
-    * `nlist` lowest-id vectors (a "sampled leaders" quantizer: reproducible
-    * across runs and engines, no RNG, no iterative k-means) — partitions the
-    * collection: every vector is indexed under its highest-integer-cosine
-    * leader (one broadcast join + window argmin; the leader table is tiny by
-    * construction, so assignment never shuffles the collection). A query
-    * probes its `nprobe` nearest leaders and rescores exactly within those
-    * cells, so candidate generation is an equi-join on the cell id — the
-    * same narrow shuffle shape as the LSH path, but with data-adaptive cells
-    * (IVF-flat, the standard ANN index layout). */
-  /** The deterministic "sampled leaders" coarse quantizer shared by
-    * [[ivfTopK]] and [[semanticDedup]]: the `nlist` lowest-id vectors. */
   /** The IVF coarse quantizer, collected driver-side: the `nlist` lowest-id
     * vectors as (lid, lq, ln) — nlist·dim bounded driver state BY
     * DEFINITION (the kmeansBest budget argument: a quantizer nobody can
@@ -220,9 +206,13 @@ object Ann {
     * literals turns every cell ranking into a pure per-row projection (see
     * [[rankedCells]]) instead of a broadcast crossJoin + window
     * exchange+sort per evaluation. lid keeps the id column's runtime type
-    * (lit() round-trips it), so emitted `cell` schemas are unchanged. */
+    * (lit() round-trips it), so emitted `cell` schemas are unchanged.
+    * NULL / empty embeddings carry no position and are never leaders (the
+    * [[kmeansInput]] filter); they still rank into some cell, where their
+    * null or zero dot product drops every pair they would form. */
   private def leadersOf(qd: DataFrame, nlist: Int): Array[(Any, Array[Long], Long)] =
-    qd.orderBy(col("id").asc).limit(nlist)
+    qd.where(col("q").isNotNull && size(col("q")) > 0)
+      .orderBy(col("id").asc).limit(nlist)
       .select(col("id"), col("q"), col("nq")).collect()
       .map(r => (r.get(0), r.getSeq[Long](1).toArray, r.getLong(2)))
 
@@ -249,6 +239,18 @@ object Ann {
       .select(col(idAs), col("__s")("lid").as("cell"), (col("__p") + 1).as("lrn"))
   }
 
+  /** IVF-style approximate top-k: the second scale path next to LSH.
+    *
+    * A coarse quantizer of `nlist` leader centroids — deterministically the
+    * `nlist` lowest-id vectors (a "sampled leaders" quantizer: reproducible
+    * across runs and engines, no RNG, no iterative k-means) — partitions the
+    * collection: every vector is indexed under its highest-integer-cosine
+    * leader (a per-row projection over the literal leaders, see
+    * [[leadersOf]], so assignment never shuffles the collection). A query
+    * probes its `nprobe` nearest leaders and rescores exactly within those
+    * cells, so candidate generation is an equi-join on the cell id — the
+    * same narrow shuffle shape as the LSH path, but with data-adaptive cells
+    * (IVF-flat, the standard ANN index layout). */
   def ivfTopK(vecs: DataFrame, idCol: String, embCol: String, k: Int,
       querySide: DataFrame => DataFrame, nlist: Int = 16, nprobe: Int = 2,
       dim: Int = 64): DataFrame = {

@@ -338,13 +338,44 @@ class AlgosSpec extends AnyFunSuite {
     // two cost-3 paths to 5: via 9 (2 hops, found round 2, parent 9) and via
     // 2→3 (3 hops, found round 3, parent 3) — the parent must REFINE to 3
     // on equal cost, and ties pick the least pred id
-    val es = Seq((1L, 9L, 2L), (9L, 5L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 5L, 1L))
+    // null-cost edges are dropped, as weightedShortestPath drops them: the
+    // one into 5 changes nothing, and 7 (reached only over one) is absent —
+    // on the guarded local replay (which reads costs as primitive longs)
+    // and on the distributed rounds alike
+    val es = Seq[(Long, Long, Option[Long])]((1L, 9L, Some(2L)), (9L, 5L, Some(1L)),
+        (1L, 2L, Some(1L)), (2L, 3L, Some(1L)), (3L, 5L, Some(1L)), (2L, 5L, None), (3L, 7L, None))
       .toDF("src", "dst", "w")
-    val r = Algos.weightedShortestPathWithParent(es, Seq(1L).toDF("id"), col("w"))
-      .collect().map(x => x.getLong(0) -> ((x.getLong(1), if (x.isNullAt(2)) -1L else x.getLong(2)))).toMap
-    assert(r(1L) === ((0L, -1L))) // source: null parent
-    assert(r(9L) === ((2L, 1L)) && r(2L) === ((1L, 1L)) && r(3L) === ((2L, 2L)))
-    assert(r(5L) === ((3L, 3L)))
+    Seq(50000L, 0L).foreach { guard =>
+      val r = Algos.weightedShortestPathWithParent(es, Seq(1L).toDF("id"), col("w"),
+          localMaxEdges = guard)
+        .collect().map(x => x.getLong(0) -> ((x.getLong(1), if (x.isNullAt(2)) -1L else x.getLong(2)))).toMap
+      assert(r.keySet === Set(1L, 2L, 3L, 5L, 9L), s"guard $guard")
+      assert(r(1L) === ((0L, -1L))) // source: null parent
+      assert(r(9L) === ((2L, 1L)) && r(2L) === ((1L, 1L)) && r(3L) === ((2L, 2L)))
+      assert(r(5L) === ((3L, 3L)))
+    }
+  }
+
+  test("bfsDistances/reachableEdges recompute after their checkpoint blocks are unpersisted") {
+    // with scan sharing on, a second call must still compute its answer —
+    // never serve an earlier call's result whose checkpoint blocks are gone
+    // (a lost executor or an unpersist), which fails where a recompute works
+    val prev = graft.graph.Tpch.shareScans
+    graft.graph.Tpch.shareScans = true
+    try {
+      val vs = Seq(1L, 2L, 3L, 4L).toDF("id")
+      val es = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+      val sources = Seq(1L).toDF("id")
+      def run() = (Algos.bfsDistances(vs, es, sources).as[(Long, Int)].collect().toSet,
+        Algos.reachableEdges(1L, es).as[(Long, Long)].collect().toSet)
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val first = run()
+      (sc.getPersistentRDDs -- before).values.foreach(_.unpersist(blocking = true))
+      assert(run() === first)
+      assert(first._1 === Set((1L, 0), (2L, 1), (3L, 2), (4L, 3)))
+      assert(first._2 === Set((1L, 2L), (2L, 3L), (3L, 4L)))
+    } finally graft.graph.Tpch.shareScans = prev
   }
 
   test("weightedShortestPath: a cheaper long path beats a short expensive edge") {

@@ -610,6 +610,23 @@ class DataOpsSpec extends AnyFunSuite {
     assert(recall > 0.5, s"recall@3 was $recall")
   }
 
+  test("ivfTopK: null and empty embeddings are never leaders and form no pairs") {
+    val good = (2L to 41L)
+      .map(i => (i, Array.tabulate(8)(j => ((i * 7 + j * 13) % 11 - 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    // ids 0 and 1 are the two lowest, so both would be sampled as leaders:
+    // 0 has a NULL embedding, 1 the empty untyped array() literal
+    val bad = Seq(0L, 1L).toDF("vec_id")
+      .select(col("vec_id"),
+        when(col("vec_id") === 1L, array()).cast("array<float>").as("embedding"))
+    def topk(vecs: org.apache.spark.sql.DataFrame) =
+      Ann.ivfTopK(vecs, "vec_id", "embedding", k = 3, identity, nlist = 4, nprobe = 2)
+        .select("id_q", "id_n", "score", "rn").as[(Long, Long, Long, Int)].collect().toSet
+    val expected = topk(good)
+    assert(expected.nonEmpty)
+    assert(topk(bad.unionByName(good)) === expected)
+  }
+
   test("file-source streaming: parquet drop directory feeds the hourly window") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fs_stream").toFile.getAbsolutePath
     val cp = java.nio.file.Files.createTempDirectory("graft_fs_cp").toFile.getAbsolutePath
