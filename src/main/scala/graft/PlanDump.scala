@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scratch plan dumper (not part of the driver contract):
@@ -18,13 +17,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 1 && args(1).nonEmpty) Some(args(1).split(",").toSet) else None
     val suffix = if (args.length > 2) args(2) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graph.Tpch.shareScans = true
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

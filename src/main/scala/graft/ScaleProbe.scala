@@ -18,15 +18,10 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // core count honored like Bench (r11): the scale sweep doubles as the
+    // core count honored like Bench: the scale sweep doubles as the
     // low-vs-high-core evidence at a compute-bound volume, where sf0.1
     // alone is scheduling-dominated and says nothing about parallelism
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tpch.shareScans = true
+    val spark = SparkEntry.localSession(logLevel = "ERROR")
 
     // K key-shifted copies of the fact tables; dims unchanged
     def replicate(df: DataFrame, keyCols: Seq[String], span: Long): DataFrame =

@@ -16,6 +16,26 @@ object SparkEntry {
 
   private def g(s: SparkSession, dir: String): PropertyGraph = Tpch.load(s, dir)
 
+  /** Core count of the mains' local session: SPARK_GRAFT_CPUS, default 32
+    * (the target rig — an uncontrolled 4-core default once made a 10x run
+    * read 676 s vs 526 s on identical code). */
+  private[graft] def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The one session builder of the `Bench`, `Verify`, `ScaleProbe` and
+    * `PlanDump` mains: local[N] (N = [[localCpus]]) with N shuffle partitions,
+    * UTC session time, no UI, and base-table/graph scans shared across the
+    * queries of the run (they all read the same tables: load once). */
+  private[graft] def localSession(logLevel: String = "WARN"): SparkSession = {
+    val cpus = localCpus
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    Tpch.shareScans = true
+    spark
+  }
+
   /** Exact, order-insensitive money aggregation: double → integer cents. */
   private def cents(c: Column): Column = round(c * 100, 0).cast("long")
 
@@ -291,8 +311,7 @@ object SparkEntry {
       val gr = g(s, dir)
       val asia = gr.kind("region").where(col("r_name") === "ASIA").select("id")
       // FK diameter: region←nation←{customer,supplier}←{orders,lineitem} = 4
-      graft.algos.Algos.bfsDistances(gr.vertices.select("id"), gr.edges, asia, reverse = true,
-        maxIter = 4)
+      graft.algos.Algos.bfsDistances(gr.edges, asia, reverse = true, maxIter = 4)
     }),
     "q_shortest_weighted" -> ((s, dir) => {
       // fermor algo.clj:92 shortest-path with a per-edge COST FN: min-cost
@@ -1027,8 +1046,7 @@ object SparkEntry {
       // the FK graph's diameter bounds both passes: customer→nation→region
       // forward (2), region←…←lineitem backward (4) — saved rounds are saved
       // frontier materializations
-      graft.algos.Algos.verticesBetween(gr.vertices.select("id"), gr.edges, from, to,
-        fwdMaxIter = 2, bwdMaxIter = 4)
+      graft.algos.Algos.verticesBetween(gr.edges, from, to, fwdMaxIter = 2, bwdMaxIter = 4)
     }),
     "q_post_order" -> ((s, dir) => {
       // fermor post-order-numbering / reverse-post-order-numbering: DFS with

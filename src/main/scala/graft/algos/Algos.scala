@@ -287,32 +287,75 @@ object Algos {
     * newest frontier (semi-join on the deduped edge table) and anti-joins
     * the visited set, so per-round work tracks frontier size — the same
     * shape GraphX Pregel computes, without the RDD conversion and
-    * vertex-state machinery, and AQE-planned per round. */
-  def bfsDistances(vertices: DataFrame, edges: DataFrame, sources: DataFrame,
+    * vertex-state machinery, and AQE-planned per round. A null source
+    * identifies no vertex and is dropped. */
+  def bfsDistances(edges: DataFrame, sources: DataFrame,
       reverse: Boolean = false, maxIter: Int = 1000)(implicit spark: SparkSession): DataFrame = {
     val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
     // duplicate edges are harmless (per-round dropDuplicates on ids): no
     // dedup shuffle, just one narrow materialization shared by the rounds
     val e = edges.select(col(from).as("__from"), col(to).as("__to"))
       .localCheckpoint(eager = false)
-    var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
-      .withColumn("dist", lit(0)).localCheckpoint(eager = false)
-    var frontier = dist
-    var d = 0
-    var done = false
-    while (!done && d < maxIter) {
-      // lazy checkpoint + count = ONE action per round: count scans every
-      // partition, completing the checkpoint the round's joins then read
-      val next = e.join(frontier.select(col("id").as("__from")), Seq("__from"), "left_semi")
+    val (levels, _) = bfsLevels(sources.select(col(sources.columns.head).as("id")),
+        Seq("id"), maxIter) { f =>
+      e.join(f.select(col("id").as("__from")), Seq("__from"), "left_semi")
         .select(col("__to").as("id")).dropDuplicates("id")
-        .join(dist, Seq("id"), "left_anti")
-        .withColumn("dist", lit(d + 1))
-        .localCheckpoint(eager = false)
-      if (next.count() == 0L) done = true
-      else { dist = dist.unionByName(next).localCheckpoint(eager = false); frontier = next }
-      d += 1
     }
-    dist
+    levels.zipWithIndex.map { case ((l, _), d) => l.withColumn("dist", lit(d)) }
+      .reduce(_.unionByName(_))
+  }
+
+  /** Row guard of the iterative loops' broadcast joins: a checkpointed
+    * frame blinds the planner's stats, so a per-round join against one
+    * would sort-merge — exchanging the FULL edge frame every round even
+    * for a one-row frontier. Sides whose measured row count is at most
+    * this broadcast instead; past it the shuffle join stands, so a flooded
+    * frontier on a real cluster is never built into one hash relation. */
+  private val bcastRows = 1000000L
+
+  /** The level-synchronous delta-BFS driver behind [[bfsDistances]],
+    * [[reachableEdges]], [[taggedBfs]] and [[brandesBetweenness]]. Level 0
+    * is `seed` without null-keyed rows, deduped on `key`; level i+1 is
+    * `expand(level i)` (which must return rows unique on `key`) minus every
+    * row whose key an earlier level holds. Each level, the seed included,
+    * is a lazy checkpoint completed by ONE count job, which doubles as the
+    * drain probe: a count scans every partition (an isEmpty probe would
+    * leave the checkpoint partly computed), and it counts the checkpoint's
+    * RDD because a DataFrame count adds a job for its single-partition
+    * exchange. The counts guard the broadcasts of the frontier handed to
+    * `expand` and of the visited set (see [[bcastRows]]). Returns the seed
+    * and every non-empty level after it, in order, with their row counts,
+    * and whether a round found the frontier drained within `maxIter`
+    * rounds. */
+  private def bfsLevels(seed: DataFrame, key: Seq[String], maxIter: Int)(
+      expand: DataFrame => DataFrame): (IndexedSeq[(DataFrame, Long)], Boolean) = {
+    def guarded(df: DataFrame, rows: Long) = if (rows <= bcastRows) broadcast(df) else df
+    def checkpointed(df: DataFrame): (DataFrame, Long) = {
+      val c = df.localCheckpoint(eager = false)
+      (c, c.queryExecution.toRdd.count())
+    }
+    val keyCols = key.map(col)
+    var (frontier, frontierRows) =
+      checkpointed(seed.where(keyCols.map(_.isNotNull).reduce(_ && _)).dropDuplicates(key))
+    var visited = frontier.select(keyCols: _*).localCheckpoint(eager = false)
+    var visitedRows = frontierRows
+    val levels = scala.collection.mutable.ArrayBuffer((frontier, frontierRows))
+    var converged = frontierRows == 0L
+    var i = 0
+    while (!converged && i < maxIter) {
+      val (next, n) = checkpointed(expand(guarded(frontier, frontierRows))
+        .join(guarded(visited, visitedRows), key, "left_anti"))
+      if (n == 0L) converged = true
+      else {
+        frontier = next
+        frontierRows = n
+        levels += ((next, n))
+        visitedRows += n
+        visited = visited.unionByName(next.select(keyCols: _*)).localCheckpoint(eager = false)
+      }
+      i += 1
+    }
+    (levels.toIndexedSeq, converged)
   }
 
   /** Weighted shortest path by distributed delta-relaxation (fermor
@@ -474,15 +517,10 @@ object Algos {
     var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
       .withColumn("cost", lit(0L)).localCheckpoint(eager = false)
     var frontier = dist
-    // Guarded frontier broadcast (guide §3.1; the Descend idiom): the
-    // checkpointed frontier blinds stats, so every round's expansion would
-    // SMJ — exchanging the FULL edge frame per round even for a one-row
-    // frontier. The frontier count rides the drain-probe agg, so the guard
-    // costs no extra job after the first round, which probes the (bounded,
-    // deduped) source set once. Past the guard the shuffle join stands — a
-    // flooded frontier on a real cluster must not be built into one hash
-    // relation.
-    val bcastRows = 1000000L
+    // Guarded frontier broadcast ([[bcastRows]]; the Descend idiom). The
+    // frontier count rides the drain-probe agg, so the guard costs no extra
+    // job after the first round, which probes the (bounded, deduped) source
+    // set once.
     var frontierSmall = graft.plans.Scale.fitsBroadcast(dist, bcastRows)
     val accepted = accept.getOrElse(lit(false))
     var bestAccepted = Long.MaxValue
@@ -1995,11 +2033,9 @@ object Algos {
     * DataFrame fixpoint — maxIter caps the join chain, and is BY CONTRACT a
     * level cap: vertices deeper than maxIter report level <= maxIter+1
     * (callers that know the exact depth pass it to skip the detection
-    * round). Pass `requireConverged = true` to instead fail loudly when the
-    * DAG is deeper than the bound — the safe default for unknown inputs,
-    * where a silent cap would return plausible but wrong levels. */
+    * round). */
   def topoLevels(vertices: DataFrame, edges: DataFrame, maxIter: Int = 10,
-      requireConverged: Boolean = false, localMaxEdges: Long = 50000L): DataFrame = {
+      localMaxEdges: Long = 50000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // parallel edges can't change a max-level fixpoint, and each round
@@ -2013,10 +2049,9 @@ object Algos {
     // guarded LOCAL replay (the kCore/CC pattern): the same frontier
     // recurrence — round i's frontier = distinct heads of edges out of
     // round i-1's, level(v) = max round that reached v — run on a collected
-    // adjacency; identical semantics INCLUDING the maxIter level cap and
-    // the requireConverged loud failure, so the replay is bit-exact under
-    // truncation too (parity-spec'd at guard = 0). The 50k default is a
-    // MEASURED rejection of a bigger guard: at sf0.1 (2M edges, depth 4,
+    // adjacency; identical semantics INCLUDING the maxIter level cap, so
+    // the replay is bit-exact under truncation too (parity-spec'd at
+    // guard = 0). The 50k default is a MEASURED rejection of a bigger guard: at sf0.1 (2M edges, depth 4,
     // local[32]) the local path reads 2.7-3.9 s vs 2.7 s distributed —
     // the collect + driver sets + 800k-row re-upload cost more than four
     // well-parallelized rounds — so it fires only on genuinely small DAGs
@@ -2046,11 +2081,6 @@ object Algos {
           frontier = next
           i += 1
         }
-        if (requireConverged && !done && frontier.nonEmpty)
-          throw new IllegalStateException(
-            s"topoLevels did not converge within maxIter=$maxIter rounds: the DAG is " +
-              "deeper than the bound, so capped levels would be silently wrong — raise " +
-              "maxIter (or pass requireConverged = false to accept the level cap)")
         return level.iterator.map { case (v, l) => (v, l) }.toSeq.toDF("id", "level")
       }
       // null ids: fall through — the distributed rounds keep the pre-replay
@@ -2069,44 +2099,23 @@ object Algos {
     var frontier = e.select(col("dst").as("id")).dropDuplicates("id")
       .localCheckpoint(eager = false)
     val rounds = scala.collection.mutable.ArrayBuffer[DataFrame](init)
-    if (requireConverged) {
-      // drain detection needs a per-round action (isEmpty), so this regime
-      // pays one materialization per level — the price of the loud failure
-      var i = 1
-      var done = frontier.isEmpty
-      if (!done) rounds += frontier.withColumn("level", lit(1))
-      while (!done && i < maxIter) {
-        frontier = e.join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
-          .select(col("dst").as("id")).dropDuplicates("id")
-          .localCheckpoint(eager = true) // full materialization before isEmpty
-        if (frontier.isEmpty) done = true
-        else rounds += frontier.withColumn("level", lit(i + 1))
-        i += 1
-      }
-      if (!done && !frontier.isEmpty)
-        throw new IllegalStateException(
-          s"topoLevels did not converge within maxIter=$maxIter rounds: the DAG is " +
-            "deeper than the bound, so capped levels would be silently wrong — raise " +
-            "maxIter (or pass requireConverged = false to accept the level cap)")
-    } else {
-      // capped-level regime: no drain probe is needed — a drained frontier
-      // contributes empty union branches, so running all maxIter rounds
-      // BLIND folds the whole fixpoint into ONE action (no per-round
-      // driver round-trip; callers that know the exact depth — the
-      // q_topo_level shape — pay zero waste). Measured time-NEUTRAL at
-      // sf0.1 local[32] (2.7 s both ways: the semi-join/distinct shuffles
-      // dominate there) — the win is the removed per-round job barriers,
-      // which cost real latency on a many-executor cluster, and maxIter-1
-      // fewer driver actions per call.
-      rounds += frontier.withColumn("level", lit(1))
-      var i = 1
-      while (i < maxIter) {
-        frontier = e.join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
-          .select(col("dst").as("id")).dropDuplicates("id")
-          .localCheckpoint(eager = false)
-        rounds += frontier.withColumn("level", lit(i + 1))
-        i += 1
-      }
+    // no drain probe is needed under the level cap — a drained frontier
+    // contributes empty union branches, so running all maxIter rounds
+    // BLIND folds the whole fixpoint into ONE action (no per-round
+    // driver round-trip; callers that know the exact depth — the
+    // q_topo_level shape — pay zero waste). Measured time-NEUTRAL at
+    // sf0.1 local[32] (2.7 s both ways: the semi-join/distinct shuffles
+    // dominate there) — the win is the removed per-round job barriers,
+    // which cost real latency on a many-executor cluster, and maxIter-1
+    // fewer driver actions per call.
+    rounds += frontier.withColumn("level", lit(1))
+    var i = 1
+    while (i < maxIter) {
+      frontier = e.join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
+        .select(col("dst").as("id")).dropDuplicates("id")
+        .localCheckpoint(eager = false)
+      rounds += frontier.withColumn("level", lit(i + 1))
+      i += 1
     }
     rounds.reduce(_.unionByName(_)).groupBy("id").agg(max(col("level")).as("level"))
   }
@@ -2170,27 +2179,15 @@ object Algos {
     // narrow projection IS materialized once so the rounds don't re-scan
     // the source plan.
     val e = edges.select("src", "dst").localCheckpoint(eager = false)
-    var visited = Seq(entry).toDF("id").localCheckpoint(eager = false)
-    var frontier = visited
-    var done = false
-    var i = 0
-    while (!done && i < maxIter) {
-      // lazy checkpoint + count = one action per round: count scans every
-      // partition, completing the checkpoint (an isEmpty probe would only
-      // materialize the partition its limit-1 touches — never pair one
-      // with a lazy checkpoint)
-      val next = e.join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
+    val (levels, converged) = bfsLevels(Seq(entry).toDF("id"), Seq("id"), maxIter) { f =>
+      e.join(f.select(col("id").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("id")).dropDuplicates("id")
-        .join(visited, Seq("id"), "left_anti")
-        .localCheckpoint(eager = false)
-      if (next.count() == 0L) done = true
-      else { visited = visited.unionByName(next).localCheckpoint(eager = false); frontier = next }
-      i += 1
     }
-    if (done)
+    if (converged)
       // an edge is in the flow subgraph iff its src is reachable (its dst
       // then is too, by following that very edge)
-      e.join(visited.select(col("id").as("src")), Seq("src"), "left_semi")
+      e.join(levels.map(_._1).reduce(_.unionByName(_)).select(col("id").as("src")),
+          Seq("src"), "left_semi")
         .dropDuplicates("src", "dst")
     else {
       // Deep subgraph (diameter > maxIter): per-hop BFS rounds scale with
@@ -2616,51 +2613,22 @@ object Algos {
              else e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
                .dropDuplicates("src", "dst"))
       .localCheckpoint(eager = false)
-    // forward phase: per-level (s, v, sigma); keep each level for the sweep.
-    // Guarded broadcasts throughout (guide §3.1; the relaxLoop idiom):
-    // every per-level join would otherwise SMJ against the stats-blind
-    // checkpoints, exchanging the FULL edge frame per level; level sizes
-    // come free from the drain-probe counts, so measured-small frontiers /
-    // visited sets / delta levels broadcast and e stays unshuffled. Join
-    // STRATEGY only — the recurrence, its join keys, and the aggregation
-    // are byte-for-byte the ones above; past the guard every join falls
-    // back to the shuffle plan.
-    val bcastRows = 1000000L
-    def sat(a: Long, b: Long): Long =
-      if (a == Long.MaxValue || b > Long.MaxValue - a) Long.MaxValue else a + b
-    var frontier = sources.select(col(sources.columns.head).as("s"))
-      .dropDuplicates("s").withColumn("v", col("s")).withColumn("sigma", lit(1L))
-      .localCheckpoint(eager = false)
-    var visited = frontier.select("s", "v").localCheckpoint(eager = false)
-    val n0 = graft.plans.Scale.oneWaveLimit(frontier)(
-      frontier.limit((bcastRows + 1).toInt).count())
-    var frontierRows = if (n0 <= bcastRows) n0 else Long.MaxValue
-    var visitedRows = frontierRows
-    val levels = scala.collection.mutable.ArrayBuffer[(DataFrame, Long)]((frontier, frontierRows))
-    var done = false
-    var d = 0
-    while (!done && d < maxIter) {
-      val fB = if (frontierRows <= bcastRows) broadcast(frontier) else frontier
-      val vB = if (visitedRows <= bcastRows) broadcast(visited) else visited
-      val next = fB.join(e, fB("v") === e("src"))
+    // forward phase: per-level (s, v, sigma); keep each level, with the row
+    // count the driver measured, for the sweep. σ of a level is the sum of
+    // its predecessors' σ, one keyed agg per level.
+    val (levels, _) = bfsLevels(
+        sources.select(col(sources.columns.head).as("s"))
+          .withColumn("v", col("s")).withColumn("sigma", lit(1L)),
+        Seq("s", "v"), maxIter) { f =>
+      f.join(e, f("v") === e("src"))
         .groupBy(col("s"), col("dst").as("v2")).agg(sum(col("sigma")).as("sigma"))
         .select(col("s"), col("v2").as("v"), col("sigma"))
-        .join(vB, Seq("s", "v"), "left_anti")
-        .localCheckpoint(eager = false) // count below completes it — one job
-      val n = next.count()
-      if (n == 0L) done = true
-      else {
-        frontierRows = if (n <= bcastRows) n else Long.MaxValue
-        levels += ((next, frontierRows))
-        visitedRows = sat(visitedRows, frontierRows)
-        visited = visited.unionByName(next.select("s", "v")).localCheckpoint(eager = false)
-        frontier = next
-      }
-      d += 1
     }
     // backward sweep, deepest level first: δ at the deepest level is 0.
     // `delta` carries (s, v, sigma, delta) — the σ of level l+1 is needed as
-    // the divisor when level l pulls its dependency contributions.
+    // the divisor when level l pulls its dependency contributions. Its joins
+    // take the driver's broadcast guard ([[bcastRows]]) on the level counts:
+    // join STRATEGY only — past the guard every join shuffles.
     var delta = levels.last._1.withColumn("delta", lit(0.0)).localCheckpoint(eager = false)
     var deltaRows = levels.last._2
     var acc = delta.select("s", "v", "delta")
@@ -2724,9 +2692,9 @@ object Algos {
     // scheduling floor for small graphs (measured at sf0.1: q_harmonic
     // 1.8 s warm -> the scan cost; distances are unique facts, so the
     // replay is bit-identical by construction, parity-spec'd)
-    // a NULL source identifies no vertex: dropped in BOTH paths (the
-    // distributed frontier would carry a (null, null, 0) row that joins
-    // nothing; the local replay would NPE unboxing it — parity-spec'd)
+    // a NULL source identifies no vertex: dropped in BOTH paths (the BFS
+    // driver drops null-keyed seed rows; the local replay would NPE
+    // unboxing it — parity-spec'd)
     val srcCol = col(sources.columns.head)
     // probe + collect fused into one action per frame (collectAtMost); the
     // source guard now counts DISTINCT non-null sources — the quantity the
@@ -2760,32 +2728,15 @@ object Algos {
       return spark.createDataset(out.toSeq).toDF("s", "v", "d")
     }
     val e = eRaw.localCheckpoint(eager = false)
-    var frontier = sources.where(srcCol.isNotNull)
-      .select(srcCol.as("s")).dropDuplicates("s")
-      .withColumn("v", col("s")).withColumn("d", lit(0L))
-      .localCheckpoint(eager = false)
-    var acc = frontier
-    var visited = frontier.select("s", "v").localCheckpoint(eager = false)
-    var done = false
-    var i = 0
-    while (!done && i < maxIter) {
-      val next = frontier.join(e, frontier("v") === e("src"))
-        .select(col("s"), col("dst").as("v")).dropDuplicates("s", "v")
-        .join(visited, Seq("s", "v"), "left_anti")
-        .withColumn("d", lit(i + 1L))
-        .localCheckpoint(eager = false) // count below completes it — one job
-      if (next.count() == 0L) done = true
-      else {
-        acc = acc.unionByName(next)
-        visited = visited.unionByName(next.select("s", "v")).localCheckpoint(eager = false)
-        frontier = next
-      }
-      i += 1
+    val (levels, converged) = bfsLevels(
+        sources.select(srcCol.as("s")).withColumn("v", col("s")), Seq("s", "v"), maxIter) { f =>
+      f.join(e, f("v") === e("src")).select(col("s"), col("dst").as("v")).dropDuplicates("s", "v")
     }
-    if (!done)
+    if (!converged)
       throw new IllegalStateException(
         s"taggedBfs: frontier still non-empty after maxIter=$maxIter rounds — raise maxIter")
-    acc
+    levels.zipWithIndex.map { case ((l, _), d) => l.withColumn("d", lit(d.toLong)) }
+      .reduce(_.unionByName(_))
   }
 
   /** Interval partition of a flow graph (fermor algo.clj `intervals`; the
@@ -2834,7 +2785,7 @@ object Algos {
   /** Vertices lying on some path from `from` to `to` (fermor algo.clj
     * `non-loop-vertices-between`): forward-reachable(from) ∩
     * backward-reachable(to) — two distributed BFS passes, no driver walk. */
-  def verticesBetween(vertices: DataFrame, edges: DataFrame, from: DataFrame, to: DataFrame,
+  def verticesBetween(edges: DataFrame, from: DataFrame, to: DataFrame,
       fwdMaxIter: Int = 1000, bwdMaxIter: Int = 1000)(
       implicit spark: SparkSession): DataFrame = {
     // the two BFS passes are independent job sequences; submitting them from
@@ -2846,8 +2797,8 @@ object Algos {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fwdF = Future { bfsDistances(vertices, edges, from, maxIter = fwdMaxIter) }
-    val bwdF = Future { bfsDistances(vertices, edges, to, reverse = true, maxIter = bwdMaxIter) }
+    val fwdF = Future { bfsDistances(edges, from, maxIter = fwdMaxIter) }
+    val bwdF = Future { bfsDistances(edges, to, reverse = true, maxIter = bwdMaxIter) }
     val fwd = Await.result(fwdF, Duration.Inf)
     val bwd = Await.result(bwdF, Duration.Inf)
     fwd.select("id").join(bwd.select("id"), "id")

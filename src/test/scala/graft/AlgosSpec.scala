@@ -38,13 +38,38 @@ class AlgosSpec extends AnyFunSuite {
   }
 
   test("bfsDistances: forward and reverse") {
-    val vs = Seq(1L, 2L, 3L, 4L).toDF("id")
     val es = Seq((1L, 2L), (2L, 3L), (2L, 4L)).toDF("src", "dst")
-    val fwd = Algos.bfsDistances(vs, es, Seq(1L).toDF("id")).as[(Long, Int)].collect().toMap
+    val fwd = Algos.bfsDistances(es, Seq(1L).toDF("id")).as[(Long, Int)].collect().toMap
     assert(fwd === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 2))
-    val rev = Algos.bfsDistances(vs, es, Seq(3L).toDF("id"), reverse = true)
+    val rev = Algos.bfsDistances(es, Seq(3L).toDF("id"), reverse = true)
       .as[(Long, Int)].collect().toMap
     assert(rev === Map(3L -> 0, 2L -> 1, 1L -> 2))
+  }
+
+  test("bfsDistances: a null source identifies no vertex and yields no row") {
+    val es = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val srcs = Seq(Some(1L), None).toDF("id")
+    val d = Algos.bfsDistances(es, srcs).as[(Long, Int)].collect().toMap
+    assert(d === Map(1L -> 0, 2L -> 1, 3L -> 2))
+    assert(Algos.bfsDistances(es, Seq(None: Option[Long]).toDF("id")).count() === 0)
+  }
+
+  test("bfsDistances: maxIter = k keeps exactly the vertices within k hops") {
+    val chain = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    for (k <- 0 to 3) {
+      val d = Algos.bfsDistances(chain, Seq(1L).toDF("id"), maxIter = k)
+        .as[(Long, Int)].collect().toMap
+      assert(d === (0 to k).map(i => (i + 1L) -> i).toMap, s"maxIter=$k")
+    }
+  }
+
+  test("reachableEdges: a chain deeper than maxIter takes the fallback, same edges") {
+    // 1→…→8 plus an unreachable 20→21 and an edge into the chain from it
+    val es = ((1L until 8L).map(i => (i, i + 1)) ++ Seq((20L, 21L), (21L, 4L)))
+      .toDF("src", "dst")
+    val full = Algos.reachableEdges(1L, es).as[(Long, Long)].collect().toSet
+    assert(full === (1L until 8L).map(i => (i, i + 1)).toSet)
+    assert(Algos.reachableEdges(1L, es, maxIter = 2).as[(Long, Long)].collect().toSet === full)
   }
 
   test("topoLevels: longest path from sources on a diamond") {
@@ -117,9 +142,8 @@ class AlgosSpec extends AnyFunSuite {
   }
 
   test("verticesBetween: forward ∩ backward reachability") {
-    val vs = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
     val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 5L)).toDF("src", "dst")
-    val between = Algos.verticesBetween(vs, es, Seq(1L).toDF("id"), Seq(4L).toDF("id"))
+    val between = Algos.verticesBetween(es, Seq(1L).toDF("id"), Seq(4L).toDF("id"))
       .as[Long].collect().toSet
     assert(between === Set(1L, 2L, 3L, 4L)) // 5 is a dead end
   }
@@ -363,10 +387,9 @@ class AlgosSpec extends AnyFunSuite {
     val prev = graft.graph.Tpch.shareScans
     graft.graph.Tpch.shareScans = true
     try {
-      val vs = Seq(1L, 2L, 3L, 4L).toDF("id")
       val es = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
       val sources = Seq(1L).toDF("id")
-      def run() = (Algos.bfsDistances(vs, es, sources).as[(Long, Int)].collect().toSet,
+      def run() = (Algos.bfsDistances(es, sources).as[(Long, Int)].collect().toSet,
         Algos.reachableEdges(1L, es).as[(Long, Long)].collect().toSet)
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet

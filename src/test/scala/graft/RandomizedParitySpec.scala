@@ -60,8 +60,7 @@ class RandomizedParitySpec extends AnyFunSuite {
         next.foreach(v => dist += v -> d)
         frontier = next
       }
-      val got = Algos.bfsDistances(vs.toDF("id"), es.toDF("src", "dst"),
-          sources.toDF("id"))
+      val got = Algos.bfsDistances(es.toDF("src", "dst"), sources.toDF("id"))
         .as[(Long, Int)].collect().toMap
       assert(got === dist, s"seed=$seed es=$es")
     }

@@ -34,8 +34,7 @@ class ReadmeExamplesSpec extends AnyFunSuite {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     val cc = Algos.connectedComponents(g.vertices.select("id"), g.edges)
     assert(cc.select("component").distinct().count() >= 1)
-    val dists = Algos.bfsDistances(g.vertices.select("id"), g.edges,
-      g.kind("region").select("id"), reverse = true)
+    val dists = Algos.bfsDistances(g.edges, g.kind("region").select("id"), reverse = true)
     assert(dists.agg(max("dist")).head().getInt(0) >= 3)
 
     // plain SQL over the same graph
