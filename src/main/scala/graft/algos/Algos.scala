@@ -5,6 +5,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
+import graft.plans.Scale
+import graft.plans.Scale.{bcastRows, checkpointed, guarded}
 
 /** Graph algorithms — the Spark re-expression of fermor graph/algo.clj.
   *
@@ -177,32 +179,19 @@ object Algos {
     }
     // self-loops make a vertex cyclic but never a multi-member SCC; drop them
     // so trimming sees the true cross-vertex cycle structure
-    val e0 = edges.select("src", "dst").where(col("src") =!= col("dst"))
-      .dropDuplicates("src", "dst")
-    var remaining = vs0.localCheckpoint(eager = false)
-    var e = e0.localCheckpoint(eager = false)
-    var prev = remaining.count()
-    var converged = prev == 0
-    var round = 0
-    while (!converged && round < 100) {
+    var e = edges.select("src", "dst").where(col("src") =!= col("dst"))
+      .dropDuplicates("src", "dst").localCheckpoint(eager = false)
+    // capped silently: the residual solve below is exact on any superset
+    val (remaining, prev, _) = peelRounds(vs0, 100) { (rem, round) =>
+      // the edge set follows the pool from round 2 on; round 1 keeps the
+      // edges into endpoints absent from `vertices` (the pass-through rule)
+      if (round > 1) e = e
+        .join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .localCheckpoint(eager = false)
       val srcs = e.select(col("src").as("id")).dropDuplicates("id")
       val dsts = e.select(col("dst").as("id")).dropDuplicates("id")
-      val keep = remaining
-        .join(srcs, Seq("id"), "left_semi")
-        .join(dsts, Seq("id"), "left_semi")
-        .localCheckpoint(eager = false)
-      val n = keep.count()
-      if (n == prev) converged = true
-      else {
-        remaining = keep
-        e = e
-          .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(eager = false)
-        prev = n
-        converged = n == 0
-      }
-      round += 1
+      rem.join(srcs, Seq("id"), "left_semi").join(dsts, Seq("id"), "left_semi")
     }
     val residualComps: DataFrame =
       if (prev == 0) Seq.empty[(Long, Long)].toDF("id", "component")
@@ -305,35 +294,19 @@ object Algos {
       .reduce(_.unionByName(_))
   }
 
-  /** Row guard of the iterative loops' broadcast joins: a checkpointed
-    * frame blinds the planner's stats, so a per-round join against one
-    * would sort-merge — exchanging the FULL edge frame every round even
-    * for a one-row frontier. Sides whose measured row count is at most
-    * this broadcast instead; past it the shuffle join stands, so a flooded
-    * frontier on a real cluster is never built into one hash relation. */
-  private val bcastRows = 1000000L
-
   /** The level-synchronous delta-BFS driver behind [[bfsDistances]],
     * [[reachableEdges]], [[taggedBfs]] and [[brandesBetweenness]]. Level 0
     * is `seed` without null-keyed rows, deduped on `key`; level i+1 is
     * `expand(level i)` (which must return rows unique on `key`) minus every
     * row whose key an earlier level holds. Each level, the seed included,
-    * is a lazy checkpoint completed by ONE count job, which doubles as the
-    * drain probe: a count scans every partition (an isEmpty probe would
-    * leave the checkpoint partly computed), and it counts the checkpoint's
-    * RDD because a DataFrame count adds a job for its single-partition
-    * exchange. The counts guard the broadcasts of the frontier handed to
-    * `expand` and of the visited set (see [[bcastRows]]). Returns the seed
-    * and every non-empty level after it, in order, with their row counts,
-    * and whether a round found the frontier drained within `maxIter`
-    * rounds. */
+    * ends in [[Scale.checkpointed]]: ONE count job, which doubles as the
+    * drain probe. The counts guard the broadcasts of the frontier handed
+    * to `expand` and of the visited set ([[Scale.guarded]]). Returns the
+    * seed and every non-empty level after it, in order, with their row
+    * counts, and whether a round found the frontier drained within
+    * `maxIter` rounds. */
   private def bfsLevels(seed: DataFrame, key: Seq[String], maxIter: Int)(
       expand: DataFrame => DataFrame): (IndexedSeq[(DataFrame, Long)], Boolean) = {
-    def guarded(df: DataFrame, rows: Long) = if (rows <= bcastRows) broadcast(df) else df
-    def checkpointed(df: DataFrame): (DataFrame, Long) = {
-      val c = df.localCheckpoint(eager = false)
-      (c, c.queryExecution.toRdd.count())
-    }
     val keyCols = key.map(col)
     var (frontier, frontierRows) =
       checkpointed(seed.where(keyCols.map(_.isNotNull).reduce(_ && _)).dropDuplicates(key))
@@ -356,6 +329,31 @@ object Algos {
       i += 1
     }
     (levels.toIndexedSeq, converged)
+  }
+
+  /** The peel driver behind the distributed rounds of [[kCore]],
+    * [[kTruss]], [[maximalIndependentSet]], [[jpColoring]],
+    * [[maximalMatching]] and the SCC trim: round r (from 1) replaces the
+    * pool with `step(pool, r)`. Every step only REMOVES rows, so a round
+    * that keeps the row count kept the pool itself — a fixpoint. `pool0`
+    * and every step output end in [[Scale.checkpointed]]: one count job per
+    * round, which is both the drain and the fixpoint probe. Stops at an
+    * empty pool, at a fixpoint, or after `maxRounds` rounds; returns the
+    * last pool, its row count, and whether it stopped before the cap. Side
+    * state (winner sets, the shrinking edge set) lives in `step`'s closure. */
+  private def peelRounds(pool0: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Long, Boolean) = {
+    var (pool, rows) = checkpointed(pool0)
+    var converged = rows == 0L
+    var round = 0
+    while (!converged && round < maxRounds) {
+      round += 1
+      val (next, n) = checkpointed(step(pool, round))
+      converged = n == 0L || n == rows
+      pool = next
+      rows = n
+    }
+    (pool, rows, converged)
   }
 
   /** Weighted shortest path by distributed delta-relaxation (fermor
@@ -414,22 +412,14 @@ object Algos {
     * the local path reads 3.0-5.4 s vs 2.3-3.5 s distributed — collecting
     * the edge frame costs more than the well-parallelized rounds save — so
     * the replay only fires where fixed per-round latency dominates. */
-  private def relaxLocal(e: DataFrame, sources: DataFrame, maxIter: Int,
-      accept: Option[Column]): Option[DataFrame] = {
-    val spark = e.sparkSession
+  private def relaxLocal(spark: SparkSession, es: Array[(Long, Long, Long)],
+      sources: Array[Long], maxIter: Int, accept: Option[Column]): DataFrame = {
     import spark.implicits._
-    val eRows = e.collect() // (__from, __to, __w); __w is non-null by construction
-    if (eRows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val sRows = sources.select(col(sources.columns.head).cast("long")).collect()
-    if (sRows.exists(_.isNullAt(0))) return None
-    // null endpoints/sources fall back (None) to the distributed rounds,
-    // where a null key simply never joins — the pre-replay behavior
-    val es = eRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val adj = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
     es.foreach { case (f, t, w) =>
       adj.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuffer[(Long, Long)]) += ((t, w))
     }
-    val srcs = sRows.map(_.getLong(0)).distinct
+    val srcs = sources.distinct
     val acceptedIds: Long => Boolean = accept match {
       case None => _ => false
       case Some(a) =>
@@ -461,7 +451,7 @@ object Algos {
       }
       i += 1
     }
-    Some(dist.iterator.map { case (v, c) => (v, c) }.toSeq.toDF("id", "cost"))
+    dist.iterator.map { case (v, c) => (v, c) }.toSeq.toDF("id", "cost")
   }
 
   /** fermor `shortest-path`'s full contract: lowest-cost search for vertices
@@ -505,23 +495,26 @@ object Algos {
     // probe + collect the CHECKPOINTED frame: a derived edge graph evaluates
     // its upstream once (the kTruss probe rule). Sources are guarded too: a
     // huge source set over a small subgraph must not be collected; the type
-    // gate keeps non-long ids on the distributed path
-    if (integralCols(e, "__from", "__to") &&
-        integralCols(sources, sources.columns.head) &&
-        atMost(e, localMaxEdges) && atMost(sources, localMaxEdges)) {
-      relaxLocal(e, sources, maxIter, accept) match {
-        case Some(d) => return d
-        case None    => () // null ids: the distributed rounds handle them
-      }
+    // gate keeps non-long ids on the distributed path. Probe and collect are
+    // one action per frame (collectAtMost); null endpoints or sources fall
+    // back to the distributed rounds, where a null key simply never joins
+    if (integralCols(e, "__from", "__to") && integralCols(sources, sources.columns.head)) {
+      val es = collectAtMost(e, localMaxEdges) // __w is non-null by construction
+        .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+      val ss = if (es.isEmpty) None
+        else collectLongsAtMost(sources.select(col(sources.columns.head).cast("long")),
+          localMaxEdges)
+      if (ss.isDefined) return relaxLocal(e.sparkSession, es.get, ss.get, maxIter, accept)
     }
     var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
       .withColumn("cost", lit(0L)).localCheckpoint(eager = false)
     var frontier = dist
-    // Guarded frontier broadcast ([[bcastRows]]; the Descend idiom). The
-    // frontier count rides the drain-probe agg, so the guard costs no extra
-    // job after the first round, which probes the (bounded, deduped) source
-    // set once.
-    var frontierSmall = graft.plans.Scale.fitsBroadcast(dist, bcastRows)
+    // Guarded frontier broadcast ([[Scale.bcastRows]]; the Descend idiom).
+    // The frontier count rides the drain-probe agg, so the guard costs no
+    // extra job after the first round, which probes the (bounded, deduped)
+    // source set once.
+    var frontierSmall = Scale.fitsBroadcast(dist, bcastRows)
     val accepted = accept.getOrElse(lit(false))
     var bestAccepted = Long.MaxValue
     var done = false
@@ -651,7 +644,7 @@ object Algos {
       // into the projection/universe joins, so the batch is never
       // shuffled against |V| (guide §3.1 — the relaxLoop idiom). Past
       // the guard the shuffle joins stand.
-      val pmN = graft.plans.Scale.oneWaveLimit(pm)(
+      val pmN = Scale.oneWaveLimit(pm)(
         pm.limit(math.min(deltaMaxEdges + 1, Int.MaxValue.toLong).toInt).count())
       val pmB = if (pmN <= deltaMaxEdges) broadcast(pm) else pm
       // Exactness gate, ONE shuffle: both roles of every prev row grouped
@@ -824,7 +817,7 @@ object Algos {
     // broadcast (≤2M rows ≈ 32 MB built) and keep the stats-blind SMJ only
     // for degree tables past the guard (removed 2 of the 3 |E| Exchanges;
     // plans/r10/q_assortativity_*.txt)
-    val degJ = if (atMost(deg, 2000000L)) broadcast(deg) else deg
+    val degJ = if (Scale.fitsBroadcast(deg, 2000000L)) broadcast(deg) else deg
     val dec = "decimal(38,0)"
     def d(c: Column): Column = c.cast(dec)
     val zero = lit(0).cast(dec)
@@ -1226,8 +1219,8 @@ object Algos {
     *
     * Scale: each round is one keyed degree agg + two semi-joins on the
     * SHRINKING symmetrized edge set — per-round cost tracks surviving
-    * edges, never the original graph after early rounds; eager per-round
-    * checkpoints keep lineage flat (the Descend rule). */
+    * edges, never the original graph after early rounds; the rounds run
+    * on [[peelRounds]] (one checkpoint-and-count job each). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50,
       localMaxEdges: Long = 2000000L): DataFrame = {
     require(k >= 1)
@@ -1261,21 +1254,14 @@ object Algos {
         case i if !removed(i) && deg(i) >= k => (ids(i), deg(i).toLong)
       }.toDF("id", "deg")
     }
-    var e = sym.unionAll(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    var nEdges = e.count()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
+    val (e, _, converged) = peelRounds(
+        sym.unionAll(sym.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
+        maxRounds) { (e, _) =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select(col("src").as("id")).localCheckpoint(true)
-      val ne = e.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
+        .where(col("deg") >= k).select(col("src").as("id")).localCheckpoint(eager = false)
+      e.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst").localCheckpoint(true)
-      val n = ne.count()
-      if (n == nEdges) converged = true
-      else { e = ne; nEdges = n }
+        .select("src", "dst")
     }
     if (!converged)
       throw new IllegalStateException(s"kCore did not converge within $maxRounds rounds")
@@ -1385,7 +1371,7 @@ object Algos {
     * agg + one semi-join, all on the SHRINKING edge set; per-vertex wedge
     * work is deg², so pre-capping hubs (e.g. via [[linkPrediction]]'s
     * maxDeg rule on the generating projection) bounds the round cost.
-    * Eager per-round checkpoints keep lineage flat. */
+    * The rounds run on [[peelRounds]]. */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64,
       localMaxEdges: Long = 2000000L): DataFrame = {
     require(k >= 3)
@@ -1483,7 +1469,6 @@ object Algos {
       }
       return out.toSeq.toDF("id_a", "id_b", "support")
     }
-    var cur = raw.distinct().localCheckpoint(true)
     // support(a,b) = wedge enumeration + hash agg, kept over the
     // adjacency-ARRAY + array_intersect alternative after measuring both:
     // the array form shuffles each hub's full neighbor list on every
@@ -1497,24 +1482,18 @@ object Algos {
         .join(adj.select(col("u").as("b"), col("w")), Seq("b", "w"))
         .groupBy("a", "b").agg(count(lit(1)).as("s"))
     }
-    var n = cur.count()
-    var converged = false
-    var rounds = 0
-    // carry the converging round's materialized support: on convergence
-    // ne == cur, so lastSup IS the final edge set's support — reusing it for
-    // the output join saves a full extra wedge-join pass (the dominant cost)
+    // carry the last round's materialized support: on a fixpoint the pool
+    // is that round's input, so lastSup IS the final edge set's support —
+    // reusing it for the output join saves a full extra wedge-join pass
+    // (the dominant cost). An empty pool needs none.
     var lastSup: DataFrame = null
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val sup = support(cur).localCheckpoint(true)
-      val ne = cur.join(sup.where(col("s") >= k - 2), Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      val m = ne.count()
-      if (m == n) { converged = true; lastSup = sup } else { cur = ne; n = m }
+    val (cur, rows, converged) = peelRounds(raw.distinct(), maxRounds) { (cur, _) =>
+      lastSup = support(cur).localCheckpoint(eager = false)
+      cur.join(lastSup.where(col("s") >= k - 2), Seq("a", "b"), "left_semi")
     }
     if (!converged)
       throw new IllegalStateException(s"kTruss did not converge within $maxRounds rounds")
-    cur.join(lastSup, Seq("a", "b"))
+    (if (rows == 0L) cur.withColumn("s", lit(0L)) else cur.join(lastSup, Seq("a", "b")))
       .select(col("a").as("id_a"), col("b").as("id_b"), col("s").as("support"))
   }
 
@@ -1534,8 +1513,8 @@ object Algos {
     * anti-join + two semi-joins — all on the candidate-induced subgraph,
     * which SHRINKS every round (the globally-minimal priority always
     * wins, and hash-uniform priorities remove a constant expected edge
-    * fraction per round ⇒ O(log n) expected rounds). Eager per-round
-    * checkpoints keep lineage flat (the Descend rule). */
+    * fraction per round ⇒ O(log n) expected rounds). The rounds run on
+    * [[peelRounds]]. */
   def maximalIndependentSet(edges: DataFrame, maxRounds: Int = 64,
       localMaxEdges: Long = 2000000L): DataFrame = {
     val spark = edges.sparkSession
@@ -1579,34 +1558,32 @@ object Algos {
       return out.toSeq.toDF("id")
     }
     var e = sym0.unionAll(sym0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    var cand = e.select(col("src").as("id")).distinct().localCheckpoint(true)
-    var mis = cand.where(lit(false))
-    var n = cand.count()
-    var r = 0
-    while (n > 0) {
-      r += 1
-      if (r > maxRounds)
-        throw new IllegalStateException(s"MIS did not drain within $maxRounds rounds")
-      val p = cand.select(col("id"),
-        concat(md5(concat(lit(s"$r:"), col("id").cast("string"))),
-          lpad(col("id").cast("string"), 20, "0")).as("p"))
-      val minNbr = e.join(p.select(col("id").as("dst"), col("p").as("pd")), "dst")
-        .groupBy("src").agg(min("pd").as("mn"))
-      val win = p.join(minNbr.select(col("src").as("id"), col("mn")), Seq("id"), "left")
-        .where(col("mn").isNull || col("p") < col("mn"))
-        .select("id").localCheckpoint(true)
-      mis = mis.unionByName(win)
-      val removed = win.unionAll(
-          e.join(win.select(col("id").as("src")), Seq("src"), "left_semi")
-            .select(col("dst").as("id")))
-        .distinct()
-      cand = cand.join(removed, Seq("id"), "left_anti").localCheckpoint(true)
-      e = e.join(cand.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(cand.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst").localCheckpoint(true)
-      n = cand.count()
+      .distinct().localCheckpoint(eager = false)
+    var mis = e.select(col("src").as("id")).where(lit(false))
+    val (_, left, _) = peelRounds(e.select(col("src").as("id")).distinct(), maxRounds) {
+      (cand, r) =>
+        // the edge set follows the candidate pool (round 1's pool is every
+        // endpoint of e already)
+        if (r > 1) e = e.join(cand.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(cand.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst").localCheckpoint(eager = false)
+        val p = cand.select(col("id"),
+          concat(md5(concat(lit(s"$r:"), col("id").cast("string"))),
+            lpad(col("id").cast("string"), 20, "0")).as("p"))
+        val minNbr = e.join(p.select(col("id").as("dst"), col("p").as("pd")), "dst")
+          .groupBy("src").agg(min("pd").as("mn"))
+        val win = p.join(minNbr.select(col("src").as("id"), col("mn")), Seq("id"), "left")
+          .where(col("mn").isNull || col("p") < col("mn"))
+          .select("id").localCheckpoint(eager = false)
+        mis = mis.unionByName(win)
+        val removed = win.unionAll(
+            e.join(win.select(col("id").as("src")), Seq("src"), "left_semi")
+              .select(col("dst").as("id")))
+          .distinct()
+        cand.join(removed, Seq("id"), "left_anti")
     }
+    if (left > 0)
+      throw new IllegalStateException(s"MIS did not drain within $maxRounds rounds")
     mis
   }
 
@@ -1693,64 +1670,17 @@ object Algos {
         .as("q_ppm"))
   }
 
-  /** Borůvka minimum spanning forest — the distributed MST algorithm (each
-    * component picks its cheapest crossing edge; chosen edges contract;
-    * components at least HALVE per round ⇒ ≤ ⌈log₂ n⌉ rounds regardless of
-    * graph shape — the reason Borůvka, not Prim/Kruskal, is the scale
-    * formulation: no priority queue, no global edge sort). Edges are
-    * canonicalized (least/greatest, parallels collapsed to their min
-    * weight); the edge order (w, src, dst) is a STRICT total order, so the
-    * forest is the UNIQUE minimum spanning forest under it — a pure fact
-    * of the graph that reruns, partitionings, and engines agree on (the
-    * oracle replays the same rounds; chosen edges depend only on the
-    * component PARTITION, not on label values, so any min-id labeling
-    * agrees). Returns the forest as `(src, dst, w)`.
+  /** One-action guard + collect for the local replays: runs the LIMITED
+    * plan once (first wave widened by [[Scale.oneWaveLimit]]) and returns
+    * the rows iff the frame holds at most n of them — a guard's cost stays
+    * capped at its threshold instead of a full count of an arbitrarily
+    * large input (the replays sit in front of billion-edge distributed
+    * paths). A separate probe + collect paid two sequential driver actions
+    * over the same frame; measured 0.2-0.4 s of pure probe latency per
+    * qualifying query at sf0.1. Above the guard the wasted transfer is
+    * bounded by the guard constant itself (n+1 rows).
     *
-    * Scale: per round ONE crossing-edge join (two keyed probes of the
-    * component map) + one per-component window min + a component-LEVEL
-    * contraction: [[ccAlternating]] runs on the chosen-edge graph whose
-    * vertex set is the current components — never the full graph — and
-    * shrinks geometrically. Eager per-round checkpoints (the Descend
-    * rule). Once the crossing set fits `localMaxEdges`, a guarded KRUSKAL
-    * finish (sorted partition-at-a-time stream + driver union-find over
-    * component ids) completes the identical unique forest in one pass —
-    * the geometric shrink lands every run's TAIL there, where per-round
-    * scheduling latency would otherwise dominate. */
-  /** Bounded guard probe: true iff `df` has at most `n` rows, SCANNING at
-    * most n+1 of them — a guard's cost stays capped at its threshold
-    * instead of a full count of an arbitrarily large input (the local
-    * replays sit in front of billion-edge distributed paths). */
-  /** Runs `body` with Spark's incremental-limit first wave widened from 1
-    * partition to the session's core count: a guard probe/collect over a
-    * 32-partition frame otherwise executes as up to 4 SEQUENTIAL jobs
-    * (waves of 1, 4, 16, 32 partitions — measured 0.33 s vs 0.09 s for a
-    * plain parallel collect on a warm 16 k-row frame). One wave of
-    * `defaultParallelism` partitions keeps the early-stop property on
-    * genuinely large inputs (a cluster frame with 10⁴ partitions still
-    * stops after core-count partitions if the limit is already exceeded)
-    * while making the common bench-scale case one parallel job. The
-    * set/restore is the shared, session-synchronized implementation in
-    * [[graft.plans.Scale.oneWaveLimit]] (concurrent library callers must
-    * not interleave save/restore pairs). */
-  private def oneWaveLimit[A](df: DataFrame)(body: => A): A =
-    graft.plans.Scale.oneWaveLimit(df)(body)
-
-  private def atMost(df: DataFrame, n: Long): Boolean = {
-    if (n < 0) return false
-    val probe = math.min(n, Int.MaxValue - 1L).toInt + 1
-    oneWaveLimit(df)(df.limit(probe).count() <= n)
-  }
-
-  /** One-action guard + collect, fusing [[atMost]]'s probe with the local
-    * replay's collect: runs the LIMITED plan once and returns the rows iff
-    * the frame holds at most n of them. Every guarded replay used to pay
-    * two sequential driver actions over the same (checkpointed) frame —
-    * a limit+count probe, then a full collect — each with Spark's
-    * incremental-limit multi-stage execution; measured 0.2-0.4 s of pure
-    * probe latency per qualifying query at sf0.1. Above the guard the
-    * wasted transfer is bounded by the guard constant itself (n+1 rows),
-    * the same driver budget the subsequent collect would have spent. */
-  /** INTERNAL rows, not external ones: Dataset.collect() wraps every row
+    * INTERNAL rows, not external ones: Dataset.collect() wraps every row
     * in a boxed GenericRow (~100 B and 5 objects per row — ~200 MB of
     * simultaneously-live garbage at the 2 M guard), which a fresh JVM
     * absorbs but the bench JVM (heap already holding every cached table)
@@ -1760,7 +1690,7 @@ object Algos {
       : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
     if (n < 0) return None
     val probe = math.min(n, Int.MaxValue - 1L).toInt + 1
-    val rows = oneWaveLimit(df)(
+    val rows = Scale.oneWaveLimit(df)(
       df.limit(probe).queryExecution.executedPlan.executeCollect())
     if (rows.length <= n) Some(rows) else None
   }
@@ -1795,6 +1725,29 @@ object Algos {
     keep.toSeq
   }
 
+  /** Borůvka minimum spanning forest — the distributed MST algorithm (each
+    * component picks its cheapest crossing edge; chosen edges contract;
+    * components at least HALVE per round ⇒ ≤ ⌈log₂ n⌉ rounds regardless of
+    * graph shape — the reason Borůvka, not Prim/Kruskal, is the scale
+    * formulation: no priority queue, no global edge sort). Edges are
+    * canonicalized (least/greatest, parallels collapsed to their min
+    * weight); the edge order (w, src, dst) is a STRICT total order, so the
+    * forest is the UNIQUE minimum spanning forest under it — a pure fact
+    * of the graph that reruns, partitionings, and engines agree on (the
+    * oracle replays the same rounds; chosen edges depend only on the
+    * component PARTITION, not on label values, so any min-id labeling
+    * agrees). Returns the forest as `(src, dst, w)`.
+    *
+    * Scale: per round ONE crossing-edge join (two keyed probes of the
+    * component map) + one per-component window min + a component-LEVEL
+    * contraction: [[ccAlternating]] runs on the chosen-edge graph whose
+    * vertex set is the current components — never the full graph — and
+    * shrinks geometrically. Eager per-round checkpoints (the Descend
+    * rule). Once the crossing set fits `localMaxEdges`, a guarded KRUSKAL
+    * finish (sorted partition-at-a-time stream + driver union-find over
+    * component ids) completes the identical unique forest in one pass —
+    * the geometric shrink lands every run's TAIL there, where per-round
+    * scheduling latency would otherwise dominate. */
   def boruvkaForest(edges: DataFrame, maxRounds: Int = 40,
       localMaxEdges: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1934,7 +1887,7 @@ object Algos {
     * Scale: per round one uncolored⋈edge join + one max-priority agg (the
     * MIS shape), plus a bounded `maxColors`-way candidate explode
     * anti-joined against neighbor colors — all keyed, all on the SHRINKING
-    * uncolored set. Eager per-round checkpoints. */
+    * uncolored set. The rounds run on [[peelRounds]]. */
   def jpColoring(edges: DataFrame, maxColors: Int = 64, maxRounds: Int = 256,
       localMaxEdges: Long = 2000000L): DataFrame = {
     val spark = edges.sparkSession
@@ -1979,39 +1932,36 @@ object Algos {
       return ids.indices.map(i => (ids(i), color(i))).toDF("id", "color")
     }
     val e = sym0.unionAll(sym0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
+      .distinct().localCheckpoint(eager = false)
     // JP needs at most maxDegree+1 colors; check ONCE so a too-small
     // maxColors fails loudly instead of silently dropping saturated vertices
     val dmax = e.groupBy("src").agg(count(lit(1)).as("d")).agg(max("d")).head()
     if (!dmax.isNullAt(0))
       require(dmax.getLong(0) < maxColors,
         s"maxColors=$maxColors <= max degree ${dmax.getLong(0)}; JP needs maxDegree+1")
-    var uncolored = e.select(col("src").as("id")).distinct().localCheckpoint(true)
-    var colored = uncolored.select(col("id"), lit(0).as("color")).where(lit(false))
-      .localCheckpoint(true)
-    var n = uncolored.count()
-    var r = 0
-    while (n > 0) {
-      r += 1
-      if (r > maxRounds)
-        throw new IllegalStateException(s"jpColoring did not drain within $maxRounds rounds")
-      val p = uncolored.select(col("id"), prio(col("id")).as("p"))
-      val maxNbr = e.join(p.select(col("id").as("dst"), col("p").as("pd")), "dst")
-        .groupBy("src").agg(max("pd").as("mx"))
-      val win = p.join(maxNbr.select(col("src").as("id"), col("mx")), Seq("id"), "left")
-        .where(col("mx").isNull || col("p") > col("mx"))
-        .select("id").localCheckpoint(true)
-      // smallest color absent among already-colored neighbors
-      val nbrColors = e.join(win.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(colored.select(col("id").as("dst"), col("color")), "dst")
-        .select(col("src").as("id"), col("color")).distinct()
-      val pick = win.select(col("id"), explode(sequence(lit(0), lit(maxColors - 1))).as("color"))
-        .join(nbrColors, Seq("id", "color"), "left_anti")
-        .groupBy("id").agg(min("color").as("color"))
-      colored = colored.unionByName(pick).localCheckpoint(true)
-      uncolored = uncolored.join(win, Seq("id"), "left_anti").localCheckpoint(true)
-      n = uncolored.count()
+    var colored = e.select(col("src").as("id"), lit(0).as("color")).where(lit(false))
+    val (_, left, _) = peelRounds(e.select(col("src").as("id")).distinct(), maxRounds) {
+      (uncolored, _) =>
+        val p = uncolored.select(col("id"), prio(col("id")).as("p"))
+        val maxNbr = e.join(p.select(col("id").as("dst"), col("p").as("pd")), "dst")
+          .groupBy("src").agg(max("pd").as("mx"))
+        val win = p.join(maxNbr.select(col("src").as("id"), col("mx")), Seq("id"), "left")
+          .where(col("mx").isNull || col("p") > col("mx"))
+          .select("id").localCheckpoint(eager = false)
+        // smallest color absent among already-colored neighbors
+        val nbrColors = e.join(win.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(colored.select(col("id").as("dst"), col("color")), "dst")
+          .select(col("src").as("id"), col("color")).distinct()
+        val pick = win.select(col("id"), explode(sequence(lit(0), lit(maxColors - 1))).as("color"))
+          .join(nbrColors, Seq("id", "color"), "left_anti")
+          .groupBy("id").agg(min("color").as("color"))
+        // eager: the pool never reads colored, so a lazy checkpoint would
+        // stay uncomputed and chain every round's pick into the output
+        colored = colored.unionByName(pick).localCheckpoint(eager = true)
+        uncolored.join(win, Seq("id"), "left_anti")
     }
+    if (left > 0)
+      throw new IllegalStateException(s"jpColoring did not drain within $maxRounds rounds")
     colored
   }
 
@@ -2051,41 +2001,43 @@ object Algos {
     // round i-1's, level(v) = max round that reached v — run on a collected
     // adjacency; identical semantics INCLUDING the maxIter level cap, so
     // the replay is bit-exact under truncation too (parity-spec'd at
-    // guard = 0). The 50k default is a MEASURED rejection of a bigger guard: at sf0.1 (2M edges, depth 4,
-    // local[32]) the local path reads 2.7-3.9 s vs 2.7 s distributed —
-    // the collect + driver sets + 800k-row re-upload cost more than four
-    // well-parallelized rounds — so it fires only on genuinely small DAGs
-    if (integralCols(e, "src", "dst") &&
-        integralCols(vertices, vertices.columns.head) &&
-        atMost(e, localMaxEdges) && atMost(vertices, localMaxEdges)) {
-      val eRows = e.select(col("src").cast("long"), col("dst").cast("long")).collect()
-      val vRows = vertices.select(col(vertices.columns.head).cast("long")).collect()
-      if (!eRows.exists(r => r.isNullAt(0) || r.isNullAt(1)) && !vRows.exists(_.isNullAt(0))) {
-        val es = eRows.map(r => (r.getLong(0), r.getLong(1)))
-        val vs = vRows.map(_.getLong(0))
-        val adj = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        es.foreach { case (s, d) =>
-          adj.getOrElseUpdate(s, new scala.collection.mutable.ArrayBuffer[Long]) += d
-        }
-        val level = scala.collection.mutable.HashMap[Long, Int]()
-        vs.foreach(v => level.getOrElseUpdate(v, 0))
-        var frontier: scala.collection.Set[Long] = es.iterator.map(_._2).toSet
-        frontier.foreach(v => level(v) = 1) // max-merge: round 1 beats the 0 init
-        var i = 1
-        var done = frontier.isEmpty
-        while (!done && i < maxIter) {
-          val next = scala.collection.mutable.HashSet[Long]()
-          frontier.foreach(v => adj.get(v).foreach(_.foreach(next += _)))
-          if (next.isEmpty) done = true
-          else next.foreach(v => level(v) = i + 1) // later round always wins the max
-          frontier = next
-          i += 1
-        }
-        return level.iterator.map { case (v, l) => (v, l) }.toSeq.toDF("id", "level")
+    // guard = 0). The 50k default is a MEASURED rejection of a bigger
+    // guard: at sf0.1 (2M edges, depth 4, local[32]) the local path reads
+    // 2.7-3.9 s vs 2.7 s distributed — the collect + driver sets + 800k-row
+    // re-upload cost more than four well-parallelized rounds — so it fires
+    // only on genuinely small DAGs. Probe + collect are one action per
+    // frame (collectAtMost); null ids fall through to the distributed
+    // rounds, which keep the pre-replay semantics for them (a null dst
+    // keeps its level row; a null src never matches a join)
+    val esOpt =
+      if (integralCols(e, "src", "dst") && integralCols(vertices, vertices.columns.head))
+        collectPairsAtMost(e.select(col("src").cast("long"), col("dst").cast("long")),
+          localMaxEdges)
+      else None
+    val vsOpt = if (esOpt.isEmpty) None
+      else collectLongsAtMost(vertices.select(col(vertices.columns.head).cast("long")),
+        localMaxEdges)
+    if (vsOpt.isDefined) {
+      val es = esOpt.get
+      val adj = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+      es.foreach { case (s, d) =>
+        adj.getOrElseUpdate(s, new scala.collection.mutable.ArrayBuffer[Long]) += d
       }
-      // null ids: fall through — the distributed rounds keep the pre-replay
-      // semantics for them (a null dst keeps its level row; null src never
-      // matches a join)
+      val level = scala.collection.mutable.HashMap[Long, Int]()
+      vsOpt.get.foreach(v => level.getOrElseUpdate(v, 0))
+      var frontier: scala.collection.Set[Long] = es.iterator.map(_._2).toSet
+      frontier.foreach(v => level(v) = 1) // max-merge: round 1 beats the 0 init
+      var i = 1
+      var done = frontier.isEmpty
+      while (!done && i < maxIter) {
+        val next = scala.collection.mutable.HashSet[Long]()
+        frontier.foreach(v => adj.get(v).foreach(_.foreach(next += _)))
+        if (next.isEmpty) done = true
+        else next.foreach(v => level(v) = i + 1) // later round always wins the max
+        frontier = next
+        i += 1
+      }
+      return level.iterator.map { case (v, l) => (v, l) }.toSeq.toDF("id", "level")
     }
     // DELTA iteration: round i's frontier is exactly the heads of some
     // length-i path, so the level column is constant per round — each round
@@ -2627,24 +2579,24 @@ object Algos {
     // backward sweep, deepest level first: δ at the deepest level is 0.
     // `delta` carries (s, v, sigma, delta) — the σ of level l+1 is needed as
     // the divisor when level l pulls its dependency contributions. Its joins
-    // take the driver's broadcast guard ([[bcastRows]]) on the level counts:
-    // join STRATEGY only — past the guard every join shuffles.
+    // take the driver's broadcast guard ([[Scale.guarded]]) on the level
+    // counts: join STRATEGY only — past the guard every join shuffles.
     var delta = levels.last._1.withColumn("delta", lit(0.0)).localCheckpoint(eager = false)
     var deltaRows = levels.last._2
     var acc = delta.select("s", "v", "delta")
     var l = levels.length - 2
     while (l >= 0) {
       val (cur, curRows) = levels(l)
-      val curB = if (curRows <= bcastRows) broadcast(cur) else cur
+      val curB = guarded(cur, curRows)
       val deltaSel = delta.select(col("s"), col("v").as("w"),
         col("sigma").as("sw"), col("delta").as("dw"))
-      val dB = if (deltaRows <= bcastRows) broadcast(deltaSel) else deltaSel
+      val dB = guarded(deltaSel, deltaRows)
       val contrib = curB.join(e, curB("v") === e("src"))
         .select(col("s"), col("v"), col("sigma"), col("dst").as("w"))
         .join(dB, Seq("s", "w"))
         .groupBy("s", "v")
         .agg(sum(col("sigma").cast("double") / col("sw") * (lit(1.0) + col("dw"))).as("delta"))
-      val cB = if (curRows <= bcastRows) broadcast(contrib) else contrib
+      val cB = guarded(contrib, curRows)
       val lvlDelta = cur.join(cB, Seq("s", "v"), "left")
         .select(col("s"), col("v"), col("sigma"), coalesce(col("delta"), lit(0.0)).as("delta"))
         .localCheckpoint(eager = true)
@@ -3093,7 +3045,7 @@ object Algos {
     * non-empty pool always yields ≥1 winner (the globally-minimal edge wins
     * both endpoints), so the loop drains. Per round: one explode-to-endpoint
     * agg + one priority join + two semi/anti joins on the SHRINKING edge
-    * set, O(log n) expected rounds, eager per-round checkpoints.
+    * set, O(log n) expected rounds, run on [[peelRounds]].
     * Returns matched edges as (lo, hi). */
   def maximalMatching(edges: DataFrame, maxRounds: Int = 64,
       localMaxEdges: Long = 2000000L): DataFrame = {
@@ -3170,32 +3122,27 @@ object Algos {
       }
       return out.toSeq.toDF("lo", "hi")
     }
-    var e = canon0.dropDuplicates("lo", "hi").localCheckpoint(true)
-    var matched = e.where(lit(false))
-    var n = e.count()
-    var r = 0
-    while (n > 0) {
-      r += 1
-      if (r > maxRounds)
-        throw new IllegalStateException(s"matching did not drain within $maxRounds rounds")
+    var matched = canon0.where(lit(false))
+    val (_, left, _) = peelRounds(canon0.dropDuplicates("lo", "hi"), maxRounds) { (e, r) =>
       val p = e.select(col("lo"), col("hi"),
         concat(md5(concat(lit(s"$r:"), col("lo").cast("string"), lit(":"), col("hi").cast("string"))),
           lpad(col("lo").cast("string"), 20, "0"),
-          lpad(col("hi").cast("string"), 20, "0")).as("p")).localCheckpoint(true)
+          lpad(col("hi").cast("string"), 20, "0")).as("p")).localCheckpoint(eager = false)
       val byV = p.select(col("lo").as("v"), col("p"))
         .unionAll(p.select(col("hi").as("v"), col("p")))
       val minV = byV.groupBy("v").agg(min("p").as("mn"))
       val win = p.join(minV.select(col("v").as("lo"), col("mn").as("mnLo")), Seq("lo"))
         .join(minV.select(col("v").as("hi"), col("mn").as("mnHi")), Seq("hi"))
         .where(col("p") === col("mnLo") && col("p") === col("mnHi"))
-        .select("lo", "hi").localCheckpoint(true)
+        .select("lo", "hi").localCheckpoint(eager = false)
       matched = matched.unionByName(win)
       val mv = win.select(col("lo").as("v")).unionAll(win.select(col("hi").as("v"))).distinct()
-      e = e.join(mv.select(col("v").as("lo")), Seq("lo"), "left_anti")
+      e.join(mv.select(col("v").as("lo")), Seq("lo"), "left_anti")
         .join(mv.select(col("v").as("hi")), Seq("hi"), "left_anti")
-        .select("lo", "hi").localCheckpoint(true)
-      n = e.count()
+        .select("lo", "hi")
     }
+    if (left > 0)
+      throw new IllegalStateException(s"matching did not drain within $maxRounds rounds")
     matched
   }
 

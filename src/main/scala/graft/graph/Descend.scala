@@ -16,11 +16,15 @@ import org.apache.spark.sql.functions._
   * `continueP` (expand further from it). Cycle-cutting = `array_contains`
   * on the accumulated path, exactly fermor's no-cycles/prevent-cycles.
   *
-  * Scale: the frontier carries only (id, depth, path). Levels are unioned
-  * lazily into one Catalyst plan; maxDepth bounds the join chain. For deep
-  * descents, pass `checkpointEvery` to localCheckpoint and cut lineage.
+  * Scale: the frontier carries only (id, depth, path). Every level ends in
+  * [[graft.plans.Scale.checkpointed]]: level d feeds BOTH the result union
+  * and level d+1's expansion, and Catalyst does not share common subplans
+  * across union branches — without the materialization the k-th level is
+  * recomputed O(k) times (quadratic join work). The checkpoint's one count
+  * job is also the drain probe and sizes the next frontier broadcast.
   */
 object Descend {
+  import graft.plans.Scale.{bcastRows, checkpointed, guarded}
 
   /** Expand `start` (an `id` column) up to `maxDepth` hops over `labels`
     * edges (all labels if empty), `forward` or reverse. Returns one row per
@@ -34,7 +38,6 @@ object Descend {
       emit: DataFrame => DataFrame = identity,
       continueP: DataFrame => DataFrame = identity,
       allowCycles: Boolean = false,
-      checkpointEvery: Int = 0,
       acyclic: Boolean = false): DataFrame = {
 
     // when the loader registered exact label counts and the traversed slice
@@ -42,7 +45,7 @@ object Descend {
     // shares identical hinted subtrees across the level joins) beats
     // re-broadcasting a growing frontier per level; the per-level frontier
     // guard below then stands down
-    val eKnownSmall = g.labelRows(labels).exists(_ <= 1000000L)
+    val eKnownSmall = g.labelRows(labels).exists(_ <= bcastRows)
     val e0 = g.labeledEdges(labels)
     val (from, to) = if (forward) ("src", "dst") else ("dst", "src")
     // deliberately NOT checkpointed: each level re-derives this projection
@@ -60,11 +63,10 @@ object Descend {
     // array<long> column (path multiplicity is preserved by join fan-out —
     // bag semantics need no bookkeeping).
     val idCol = start.columns.head
-    var frontier = start
+    var seed = start
       .select(col(idCol).cast("long").as("id"))
       .withColumn("depth", lit(0))
-    if (!acyclic) frontier = frontier.withColumn("path", array(col("id")))
-    var acc = emit(frontier)
+    if (!acyclic) seed = seed.withColumn("path", array(col("id")))
 
     // Guarded frontier broadcast (guide §3.1; the pathEdges idiom): each
     // level's expansion join would otherwise SMJ — the checkpointed frontier
@@ -72,70 +74,39 @@ object Descend {
     // level even when the frontier is a handful of rows, and AQE's runtime
     // SMJ→BHJ rewrite still pays the |E| map-side shuffle write before it
     // can see the sizes. Broadcasting a measured-small frontier keeps e
-    // unshuffled (one map-side probe of the cached scan per level). The
-    // level-d frontier count comes FREE from the emptiness probe the eager
-    // checkpoint already pays (a one-wave bounded limit instead of
-    // isEmpty's limit(1)); past the guard — a real cluster's frontier —
-    // the shuffle join stands, so this is latency-safe at scale.
-    val bcastRows = 1000000L // ~2 longs/row ≈ 16 MB data, the delta-CC collect
-    // budget; a tighter 250k guard A/B-measured WORSE on every descend query
-    // (q_deepest 2.4→3.5 s warm: even a 750k-row single-threaded build beats
-    // re-exchanging the full edge projection, OPTIMIZATION_r11.md)
-    var frontierSmall = !eKnownSmall && checkpointEvery > 0 &&
-      graft.plans.Scale.fitsBroadcast(frontier, bcastRows)
+    // unshuffled (one map-side probe of the cached scan per level); the
+    // level counts come free from the checkpoint jobs. A known-small slice
+    // is broadcast itself, so the frontier is not: its seed goes unprobed.
+    var (frontier, rows) =
+      if (eKnownSmall) (seed, Long.MaxValue) else checkpointed(seed)
+    var acc = emit(frontier)
     var d = 1
-    while (d <= maxDepth) {
-      val cont = continueP(frontier)
-      val contB = if (frontierSmall) broadcast(cont) else cont
-      var next = contB
-        .join(e, contB("id") === e("__from"))
-      next =
+    while (d <= maxDepth && rows > 0L) {
+      val cont = if (eKnownSmall) continueP(frontier) else guarded(continueP(frontier), rows)
+      val next = cont.join(e, cont("id") === e("__from"))
+      val (level, n) = checkpointed(
         if (acyclic)
           next.select(col("__to").as("id"), (col("depth") + 1).as("depth"))
         else {
-          var n = next.select(col("path"), col("__to").as("id"), (col("depth") + 1).as("depth"))
-          if (!allowCycles) n = n.where(!array_contains(col("path"), col("id")))
-          n.withColumn("path", concat(col("path"), array(col("id"))))
-        }
-      frontier =
-        if (checkpointEvery > 0 && d % checkpointEvery == 0) next.localCheckpoint(eager = false)
-        else next
-      // LAZY checkpoint + one bounded counting probe = ONE job per level
-      // (the transitive-reduction rule): accessing a cached partition
-      // unrolls the whole block, so the one-wave limit count both
-      // materializes the level AND returns its emptiness/size — the old
-      // eager-checkpoint-then-isEmpty shape paid two jobs per level
-      if (checkpointEvery > 0 && d % checkpointEvery == 0) {
-        val n = graft.plans.Scale.oneWaveLimit(frontier)(
-          frontier.limit((bcastRows + 1).toInt).count())
-        frontierSmall = !eKnownSmall && n <= bcastRows
-        if (n == 0L) d = maxDepth + 1
-        else {
-          acc = acc.unionByName(emit(frontier))
-          d += 1
-        }
-      } else {
-        // un-checkpointed level: no cheap probe, and the frontier may have
-        // fanned out past the guard — drop the broadcast eligibility until
-        // the next measured level
-        frontierSmall = false
-        acc = acc.unionByName(emit(frontier))
-        d += 1
-      }
+          var l = next.select(col("path"), col("__to").as("id"), (col("depth") + 1).as("depth"))
+          if (!allowCycles) l = l.where(!array_contains(col("path"), col("id")))
+          l.withColumn("path", concat(col("path"), array(col("id"))))
+        })
+      if (n > 0L) acc = acc.unionByName(emit(level))
+      frontier = level
+      rows = n
+      d += 1
     }
     acc
   }
 
-  /** fermor `all`: every element reachable within maxDepth, cycles cut.
-    * Each level is checkpointed eagerly: level i feeds BOTH the result union
-    * and level i+1's expansion, and Catalyst does not share common subplans
-    * across union branches — without the materialization the k-th level is
-    * recomputed O(k) times (quadratic join work). Pass `acyclic = true` on
-    * DAGs (e.g. FK hierarchies) to skip path accumulation — same rows, far
-    * narrower shuffles. */
+  /** fermor `all`: every element reachable within maxDepth, cycles cut —
+    * [[run]]'s one checkpointed level loop with the default controls. Pass
+    * `acyclic = true` on DAGs (e.g. FK hierarchies) to skip path
+    * accumulation — same rows, far narrower shuffles. */
   def all(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int, acyclic: Boolean = false): DataFrame =
-    run(g, start, labels, forward, maxDepth, checkpointEvery = 1, acyclic = acyclic)
+    run(g, start, labels, forward, maxDepth, acyclic = acyclic)
       .select("id", "depth")
 
   /** The anti-join side of [[deepest]]/[[deepestPaths]], broadcast under a
@@ -155,12 +126,12 @@ object Descend {
     // |tails| <= the slice's registered edge count, so a loader-counted
     // small slice broadcasts with NO probe — the per-branch anti-joins
     // become map-side probes of one reused build. Without counts: lazy
-    // checkpoint, NOT a fitsBroadcast probe — the probe is itself a
+    // checkpoint, NOT a limited-count size probe — the probe is itself a
     // distinct-scan job paid before the main action (A/B: bench q_deepest
     // 2.59 -> 2.95 with probe+broadcast), while the checkpoint
     // materializes the distinct ONCE for all pushed-down branches and
     // ReusedExchange dedups their identical shuffle sides
-    if (g.labelRows(labels).exists(_ <= 1000000L)) broadcast(tails)
+    if (g.labelRows(labels).exists(_ <= bcastRows)) broadcast(tails)
     else tails.localCheckpoint(false)
   }
 
@@ -168,7 +139,7 @@ object Descend {
     * whose id has no outgoing hop). Anti-join against the edge tails. */
   def deepest(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int, acyclic: Boolean = false): DataFrame =
-    run(g, start, labels, forward, maxDepth, checkpointEvery = 1, acyclic = acyclic)
+    run(g, start, labels, forward, maxDepth, acyclic = acyclic)
       .join(guardedTails(g, labels, forward), Seq("id"), "left_anti")
       .select("id", "depth")
 
@@ -176,7 +147,7 @@ object Descend {
     * each terminal element (path-carrying mode, so no acyclic shortcut). */
   def deepestPaths(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int): DataFrame =
-    run(g, start, labels, forward, maxDepth, checkpointEvery = 1)
+    run(g, start, labels, forward, maxDepth)
       .join(guardedTails(g, labels, forward), Seq("id"), "left_anti")
       .select("id", "depth", "path")
 
@@ -185,7 +156,7 @@ object Descend {
     * within maxDepth is counted (bag semantics on cyclic graphs). */
   def allWithCycles(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int): DataFrame =
-    run(g, start, labels, forward, maxDepth, allowCycles = true, checkpointEvery = 1)
+    run(g, start, labels, forward, maxDepth, allowCycles = true)
       .select("id", "depth")
 
   /** fermor `all-paths` (core.clj:1138): every cycle-free path from start,
@@ -193,64 +164,31 @@ object Descend {
     * [[allPathsTo]] for that form). */
   def allPaths(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int): DataFrame =
-    run(g, start, labels, forward, maxDepth, checkpointEvery = 1).select("path", "depth")
+    run(g, start, labels, forward, maxDepth).select("path", "depth")
 
   /** fermor `all-paths-with-cycles` (core.clj:1180): path-carrying walk with
     * revisits allowed, depth-bounded. */
   def allPathsWithCycles(g: PropertyGraph, start: DataFrame, labels: Seq[String],
       forward: Boolean, maxDepth: Int): DataFrame =
-    run(g, start, labels, forward, maxDepth, allowCycles = true, checkpointEvery = 1)
+    run(g, start, labels, forward, maxDepth, allowCycles = true)
       .select("path", "depth")
 
   /** fermor `all-paths-to`: every cycle-free path from start landing on a
     * vertex satisfying `target`. */
   def allPathsTo(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int, target: DataFrame => DataFrame): DataFrame =
-    target(run(g, start, labels, forward, maxDepth, checkpointEvery = 1))
+    target(run(g, start, labels, forward, maxDepth))
       .select("path", "depth")
 
-  /** fermor `all-cycles`: paths that return to their origin. Expansion allows
-    * revisits only of the path head; emits paths whose last hop closed the
-    * loop. */
+  /** fermor `all-cycles`: paths that return to their origin — a walk is
+    * emitted when its last hop closes on the head, and expanded only while
+    * its last vertex is new (so every emitted path is a simple cycle). */
   def allCycles(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
-      maxDepth: Int): DataFrame = {
-    val e0 = if (labels.isEmpty) g.edges else g.edges.where(col("label").isin(labels: _*))
-    val (from, to) = if (forward) ("src", "dst") else ("dst", "src")
-    val e = e0.select(col(from).as("__from"), col(to).as("__to"))
-    val idCol = start.columns.head
-    var frontier = start.select(col(idCol).cast("long").as("id"))
-      .withColumn("origin", col("id"))
-      .withColumn("depth", lit(0))
-      .withColumn("path", array(col("id")))
-    // seeded with an empty result of the output schema, so maxDepth < 1
-    // returns an empty DataFrame like every other Descend entry point
-    // (acc was previously null in that case — NPE at the caller's first op)
-    var acc: DataFrame = frontier
-      .select("origin", "path", "depth").where(lit(false))
-    var d = 1
-    while (d <= maxDepth) {
-      val stepped = frontier.join(e, frontier("id") === e("__from"))
-        .select(col("origin"), col("path"), col("__to").as("id"), (col("depth") + 1).as("depth"))
-      val closed = stepped.where(col("id") === col("origin"))
-        .withColumn("path", concat(col("path"), array(col("id"))))
-        .select("origin", "path", "depth")
-      acc = acc.unionByName(closed)
-      // same per-level materialization as all/deepest: the frontier feeds
-      // both the next expansion and (via stepped) the closed-cycle branch,
-      // so without it level k is re-derived O(k) times and lineage grows
-      // quadratically with depth. Lazy checkpoint + one-wave bounded count
-      // = ONE job per level (the run() fusion): the count materializes the
-      // blocks AND answers the drain check
-      frontier = stepped
-        .where(!array_contains(col("path"), col("id")))
-        .withColumn("path", concat(col("path"), array(col("id"))))
-        .localCheckpoint(false)
-      d += 1
-      if (d <= maxDepth) {
-        val n = graft.plans.Scale.oneWaveLimit(frontier)(frontier.limit(1).count())
-        if (n == 0L) d = maxDepth + 1 // exhausted early
-      }
-    }
-    acc
-  }
+      maxDepth: Int): DataFrame =
+    run(g, start, labels, forward, maxDepth,
+        emit = _.where(col("depth") > 0 && col("id") === col("path")(0)),
+        continueP = _.where(!array_contains(
+          slice(col("path"), lit(1), size(col("path")) - 1), col("id"))),
+        allowCycles = true)
+      .select(col("path")(0).as("origin"), col("path"), col("depth"))
 }

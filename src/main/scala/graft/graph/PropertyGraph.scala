@@ -53,14 +53,15 @@ final case class PropertyGraph(
     PropertyGraph.labelRowsOf(edges, labels)
 
   /** The label-filtered edge view every hop joins, broadcast-hinted when
-    * the registered exact count fits `broadcastRows` (guide §3.1): the hop
-    * join becomes a map-side probe of the frontier — no |E|-slice exchange,
-    * no frontier exchange — and identical hinted subtrees share ONE
-    * broadcast build via ReusedExchange across a multi-hop chain. Unknown
-    * or over-guard sizes keep the shuffle plan untouched. */
-  def labeledEdges(labels: Seq[String], broadcastRows: Long = 1000000L): DataFrame = {
+    * the registered exact count fits the shared row guard
+    * [[graft.plans.Scale.bcastRows]] (guide §3.1): the hop join becomes a
+    * map-side probe of the frontier — no |E|-slice exchange, no frontier
+    * exchange — and identical hinted subtrees share ONE broadcast build via
+    * ReusedExchange across a multi-hop chain. Unknown or over-guard sizes
+    * keep the shuffle plan untouched. */
+  def labeledEdges(labels: Seq[String]): DataFrame = {
     val base = if (labels.isEmpty) edges else edges.where(col("label").isin(labels: _*))
-    if (labelRows(labels).exists(_ <= broadcastRows)) broadcast(base) else base
+    if (labelRows(labels).exists(_ <= graft.plans.Scale.bcastRows)) broadcast(base) else base
   }
 
   /** fermor core.clj `add-vertices`: union new rows into a kind table. */

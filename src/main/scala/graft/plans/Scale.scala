@@ -103,13 +103,12 @@ object Scale {
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
 
-  /** Measured broadcast guard shared by broadcast-or-SMJ decisions outside
-    * Algos (the degreeAssortativity degJ idiom): true iff `df` holds at
-    * most `n` rows — one limited count whose first incremental-limit wave
-    * is widened to the session's core count (the Algos.atMost rationale:
-    * the default 1-partition first wave turns the probe into up to 4
-    * sequential jobs). Callers pick `n` so n·rowWidth stays a sane
-    * broadcast build (~32 MB for long pairs at 2 M). */
+  /** Measured broadcast guard of the broadcast-or-SMJ decisions (the
+    * degreeAssortativity degJ idiom): true iff `df` holds at most `n` rows
+    * — one limited count whose first incremental-limit wave is widened to
+    * the session's core count ([[oneWaveLimit]]). Callers pick `n` so
+    * n·rowWidth stays a sane broadcast build (~32 MB for long pairs at
+    * 2 M). */
   def fitsBroadcast(df: DataFrame, n: Long): Boolean = {
     if (n < 0) return false
     val probe = math.min(n, Int.MaxValue - 1L).toInt + 1
@@ -117,9 +116,15 @@ object Scale {
   }
 
   /** Runs `body` with Spark's incremental-limit first wave widened from 1
-    * partition to the session's core count (see Algos.atMost for the
-    * measured rationale) — the ONE shared implementation of the
-    * set/restore, synchronized on the owning session so two concurrent
+    * partition to the session's core count: a guard probe/collect over a
+    * 32-partition frame otherwise executes as up to 4 SEQUENTIAL jobs
+    * (waves of 1, 4, 16, 32 partitions — measured 0.33 s vs 0.09 s for a
+    * plain parallel collect on a warm 16 k-row frame). One wave of
+    * `defaultParallelism` partitions keeps the early-stop property on
+    * genuinely large inputs (a cluster frame with 10⁴ partitions still
+    * stops after core-count partitions if the limit is already exceeded)
+    * while making the common bench-scale case one parallel job. The
+    * set/restore is synchronized on the owning session so two concurrent
     * guard probes cannot interleave their save/restore and leave the conf
     * permanently set (or apply the widened wave to an unrelated concurrent
     * limit). The lock is held only for the probe's single bounded action. */
@@ -132,6 +137,32 @@ object Scale {
       conf.set(key, spark.sparkContext.defaultParallelism.toString)
       try body finally prev.fold(conf.unset(key))(conf.set(key, _))
     }
+  }
+
+  /** Row guard of every broadcast join whose side is sized at run time (the
+    * iterative loops' frontiers, Descend's tails, loader-counted edge
+    * slices): a checkpointed frame blinds the planner's stats, so a join
+    * against one would sort-merge, exchanging the FULL other side even for
+    * a one-row frontier. Sides of at most this many rows broadcast instead;
+    * past it the shuffle join stands, so a flooded frontier on a real
+    * cluster is never built into one hash relation. ~2 longs/row ≈ 16 MB;
+    * a tighter 250k guard measured worse on every descend query (q_deepest
+    * 2.4 → 3.5 s warm, OPTIMIZATION_r11.md). */
+  private[graft] val bcastRows = 1000000L
+
+  /** `df` broadcast when its measured `rows` fit [[bcastRows]]. */
+  private[graft] def guarded(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= bcastRows) broadcast(df) else df
+
+  /** The one way an iterative round ends: a LAZY localCheckpoint of `df`,
+    * completed by ONE count job that also sizes it (the drain probe and the
+    * [[guarded]] input). It counts every partition — an emptiness probe
+    * would leave the checkpoint partly computed — and it counts the
+    * checkpoint's RDD, because a DataFrame count adds a job for its
+    * single-partition exchange under AQE. */
+  private[graft] def checkpointed(df: DataFrame): (DataFrame, Long) = {
+    val c = df.localCheckpoint(eager = false)
+    (c, c.queryExecution.toRdd.count())
   }
 
   /** True when the physical plan of `df` contains no shuffle exchange —

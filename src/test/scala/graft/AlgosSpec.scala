@@ -1022,6 +1022,29 @@ class AlgosSpec extends AnyFunSuite {
         .as[(Long, Long, Long)].collect().toSet)
   }
 
+  test("peel caps on the distributed rounds: a pool one round short of done throws") {
+    // localMaxEdges = 0 forces the distributed rounds; every input below
+    // needs a second round, so maxRounds = 1 must fail loudly
+    def msg(f: => Any): String = intercept[IllegalStateException](f).getMessage
+    val path5 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    assert(msg(Algos.kCore(path5, k = 2, maxRounds = 1, localMaxEdges = 0L))
+      === "kCore did not converge within 1 rounds")
+    assert(Algos.kCore(path5, k = 2, maxRounds = 2, localMaxEdges = 0L).isEmpty)
+    val triPendant = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    assert(msg(Algos.kTruss(triPendant, k = 3, maxRounds = 1, localMaxEdges = 0L))
+      === "kTruss did not converge within 1 rounds")
+    assert(Algos.kTruss(triPendant, k = 3, maxRounds = 2, localMaxEdges = 0L)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      === Set((1L, 2L), (1L, 3L), (2L, 3L)))
+    val path40 = (1L to 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    assert(msg(Algos.maximalIndependentSet(path40, maxRounds = 1, localMaxEdges = 0L))
+      === "MIS did not drain within 1 rounds")
+    assert(msg(Algos.jpColoring(path40, maxRounds = 1, localMaxEdges = 0L))
+      === "jpColoring did not drain within 1 rounds")
+    assert(msg(Algos.maximalMatching(path40, maxRounds = 1, localMaxEdges = 0L))
+      === "matching did not drain within 1 rounds")
+  }
+
   test("harmonicCentrality: path graph closed form, isolated source gets a zero row") {
     // undirected path a-b-c at scale 840: ends score 840 + 420, middle 1680
     val es = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")

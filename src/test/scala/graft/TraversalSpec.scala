@@ -251,6 +251,34 @@ class TraversalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res === Set(appBob1, appBob2, appStephen1, appStephen2).map(_ -> 1))
   }
 
+  test("allCycles == brute-force cycle enumeration: self-loop, 2-cycle, 3-cycle, lollipop") {
+    // 1 loops on itself and 2-cycles with 2; 2 leads into the 3-cycle
+    // 3 -> 4 -> 5 -> 3; 6 is the stick of the lollipop 6 -> 7 -> 8 -> 9 -> 7,
+    // whose walks revisit the non-origin vertex 7
+    val es = Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (6L, 7L), (7L, 8L), (8L, 9L), (9L, 7L))
+    val lolli = PropertyGraph(Map("n" -> (1L to 9L).toDF("id")),
+      es.map { case (s, d) => (s, d, "e") }.toDF("src", "dst", "label"))
+    // expand a walk while its last vertex is new; emit it when it closes on
+    // its origin
+    def brute(maxDepth: Int): Seq[(Long, Seq[Long], Int)] = {
+      def walks(origin: Long, path: Seq[Long]): Seq[(Long, Seq[Long], Int)] =
+        if (path.length > maxDepth) Nil
+        else es.filter(_._1 == path.last).flatMap { case (_, d) =>
+          val p = path :+ d
+          (if (d == origin) Seq((origin, p, p.length - 1)) else Nil) ++
+            (if (path.contains(d)) Nil else walks(origin, p))
+        }
+      (1L to 9L).flatMap(o => walks(o, Seq(o))).sortBy(_.toString)
+    }
+    assert(brute(4).exists(_._2 == Seq(1L, 1L)) && brute(4).exists(_._3 == 3))
+    (0 to 4).foreach { d =>
+      val got = Descend.allCycles(lolli, lolli.kind("n"), Nil, forward = true, maxDepth = d)
+        .as[(Long, Seq[Long], Int)].collect().toSeq.sortBy(_.toString)
+      assert(got === brute(d), s"maxDepth $d")
+    }
+  }
+
   test("allCycles finds the 3-cycle from its members only") {
     val cycles = Descend.allCycles(cyclic, cyclic.kind("n"), Nil, forward = true, maxDepth = 5)
       .select("path").as[Seq[Long]].collect().toSet
@@ -388,7 +416,7 @@ class TraversalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("allPathsTo is per-level checkpointed: deep chain stays linear") {
     // 20-deep chain. Level k feeds BOTH the result union and level k+1, so
-    // without checkpointEvery=1 Catalyst re-derives level k O(k) times and
+    // without the level checkpoints Catalyst re-derives level k O(k) times and
     // lineage grows quadratically with depth — the run would take minutes
     // here instead of seconds (the same bug class all/deepest/allCycles
     // were fixed for; this spec pins allPathsTo to the fixed path).
