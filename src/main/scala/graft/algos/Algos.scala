@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.plans.Scale
-import graft.plans.Scale.{bcastRows, checkpointed, guarded}
+import graft.plans.Scale.{bcastRows, checkpointed, guarded, minOf, sumOf}
 
 /** Graph algorithms — the Spark re-expression of fermor graph/algo.clj.
   *
@@ -308,7 +308,7 @@ object Algos {
   private def bfsLevels(seed: DataFrame, key: Seq[String], maxIter: Int)(
       expand: DataFrame => DataFrame): (IndexedSeq[(DataFrame, Long)], Boolean) = {
     val keyCols = key.map(col)
-    var (frontier, frontierRows) =
+    var (frontier, frontierRows, _) =
       checkpointed(seed.where(keyCols.map(_.isNotNull).reduce(_ && _)).dropDuplicates(key))
     var visited = frontier.select(keyCols: _*).localCheckpoint(eager = false)
     var visitedRows = frontierRows
@@ -316,7 +316,7 @@ object Algos {
     var converged = frontierRows == 0L
     var i = 0
     while (!converged && i < maxIter) {
-      val (next, n) = checkpointed(expand(guarded(frontier, frontierRows))
+      val (next, n, _) = checkpointed(expand(guarded(frontier, frontierRows))
         .join(guarded(visited, visitedRows), key, "left_anti"))
       if (n == 0L) converged = true
       else {
@@ -343,12 +343,12 @@ object Algos {
     * state (winner sets, the shrinking edge set) lives in `step`'s closure. */
   private def peelRounds(pool0: DataFrame, maxRounds: Int)(
       step: (DataFrame, Int) => DataFrame): (DataFrame, Long, Boolean) = {
-    var (pool, rows) = checkpointed(pool0)
+    var (pool, rows, _) = checkpointed(pool0)
     var converged = rows == 0L
     var round = 0
     while (!converged && round < maxRounds) {
       round += 1
-      val (next, n) = checkpointed(step(pool, round))
+      val (next, n, _) = checkpointed(step(pool, round))
       converged = n == 0L || n == rows
       pool = next
       rows = n

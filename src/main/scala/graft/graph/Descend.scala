@@ -78,13 +78,14 @@ object Descend {
     // level counts come free from the checkpoint jobs. A known-small slice
     // is broadcast itself, so the frontier is not: its seed goes unprobed.
     var (frontier, rows) =
-      if (eKnownSmall) (seed, Long.MaxValue) else checkpointed(seed)
+      if (eKnownSmall) (seed, Long.MaxValue)
+      else { val (c, n, _) = checkpointed(seed); (c, n) }
     var acc = emit(frontier)
     var d = 1
     while (d <= maxDepth && rows > 0L) {
       val cont = if (eKnownSmall) continueP(frontier) else guarded(continueP(frontier), rows)
       val next = cont.join(e, cont("id") === e("__from"))
-      val (level, n) = checkpointed(
+      val (level, n, _) = checkpointed(
         if (acyclic)
           next.select(col("__to").as("id"), (col("depth") + 1).as("depth"))
         else {

@@ -10,6 +10,27 @@ class ScaleSpec extends AnyFunSuite {
   lazy implicit val spark = TestSpark.spark
   import spark.implicits._
 
+  test("checkpointed: the row count and min/sum stats equal a DataFrame agg") {
+    import Scale.{checkpointed, minOf, sumOf}
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val flag = when(col("x") > 0, 1L)
+      val (c, n, got) = checkpointed(df,
+        minOf(col("x")), sumOf(col("x")), minOf(col("y")), sumOf(col("y")), sumOf(flag))
+      val r = df.agg(count(lit(1)), min("x"), sum("x"), min("y"), sum("y"), sum(flag)).head()
+      assert(n === r.getLong(0))
+      assert(got === (1 to 5).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))))
+      assert(c.count() === n && checkpointed(df)._2 === n)
+    }
+    check(Seq.empty[(Long, Long)].toDF("x", "y"))
+    check((1 to 50).map(i => (i.toLong - 20, None: Option[Long])).toDF("x", "y"))
+    val rnd = new scala.util.Random(8)
+    val rows = (1 to 2000).map(_ => (rnd.nextLong() % 1000000L,
+      if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(200).toLong - 100)))
+    val df7 = spark.sparkContext.parallelize(rows, 7).toDF("x", "y")
+    assert(df7.rdd.getNumPartitions === 7)
+    check(df7)
+  }
+
   test("skewJoin is bag-identical to a plain join") {
     val left = (1 to 1000).map(i => (if (i % 10 == 0) 1L else i.toLong, i)).toDF("k", "v")
     val right = Seq((1L, "hot"), (2L, "a"), (3L, "b")).toDF("k", "name")
