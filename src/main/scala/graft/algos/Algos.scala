@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.plans.Scale
-import graft.plans.Scale.{bcastRows, checkpointed, guarded, minOf, sumOf}
+import graft.plans.Scale.{checkpointed, guarded, minOf, sumOf}
 
 /** Graph algorithms — the Spark re-expression of fermor graph/algo.clj.
   *
@@ -507,47 +507,37 @@ object Algos {
           localMaxEdges)
       if (ss.isDefined) return relaxLocal(e.sparkSession, es.get, ss.get, maxIter, accept)
     }
-    var dist = sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
-      .withColumn("cost", lit(0L)).localCheckpoint(eager = false)
+    var (dist, frontierRows, _) = checkpointed(
+      sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
+        .withColumn("cost", lit(0L)))
     var frontier = dist
-    // Guarded frontier broadcast ([[Scale.bcastRows]]; the Descend idiom).
-    // The frontier count rides the drain-probe agg, so the guard costs no
-    // extra job after the first round, which probes the (bounded, deduped)
-    // source set once.
-    var frontierSmall = Scale.fitsBroadcast(dist, bcastRows)
     val accepted = accept.getOrElse(lit(false))
     var bestAccepted = Long.MaxValue
     var done = false
     var i = 0
     while (!done && i < maxIter) {
-      val fB = if (frontierSmall) broadcast(frontier) else frontier
-      val improved = e
-        .join(fB.withColumnRenamed("id", "__from"), "__from")
-        .select(col("__to").as("id"), (col("cost") + col("__w")).as("cost"))
-        .groupBy("id").agg(min(col("cost")).as("cost")) // map-side partial min
-        .join(dist.withColumnRenamed("cost", "__old"), Seq("id"), "left")
-        .where(col("__old").isNull || col("cost") < col("__old"))
-        .select("id", "cost")
-        .localCheckpoint(eager = false) // the agg below completes it — one job
-      // ONE agg job doubles as the materializer AND the drain probe: it
-      // scans every partition (completing the lazy checkpoint the merge
-      // joins then read), and a null frontier minimum means no row improved
-      val row = improved.agg(min(col("cost")),
-        min(when(accepted, col("cost"))), count(lit(1))).head()
-      if (row.isNullAt(0)) done = true
+      // the round's one job completes the improved set and yields its size
+      // (the drain probe and the broadcast guard of the next frontier and of
+      // the anti-join side), its minimum cost and its cheapest accepted cost
+      val (improved, n, Seq(minCost, minAccepted)) = checkpointed(
+        e.join(guarded(frontier, frontierRows).withColumnRenamed("id", "__from"), "__from")
+          .select(col("__to").as("id"), (col("cost") + col("__w")).as("cost"))
+          .groupBy("id").agg(min(col("cost")).as("cost")) // map-side partial min
+          .join(dist.withColumnRenamed("cost", "__old"), Seq("id"), "left")
+          .where(col("__old").isNull || col("cost") < col("__old"))
+          .select("id", "cost"),
+        minOf(col("cost")), minOf(when(accepted, col("cost"))))
+      if (n == 0L) done = true
       else {
-        frontierSmall = row.getLong(2) <= bcastRows
-        // the anti-join build side is the improved set itself — same free
-        // count, same guard: dist (|reached|-sized) stays unshuffled
-        val impB = if (frontierSmall) broadcast(improved.select("id"))
-                   else improved.select("id")
-        dist = dist.join(impB, Seq("id"), "left_anti")
+        // dist (|reached|-sized) stays unshuffled under the guard
+        dist = dist.join(guarded(improved.select("id"), n), Seq("id"), "left_anti")
           .unionByName(improved).localCheckpoint(eager = false)
         frontier = improved
-        if (!row.isNullAt(1)) bestAccepted = math.min(bestAccepted, row.getLong(1))
+        frontierRows = n
+        minAccepted.foreach(c => bestAccepted = math.min(bestAccepted, c))
         // strictly positive costs: every future relaxation strictly exceeds
         // the frontier minimum, so the accepted set at bestAccepted is final
-        if (row.getLong(0) >= bestAccepted) done = true
+        if (minCost.get >= bestAccepted) done = true
       }
       i += 1
     }
