@@ -3160,7 +3160,7 @@ object Algos {
     * a bounded-depth delta expansion: level k holds the ≥2-hop pairs at
     * distance k, each round ONE frontier⋈edges join + dedup against the
     * accumulated pair set (per-round work tracks the frontier; each round's
-    * drain agg completes a lazy checkpoint, cutting lineage), then one
+    * one [[Scale.checkpointed]] job cuts lineage), then one
     * anti-join removes implied edges.
     * `maxDepth` bounds the expansion (DAG depth; loud failure beats a
     * silent wrong answer if the graph is deeper). Returns the kept
@@ -3247,32 +3247,27 @@ object Algos {
     var d = 1
     var drained = false
     while (!drained) {
-      // LAZY checkpoint + full agg = ONE action per round: the agg scans
-      // every partition of the delta, which completes the checkpoint as a
-      // side effect — an eager checkpoint here would be a second job whose
-      // only purpose is to materialize what the agg is about to read
-      val next = frontier.join(e, frontier("v") === e("src"))
-        .select(col("s"), col("dst").as("v")).dropDuplicates("s", "v")
-        .join(implied, Seq("s", "v"), "left_anti")
-        .localCheckpoint(eager = false)
+      // ONE job per round completes the delta's checkpoint and yields both
+      // loop controls: the drain count and the cycle witness — a self-pair
+      // (s, s) can never appear on a DAG; failing loudly here keeps the
+      // contract (a cycle shorter than maxDepth would otherwise drain and
+      // SILENTLY delete the cycle's edges as "implied")
+      val (next, n, Seq(selfPairs)) = checkpointed(
+        frontier.join(e, frontier("v") === e("src"))
+          .select(col("s"), col("dst").as("v")).dropDuplicates("s", "v")
+          .join(implied, Seq("s", "v"), "left_anti"),
+        sumOf(when(col("s") === col("v"), 1L)))
       d += 1
-      // ONE scan of the delta yields both loop controls: the drain count
-      // and the cycle witness — a self-pair (s, s) can never appear on a
-      // DAG; failing loudly here keeps the contract (a cycle shorter than
-      // maxDepth would otherwise drain and SILENTLY delete the cycle's
-      // edges as "implied")
-      val st = next.agg(count(lit(1)).as("n"),
-        max(when(col("s") === col("v"), 1).otherwise(0)).as("cyc")).head()
-      if (st.getLong(0) == 0L) drained = true
+      if (n == 0L) drained = true
       else {
         if (d > maxDepth)
           throw new IllegalStateException(
             s"transitiveReduction: paths deeper than maxDepth=$maxDepth — not a bounded DAG?")
-        if (st.getInt(1) == 1)
+        if (selfPairs.isDefined)
           throw new IllegalStateException(
             "transitiveReduction: input contains a cycle — defined on DAGs only")
         // implied is a union of checkpoint-completed deltas (each round's
-        // drain agg materialized its lazy checkpoint) — lineage stays
+        // job materialized its lazy checkpoint) — lineage stays
         // depth-1 without re-materializing the accumulated set each round
         implied = implied.unionByName(next)
         frontier = next
