@@ -1322,10 +1322,11 @@ object Algos {
       }
       (0 until n).map(i => (ids(i), core(i).toLong)).toDF("id", "core")
     } else {
+      // both lazy: round 1's job materializes them
       val sym = sym0.unionAll(sym0.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(true)
+        .distinct().localCheckpoint(eager = false)
       var h = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("h"))
-        .localCheckpoint(true)
+        .localCheckpoint(eager = false)
       var changed = 1L
       var rounds = 0
       while (changed > 0 && rounds < maxRounds) {
@@ -1333,11 +1334,15 @@ object Algos {
         val nb = sym.join(h.select(col("id").as("dst"), col("h").as("hu")), "dst")
           .select(col("src").as("id"), col("hu"))
         val w = Window.partitionBy("id").orderBy(col("hu").desc)
-        val h2 = nb.withColumn("rn", row_number().over(w))
-          .groupBy("id").agg(max(least(col("rn").cast("long"), col("hu"))).as("h"))
-          .localCheckpoint(true)
-        changed = h.join(h2.withColumnRenamed("h", "h2"), "id")
-          .where(col("h") =!= col("h2")).count()
+        // every vertex of h has a neighbor, so h2 holds the same ids; its
+        // `changed` flag is summed by the round's one job
+        val (h2, _, Seq(nChanged)) = checkpointed(
+          nb.withColumn("rn", row_number().over(w))
+            .groupBy("id").agg(max(least(col("rn").cast("long"), col("hu"))).as("h"))
+            .join(h.select(col("id"), col("h").as("__old")), "id")
+            .select(col("id"), col("h"), (col("h") =!= col("__old")).cast("long").as("changed")),
+          sumOf(col("changed")))
+        changed = nChanged.getOrElse(0L)
         h = h2
       }
       if (changed > 0)
