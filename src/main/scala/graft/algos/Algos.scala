@@ -2193,14 +2193,11 @@ object Algos {
     def canon(df: DataFrame) = df
       .select(greatest(col("src"), col("dst")).as("hi"), least(col("src"), col("dst")).as("lo"))
       .where(col("hi") =!= col("lo")).dropDuplicates("hi", "lo")
-    // cheap multiset signature for the convergence test; summed in 31-bit
-    // space so ANSI mode cannot overflow (n·2³¹ ≪ 2⁶³)
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum(pmod(xxhash64(col("hi"), col("lo")), lit(2147483647L)))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var e = canon(edges).localCheckpoint(eager = true)
-    var s = sig(e)
+    // cheap multiset signature for the convergence test — the row count and
+    // this hash summed by each round's one checkpoint job; hashed into 31-bit
+    // space so the sum cannot overflow (n·2³¹ ≪ 2⁶³)
+    val hash = sumOf(pmod(xxhash64(col("hi"), col("lo")), lit(2147483647L)))
+    var (e, n, Seq(h)) = checkpointed(canon(edges), hash)
     var stable = false
     var r = 0
     while (!stable && r < maxRounds) {
@@ -2215,12 +2212,11 @@ object Algos {
         .where(col("hi") =!= col("lo")).dropDuplicates("hi", "lo")
       // small-star: each node's ≤-neighborhood all links to its minimum
       val mins2 = ls.groupBy("hi").agg(min("lo").as("m"))
-      val ss = ls.join(mins2, Seq("hi")).where(col("lo") =!= col("m"))
+      val ssPlan = ls.join(mins2, Seq("hi")).where(col("lo") =!= col("m"))
         .select(col("lo").as("hi"), col("m").as("lo"))
         .unionAll(mins2.select(col("hi"), col("m").as("lo")))
         .where(col("hi") =!= col("lo")).dropDuplicates("hi", "lo")
-        .localCheckpoint(eager = true)
-      val s2 = sig(ss)
+      val (ss, n2, Seq(h2)) = checkpointed(ssPlan, hash)
       // signature match is only a fast PRE-check — confirm the fixpoint
       // exactly before stopping. Both sides are deduplicated canonical edge
       // sets with equal counts when the signatures match, so one-sided
@@ -2230,9 +2226,10 @@ object Algos {
       // convergence). Both inputs are localCheckpointed, so exceptAll sees
       // distinct plans (Catalyst rejects except over a re-projection of the
       // same plan).
-      stable = s2 == s && ss.exceptAll(e).isEmpty
-      s = s2
+      stable = n2 == n && h2 == h && ss.exceptAll(e).isEmpty
       e = ss
+      n = n2
+      h = h2
       r += 1
     }
     // unconverged = wrong components, and the callers compose (Borůvka
