@@ -1737,8 +1737,9 @@ object Algos {
     * component map) + one per-component window min + a component-LEVEL
     * contraction: [[ccAlternating]] runs on the chosen-edge graph whose
     * vertex set is the current components — never the full graph — and
-    * shrinks geometrically. Eager per-round checkpoints (the Descend
-    * rule). Once the crossing set fits `localMaxEdges`, a guarded KRUSKAL
+    * shrinks geometrically. Each round's crossing set ends in
+    * [[Scale.checkpointed]]: one job, whose count is the drain probe and
+    * the guard of the finish below. Once the crossing set fits `localMaxEdges`, a guarded KRUSKAL
     * finish (sorted partition-at-a-time stream + driver union-find over
     * component ids) completes the identical unique forest in one pass —
     * the geometric shrink lands every run's TAIL there, where per-round
@@ -1770,28 +1771,27 @@ object Algos {
       return kruskalAccept(sorted.iterator.map { case (w, s, d) => (w, s, d, s, d) })
         .toDF("src", "dst", "w")
     }
-    val e = canonRaw
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .localCheckpoint(true)
-    // comp stays null until the first contraction: round 1's component map
-    // is the IDENTITY, so its two keyed probes and the vertex distinct
-    // would be pure overhead (ca = src, cb = dst, nothing filtered)
+    // e's one checkpoint job also sizes round 1's crossing set: with comp
+    // null (round 1's component map is the IDENTITY, so its two keyed
+    // probes and the vertex distinct would be pure overhead) every edge
+    // crosses
+    val (e, ne, _) = checkpointed(canonRaw.groupBy("src", "dst").agg(min("w").as("w")))
     var comp: DataFrame = null
-    var forest = e.where(lit(false)).localCheckpoint(true)
+    // a union of checkpointed `chosen` frames: no re-checkpoint needed
+    var forest = e.where(lit(false))
     var done = false
     var r = 0
     while (!done) {
       r += 1
       if (r > maxRounds)
         throw new IllegalStateException(s"boruvkaForest did not converge within $maxRounds rounds")
-      val x =
+      val (x, nx, _) =
         if (comp == null)
-          e.select(col("src"), col("dst"), col("w"),
-            col("src").as("ca"), col("dst").as("cb"))
-        else e.join(comp.select(col("id").as("src"), col("comp").as("ca")), "src")
+          (e.select(col("src"), col("dst"), col("w"), col("src").as("ca"), col("dst").as("cb")),
+            ne, IndexedSeq.empty)
+        else checkpointed(e.join(comp.select(col("id").as("src"), col("comp").as("ca")), "src")
           .join(comp.select(col("id").as("dst"), col("comp").as("cb")), "dst")
-          .where(col("ca") =!= col("cb")).localCheckpoint(true)
-      val nx = x.count()
+          .where(col("ca") =!= col("cb")))
       if (nx == 0) done = true
       else if (nx <= localMaxEdges) {
         // Guarded KRUSKAL finish: the forest is UNIQUE under the
@@ -1818,7 +1818,7 @@ object Algos {
             Window.partitionBy("c").orderBy(col("w"), col("src"), col("dst"))))
           .where(col("rn") === 1)
           .select("src", "dst", "w").distinct().localCheckpoint(true)
-        forest = forest.unionByName(chosen).localCheckpoint(true)
+        forest = forest.unionByName(chosen)
         // contraction at COMPONENT level: CC over the chosen edges viewed as
         // (old comp → old comp) links; min-id roots keep labels deterministic
         val cg = x.join(chosen, Seq("src", "dst", "w"), "left_semi")
