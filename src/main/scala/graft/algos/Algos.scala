@@ -554,20 +554,25 @@ object Algos {
       targets: Option[DataFrame] = None): DataFrame = {
     var cur = targets.getOrElse(parentTree).select(col("id"), col("cost"),
       array(col("id")).as("path"), col("parent").as("p"))
+    val t = parentTree.select(col("id").as("p"), col("parent").as("__pp"))
     var i = 0
     while (i < maxHops) {
-      val t = parentTree.select(col("id").as("p"), col("parent").as("__pp"))
-      cur = cur.join(t, Seq("p"), "left")
+      val next = cur.join(t, Seq("p"), "left")
         .select(col("id"), col("cost"),
           when(col("p").isNotNull, concat(array(col("p")), col("path")))
             .otherwise(col("path")).as("path"),
           when(col("p").isNotNull, col("__pp")).otherwise(lit(null).cast("long")).as("p"))
-        .localCheckpoint(eager = false) // cut the join-chain lineage
       i += 1
-      // all walks terminated (every pending parent null): the remaining
-      // rounds would be no-op joins — stop. The frame is checkpointed, so
-      // the probe materializes work the next round needed anyway.
-      if (i < maxHops && cur.where(col("p").isNotNull).isEmpty) i = maxHops
+      // only the result reads the last round; every earlier one is
+      // checkpointed (cutting the join-chain lineage) by one job that also
+      // counts the walks still pending — none left: the remaining rounds
+      // would be no-op joins, so stop
+      if (i == maxHops) cur = next
+      else {
+        val (c, _, Seq(pending)) = checkpointed(next, sumOf(when(col("p").isNotNull, 1L)))
+        cur = c
+        if (pending.isEmpty) i = maxHops
+      }
     }
     cur.select("id", "cost", "path")
   }
