@@ -2260,8 +2260,9 @@ object Algos {
     * the actionable message rather than collapse. */
   private[graft] def collectReachable(entry: Long, edges: DataFrame,
       maxEdges: Long = 10000000L): Array[(Long, Long)] = {
-    val e = reachableEdges(entry, edges)
-    val n = e.count()
+    // one job materializes the subgraph and sizes it; the stream below
+    // reads the checkpoint instead of re-running reachableEdges' join
+    val (e, n, _) = checkpointed(reachableEdges(entry, edges))
     // the array index is an Int, so Int.MaxValue bounds the collect even if
     // a caller raises maxEdges past it — fail loudly, never wrap n.toInt
     val lim = math.min(maxEdges, Int.MaxValue.toLong)
