@@ -2153,9 +2153,8 @@ object Algos {
       val cRow = comp.where(col("id") === entry).select("component").collect()
       val c = if (cRow.isEmpty) entry else cRow.head.getLong(0)
       val members = comp.where(col("component") === c).select(col("id").as("src"))
-      val sub = e.join(members, Seq("src"), "left_semi").dropDuplicates("src", "dst")
-        .localCheckpoint(eager = true)
-      val n = sub.count()
+      val (sub, n, _) =
+        checkpointed(e.join(members, Seq("src"), "left_semi").dropDuplicates("src", "dst"))
       // guard matches collectReachable's documented 10M contract; the
       // adjacency below is primitive (LongMap[Array[Long]] ≈ 16 B/edge =
       // ~160 MB at the guard), and the rows stream partition-at-a-time via
