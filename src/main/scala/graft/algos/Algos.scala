@@ -630,17 +630,15 @@ object Algos {
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     if (integralCols(prev, "id", "component") && integralCols(batchEdges, "src", "dst")) {
-      val pm = prev.select(col("id").cast("long").as("id"),
-        col("component").cast("long").as("component")).localCheckpoint(eager = false)
+      // ONE job sizes the assignment AND materializes its checkpoint (four
+      // readers below); a measured-small pm broadcasts into the
+      // projection/universe joins, so the batch is never shuffled against
+      // |V| (guide §3.1 — the relaxLoop idiom). Past the guard the shuffle
+      // joins stand.
+      val (pm, pmN, _) = checkpointed(prev.select(col("id").cast("long").as("id"),
+        col("component").cast("long").as("component")))
       val be = batchEdges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")).localCheckpoint(eager = false)
-      // ONE bounded probe sizes the assignment AND materializes its
-      // checkpoint (four readers below); a measured-small pm broadcasts
-      // into the projection/universe joins, so the batch is never
-      // shuffled against |V| (guide §3.1 — the relaxLoop idiom). Past
-      // the guard the shuffle joins stand.
-      val pmN = Scale.oneWaveLimit(pm)(
-        pm.limit(math.min(deltaMaxEdges + 1, Int.MaxValue.toLong).toInt).count())
       val pmB = if (pmN <= deltaMaxEdges) broadcast(pm) else pm
       // Exactness gate, ONE shuffle: both roles of every prev row grouped
       // by the vertex they mention — duplicate ids (__nid > 1), a label
