@@ -1647,9 +1647,10 @@ object Algos {
       scale: Long = 1000000L): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
-    val sym = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(eager = false) // scanned for M, I_c, d_c
-    val m = sym.count()
+    // one job materializes the symmetric edge set (scanned for I_c, d_c) and
+    // counts it: M
+    val (sym, m, _) =
+      checkpointed(e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     // same long cast as the populated path, so the empty-graph schema
     // unions/encodes identically to the normal one
     if (m == 0L) return communities.select(col("community").cast("long").as("community"))
