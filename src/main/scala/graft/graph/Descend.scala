@@ -16,12 +16,15 @@ import org.apache.spark.sql.functions._
   * `continueP` (expand further from it). Cycle-cutting = `array_contains`
   * on the accumulated path, exactly fermor's no-cycles/prevent-cycles.
   *
-  * Scale: the frontier carries only (id, depth, path). Every level ends in
-  * [[graft.plans.Scale.checkpointed]]: level d feeds BOTH the result union
-  * and level d+1's expansion, and Catalyst does not share common subplans
-  * across union branches — without the materialization the k-th level is
-  * recomputed O(k) times (quadratic join work). The checkpoint's one count
-  * job is also the drain probe and sizes the next frontier broadcast.
+  * Scale: the frontier carries only (id, depth, path). Every level below
+  * `maxDepth` ends in [[graft.plans.Scale.checkpointed]]: level d feeds BOTH
+  * the result union and level d+1's expansion, and Catalyst does not share
+  * common subplans across union branches — without the materialization the
+  * k-th level is recomputed O(k) times (quadratic join work). The
+  * checkpoint's one count job is also the drain probe and sizes the next
+  * frontier broadcast. Level `maxDepth` feeds only the result union, so it
+  * is neither checkpointed nor counted (nor is the seed when `maxDepth` is
+  * 0): the query's own action computes it once.
   */
 object Descend {
   import graft.plans.Scale.{bcastRows, checkpointed, guarded}
@@ -78,24 +81,29 @@ object Descend {
     // level counts come free from the checkpoint jobs. A known-small slice
     // is broadcast itself, so the frontier is not: its seed goes unprobed.
     var (frontier, rows) =
-      if (eKnownSmall) (seed, Long.MaxValue)
+      if (eKnownSmall || maxDepth == 0) (seed, Long.MaxValue)
       else { val (c, n, _) = checkpointed(seed); (c, n) }
     var acc = emit(frontier)
     var d = 1
     while (d <= maxDepth && rows > 0L) {
       val cont = if (eKnownSmall) continueP(frontier) else guarded(continueP(frontier), rows)
       val next = cont.join(e, cont("id") === e("__from"))
-      val (level, n, _) = checkpointed(
+      val level =
         if (acyclic)
           next.select(col("__to").as("id"), (col("depth") + 1).as("depth"))
         else {
           var l = next.select(col("path"), col("__to").as("id"), (col("depth") + 1).as("depth"))
           if (!allowCycles) l = l.where(!array_contains(col("path"), col("id")))
           l.withColumn("path", concat(col("path"), array(col("id"))))
-        })
-      if (n > 0L) acc = acc.unionByName(emit(level))
-      frontier = level
-      rows = n
+        }
+      // only the result union reads the last level: no checkpoint, no count
+      if (d == maxDepth) acc = acc.unionByName(emit(level))
+      else {
+        val (c, n, _) = checkpointed(level)
+        if (n > 0L) acc = acc.unionByName(emit(c))
+        frontier = c
+        rows = n
+      }
       d += 1
     }
     acc
