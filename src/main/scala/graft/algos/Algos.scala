@@ -2766,16 +2766,29 @@ object Algos {
   def articulationPoints(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select("src", "dst").localCheckpoint(eager = false)
-    if (e.count() > localMaxEdges) {
-      implicit val sp: SparkSession = spark
-      return perComponent(e)(es => articulationLocal(buildAdj(es)).iterator).toDF("id")
-    }
-    val adj = buildAdj(e.as[(Long, Long)].collect())
-    articulationLocal(adj).toDF("id")
+    biconnectivity(edges, localMaxEdges)(articulationLocal).toDF("id")
   }
 
-  /** Undirected adjacency (dedup + symmetrize) from an edge list. */
+  /** The guard of the biconnectivity family ([[articulationPoints]],
+    * [[biconnectedComponents]], [[bridges]]): one action collects the
+    * (src, dst) pairs, int ids upcast to long, and runs `f` over their
+    * adjacency on the driver when they number at most `localMaxEdges`;
+    * past it `f` runs per component ([[perComponent]]). A null endpoint
+    * fails loudly: the walks are defined on ids only. */
+  private def biconnectivity[T: org.apache.spark.sql.Encoder](edges: DataFrame,
+      localMaxEdges: Long)(f: Map[Long, Array[Long]] => Seq[T]): org.apache.spark.sql.Dataset[T] = {
+    implicit val spark: SparkSession = edges.sparkSession
+    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+    collectAtMost(e, localMaxEdges) match {
+      case Some(rows) =>
+        if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+          throw new IllegalArgumentException("biconnectivity input has a null src or dst")
+        spark.createDataset(f(buildAdj(rows.map(r => (r.getLong(0), r.getLong(1))))))
+      case None =>
+        perComponent(e.localCheckpoint(eager = false))(es => f(buildAdj(es)).iterator)
+    }
+  }
+
   /** Driver-side mirrors of the Column-level hash priorities: identical
     * md5-hex + zero-padded-id strings, so a guarded local replay of a
     * hash-priority round loop (MIS / JP coloring / matching) produces the
@@ -2812,6 +2825,7 @@ object Algos {
     (ids.toArray, nbr.iterator.map(_.distinct.toArray).toArray)
   }
 
+  /** Undirected adjacency (dedup + symmetrize) from an edge list. */
   private def buildAdj(es: Array[(Long, Long)]): Map[Long, Array[Long]] =
     (es ++ es.map(_.swap)).distinct
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
@@ -2878,12 +2892,7 @@ object Algos {
   def biconnectedComponents(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select("src", "dst").localCheckpoint(eager = false)
-    if (e.count() > localMaxEdges) {
-      implicit val sp: SparkSession = spark
-      return perComponent(e)(es => bccLocal(buildAdj(es)).iterator).toDF("src", "dst", "component")
-    }
-    bccLocal(buildAdj(e.as[(Long, Long)].collect())).toDF("src", "dst", "component")
+    biconnectivity(edges, localMaxEdges)(bccLocal).toDF("src", "dst", "component")
   }
 
   /** Bridges (cut edges): tree edges with low(child) > disc(parent) —
@@ -2897,12 +2906,7 @@ object Algos {
   def bridges(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select("src", "dst").localCheckpoint(eager = false)
-    if (e.count() > localMaxEdges) {
-      implicit val sp: SparkSession = spark
-      return perComponent(e)(es => bridgesLocal(buildAdj(es)).iterator).toDF("lo", "hi")
-    }
-    bridgesLocal(buildAdj(e.as[(Long, Long)].collect())).toDF("lo", "hi")
+    biconnectivity(edges, localMaxEdges)(bridgesLocal).toDF("lo", "hi")
   }
 
   private def bridgesLocal(adj: Map[Long, Array[Long]]): Seq[(Long, Long)] = {
