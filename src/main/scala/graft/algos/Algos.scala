@@ -2405,26 +2405,14 @@ object Algos {
   def postOrderNumbering(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = collectReachable(entry, edges)
-    val succ = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.sorted }
-    val order = scala.collection.mutable.ArrayBuffer[Long]()
-    val seen = scala.collection.mutable.HashSet[Long]()
-    val stack = scala.collection.mutable.Stack[(Long, Iterator[Long])]()
-    seen += entry; stack.push((entry, succ.getOrElse(entry, Array.empty[Long]).iterator))
-    while (stack.nonEmpty) {
-      val (u, it) = stack.top
-      if (it.hasNext) {
-        val v = it.next()
-        if (!seen(v)) { seen += v; stack.push((v, succ.getOrElse(v, Array.empty[Long]).iterator)) }
-      } else { stack.pop(); order += u }
-    }
+    val (_, order) = dfsOrders(entry, edges)
     order.toSeq.zipWithIndex.map { case (v, i) => (v, i, order.length - 1 - i) }
       .toDF("id", "post_order", "reverse_post_order")
   }
 
-  /** Shared DFS for the sequential walk-reduce family: (preorder, postorder)
-    * vertex sequences from `entry`, successors id-sorted like
-    * [[postOrderNumbering]] so every walk order is deterministic. */
+  /** Shared DFS for [[postOrderNumbering]] and the sequential walk-reduce
+    * family: (preorder, postorder) vertex sequences from `entry`, successors
+    * id-sorted so every walk order is deterministic. */
   private def dfsOrders(entry: Long, edges: DataFrame): (Array[Long], Array[Long]) = {
     val es = collectReachable(entry, edges)
     val succ = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.sorted }
