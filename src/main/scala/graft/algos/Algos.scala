@@ -2724,19 +2724,13 @@ object Algos {
   def verticesBetween(edges: DataFrame, from: DataFrame, to: DataFrame,
       fwdMaxIter: Int = 1000, bwdMaxIter: Int = 1000)(
       implicit spark: SparkSession): DataFrame = {
-    // the two BFS passes are independent job sequences; submitting them from
-    // two threads lets their per-round jobs interleave on the cluster, so
-    // wall time is ~max of the passes instead of their sum. Callers that know
-    // the graph diameter pass it as the iteration bound: each saved round is
-    // a saved frontier materialization (the dominant cost on low-diameter
-    // graphs, where the last rounds run only to discover emptiness).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fwdF = Future { bfsDistances(edges, from, maxIter = fwdMaxIter) }
-    val bwdF = Future { bfsDistances(edges, to, reverse = true, maxIter = bwdMaxIter) }
-    val fwd = Await.result(fwdF, Duration.Inf)
-    val bwd = Await.result(bwdF, Duration.Inf)
+    // the two BFS passes run in the caller's thread, so their jobs carry the
+    // caller's job group. Callers that know the graph diameter pass it as the
+    // iteration bound: each saved round is a saved frontier materialization
+    // (the dominant cost on low-diameter graphs, where the last rounds run
+    // only to discover emptiness).
+    val fwd = bfsDistances(edges, from, maxIter = fwdMaxIter)
+    val bwd = bfsDistances(edges, to, reverse = true, maxIter = bwdMaxIter)
     fwd.select("id").join(bwd.select("id"), "id")
   }
 
