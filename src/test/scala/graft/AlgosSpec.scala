@@ -121,6 +121,13 @@ class AlgosSpec extends AnyFunSuite {
     assert(Algos.articulationPoints(es).as[Long].collect().toSet === Set(2L, 3L))
   }
 
+  test("biconnectivity: a null endpoint fails loudly on the driver path") {
+    val es = Seq((1L, Some(2L)), (2L, Some(3L)), (3L, None)).toDF("src", "dst")
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      Algos.articulationPoints(_), Algos.biconnectedComponents(_), Algos.bridges(_))
+      .foreach(f => intercept[Exception](f(es).collect()))
+  }
+
   test("postOrderNumbering: entry gets the last post-order number") {
     val es = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
     val nums = Algos.postOrderNumbering(1L, es)
@@ -1043,6 +1050,19 @@ class AlgosSpec extends AnyFunSuite {
       === "jpColoring did not drain within 1 rounds")
     assert(msg(Algos.maximalMatching(path40, maxRounds = 1, localMaxEdges = 0L))
       === "matching did not drain within 1 rounds")
+  }
+
+  test("coreNumbers and boruvkaForest caps on the distributed rounds throw") {
+    // localMaxEdges = 0 forces the distributed rounds; both inputs need a
+    // second round, so maxRounds = 1 must fail loudly
+    def msg(f: => Any): String = intercept[IllegalStateException](f).getMessage
+    val path8 = (1L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
+    assert(msg(Algos.coreNumbers(path8, maxRounds = 1, localMaxEdges = 0L))
+      === "coreNumbers h-index iteration did not converge within 1 rounds")
+    val chain16 = (1L to 15L).map(i => (i, i + 1, if (i % 2 == 0) 2L else 1L))
+      .toDF("src", "dst", "w")
+    assert(msg(Algos.boruvkaForest(chain16, maxRounds = 1, localMaxEdges = 0L))
+      === "boruvkaForest did not converge within 1 rounds")
   }
 
   test("harmonicCentrality: path graph closed form, isolated source gets a zero row") {
