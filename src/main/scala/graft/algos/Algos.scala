@@ -193,20 +193,18 @@ object Algos {
       val dsts = e.select(col("dst").as("id")).dropDuplicates("id")
       rem.join(srcs, Seq("id"), "left_semi").join(dsts, Seq("id"), "left_semi")
     }
+    // gate on BOTH vertex and edge count before collecting: a dense cyclic
+    // residual under the vertex cap can still hold edge counts that OOM the
+    // driver; the edge probe and collect are one limited action
+    val residualEdges =
+      if (prev == 0 || prev > residualMax) None
+      else collectPairsAtMost(e.select(col("src").cast("long"), col("dst").cast("long")), residualMax)
     val residualComps: DataFrame =
       if (prev == 0) Seq.empty[(Long, Long)].toDF("id", "component")
-      // gate on BOTH vertex and edge count before collecting: a dense cyclic
-      // residual under the vertex cap can still hold edge counts that OOM the
-      // driver; the edge count is one cheap agg on the already-materialized
-      // residual edge table
-      else if (prev <= residualMax && e.count() <= residualMax) {
-        val es = e.as[(Long, Long)].collect()
-        val ids = remaining.as[Long].collect()
-        tarjanScc(ids, es).toSeq.toDF("id", "component")
-      } else {
-        buildGraph(remaining, e).stronglyConnectedComponents(numIter)
-          .vertices.toDF("id", "component")
-      }
+      else if (residualEdges.isDefined)
+        tarjanScc(remaining.as[Long].collect(), residualEdges.get).toSeq.toDF("id", "component")
+      else buildGraph(remaining, e).stronglyConnectedComponents(numIter)
+        .vertices.toDF("id", "component")
     vs0.join(residualComps.withColumnRenamed("component", "__rc"), Seq("id"), "left")
       .select(col("id"), coalesce(col("__rc"), col("id")).as("component"))
   }
@@ -516,9 +514,8 @@ object Algos {
     var done = false
     var i = 0
     while (!done && i < maxIter) {
-      // the round's one job completes the improved set and yields its size
-      // (the drain probe and the broadcast guard of the next frontier and of
-      // the anti-join side), its minimum cost and its cheapest accepted cost
+      // one job completes the improved set and yields its size (the drain
+      // probe and the guard of both broadcasts), min and min accepted cost
       val (improved, n, Seq(minCost, minAccepted)) = checkpointed(
         e.join(guarded(frontier, frontierRows).withColumnRenamed("id", "__from"), "__from")
           .select(col("__to").as("id"), (col("cost") + col("__w")).as("cost"))
@@ -534,10 +531,10 @@ object Algos {
           .unionByName(improved).localCheckpoint(eager = false)
         frontier = improved
         frontierRows = n
-        minAccepted.foreach(c => bestAccepted = math.min(bestAccepted, c))
+        bestAccepted = math.min(bestAccepted, minAccepted)
         // strictly positive costs: every future relaxation strictly exceeds
         // the frontier minimum, so the accepted set at bestAccepted is final
-        if (minCost.get >= bestAccepted) done = true
+        if (minCost >= bestAccepted) done = true
       }
       i += 1
     }
@@ -562,17 +559,12 @@ object Algos {
           when(col("p").isNotNull, concat(array(col("p")), col("path")))
             .otherwise(col("path")).as("path"),
           when(col("p").isNotNull, col("__pp")).otherwise(lit(null).cast("long")).as("p"))
+      // the checkpoint cuts the join-chain lineage; its job also counts the
+      // pending walks — none left: later rounds would be no-op joins
+      val (c, _, Seq(pending)) = checkpointed(next, sumOf(when(col("p").isNotNull, 1L)))
+      cur = c
       i += 1
-      // only the result reads the last round; every earlier one is
-      // checkpointed (cutting the join-chain lineage) by one job that also
-      // counts the walks still pending — none left: the remaining rounds
-      // would be no-op joins, so stop
-      if (i == maxHops) cur = next
-      else {
-        val (c, _, Seq(pending)) = checkpointed(next, sumOf(when(col("p").isNotNull, 1L)))
-        cur = c
-        if (pending.isEmpty) i = maxHops
-      }
+      if (pending == 0L) i = maxHops
     }
     cur.select("id", "cost", "path")
   }
@@ -1345,7 +1337,7 @@ object Algos {
             .join(h.select(col("id"), col("h").as("__old")), "id")
             .select(col("id"), col("h"), (col("h") =!= col("__old")).cast("long").as("changed")),
           sumOf(col("changed")))
-        changed = nChanged.getOrElse(0L)
+        changed = nChanged
         h = h2
       }
       if (changed > 0)
@@ -1647,8 +1639,7 @@ object Algos {
       scale: Long = 1000000L): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
-    // one job materializes the symmetric edge set (scanned for I_c, d_c) and
-    // counts it: M
+    // M, and the symmetric edge set materialized for I_c, d_c: one job
     val (sym, m, _) =
       checkpointed(e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     // same long cast as the populated path, so the empty-graph schema
@@ -1741,9 +1732,8 @@ object Algos {
     * component map) + one per-component window min + a component-LEVEL
     * contraction: [[ccAlternating]] runs on the chosen-edge graph whose
     * vertex set is the current components — never the full graph — and
-    * shrinks geometrically. Each round's crossing set ends in
-    * [[Scale.checkpointed]]: one job, whose count is the drain probe and
-    * the guard of the finish below. Once the crossing set fits `localMaxEdges`, a guarded KRUSKAL
+    * shrinks geometrically. Each round's crossing set ends in one
+    * [[Scale.checkpointed]] job. Once it fits `localMaxEdges`, a guarded KRUSKAL
     * finish (sorted partition-at-a-time stream + driver union-find over
     * component ids) completes the identical unique forest in one pass —
     * the geometric shrink lands every run's TAIL there, where per-round
@@ -1775,10 +1765,8 @@ object Algos {
       return kruskalAccept(sorted.iterator.map { case (w, s, d) => (w, s, d, s, d) })
         .toDF("src", "dst", "w")
     }
-    // e's one checkpoint job also sizes round 1's crossing set: with comp
-    // null (round 1's component map is the IDENTITY, so its two keyed
-    // probes and the vertex distinct would be pure overhead) every edge
-    // crosses
+    // comp stays null until the first contraction: round 1's component map
+    // is the IDENTITY (every edge crosses, so e's count sizes round 1)
     val (e, ne, _) = checkpointed(canonRaw.groupBy("src", "dst").agg(min("w").as("w")))
     var comp: DataFrame = null
     // a union of checkpointed `chosen` frames: no re-checkpoint needed
@@ -2191,8 +2179,6 @@ object Algos {
     * the component's min vertex id (same contract as
     * [[connectedComponents]]); isolated vertices don't appear. */
   def ccAlternating(edges: DataFrame, maxRounds: Int = 200): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     def canon(df: DataFrame) = df
       .select(greatest(col("src"), col("dst")).as("hi"), least(col("src"), col("dst")).as("lo"))
       .where(col("hi") =!= col("lo")).dropDuplicates("hi", "lo")
@@ -2258,8 +2244,7 @@ object Algos {
     * the actionable message rather than collapse. */
   private[graft] def collectReachable(entry: Long, edges: DataFrame,
       maxEdges: Long = 10000000L): Array[(Long, Long)] = {
-    // one job materializes the subgraph and sizes it; the stream below
-    // reads the checkpoint instead of re-running reachableEdges' join
+    // one job sizes the subgraph; the stream below reads its checkpoint
     val (e, n, _) = checkpointed(reachableEdges(entry, edges))
     // the array index is an Int, so Int.MaxValue bounds the collect even if
     // a caller raises maxEdges past it — fail loudly, never wrap n.toInt
@@ -2724,13 +2709,24 @@ object Algos {
   def verticesBetween(edges: DataFrame, from: DataFrame, to: DataFrame,
       fwdMaxIter: Int = 1000, bwdMaxIter: Int = 1000)(
       implicit spark: SparkSession): DataFrame = {
-    // the two BFS passes run in the caller's thread, so their jobs carry the
-    // caller's job group. Callers that know the graph diameter pass it as the
-    // iteration bound: each saved round is a saved frontier materialization
-    // (the dominant cost on low-diameter graphs, where the last rounds run
-    // only to discover emptiness).
-    val fwd = bfsDistances(edges, from, maxIter = fwdMaxIter)
-    val bwd = bfsDistances(edges, to, reverse = true, maxIter = bwdMaxIter)
+    // the two BFS passes are independent job sequences; run on two threads
+    // their per-round jobs interleave, so wall time is ~max of the passes
+    // (q_between at local[4]: 1.16-1.32 s, against 1.57-1.97 s one after
+    // the other). Pool threads keep the job group of whoever created them,
+    // so each Future first takes the caller's. Callers that know the graph
+    // diameter pass it as the iteration bound: each saved round is a saved
+    // frontier materialization.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = spark.sparkContext
+    val group = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel", "spark.job.tags").map(k => k -> sc.getLocalProperty(k))
+    def inGroup(body: => DataFrame) =
+      Future { group.foreach { case (k, v) => sc.setLocalProperty(k, v) }; body }
+    val Seq(fwd, bwd) = Await.result(Future.sequence(Seq(
+      inGroup(bfsDistances(edges, from, maxIter = fwdMaxIter)),
+      inGroup(bfsDistances(edges, to, reverse = true, maxIter = bwdMaxIter)))), Duration.Inf)
     fwd.select("id").join(bwd.select("id"), "id")
   }
 
@@ -2751,15 +2747,17 @@ object Algos {
     biconnectivity(edges, localMaxEdges)(articulationLocal).toDF("id")
   }
 
-  /** The guard of the biconnectivity family ([[articulationPoints]],
-    * [[biconnectedComponents]], [[bridges]]): one action collects the
-    * (src, dst) pairs, int ids upcast to long, and runs `f` over their
-    * adjacency on the driver when they number at most `localMaxEdges`;
-    * past it `f` runs per component ([[perComponent]]). A null endpoint
-    * fails loudly: the walks are defined on ids only. */
+  /** The guard shared by [[articulationPoints]], [[biconnectedComponents]]
+    * and [[bridges]]: one action collects the (src, dst) pairs, int ids
+    * upcast to long, and runs `f` over their adjacency on the driver when
+    * they number at most `localMaxEdges` (a null endpoint fails loudly).
+    * Past it, `f` runs per connected component inside the executors, as
+    * [[articulationPoints]] describes: one Pregel CC run + one keyed
+    * shuffle, per-task memory bounded by the largest component. */
   private def biconnectivity[T: org.apache.spark.sql.Encoder](edges: DataFrame,
       localMaxEdges: Long)(f: Map[Long, Array[Long]] => Seq[T]): org.apache.spark.sql.Dataset[T] = {
     implicit val spark: SparkSession = edges.sparkSession
+    import spark.implicits._
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     collectAtMost(e, localMaxEdges) match {
       case Some(rows) =>
@@ -2767,7 +2765,14 @@ object Algos {
           throw new IllegalArgumentException("biconnectivity input has a null src or dst")
         spark.createDataset(f(buildAdj(rows.map(r => (r.getLong(0), r.getLong(1))))))
       case None =>
-        perComponent(e.localCheckpoint(eager = false))(es => f(buildAdj(es)).iterator)
+        val ec = e.localCheckpoint(eager = false)
+        val vs = ec.select(col("src").as("id")).unionAll(ec.select(col("dst").as("id")))
+          .dropDuplicates("id")
+        ec.join(connectedComponents(vs, ec).withColumnRenamed("id", "src"), "src")
+          .select(col("component"), col("src"), col("dst"))
+          .as[(Long, Long, Long)]
+          .groupByKey(_._1)
+          .flatMapGroups((_, it) => f(buildAdj(it.map(t => (t._2, t._3)).toArray)).iterator)
     }
   }
 
@@ -2846,24 +2851,6 @@ object Algos {
       }
     }
     arts.toSeq.sorted
-  }
-
-  /** Partition the (undirected) edge set by connected component and run `f`
-    * over each component's edge list INSIDE an executor — the distributed
-    * harness for the DFS-sequential biconnectivity family. One Pregel CC run
-    * + one keyed shuffle; per-task memory is bounded by the largest
-    * component, not the graph. */
-  private def perComponent[T: org.apache.spark.sql.Encoder](e: DataFrame)(
-      f: Array[(Long, Long)] => Iterator[T])(implicit spark: SparkSession): org.apache.spark.sql.Dataset[T] = {
-    import spark.implicits._
-    val vs = e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
-      .dropDuplicates("id")
-    val comp = connectedComponents(vs, e)
-    e.join(comp.withColumnRenamed("id", "src"), "src")
-      .select(col("component"), col("src"), col("dst"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups((_, it) => f(it.map(t => (t._2, t._3)).toArray))
   }
 
   /** Biconnected components (fermor algo.clj `biconnected-components`):
@@ -3255,7 +3242,7 @@ object Algos {
         if (d > maxDepth)
           throw new IllegalStateException(
             s"transitiveReduction: paths deeper than maxDepth=$maxDepth — not a bounded DAG?")
-        if (selfPairs.isDefined)
+        if (selfPairs > 0L)
           throw new IllegalStateException(
             "transitiveReduction: input contains a cycle — defined on DAGs only")
         // implied is a union of checkpoint-completed deltas (each round's

@@ -16,15 +16,13 @@ import org.apache.spark.sql.functions._
   * `continueP` (expand further from it). Cycle-cutting = `array_contains`
   * on the accumulated path, exactly fermor's no-cycles/prevent-cycles.
   *
-  * Scale: the frontier carries only (id, depth, path). Every level below
-  * `maxDepth` ends in [[graft.plans.Scale.checkpointed]]: level d feeds BOTH
-  * the result union and level d+1's expansion, and Catalyst does not share
+  * Scale: the frontier carries only (id, depth, path). Every level d below
+  * `maxDepth` ends in [[graft.plans.Scale.checkpointed]]: it feeds BOTH the
+  * result union and level d+1's expansion, and Catalyst does not share
   * common subplans across union branches — without the materialization the
-  * k-th level is recomputed O(k) times (quadratic join work). The
-  * checkpoint's one count job is also the drain probe and sizes the next
-  * frontier broadcast. Level `maxDepth` feeds only the result union, so it
-  * is neither checkpointed nor counted (nor is the seed when `maxDepth` is
-  * 0): the query's own action computes it once.
+  * k-th level is recomputed O(k) times (quadratic join work). The one count
+  * job is also the drain probe and sizes the next frontier broadcast. Level
+  * `maxDepth` feeds only the union, so it is neither checkpointed nor counted.
   */
 object Descend {
   import graft.plans.Scale.{bcastRows, checkpointed, guarded}

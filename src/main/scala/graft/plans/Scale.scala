@@ -155,52 +155,38 @@ object Scale {
     if (rows <= bcastRows) broadcast(df) else df
 
   /** A per-round statistic for [[checkpointed]]: a long-valued Column over
-    * the round's rows, reduced by `sum` (else `min`). Nulls are ignored;
-    * with no non-null value the stat is None, as a DataFrame agg's null. */
+    * the round's rows, reduced by `sum` (else `min`), nulls ignored. With
+    * no non-null value it is the reduction's identity: 0, or Long.MaxValue. */
   private[graft] final case class Stat(col: Column, sum: Boolean)
   private[graft] def minOf(c: Column): Stat = Stat(c, sum = false)
   private[graft] def sumOf(c: Column): Stat = Stat(c, sum = true)
 
   /** The one way an iterative round ends: a LAZY localCheckpoint of `df`,
-    * completed by ONE job that also sizes it (the drain probe and the
-    * [[guarded]] input) and reduces each of `stats` over its rows (a
-    * frontier minimum, a changed-row count, a cycle witness). Returns the
-    * checkpoint, its row count and the stats in order. The job runs over
-    * every partition — an emptiness probe would leave the checkpoint partly
-    * computed — and over the checkpoint's RDD, because a DataFrame agg or
-    * count adds a job for its single-partition exchange under AQE. */
+    * completed by ONE job that returns its row count (the drain probe and
+    * the [[guarded]] input) and each of `stats` over its rows. The job runs
+    * over every partition — an emptiness probe would leave the checkpoint
+    * partly computed — and over the checkpoint's RDD, because a DataFrame
+    * agg or count adds a job for its single-partition exchange under AQE. */
   private[graft] def checkpointed(df: DataFrame, stats: Stat*)
-      : (DataFrame, Long, IndexedSeq[Option[Long]]) = {
+      : (DataFrame, Long, IndexedSeq[Long]) = {
     val c = df.localCheckpoint(eager = false)
-    if (stats.isEmpty) return (c, c.queryExecution.toRdd.count(), IndexedSeq.empty)
     val isSum = stats.map(_.sum).toArray
-    val k = isSum.length
-    // (row count, per-stat value, per-stat "saw a non-null value")
-    val (n, v, seen) = c.select(stats.map(_.col.cast("long")): _*).queryExecution.toRdd
-      .aggregate((0L, new Array[Long](k), new Array[Boolean](k)))(
-        { case ((n, v, seen), r) =>
-          var i = 0
-          while (i < k) {
-            if (!r.isNullAt(i)) {
-              val x = r.getLong(i)
-              v(i) = if (!seen(i)) x else if (isSum(i)) v(i) + x else math.min(v(i), x)
-              seen(i) = true
-            }
-            i += 1
-          }
-          (n + 1, v, seen)
+    // acc(0) counts the rows, acc(i + 1) reduces stat i from its identity
+    def merge(acc: Array[Long], i: Int, x: Long): Unit =
+      acc(i + 1) = if (isSum(i)) acc(i + 1) + x else math.min(acc(i + 1), x)
+    val acc = c.select(stats.map(_.col.cast("long")): _*).queryExecution.toRdd
+      .aggregate(0L +: isSum.map(s => if (s) 0L else Long.MaxValue))(
+        (a, r) => {
+          a(0) += 1
+          isSum.indices.foreach(i => if (!r.isNullAt(i)) merge(a, i, r.getLong(i)))
+          a
         },
-        { case ((n1, v1, s1), (n2, v2, s2)) =>
-          var i = 0
-          while (i < k) {
-            if (s2(i))
-              v1(i) = if (!s1(i)) v2(i) else if (isSum(i)) v1(i) + v2(i) else math.min(v1(i), v2(i))
-            s1(i) |= s2(i)
-            i += 1
-          }
-          (n1 + n2, v1, s1)
+        (a, b) => {
+          a(0) += b(0)
+          isSum.indices.foreach(i => merge(a, i, b(i + 1)))
+          a
         })
-    (c, n, (0 until k).map(i => if (seen(i)) Some(v(i)) else None))
+    (c, acc(0), acc.toIndexedSeq.tail)
   }
 
   /** True when the physical plan of `df` contains no shuffle exchange —

@@ -16,9 +16,13 @@ class ScaleSpec extends AnyFunSuite {
       val flag = when(col("x") > 0, 1L)
       val (c, n, got) = checkpointed(df,
         minOf(col("x")), sumOf(col("x")), minOf(col("y")), sumOf(col("y")), sumOf(flag))
-      val r = df.agg(count(lit(1)), min("x"), sum("x"), min("y"), sum("y"), sum(flag)).head()
+      // a stat with no non-null value is its reduction's identity
+      def orMax(c: org.apache.spark.sql.Column) = coalesce(c, lit(Long.MaxValue))
+      def or0(c: org.apache.spark.sql.Column) = coalesce(c, lit(0L))
+      val r = df.agg(count(lit(1)), orMax(min("x")), or0(sum("x")), orMax(min("y")),
+        or0(sum("y")), or0(sum(flag))).head()
       assert(n === r.getLong(0))
-      assert(got === (1 to 5).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))))
+      assert(got === (1 to 5).map(r.getLong))
       assert(c.count() === n && checkpointed(df)._2 === n)
     }
     check(Seq.empty[(Long, Long)].toDF("x", "y"))
