@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.plans.Scale
 import graft.plans.Scale.{checkpointed, guarded, minOf, sumOf}
+import scala.collection.mutable.{ArrayBuilder, LongMap}
 
 /** Graph algorithms — the Spark re-expression of fermor graph/algo.clj.
   *
@@ -17,8 +18,9 @@ import graft.plans.Scale.{checkpointed, guarded, minOf, sumOf}
   * go. Order-dependent compiler analyses (dominators, DFS numberings —
   * algo.clj:immediate-dominators, post-order-numbering) are inherently
   * sequential on DFS order; like the reference we run them single-node, but
-  * behind an API that first *distributedly* extracts + filters the CFG-scale
-  * subgraph (program CFGs are ~10³-10⁶ vertices — driver-sized by nature).
+  * behind an API that first extracts + filters the CFG-scale subgraph —
+  * distributedly once the edge set passes a collect guard (program CFGs
+  * are ~10³-10⁶ vertices — driver-sized by nature).
   */
 object Algos {
 
@@ -61,6 +63,12 @@ object Algos {
       }
     }
   }
+
+  /** true iff every named column is a LongType — the gate of the replays
+    * whose distributed output keeps its input's id type, so a driver walk
+    * that emits bigint ids can stand in for it. */
+  private def longCols(df: DataFrame, names: String*): Boolean =
+    names.forall(n => df.schema(n).dataType == org.apache.spark.sql.types.LongType)
 
   private def buildGraph(vertices: DataFrame, edges: DataFrame): Graph[Long, Int] = {
     val vs = vertices.select(vertices.columns.head).rdd.map(r => (r.getLong(0), r.getLong(0)))
@@ -151,13 +159,7 @@ object Algos {
     // local succ-build dedups anyway); null ids fall back (the distributed
     // join semantics are the definition). The residualMax=0 parity spec
     // forces the old path and pins equality.
-    val allLong = {
-      import org.apache.spark.sql.types.LongType
-      vs0.schema.head.dataType == LongType &&
-        edges.schema(edges.schema.fieldIndex("src")).dataType == LongType &&
-        edges.schema(edges.schema.fieldIndex("dst")).dataType == LongType
-    }
-    if (allLong) {
+    if (longCols(vs0, "id") && longCols(edges, "src", "dst")) {
       val eOpt = collectPairsAtMost(
         edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")),
         residualMax)
@@ -270,26 +272,71 @@ object Algos {
     * `shortest-path`, `breadth-first-nodes`). `reverse` follows edges
     * dst→src (e.g. down a FK hierarchy). Returns reachable (id, dist).
     *
-    * Level-synchronous DataFrame delta BFS: each round expands only the
-    * newest frontier (semi-join on the deduped edge table) and anti-joins
+    * Below `localMaxEdges` edges the walk runs on the driver: one guarded
+    * collect of the edge pairs, one of the sources, then [[localBfs]].
+    * Above it, a level-synchronous DataFrame delta BFS: each round expands
+    * only the newest frontier (semi-join on the edge table) and anti-joins
     * the visited set, so per-round work tracks frontier size — the same
     * shape GraphX Pregel computes, without the RDD conversion and
     * vertex-state machinery, and AQE-planned per round. A null source
-    * identifies no vertex and is dropped. */
+    * identifies no vertex and is dropped. Set the guard to 0 to force the
+    * distributed rounds. */
   def bfsDistances(edges: DataFrame, sources: DataFrame,
-      reverse: Boolean = false, maxIter: Int = 1000)(implicit spark: SparkSession): DataFrame = {
+      reverse: Boolean = false, maxIter: Int = 1000,
+      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
     val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
     // duplicate edges are harmless (per-round dropDuplicates on ids): no
     // dedup shuffle, just one narrow materialization shared by the rounds
     val e = edges.select(col(from).as("__from"), col(to).as("__to"))
       .localCheckpoint(eager = false)
-    val (levels, _) = bfsLevels(sources.select(col(sources.columns.head).as("id")),
-        Seq("id"), maxIter) { f =>
+    val seed = sources.select(col(sources.columns.head).as("id"))
+    // LongType only (the SCC rule): the distributed union keeps the id
+    // columns' type, the driver walk emits bigint; null endpoints fall back
+    if (longCols(e, "__from", "__to") && longCols(seed, "id")) {
+      val es = collectPairsAtMost(e, localMaxEdges)
+      val ss = if (es.isEmpty) None
+        else collectLongsAtMost(seed.where(col("id").isNotNull), localMaxEdges)
+      if (ss.isDefined)
+        return localBfs(localAdj(es.get.iterator), ss.get, maxIter)._1.toSeq.toDF("id", "dist")
+    }
+    val (levels, _) = bfsLevels(seed, Seq("id"), maxIter) { f =>
       e.join(f.select(col("id").as("__from")), Seq("__from"), "left_semi")
         .select(col("__to").as("id")).dropDuplicates("id")
     }
     levels.zipWithIndex.map { case ((l, _), d) => l.withColumn("dist", lit(d)) }
       .reduce(_.unionByName(_))
+  }
+
+  /** The driver BFS's adjacency: successors per vertex of (from, to) pairs,
+    * duplicates kept. An iterator, so a caller can stream partition by
+    * partition (~16 B per edge once built). */
+  private def localAdj(pairs: Iterator[(Long, Long)]): LongMap[Array[Long]] = {
+    val b = new LongMap[ArrayBuilder.ofLong]()
+    pairs.foreach { case (f, t) => b.getOrElseUpdate(f, new ArrayBuilder.ofLong) += t }
+    b.mapValuesNow(_.result())
+  }
+
+  /** The one driver BFS behind the guarded replays of [[bfsDistances]],
+    * [[collectReachable]] and [[taggedBfs]] and [[reachableEdges]]' deep
+    * fallback: the hop distance of every vertex within `maxIter` hops of
+    * `seeds`, and whether some round found the frontier drained within
+    * `maxIter` rounds — exactly [[bfsLevels]]' levels and `converged`. */
+  private def localBfs(adj: LongMap[Array[Long]], seeds: Iterable[Long], maxIter: Int)
+      : (LongMap[Int], Boolean) = {
+    val dist = new LongMap[Int]()
+    var frontier = seeds.iterator.distinct.toArray
+    frontier.foreach(dist(_) = 0)
+    var d = 0
+    while (frontier.nonEmpty && d < maxIter) {
+      d += 1
+      val next = new ArrayBuilder.ofLong
+      frontier.foreach(u => adj.getOrElse(u, Array.emptyLongArray).foreach { v =>
+        if (!dist.contains(v)) { dist(v) = d; next += v }
+      })
+      frontier = next.result()
+    }
+    (dist, frontier.isEmpty)
   }
 
   /** The level-synchronous delta-BFS driver behind [[bfsDistances]],
@@ -1921,13 +1968,17 @@ object Algos {
     val e = sym0.unionAll(sym0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint(eager = false)
     // JP needs at most maxDegree+1 colors; check ONCE so a too-small
-    // maxColors fails loudly instead of silently dropping saturated vertices
-    val dmax = e.groupBy("src").agg(count(lit(1)).as("d")).agg(max("d")).head()
-    if (!dmax.isNullAt(0))
-      require(dmax.getLong(0) < maxColors,
-        s"maxColors=$maxColors <= max degree ${dmax.getLong(0)}; JP needs maxDegree+1")
+    // maxColors fails loudly instead of silently dropping saturated vertices.
+    // The max rides the degree table's checkpoint job (as -min(-d)); an
+    // empty edge set leaves the stat at its identity and skips the check.
+    // The table's ids are distinct, so they are the uncolored pool as-is.
+    val (deg, _, Seq(negDmax)) =
+      checkpointed(e.groupBy("src").agg(count(lit(1)).as("d")), minOf(-col("d")))
+    if (negDmax != Long.MaxValue)
+      require(-negDmax < maxColors,
+        s"maxColors=$maxColors <= max degree ${-negDmax}; JP needs maxDegree+1")
     var colored = e.select(col("src").as("id"), lit(0).as("color")).where(lit(false))
-    val (_, left, _) = peelRounds(e.select(col("src").as("id")).distinct(), maxRounds) {
+    val (_, left, _) = peelRounds(deg.select(col("src").as("id")), maxRounds) {
       (uncolored, _) =>
         val p = uncolored.select(col("id"), prio(col("id")).as("p"))
         val maxNbr = e.join(p.select(col("id").as("dst"), col("p").as("pd")), "dst")
@@ -2105,10 +2156,11 @@ object Algos {
     cur.groupBy("id").agg(sum(col(valueCol)).as(valueCol))
   }
 
-  /** Edges reachable from `entry` — the distributed extraction step in front
-    * of every driver-side DFS analysis (dominators, loop forest): a semi-join
-    * BFS over a deduped edge table, so what reaches the driver is only the
-    * entry's flow subgraph, not the whole 100 TB edge set. */
+  /** Edges reachable from `entry`, deduped — the distributed extraction of
+    * the entry's flow subgraph: a semi-join BFS over the edge table. Past
+    * its collect guard, [[collectReachable]] runs it in front of every
+    * driver-side DFS analysis (dominators, loop forest), so what reaches
+    * the driver is only that subgraph, not the whole 100 TB edge set. */
   def reachableEdges(entry: Long, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -2143,30 +2195,19 @@ object Algos {
       val (sub, n, _) =
         checkpointed(e.join(members, Seq("src"), "left_semi").dropDuplicates("src", "dst"))
       // guard matches collectReachable's documented 10M contract; the
-      // adjacency below is primitive (LongMap[Array[Long]] ≈ 16 B/edge =
-      // ~160 MB at the guard), and the rows stream partition-at-a-time via
-      // toLocalIterator so no full boxed Row array ever materializes — the
-      // two concerns (contract regression / driver OOM) are both closed
+      // driver BFS's adjacency is primitive (≈ 16 B/edge = ~160 MB at the
+      // guard), and the rows stream partition-at-a-time via
+      // toLocalIterator so no full boxed Row array ever materializes
       if (n > 10000000L)
         throw new IllegalStateException(
           s"entry $entry sits in a weak component with $n edges and depth > $maxIter: " +
             "too deep for distributed BFS and too big to collect; restrict the " +
             "subgraph (edgeSubgraph/filter) before the flow analysis")
-      val adjB = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuilder.ofLong]()
-      val it = sub.select(col("src"), col("dst")).toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        adjB.getOrElseUpdate(row.getLong(0), new scala.collection.mutable.ArrayBuilder.ofLong) += row.getLong(1)
-      }
-      val adj = new scala.collection.mutable.LongMap[Array[Long]](adjB.size)
-      adjB.foreach { case (k, b) => adj(k) = b.result() }
-      val vis = scala.collection.mutable.HashSet[Long](entry)
-      val stack = scala.collection.mutable.ArrayDeque[Long](entry)
-      while (stack.nonEmpty) {
-        val u = stack.removeLast()
-        adj.getOrElse(u, Array.empty[Long]).foreach(v => if (vis.add(v)) stack += v)
-      }
-      sub.join(vis.toSeq.toDF("src"), Seq("src"), "left_semi")
+      import scala.jdk.CollectionConverters._
+      val rows = sub.select(col("src").cast("long"), col("dst").cast("long")).toLocalIterator()
+      val (vis, _) = localBfs(localAdj(rows.asScala.map(r => (r.getLong(0), r.getLong(1)))),
+        Seq(entry), Int.MaxValue)
+      sub.join(vis.keys.toSeq.toDF("src"), Seq("src"), "left_semi")
     }
   }
 
@@ -2241,25 +2282,41 @@ object Algos {
     * (dominators, numberings, loop forest, intervals, frontiers) are
     * CFG-scale by nature; an entry whose flow subgraph exceeds `maxEdges`
     * is the caller using a compiler analysis on a fact table — fail with
-    * the actionable message rather than collapse. */
+    * the actionable message rather than collapse.
+    *
+    * An edge set of at most `localMaxEdges` integral non-null pairs is
+    * collected whole and walked by [[localBfs]]; past it, the flow subgraph
+    * is extracted by [[reachableEdges]] and only it is collected. Either
+    * way the result is the distinct pairs whose src the entry reaches. */
   private[graft] def collectReachable(entry: Long, edges: DataFrame,
-      maxEdges: Long = 10000000L): Array[(Long, Long)] = {
-    // one job sizes the subgraph; the stream below reads its checkpoint
-    val (e, n, _) = checkpointed(reachableEdges(entry, edges))
+      maxEdges: Long = 10000000L, localMaxEdges: Long = 50000L): Array[(Long, Long)] = {
     // the array index is an Int, so Int.MaxValue bounds the collect even if
     // a caller raises maxEdges past it — fail loudly, never wrap n.toInt
     val lim = math.min(maxEdges, Int.MaxValue.toLong)
-    if (n > lim)
-      throw new IllegalStateException(
-        s"flow subgraph of entry $entry has $n edges > maxEdges=$lim: " +
-          "driver-side DFS analyses are CFG-scale; restrict the entry's subgraph " +
-          "(edgeSubgraph/filter) or raise maxEdges explicitly")
+    def checkSize(n: Long): Unit =
+      if (n > lim)
+        throw new IllegalStateException(
+          s"flow subgraph of entry $entry has $n edges > maxEdges=$lim: " +
+            "driver-side DFS analyses are CFG-scale; restrict the entry's subgraph " +
+            "(edgeSubgraph/filter) or raise maxEdges explicitly")
+    // the long casts (here and in the stream below) keep getLong safe for
+    // int-typed edge columns; a null endpoint falls back
+    val local = if (!integralCols(edges, "src", "dst")) None
+      else collectPairsAtMost(edges.select(col("src").cast("long"), col("dst").cast("long")),
+        localMaxEdges)
+    if (local.isDefined) {
+      val (reached, _) = localBfs(localAdj(local.get.iterator), Seq(entry), Int.MaxValue)
+      val out = local.get.iterator.filter(p => reached.contains(p._1)).distinct.toArray
+      checkSize(out.length)
+      return out
+    }
+    // one job sizes the subgraph; the stream below reads its checkpoint
+    val (e, n, _) = checkpointed(reachableEdges(entry, edges))
+    checkSize(n)
     // stream partition-at-a-time (like the deep-CC fallback): peak driver
     // footprint is the result array (~40 B/edge boxed = ~400 MB at the
     // guard) plus ONE partition's rows — never a second full copy of the
-    // edge set the way Dataset.collect's decode path holds. The long casts
-    // keep getLong safe for int-typed edge columns (the encoder the old
-    // Dataset.collect path used did this upcast implicitly).
+    // edge set the way Dataset.collect's decode path holds
     val out = new Array[(Long, Long)](n.toInt)
     val it = e.select(col("src").cast("long"), col("dst").cast("long")).toLocalIterator()
     var i = 0
@@ -2617,6 +2674,8 @@ object Algos {
     // driver drops null-keyed seed rows; the local replay would NPE
     // unboxing it — parity-spec'd)
     val srcCol = col(sources.columns.head)
+    val notConverged =
+      s"taggedBfs: frontier still non-empty after maxIter=$maxIter rounds — raise maxIter"
     // probe + collect fused into one action per frame (collectAtMost); the
     // source guard now counts DISTINCT non-null sources — the quantity the
     // replay's work actually scales with (the raw row count only bounded it
@@ -2627,24 +2686,11 @@ object Algos {
       else collectLongsAtMost(
         sources.where(srcCol.isNotNull).select(srcCol.cast("long")).distinct(), 512L)
     if (esOpt.isDefined && srcsOpt.isDefined) {
-      val es = esOpt.get
-      val srcs = srcsOpt.get
-      val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      srcs.foreach { s =>
-        val dist = scala.collection.mutable.HashMap[Long, Long](s -> 0L)
-        var frontier: Array[Long] = Array(s)
-        var d = 0L
-        while (frontier.nonEmpty) {
-          d += 1
-          if (d > maxIter)
-            throw new IllegalStateException(
-              s"taggedBfs: frontier still non-empty after maxIter=$maxIter rounds — raise maxIter")
-          frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-            .distinct.filterNot(dist.contains)
-          frontier.foreach(v => dist(v) = d)
-        }
-        dist.foreach { case (v, dd) => out += ((s, v, dd)) }
+      val adj = localAdj(esOpt.get.iterator)
+      val out = srcsOpt.get.flatMap { s =>
+        val (dist, converged) = localBfs(adj, Seq(s), maxIter)
+        if (!converged) throw new IllegalStateException(notConverged)
+        dist.iterator.map { case (v, d) => (s, v, d.toLong) }
       }
       return spark.createDataset(out.toSeq).toDF("s", "v", "d")
     }
@@ -2653,9 +2699,7 @@ object Algos {
         sources.select(srcCol.as("s")).withColumn("v", col("s")), Seq("s", "v"), maxIter) { f =>
       f.join(e, f("v") === e("src")).select(col("s"), col("dst").as("v")).dropDuplicates("s", "v")
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"taggedBfs: frontier still non-empty after maxIter=$maxIter rounds — raise maxIter")
+    if (!converged) throw new IllegalStateException(notConverged)
     levels.zipWithIndex.map { case ((l, _), d) => l.withColumn("d", lit(d.toLong)) }
       .reduce(_.unionByName(_))
   }
@@ -2705,12 +2749,13 @@ object Algos {
 
   /** Vertices lying on some path from `from` to `to` (fermor algo.clj
     * `non-loop-vertices-between`): forward-reachable(from) ∩
-    * backward-reachable(to) — two distributed BFS passes, no driver walk. */
+    * backward-reachable(to) — two [[bfsDistances]] passes, each a driver
+    * walk below its edge guard and distributed BFS rounds above it. */
   def verticesBetween(edges: DataFrame, from: DataFrame, to: DataFrame,
       fwdMaxIter: Int = 1000, bwdMaxIter: Int = 1000)(
       implicit spark: SparkSession): DataFrame = {
     // the two BFS passes are independent job sequences; run on two threads
-    // their per-round jobs interleave, so wall time is ~max of the passes
+    // their jobs interleave, so wall time is ~max of the passes
     // (q_between at local[4]: 1.16-1.32 s, against 1.57-1.97 s one after
     // the other). Pool threads keep the job group of whoever created them,
     // so each Future first takes the caller's. Callers that know the graph

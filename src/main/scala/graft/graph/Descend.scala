@@ -84,7 +84,9 @@ object Descend {
     var acc = emit(frontier)
     var d = 1
     while (d <= maxDepth && rows > 0L) {
-      val cont = if (eKnownSmall) continueP(frontier) else guarded(continueP(frontier), rows)
+      // level d - 1's rows carry a path of d elements
+      val cont = if (eKnownSmall) continueP(frontier)
+        else guarded(continueP(frontier), rows, frontierWidth(if (acyclic) 0 else d))
       val next = cont.join(e, cont("id") === e("__from"))
       val level =
         if (acyclic)
@@ -106,6 +108,10 @@ object Descend {
     }
     acc
   }
+
+  /** Estimated bytes of a frontier row for [[graft.plans.Scale.guarded]]:
+    * id and depth, plus 8 B per element of a carried path. */
+  private[graft] def frontierWidth(pathLen: Int): Long = 16L + 8L * pathLen
 
   /** fermor `all`: every element reachable within maxDepth, cycles cut —
     * [[run]]'s one checkpointed level loop with the default controls. Pass

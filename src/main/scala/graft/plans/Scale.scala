@@ -150,9 +150,11 @@ object Scale {
     * 2.4 → 3.5 s warm, OPTIMIZATION_r11.md). */
   private[graft] val bcastRows = 1000000L
 
-  /** `df` broadcast when its measured `rows` fit [[bcastRows]]. */
-  private[graft] def guarded(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= bcastRows) broadcast(df) else df
+  /** `df` broadcast when its measured `rows` of an estimated `width` bytes
+    * each fit the [[bcastRows]] budget of 16 B rows (16 MB), so a side of
+    * wide rows — a frontier carrying a long path — broadcasts fewer rows. */
+  private[graft] def guarded(df: DataFrame, rows: Long, width: Long = 16L): DataFrame =
+    if (rows <= bcastRows * 16L / width) broadcast(df) else df
 
   /** A per-round statistic for [[checkpointed]]: a long-valued Column over
     * the round's rows, reduced by `sum` (else `min`), nulls ignored. With

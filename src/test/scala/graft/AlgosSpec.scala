@@ -396,15 +396,19 @@ class AlgosSpec extends AnyFunSuite {
     try {
       val es = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
       val sources = Seq(1L).toDF("id")
-      def run() = (Algos.bfsDistances(es, sources).as[(Long, Int)].collect().toSet,
-        Algos.reachableEdges(1L, es).as[(Long, Long)].collect().toSet)
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val first = run()
-      (sc.getPersistentRDDs -- before).values.foreach(_.unpersist(blocking = true))
-      assert(run() === first)
-      assert(first._1 === Set((1L, 0), (2L, 1), (3L, 2), (4L, 3)))
-      assert(first._2 === Set((1L, 2L), (2L, 3L), (3L, 4L)))
+      // both branches of bfsDistances: the driver walk and the rounds
+      for (guard <- Seq(50000L, 0L)) {
+        def run() = (Algos.bfsDistances(es, sources, localMaxEdges = guard)
+            .as[(Long, Int)].collect().toSet,
+          Algos.reachableEdges(1L, es).as[(Long, Long)].collect().toSet)
+        val sc = spark.sparkContext
+        val before = sc.getPersistentRDDs.keySet
+        val first = run()
+        (sc.getPersistentRDDs -- before).values.foreach(_.unpersist(blocking = true))
+        assert(run() === first, s"guard $guard")
+        assert(first._1 === Set((1L, 0), (2L, 1), (3L, 2), (4L, 3)), s"guard $guard")
+        assert(first._2 === Set((1L, 2L), (2L, 3L), (3L, 4L)), s"guard $guard")
+      }
     } finally graft.graph.Tpch.shareScans = prev
   }
 
@@ -442,12 +446,69 @@ class AlgosSpec extends AnyFunSuite {
 
   test("driver-side DFS analyses fail loudly above the collect guard") {
     val es = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val ex = intercept[IllegalStateException] {
-      Algos.collectReachable(1L, es, maxEdges = 1L)
+    // both branches: the driver walk and the distributed extraction
+    for (guard <- Seq(50000L, 0L)) {
+      val ex = intercept[IllegalStateException] {
+        Algos.collectReachable(1L, es, maxEdges = 1L, localMaxEdges = guard)
+      }
+      assert(ex.getMessage.contains("maxEdges"), s"guard $guard")
+      // under the guard it still works
+      assert(Algos.collectReachable(1L, es, maxEdges = 10L, localMaxEdges = guard).length === 2,
+        s"guard $guard")
     }
-    assert(ex.getMessage.contains("maxEdges"))
-    // under the guard it still works
-    assert(Algos.collectReachable(1L, es, maxEdges = 10L).length === 2)
+  }
+
+  test("bfsDistances: the driver walk and the distributed rounds agree on awkward inputs") {
+    def both(es: org.apache.spark.sql.DataFrame, srcs: org.apache.spark.sql.DataFrame,
+        maxIter: Int = 1000): Map[Long, Int] = {
+      val Seq(local, rounds) = Seq(50000L, 0L).map(g =>
+        Algos.bfsDistances(es, srcs, maxIter = maxIter, localMaxEdges = g)
+          .as[(Long, Int)].collect())
+      assert(local.length === local.map(_._1).distinct.length, "one row per vertex")
+      assert(local.sorted.toSeq === rounds.sorted.toSeq)
+      local.toMap
+    }
+    // duplicate edges, self-loops and duplicate sources
+    val es = Seq((1L, 2L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 1L), (4L, 4L)).toDF("src", "dst")
+    assert(both(es, Seq(1L, 1L, 2L).toDF("id")) === Map(1L -> 0, 2L -> 0, 3L -> 1))
+    // a source on no edge is its own level-0 row
+    assert(both(es, Seq(9L, 1L).toDF("id")) === Map(9L -> 0, 1L -> 0, 2L -> 1, 3L -> 2))
+    // maxIter 0-3 on a chain
+    val chain = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    for (k <- 0 to 3)
+      assert(both(chain, Seq(1L).toDF("id"), k) === (0 to k).map(i => (i + 1L) -> i).toMap,
+        s"maxIter=$k")
+    // a null source identifies no vertex
+    assert(both(chain, Seq(Some(6L), None).toDF("id")) === Map(6L -> 0, 7L -> 1, 8L -> 2))
+    assert(both(chain, Seq(None: Option[Long]).toDF("id")) === Map.empty)
+  }
+
+  test("bfsDistances: int-typed ids stay on the distributed path and keep their schema") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    def types(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val ints = Algos.bfsDistances(Seq((1, 2), (2, 3)).toDF("src", "dst"), Seq(1).toDF("id"))
+    assert(types(ints) === Seq("id" -> IntegerType, "dist" -> IntegerType))
+    assert(ints.as[(Int, Int)].collect().toMap === Map(1 -> 0, 2 -> 1, 3 -> 2))
+    // long ids: the driver walk emits the distributed rounds' schema
+    for (guard <- Seq(50000L, 0L))
+      assert(types(Algos.bfsDistances(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("id"),
+          localMaxEdges = guard)) === Seq("id" -> LongType, "dist" -> IntegerType), s"guard $guard")
+  }
+
+  test("collectReachable: the driver walk and the distributed extraction agree, as sets") {
+    // duplicate edges, a self-loop, a cycle back to the entry, an edge into
+    // the reached set from outside it, and a null-free int-typed copy
+    val pairs = Seq((1L, 2L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 1L), (5L, 3L), (3L, 4L))
+    for (es <- Seq(pairs.toDF("src", "dst"),
+        pairs.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst"))) {
+      val want = pairs.filter(_._1 != 5L).toSet
+      for (guard <- Seq(50000L, 0L)) {
+        val got = Algos.collectReachable(1L, es, localMaxEdges = guard)
+        assert(got.length === want.size && got.toSet === want, s"guard $guard")
+        // an entry on no edge reaches nothing
+        assert(Algos.collectReachable(9L, es, localMaxEdges = guard).isEmpty, s"guard $guard")
+      }
+    }
   }
 
   test("shortestPathsFromParents materializes source→vertex paths") {

@@ -63,6 +63,31 @@ class RandomizedParitySpec extends AnyFunSuite {
       val got = Algos.bfsDistances(es.toDF("src", "dst"), sources.toDF("id"))
         .as[(Long, Int)].collect().toMap
       assert(got === dist, s"seed=$seed es=$es")
+      // guard = 0 forces the distributed rounds: both regimes match the model
+      val distributed = Algos.bfsDistances(es.toDF("src", "dst"), sources.toDF("id"),
+          localMaxEdges = 0L)
+        .as[(Long, Int)].collect().toMap
+      assert(distributed === dist, s"seed=$seed distributed es=$es")
+    }
+  }
+
+  test("collectReachable: the driver walk and the distributed extraction agree on random graphs") {
+    for (seed <- 11 to 16) {
+      val (vs, es) = randomGraph(seed, n = 10, nEdges = 16)
+      val entry = vs(seed % vs.length)
+      // naive: the distinct edges whose src the entry reaches
+      var seen = Set(entry)
+      var frontier = Set(entry)
+      while (frontier.nonEmpty) {
+        frontier = es.filter(e => frontier(e._1)).map(_._2).toSet -- seen
+        seen ++= frontier
+      }
+      val want = es.filter(e => seen(e._1)).toSet
+      for (guard <- Seq(50000L, 0L)) {
+        val got = Algos.collectReachable(entry, es.toDF("src", "dst"), localMaxEdges = guard)
+        assert(got.length === got.distinct.length, s"seed=$seed guard=$guard duplicates")
+        assert(got.toSet === want, s"seed=$seed guard=$guard es=$es")
+      }
     }
   }
 

@@ -35,6 +35,23 @@ class ScaleSpec extends AnyFunSuite {
     check(df7)
   }
 
+  test("guarded: a byte budget, so a path-carrying frontier broadcasts fewer rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    import graft.graph.Descend.frontierWidth
+    def hinted(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed match {
+      case ResolvedHint(_, h) => h.strategy.contains(BROADCAST)
+      case _ => false
+    }
+    val df = Seq(1L).toDF("id")
+    // a synthetic row count: the guard reads only the number, no big frame
+    val rows = 500000L
+    assert(hinted(Scale.guarded(df, rows, frontierWidth(0))), "acyclic frontier")
+    assert(!hinted(Scale.guarded(df, rows, frontierWidth(8))), "path of 8 elements")
+    // the default 16 B width keeps the row guard
+    assert(hinted(Scale.guarded(df, Scale.bcastRows)))
+    assert(!hinted(Scale.guarded(df, Scale.bcastRows + 1)))
+  }
+
   test("skewJoin is bag-identical to a plain join") {
     val left = (1 to 1000).map(i => (if (i % 10 == 0) 1L else i.toLong, i)).toDF("k", "v")
     val right = Seq((1L, "hot"), (2L, "a"), (3L, "b")).toDF("k", "name")
