@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.plans.Scale
 import graft.plans.Scale.{checkpointed, guarded, minOf, sumOf}
-import scala.collection.mutable.{ArrayBuilder, LongMap}
+import graft.algos.LocalGraph.collectAtMost
+import scala.collection.mutable.ArrayBuilder
 
 /** Graph algorithms — the Spark re-expression of fermor graph/algo.clj.
   *
@@ -21,6 +22,11 @@ import scala.collection.mutable.{ArrayBuilder, LongMap}
   * behind an API that first extracts + filters the CFG-scale subgraph —
   * distributedly once the edge set passes a collect guard (program CFGs
   * are ~10³-10⁶ vertices — driver-sized by nature).
+  *
+  * Below their guards the iterative algorithms replay on the driver, all
+  * on one kernel: [[LocalGraph]], collected by one limited action per
+  * frame ([[LocalGraph.collect]]), with CSR out/in/undirected adjacencies,
+  * a BFS, a DFS and one low-link walk.
   */
 object Algos {
 
@@ -107,23 +113,17 @@ object Algos {
     // its upstream once, not once per consumer (the kTruss probe rule)
     val e0 = edges.select(col("src"), col("dst")).localCheckpoint(eager = false)
     val vs0 = vertices.select(col(headV).as("id")).localCheckpoint(eager = false)
-    if (integralCols(e0, "src", "dst") && integralCols(vs0, "id")) {
-      // probe + collect fused into one action per frame (collectAtMost);
-      // null ids make the Opts empty and fall through — GraphX's typed
-      // conversion raises the same loud failure it always has for them
-      val eOpt = collectPairsAtMost(
-        e0.select(col("src").cast("long"), col("dst").cast("long")), localMaxEdges)
-      val vOpt = if (eOpt.isEmpty) None
-        else collectLongsAtMost(vs0.select(col("id").cast("long")), localMaxEdges)
-      if (eOpt.isDefined && vOpt.isDefined) {
-        val uf = new MinUnionFind
-        eOpt.get.foreach { case (s, d) => uf.union(s, d) }
-        val universe = scala.collection.mutable.LinkedHashSet[Long]()
-        vOpt.get.foreach(universe += _)
-        eOpt.get.foreach { case (s, d) => universe += s; universe += d }
-        return universe.iterator.map(v => (v, uf.find(v))).toSeq.toDF("id", "component")
+    // null ids fall through: GraphX's typed conversion raises the same loud
+    // failure it always has for them
+    if (integralCols(e0, "src", "dst") && integralCols(vs0, "id"))
+      LocalGraph.collect(e0.select(col("src").cast("long"), col("dst").cast("long")),
+          localMaxEdges, vs0.select(col("id").cast("long")) -> localMaxEdges) match {
+        case Some((g, _)) =>
+          val uf = new MinUnionFind
+          g.ids.indices.foreach(u => g.out.foreach(u)(v => uf.union(g.ids(u), g.ids(v))))
+          return g.ids.toSeq.map(v => (v, uf.find(v))).toDF("id", "component")
+        case None => ()
       }
-    }
     buildGraph(vs0, e0).connectedComponents()
       .vertices.toDF("id", "component")
   }
@@ -155,30 +155,24 @@ object Algos {
     // like the trim loop's keep-semijoins restrict e. LongType-only gate:
     // the distributed path preserves vs0's id type in its output schema,
     // and the local toDF emits longs — narrower int ids stay distributed.
-    // Raw-pair guard (counting before the dedup skips that shuffle; the
-    // local succ-build dedups anyway); null ids fall back (the distributed
-    // join semantics are the definition). The residualMax=0 parity spec
+    // Raw-pair guard (counting before the dedup skips that shuffle; Tarjan
+    // reads duplicate edges harmlessly). The residualMax=0 parity spec
     // forces the old path and pins equality.
-    if (longCols(vs0, "id") && longCols(edges, "src", "dst")) {
-      val eOpt = collectPairsAtMost(
-        edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")),
-        residualMax)
-      val vOpt = if (eOpt.isEmpty) None else collectLongsAtMost(vs0, residualMax)
-      if (eOpt.isDefined && vOpt.isDefined) {
-        val ids = vOpt.get
-        val vset = ids.toSet
+    if (longCols(vs0, "id") && longCols(edges, "src", "dst"))
+      LocalGraph.collect(edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")),
+          residualMax, vs0 -> residualMax) match {
         // Gate, don't filter: both pre-existing paths let a cycle run
         // THROUGH endpoints absent from `vertices` (GraphX's Graph()
         // auto-adds them; the converged-without-trim residual Tarjan
         // collects e unfiltered), so silently dropping their edges here
         // could split an SCC and change labels vs the old behavior.
-        // Inputs with edge-only pass-through vertices fall back to the
-        // distributed path, whose semantics are the definition
-        // (parity-spec'd in AlgosSpec).
-        if (eOpt.get.forall { case (s, d) => vset.contains(s) && vset.contains(d) })
-          return tarjanScc(ids, eOpt.get).toSeq.toDF("id", "component")
+        // Inputs with edge-only pass-through vertices (graph vertices that
+        // are not `vertices` ids) fall back to the distributed path, whose
+        // semantics are the definition (parity-spec'd in AlgosSpec).
+        case Some((g, Seq(ids))) if g.n == ids.distinct.length =>
+          return tarjanScc(g, ids).toSeq.toDF("id", "component")
+        case _ => ()
       }
-    }
     // self-loops make a vertex cyclic but never a multi-member SCC; drop them
     // so trimming sees the true cross-vertex cycle structure
     var e = edges.select("src", "dst").where(col("src") =!= col("dst"))
@@ -198,64 +192,71 @@ object Algos {
     // gate on BOTH vertex and edge count before collecting: a dense cyclic
     // residual under the vertex cap can still hold edge counts that OOM the
     // driver; the edge probe and collect are one limited action
-    val residualEdges =
+    val residual =
       if (prev == 0 || prev > residualMax) None
-      else collectPairsAtMost(e.select(col("src").cast("long"), col("dst").cast("long")), residualMax)
+      else LocalGraph.collect(e.select(col("src").cast("long"), col("dst").cast("long")),
+        residualMax)
     val residualComps: DataFrame =
       if (prev == 0) Seq.empty[(Long, Long)].toDF("id", "component")
-      else if (residualEdges.isDefined)
-        tarjanScc(remaining.as[Long].collect(), residualEdges.get).toSeq.toDF("id", "component")
+      else if (residual.isDefined)
+        tarjanScc(residual.get, remaining.as[Long].collect()).toSeq.toDF("id", "component")
       else buildGraph(remaining, e).stronglyConnectedComponents(numIter)
         .vertices.toDF("id", "component")
     vs0.join(residualComps.withColumnRenamed("component", "__rc"), Seq("id"), "left")
       .select(col("id"), coalesce(col("__rc"), col("id")).as("component"))
   }
 
-  /** Iterative Tarjan SCC; component label = min member id. */
-  private def tarjanScc(ids: Array[Long], es: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val succ = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.sorted }
-    val index = scala.collection.mutable.HashMap[Long, Int]()
-    val lowlink = scala.collection.mutable.HashMap[Long, Int]()
-    val onStack = scala.collection.mutable.HashSet[Long]()
-    val tstack = scala.collection.mutable.Stack[Long]()
-    val comp = scala.collection.mutable.HashMap[Long, Long]()
+  /** Iterative Tarjan SCC over `g.out`, rooted at `ids` in id order;
+    * component label = min member id, per entry of `ids` (an id on no
+    * edge is its own component). */
+  private def tarjanScc(g: LocalGraph, ids: Array[Long]): Array[(Long, Long)] = {
+    val index = Array.fill(g.n)(-1)
+    val lowlink = new Array[Int](g.n)
+    val onStack = new Array[Boolean](g.n)
+    val label = new Array[Int](g.n)
+    val tstack = new scala.collection.mutable.Stack[Int]()
     var counter = 0
-    ids.sorted.foreach { root =>
-      if (!index.contains(root)) {
-        val work = scala.collection.mutable.Stack[(Long, Iterator[Long])]()
-        index(root) = counter; lowlink(root) = counter; counter += 1
-        tstack.push(root); onStack += root
-        work.push((root, succ.getOrElse(root, Array.empty[Long]).iterator))
+    ids.map(g.index).filter(_ >= 0).sorted.foreach { root =>
+      if (index(root) < 0) {
+        val work = scala.collection.mutable.Stack[(Int, Int)]() // (vertex, next out position)
+        def open(v: Int): Unit = {
+          index(v) = counter; lowlink(v) = counter; counter += 1
+          tstack.push(v); onStack(v) = true
+          work.push((v, g.out.off(v)))
+        }
+        open(root)
         while (work.nonEmpty) {
-          val (u, it) = work.top
-          if (it.hasNext) {
-            val v = it.next()
-            if (!index.contains(v)) {
-              index(v) = counter; lowlink(v) = counter; counter += 1
-              tstack.push(v); onStack += v
-              work.push((v, succ.getOrElse(v, Array.empty[Long]).iterator))
-            } else if (onStack(v)) lowlink(u) = math.min(lowlink(u), index(v))
+          val (u, k) = work.top
+          if (k < g.out.off(u + 1)) {
+            work(0) = (u, k + 1)
+            val v = g.out.adj(k)
+            if (index(v) < 0) open(v)
+            else if (onStack(v)) lowlink(u) = math.min(lowlink(u), index(v))
           } else {
             work.pop()
             if (work.nonEmpty) {
-              val (p, _) = work.top
+              val p = work.top._1
               lowlink(p) = math.min(lowlink(p), lowlink(u))
             }
             if (lowlink(u) == index(u)) {
-              val members = scala.collection.mutable.ArrayBuffer[Long]()
+              // the least index of the component is its min member id
+              val members = scala.collection.mutable.ArrayBuffer[Int]()
               var done = false
               while (!done) {
-                val w = tstack.pop(); onStack -= w; members += w
+                val w = tstack.pop(); onStack(w) = false; members += w
                 if (w == u) done = true
               }
-              val label = members.min
-              members.foreach(m => comp(m) = label)
+              val min = members.min
+              members.foreach(label(_) = min)
             }
           }
         }
       }
     }
-    ids.map(v => (v, comp.getOrElse(v, v)))
+    ids.map { v =>
+      val i = g.index(v)
+      (v, if (i < 0 || index(i) < 0) v else g.ids(label(i)))
+    }
   }
 
   /** SCCs with >1 member = the cycle skeleton (fermor `cycles` /
@@ -273,7 +274,7 @@ object Algos {
     * dst→src (e.g. down a FK hierarchy). Returns reachable (id, dist).
     *
     * Below `localMaxEdges` edges the walk runs on the driver: one guarded
-    * collect of the edge pairs, one of the sources, then [[localBfs]].
+    * collect of the edge pairs, one of the sources, then [[LocalGraph.bfs]].
     * Above it, a level-synchronous DataFrame delta BFS: each round expands
     * only the newest frontier (semi-join on the edge table) and anti-joins
     * the visited set, so per-round work tracks frontier size — the same
@@ -292,51 +293,25 @@ object Algos {
       .localCheckpoint(eager = false)
     val seed = sources.select(col(sources.columns.head).as("id"))
     // LongType only (the SCC rule): the distributed union keeps the id
-    // columns' type, the driver walk emits bigint; null endpoints fall back
-    if (longCols(e, "__from", "__to") && longCols(seed, "id")) {
-      val es = collectPairsAtMost(e, localMaxEdges)
-      val ss = if (es.isEmpty) None
-        else collectLongsAtMost(seed.where(col("id").isNotNull), localMaxEdges)
-      if (ss.isDefined)
-        return localBfs(localAdj(es.get.iterator), ss.get, maxIter)._1.toSeq.toDF("id", "dist")
-    }
+    // columns' type, the driver walk emits bigint
+    if (longCols(e, "__from", "__to") && longCols(seed, "id"))
+      LocalGraph.collect(e, localMaxEdges, seed.where(col("id").isNotNull) -> localMaxEdges) match {
+        case Some((g, Seq(seeds))) =>
+          val (order, dist, _) = g.bfs(seeds.map(g.index), maxIter)
+          return order.toSeq.map(v => (g.ids(v), dist(v))).toDF("id", "dist")
+        case _ => ()
+      }
+    bfsRounds(e, seed, maxIter)
+  }
+
+  /** [[bfsDistances]]' distributed rounds over its (__from, __to) frame. */
+  private def bfsRounds(e: DataFrame, seed: DataFrame, maxIter: Int): DataFrame = {
     val (levels, _) = bfsLevels(seed, Seq("id"), maxIter) { f =>
       e.join(f.select(col("id").as("__from")), Seq("__from"), "left_semi")
         .select(col("__to").as("id")).dropDuplicates("id")
     }
     levels.zipWithIndex.map { case ((l, _), d) => l.withColumn("dist", lit(d)) }
       .reduce(_.unionByName(_))
-  }
-
-  /** The driver BFS's adjacency: successors per vertex of (from, to) pairs,
-    * duplicates kept. An iterator, so a caller can stream partition by
-    * partition (~16 B per edge once built). */
-  private def localAdj(pairs: Iterator[(Long, Long)]): LongMap[Array[Long]] = {
-    val b = new LongMap[ArrayBuilder.ofLong]()
-    pairs.foreach { case (f, t) => b.getOrElseUpdate(f, new ArrayBuilder.ofLong) += t }
-    b.mapValuesNow(_.result())
-  }
-
-  /** The one driver BFS behind the guarded replays of [[bfsDistances]],
-    * [[collectReachable]] and [[taggedBfs]] and [[reachableEdges]]' deep
-    * fallback: the hop distance of every vertex within `maxIter` hops of
-    * `seeds`, and whether some round found the frontier drained within
-    * `maxIter` rounds — exactly [[bfsLevels]]' levels and `converged`. */
-  private def localBfs(adj: LongMap[Array[Long]], seeds: Iterable[Long], maxIter: Int)
-      : (LongMap[Int], Boolean) = {
-    val dist = new LongMap[Int]()
-    var frontier = seeds.iterator.distinct.toArray
-    frontier.foreach(dist(_) = 0)
-    var d = 0
-    while (frontier.nonEmpty && d < maxIter) {
-      d += 1
-      val next = new ArrayBuilder.ofLong
-      frontier.foreach(u => adj.getOrElse(u, Array.emptyLongArray).foreach { v =>
-        if (!dist.contains(v)) { dist(v) = d; next += v }
-      })
-      frontier = next.result()
-    }
-    (dist, frontier.isEmpty)
   }
 
   /** The level-synchronous delta-BFS driver behind [[bfsDistances]],
@@ -450,53 +425,54 @@ object Algos {
     * replicated — so the returned dist table is bit-identical to the
     * distributed loop's in every regime, converged or capped (parity-spec'd
     * at guard = 0). `accept` is evaluated ONCE, distributedly, over the
-    * bounded id universe (sources ∪ edge heads), never per round.
+    * graph's bounded vertex set, never per round.
     *
     * The 50k guard default is a MEASURED rejection of a bigger one: on the
     * sf0.1 FK graph (2M weighted edges, 4-5 effective rounds, local[32])
     * the local path reads 3.0-5.4 s vs 2.3-3.5 s distributed — collecting
     * the edge frame costs more than the well-parallelized rounds save — so
     * the replay only fires where fixed per-round latency dominates. */
-  private def relaxLocal(spark: SparkSession, es: Array[(Long, Long, Long)],
-      sources: Array[Long], maxIter: Int, accept: Option[Column]): DataFrame = {
+  private def relaxLocal(spark: SparkSession, g: LocalGraph, sources: Array[Long],
+      maxIter: Int, accept: Option[Column]): DataFrame = {
     import spark.implicits._
-    val adj = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-    es.foreach { case (f, t, w) =>
-      adj.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuffer[(Long, Long)]) += ((t, w))
-    }
-    val srcs = sources.distinct
-    val acceptedIds: Long => Boolean = accept match {
-      case None => _ => false
-      case Some(a) =>
-        val universe = (srcs ++ es.map(_._2)).distinct
-        universe.toSeq.toDF("id").where(a).as[Long].collect().toSet
-    }
-    val dist = scala.collection.mutable.HashMap[Long, Long]()
-    srcs.foreach(dist(_) = 0L)
-    var frontier: scala.collection.Map[Long, Long] = dist.clone()
+    val accepted = new Array[Boolean](g.n)
+    accept.foreach(a => g.ids.toSeq.toDF("id").where(a).as[Long].collect()
+      .foreach(v => accepted(g.index(v)) = true))
+    val unset = Long.MaxValue
+    val dist = Array.fill(g.n)(unset)
+    var frontier = sources.map(g.index).distinct
+    frontier.foreach(dist(_) = 0L)
+    // per round: the min candidate cost of each vertex an edge out of the
+    // frontier reaches, kept iff it beats the known distance
+    val cand = Array.fill(g.n)(unset)
     var bestAccepted = Long.MaxValue
     var done = false
     var i = 0
     while (!done && i < maxIter) {
-      val cand = scala.collection.mutable.HashMap[Long, Long]()
-      frontier.foreach { case (f, c) =>
-        adj.get(f).foreach(_.foreach { case (t, w) =>
-          val nc = c + w
-          if (cand.get(t).forall(nc < _)) cand(t) = nc
-        })
+      val touched = new ArrayBuilder.ofInt
+      frontier.foreach { f =>
+        var k = g.out.off(f)
+        while (k < g.out.off(f + 1)) {
+          val t = g.out.adj(k)
+          val nc = dist(f) + g.out.w(k)
+          if (cand(t) == unset) touched += t
+          if (nc < cand(t)) cand(t) = nc
+          k += 1
+        }
       }
-      val improved = cand.filter { case (t, nc) => dist.get(t).forall(nc < _) }
+      val ts = touched.result()
+      val improved = ts.filter(t => cand(t) < dist(t))
+      improved.foreach(t => dist(t) = cand(t))
+      ts.foreach(cand(_) = unset)
       if (improved.isEmpty) done = true
       else {
-        improved.foreach { case (t, c) => dist(t) = c }
         frontier = improved
-        val accMin = improved.iterator.collect { case (t, c) if acceptedIds(t) => c }
-        if (accMin.nonEmpty) bestAccepted = math.min(bestAccepted, accMin.min)
-        if (improved.values.min >= bestAccepted) done = true
+        improved.foreach(t => if (accepted(t)) bestAccepted = math.min(bestAccepted, dist(t)))
+        if (improved.map(dist).min >= bestAccepted) done = true
       }
       i += 1
     }
-    dist.iterator.map { case (v, c) => (v, c) }.toSeq.toDF("id", "cost")
+    g.ids.indices.filter(dist(_) != unset).map(v => (g.ids(v), dist(v))).toDF("id", "cost")
   }
 
   /** fermor `shortest-path`'s full contract: lowest-cost search for vertices
@@ -537,21 +513,19 @@ object Algos {
     * same recurrence replays on the driver ([[relaxLocal]]). */
   private def relaxLoop(e: DataFrame, sources: DataFrame, maxIter: Int,
       accept: Option[Column], localMaxEdges: Long): DataFrame = {
-    // probe + collect the CHECKPOINTED frame: a derived edge graph evaluates
-    // its upstream once (the kTruss probe rule). Sources are guarded too: a
+    // collect the CHECKPOINTED frame: a derived edge graph evaluates its
+    // upstream once (the kTruss probe rule). Sources are guarded too: a
     // huge source set over a small subgraph must not be collected; the type
-    // gate keeps non-long ids on the distributed path. Probe and collect are
-    // one action per frame (collectAtMost); null endpoints or sources fall
-    // back to the distributed rounds, where a null key simply never joins
-    if (integralCols(e, "__from", "__to") && integralCols(sources, sources.columns.head)) {
-      val es = collectAtMost(e, localMaxEdges) // __w is non-null by construction
-        .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-      val ss = if (es.isEmpty) None
-        else collectLongsAtMost(sources.select(col(sources.columns.head).cast("long")),
-          localMaxEdges)
-      if (ss.isDefined) return relaxLocal(e.sparkSession, es.get, ss.get, maxIter, accept)
-    }
+    // gate keeps non-long ids on the distributed path, where a null key
+    // simply never joins
+    if (integralCols(e, "__from", "__to") && integralCols(sources, sources.columns.head))
+      LocalGraph.collect(
+          e.select(col("__from").cast("long"), col("__to").cast("long"), col("__w")),
+          localMaxEdges,
+          sources.select(col(sources.columns.head).cast("long")) -> localMaxEdges) match {
+        case Some((g, Seq(ss))) => return relaxLocal(e.sparkSession, g, ss, maxIter, accept)
+        case _ => ()
+      }
     var (dist, frontierRows, _) = checkpointed(
       sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
         .withColumn("cost", lit(0L)))
@@ -955,38 +929,37 @@ object Algos {
     // labels, max count then smallest label — so the replay is
     // bit-identical to the distributed rounds; parity-spec'd with the
     // guard forced off. Duplicate vertex ids fall back (bag labels).
-    // Probe + collect fused into one action per frame (collectAtMost).
-    val esOpt = collectPairsAtMost(
-      edges.select(col("src").cast("long"), col("dst").cast("long")), localMaxEdges)
-    val idsOpt = if (esOpt.isEmpty) None
-      else collectLongsAtMost(vertices.select(col(idc).cast("long")), localMaxEdges)
-    if (esOpt.isDefined && idsOpt.isDefined) {
-      import spark.implicits._
-      val ids = idsOpt.get
-      if (ids.length == ids.distinct.length) {
-        val es = esOpt.get
-        var lbl = scala.collection.mutable.HashMap[Long, Long](ids.map(i => i -> i): _*)
+    LocalGraph.collect(edges.select(col("src").cast("long"), col("dst").cast("long")),
+        localMaxEdges, vertices.select(col(idc).cast("long")) -> localMaxEdges) match {
+      case Some((g, Seq(ids))) if ids.length == ids.distinct.length =>
+        import spark.implicits._
+        // only edges between two vertices count
+        val isV = new Array[Boolean](g.n)
+        val vs = ids.map(g.index)
+        vs.foreach(isV(_) = true)
+        var lbl = g.ids.clone()
+        val buf = new Array[Long]((0 until g.n).map(g.in.degree).maxOption.getOrElse(0))
         for (_ <- 1 to iters) {
-          val cnt = scala.collection.mutable.HashMap[(Long, Long), Long]()
-          es.foreach { case (s, d) =>
-            lbl.get(s).foreach { l =>
-              if (lbl.contains(d)) cnt((d, l)) = cnt.getOrElse((d, l), 0L) + 1L
+          val next = lbl.clone()
+          vs.foreach { d =>
+            var c = 0
+            g.in.foreach(d)(s => if (isV(s)) { buf(c) = lbl(s); c += 1 })
+            // sorted, the most frequent label is the longest run, and the
+            // first longest run holds the smallest such label
+            java.util.Arrays.sort(buf, 0, c)
+            var j = 0
+            var bestN = 0
+            while (j < c) {
+              var k = j
+              while (k < c && buf(k) == buf(j)) k += 1
+              if (k - j > bestN) { next(d) = buf(j); bestN = k - j }
+              j = k
             }
           }
-          val next = scala.collection.mutable.HashMap[Long, Long]()
-          cnt.foreach { case ((d, l), n) =>
-            next.get(d) match {
-              case None => next(d) = l
-              case Some(b) =>
-                val bn = cnt((d, b))
-                if (n > bn || (n == bn && l < b)) next(d) = l
-            }
-          }
-          ids.foreach(i => if (!next.contains(i)) next(i) = lbl(i))
           lbl = next
         }
-        return ids.toSeq.map(i => (i, lbl(i))).toDF("id", "community")
-      }
+        return ids.toSeq.map(i => (i, lbl(g.index(i)))).toDF("id", "community")
+      case _ => ()
     }
     // EAGER per-round checkpoints (the Descend rule): round k feeds round
     // k+1, so a lazy checkpoint would leave the final action to recompute a
@@ -1036,29 +1009,27 @@ object Algos {
     // count iff both endpoints are in `vertices`, mirroring the keyed-join
     // + left-join semantics; addExact mirrors ANSI error-on-overflow).
     // Callers pass distinct vertex ids (both forms assume it).
-    // Probe + collect fused into one action per frame (collectAtMost).
-    val esOpt = collectPairsAtMost(e, localMaxEdges)
-    val vOpt = if (esOpt.isEmpty) None
-      else collectLongsAtMost(vertices.select(col(idc).cast("long")), localMaxEdges)
-    if (esOpt.isDefined && vOpt.isDefined) {
-      val vIds = vOpt.get
-      val idx = scala.collection.mutable.HashMap[Long, Int]()
-      vIds.zipWithIndex.foreach { case (v, i) => idx.getOrElseUpdate(v, i) }
-      val pairs = esOpt.get.flatMap { case (s, d) =>
-        for (si <- idx.get(s); di <- idx.get(d)) yield (si, di)
-      }
-      val n = vIds.length
-      var hub = Array.fill(n)(1L)
-      var auth = Array.fill(n)(1L)
-      for (_ <- 1 to iters) {
-        val na = new Array[Long](n)
-        pairs.foreach { case (si, di) => na(di) = Math.addExact(na(di), hub(si)) }
-        auth = na
-        val nh = new Array[Long](n)
-        pairs.foreach { case (si, di) => nh(si) = Math.addExact(nh(si), auth(di)) }
-        hub = nh
-      }
-      return vIds.indices.map(i => (vIds(i), hub(i), auth(i))).toDF("id", "hub", "auth")
+    LocalGraph.collect(e, localMaxEdges,
+        vertices.select(col(idc).cast("long")) -> localMaxEdges) match {
+      case Some((g, Seq(vIds))) =>
+        val isV = new Array[Boolean](g.n)
+        vIds.foreach(v => isV(g.index(v)) = true)
+        def eachEdge(f: (Int, Int) => Unit): Unit = (0 until g.n).foreach { s =>
+          if (isV(s)) g.out.foreach(s)(d => if (isV(d)) f(s, d))
+        }
+        var hub = Array.fill(g.n)(1L)
+        var auth = Array.fill(g.n)(1L)
+        for (_ <- 1 to iters) {
+          val na = new Array[Long](g.n)
+          eachEdge((s, d) => na(d) = Math.addExact(na(d), hub(s)))
+          auth = na
+          val nh = new Array[Long](g.n)
+          eachEdge((s, d) => nh(s) = Math.addExact(nh(s), auth(d)))
+          hub = nh
+        }
+        return vIds.toSeq.map { v => val i = g.index(v); (v, hub(i), auth(i)) }
+          .toDF("id", "hub", "auth")
+      case _ => ()
     }
     var scores = vertices.select(col(idc).cast("long").as("id"))
       .withColumn("hub", lit(1L)).withColumn("auth", lit(1L)).localCheckpoint(true)
@@ -1103,44 +1074,39 @@ object Algos {
     // error-on-overflow) — so the replay is bit-identical, parity-spec'd.
     // Duplicate seed rows fall back to the distributed path: the full_outer
     // merge there has per-row bag semantics a keyed map can't mirror.
-    // Probe + collect fused into one action per frame (collectAtMost).
-    val idc0 = seeds.columns.head
-    val esOpt = collectPairsAtMost(e, localMaxEdges)
-    val seedsOpt = if (esOpt.isEmpty) None
-      else collectLongsAtMost(seeds.select(col(idc0).cast("long")), localMaxEdges)
-    if (esOpt.isDefined && seedsOpt.isDefined) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val seedArr = seedsOpt.get
-      if (seedArr.length == seedArr.distinct.length) {
-        val es = esOpt.get
-        val deg = scala.collection.mutable.HashMap[Long, Long]()
-        es.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1L }
+    LocalGraph.collect(e, localMaxEdges,
+        seeds.select(col(seeds.columns.head).cast("long")) -> localMaxEdges) match {
+      case Some((g, Seq(seedArr))) if seedArr.length == seedArr.distinct.length =>
+        val spark = edges.sparkSession
+        import spark.implicits._
         val r0 = scale * (10000L - alphaBp) / 10000L
-        val seedSet = seedArr.toSet
-        var rank = scala.collection.mutable.HashMap[Long, Long](
-          seedArr.map(_ -> scale): _*)
+        val seedIx = seedArr.map(g.index)
+        // rank(v) is defined iff has(v): the seeds and every vertex an edge
+        // from a ranked vertex reaches
+        var rank = new Array[Long](g.n)
+        var has = new Array[Boolean](g.n)
+        seedIx.foreach { i => rank(i) = scale; has(i) = true }
         for (_ <- 1 to iters) {
-          val in = scala.collection.mutable.HashMap[Long, Long]()
-          es.foreach { case (s, d) =>
-            rank.get(s).foreach { r =>
+          val in = new Array[Long](g.n)
+          val reached = new Array[Boolean](g.n)
+          (0 until g.n).foreach { s =>
+            if (has(s)) g.out.foreach(s) { d =>
               // multiplyExact mirrors the distributed column expression,
               // which runs under Spark 4's default ANSI mode and errors
               // loudly on overflow — the replay must never wrap silently
               // where the distributed rounds would have raised
-              val m = Math.multiplyExact(r, alphaBp) /
-                Math.multiplyExact(10000L, deg(s))
-              in(d) = Math.addExact(in.getOrElse(d, 0L), m)
+              val m = Math.multiplyExact(rank(s), alphaBp) /
+                Math.multiplyExact(10000L, g.out.degree(s).toLong)
+              in(d) = Math.addExact(in(d), m)
+              reached(d) = true
             }
           }
-          val next = scala.collection.mutable.HashMap[Long, Long]()
-          seedSet.foreach(id => next(id) = Math.addExact(r0, in.getOrElse(id, 0L)))
-          in.keysIterator.foreach(id =>
-            if (!seedSet.contains(id)) next(id) = in(id))
-          rank = next
+          seedIx.foreach { i => in(i) = Math.addExact(r0, in(i)); reached(i) = true }
+          rank = in
+          has = reached
         }
-        return rank.toSeq.toDF("id", "rank")
-      }
+        return g.ids.indices.filter(has).map(i => (g.ids(i), rank(i))).toDF("id", "rank")
+      case _ => ()
     }
     val deg = e.groupBy("src").agg(count(lit(1)).as("__d"))
     val idc = seeds.columns.head
@@ -1186,37 +1152,29 @@ object Algos {
     // compares identically as a Java String and a UTF8String — so the
     // replay is bit-identical; parity-spec'd with the guard forced off.
     // Duplicate walker rows fall back (bag-of-walkers semantics).
-    // Probe + collect fused into one action per frame (collectAtMost).
-    val esOpt = collectPairsAtMost(e, localMaxEdges)
-    val wsOpt = if (esOpt.isEmpty) None
-      else collectLongsAtMost(
-        starts.select(col(starts.columns.head).cast("long")), localMaxEdges)
-    if (esOpt.isDefined && wsOpt.isDefined) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val ws = wsOpt.get
-      if (ws.length == ws.distinct.length) {
-        val adj = esOpt.get.groupBy(_._1)
-          .map { case (s, ds) => s -> ds.map(_._2).distinct }
+    LocalGraph.collect(e, localMaxEdges,
+        starts.select(col(starts.columns.head).cast("long")) -> localMaxEdges) match {
+      case Some((g, Seq(ws))) if ws.length == ws.distinct.length =>
+        val spark = edges.sparkSession
+        import spark.implicits._
         val md = java.security.MessageDigest.getInstance("MD5")
         def h(w: Long, s: Int, d: Long): String = {
           val b = md.digest(s"$w:$s:$d".getBytes("UTF-8"))
           b.map("%02x".format(_)).mkString
         }
         val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Int)]()
-        var curW = ws.map(w => (w, w)).toSeq
-        curW.foreach { case (w, v) => out += ((w, v, 0)) }
+        var curW = ws.toSeq.map(w => (w, g.index(w)))
+        curW.foreach { case (w, v) => out += ((w, g.ids(v), 0)) }
         for (s <- 1 to steps) {
           curW = curW.flatMap { case (w, v) =>
-            adj.get(v).map { nbrs =>
-              val best = nbrs.minBy(d => (h(w, s, d), d))
-              (w, best)
-            }
+            Option.when(g.out.degree(v) > 0)((w,
+              (g.out.off(v) until g.out.off(v + 1)).map(g.out.adj).distinct
+                .minBy(d => (h(w, s, g.ids(d)), g.ids(d)))))
           }
-          curW.foreach { case (w, v) => out += ((w, v, s)) }
+          curW.foreach { case (w, v) => out += ((w, g.ids(v), s)) }
         }
         return out.toSeq.toDF("walker", "v", "step")
-      }
+      case _ => ()
     }
     var cur = starts.select(col(starts.columns.head).cast("long").as("walker"))
       .withColumn("v", col("walker")).withColumn("step", lit(0))
@@ -1264,20 +1222,18 @@ object Algos {
     // the UNIQUE maximal subgraph of min degree >= k, so any correct peel
     // order yields the identical answer — one linear queue pass replaces
     // per-round scheduling latency below the guard; raw-pair guard skips
-    // the symmetrize+distinct shuffle (dedup happens in indexedAdj);
-    // probe and collect fused into one action (collectPairsAtMost)
-    val symPairs = collectPairsAtMost(sym, localMaxEdges / 2)
-    if (symPairs.isDefined) {
-      val (ids, adj) = indexedAdj(symPairs.get)
-      val n = ids.length
-      val deg = adj.map(_.length)
+    // the symmetrize+distinct shuffle (the dedup happens in `sym`)
+    val local = LocalGraph.collect(sym, localMaxEdges / 2)
+    if (local.isDefined) {
+      val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
+      val deg = Array.tabulate(n)(adj.degree)
       val removed = new Array[Boolean](n)
       val queue = scala.collection.mutable.ArrayDeque.from((0 until n).filter(deg(_) < k))
       while (queue.nonEmpty) {
         val i = queue.removeHead()
         if (!removed(i)) {
           removed(i) = true
-          adj(i).foreach { j =>
+          adj.foreach(i) { j =>
             if (!removed(j)) { deg(j) -= 1; if (deg(j) == k - 1) queue += j }
           }
         }
@@ -1328,11 +1284,10 @@ object Algos {
     import spark.implicits._
     val sym0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-    val symPairs = collectPairsAtMost(sym0, localMaxEdges / 2)
-    if (symPairs.isDefined) { // probe + collect fused into one action
-      val (ids, adj) = indexedAdj(symPairs.get)
-      val n = ids.length
-      val deg = adj.map(_.length)
+    val local = LocalGraph.collect(sym0, localMaxEdges / 2)
+    if (local.isDefined) {
+      val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
+      val deg = Array.tabulate(n)(adj.degree)
       val core = new Array[Int](n)
       // Matula–Beck: process vertices in nondecreasing current-degree
       // order via bucket queues; core(v) = running max of its peel degree
@@ -1352,7 +1307,7 @@ object Algos {
             removed(i) = true
             k = math.max(k, b)
             core(i) = k
-            adj(i).foreach { j =>
+            adj.foreach(i) { j =>
               if (!removed(j) && cur(j) > b) {
                 cur(j) -= 1
                 buckets(cur(j)) += j
@@ -1433,12 +1388,9 @@ object Algos {
     // joins whose sf0.1 cost is pure round-scheduling latency; the
     // distributed loop runs above the guard (parity-spec'd both regimes).
     // Raw-pair guard: counting BEFORE distinct skips that shuffle here.
-    // Probe + collect fused into one action (collectPairsAtMost).
-    val rawPairs = collectPairsAtMost(raw, localMaxEdges)
-    if (rawPairs.isDefined) {
-      val (ids, adj) = indexedAdj(rawPairs.get)
-      val n = ids.length
-      adj.foreach(java.util.Arrays.sort)
+    val local = LocalGraph.collect(raw, localMaxEdges)
+    if (local.isDefined) {
+      val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       def ekey(i: Int, j: Int): Long =
         (math.min(i, j).toLong << 32) | math.max(i, j).toLong
       val eU = new scala.collection.mutable.ArrayBuffer[Int]()
@@ -1446,7 +1398,7 @@ object Algos {
       val eIdx = new scala.collection.mutable.LongMap[Int]()
       var i = 0
       while (i < n) {
-        adj(i).foreach { j =>
+        adj.foreach(i) { j =>
           if (i < j) { eIdx(ekey(i, j)) = eU.length; eU += i; eV += j }
         }
         i += 1
@@ -1461,9 +1413,9 @@ object Algos {
       var e = 0
       while (e < m) {
         val u = eU(e); val v = eV(e)
-        val (x, y) = if (adj(u).length <= adj(v).length) (u, v) else (v, u)
+        val (x, y) = if (adj.degree(u) <= adj.degree(v)) (u, v) else (v, u)
         var s = 0
-        adj(x).foreach { w => if (w != y && eIdx.contains(ekey(y, w))) s += 1 }
+        adj.foreach(x) { w => if (w != y && eIdx.contains(ekey(y, w))) s += 1 }
         sup(e) = s
         e += 1
       }
@@ -1483,8 +1435,8 @@ object Algos {
         val t = queue.removeHead()
         alive(t) = false
         val u = eU(t); val v = eV(t)
-        val (x, y) = if (adj(u).length <= adj(v).length) (u, v) else (v, u)
-        adj(x).foreach { w =>
+        val (x, y) = if (adj.degree(u) <= adj.degree(v)) (u, v) else (v, u)
+        adj.foreach(x) { w =>
           if (w != y) {
             val e1 = eIdx(ekey(x, w))
             if (alive(e1)) eIdx.get(ekey(y, w)).foreach { e2 =>
@@ -1565,11 +1517,9 @@ object Algos {
     // loop (parity-spec'd) — above the guard the distributed path runs.
     // The guard counts RAW pairs (>= the distinct symmetrized edge count /
     // 2), so qualifying inputs skip the symmetrize+distinct shuffle too.
-    // Probe + collect fused into one action (collectPairsAtMost).
-    val symPairs = collectPairsAtMost(sym0, localMaxEdges / 2)
-    if (symPairs.isDefined) {
-      val (ids, adj) = indexedAdj(symPairs.get)
-      val n = ids.length
+    val local = LocalGraph.collect(sym0, localMaxEdges / 2)
+    if (local.isDefined) {
+      val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       val alive = Array.fill(n)(true)
       var nAlive = n
       val out = scala.collection.mutable.ArrayBuffer[Long]()
@@ -1584,12 +1534,12 @@ object Algos {
           if (alive(i)) p(i) = md5hex(s"$round:${ids(i)}") + pad20(ids(i))
         }
         val win = (0 until n).filter { i =>
-          alive(i) && adj(i).forall(j => !alive(j) || p(i) < p(j))
+          alive(i) && adj.forall(i)(j => !alive(j) || p(i) < p(j))
         }
         win.foreach { i =>
           out += ids(i)
           if (alive(i)) { alive(i) = false; nAlive -= 1 }
-          adj(i).foreach { j => if (alive(j)) { alive(j) = false; nAlive -= 1 } }
+          adj.foreach(i) { j => if (alive(j)) { alive(j) = false; nAlive -= 1 } }
         }
       }
       return out.toSeq.toDF("id")
@@ -1707,47 +1657,6 @@ object Algos {
         .as("q_ppm"))
   }
 
-  /** One-action guard + collect for the local replays: runs the LIMITED
-    * plan once (first wave widened by [[Scale.oneWaveLimit]]) and returns
-    * the rows iff the frame holds at most n of them — a guard's cost stays
-    * capped at its threshold instead of a full count of an arbitrarily
-    * large input (the replays sit in front of billion-edge distributed
-    * paths). A separate probe + collect paid two sequential driver actions
-    * over the same frame; measured 0.2-0.4 s of pure probe latency per
-    * qualifying query at sf0.1. Above the guard the wasted transfer is
-    * bounded by the guard constant itself (n+1 rows).
-    *
-    * INTERNAL rows, not external ones: Dataset.collect() wraps every row
-    * in a boxed GenericRow (~100 B and 5 objects per row — ~200 MB of
-    * simultaneously-live garbage at the 2 M guard), which a fresh JVM
-    * absorbs but the bench JVM (heap already holding every cached table)
-    * answers with full-GC churn. executeCollect returns the compact
-    * UnsafeRows as-is; isNullAt/getLong read them directly. */
-  private def collectAtMost(df: DataFrame, n: Long)
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
-    if (n < 0) return None
-    val probe = math.min(n, Int.MaxValue - 1L).toInt + 1
-    val rows = Scale.oneWaveLimit(df)(
-      df.limit(probe).queryExecution.executedPlan.executeCollect())
-    if (rows.length <= n) Some(rows) else None
-  }
-
-  /** [[collectAtMost]] for the common (src, dst) long-pair frames; any
-    * null endpoint rejects the local replay (the distributed path defines
-    * the null semantics, so a null-carrying input falls back to it). */
-  private def collectPairsAtMost(df: DataFrame, n: Long): Option[Array[(Long, Long)]] =
-    collectAtMost(df, n).flatMap { rows =>
-      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-      else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
-    }
-
-  /** [[collectAtMost]] for single long-column frames (vertex/seed lists);
-    * same null-falls-back-to-distributed rule as [[collectPairsAtMost]]. */
-  private def collectLongsAtMost(df: DataFrame, n: Long): Option[Array[Long]] =
-    collectAtMost(df, n).flatMap { rows =>
-      if (rows.exists(_.isNullAt(0))) None else Some(rows.map(_.getLong(0)))
-    }
-
   /** Greedy Kruskal accept sweep shared by [[boruvkaForest]]'s two guarded
     * finishes: tuples (w, src, dst, compA, compB) arrive in (w, src, dst)
     * order; a path-halving min-root union-find over the component labels
@@ -1798,7 +1707,7 @@ object Algos {
     // parallel-collapse groupBy SHUFFLE never runs either — collect the
     // raw weighted pairs, take min-w per pair driver-side, and Kruskal
     // the whole unique forest in one pass
-    val rawRows = collectAtMost(canonRaw, localMaxEdges) // probe+collect fused
+    val rawRows = collectAtMost(canonRaw, localMaxEdges)
       .filter(!_.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
     if (rawRows.isDefined) {
       val best = scala.collection.mutable.HashMap[(Long, Long), Long]()
@@ -1934,13 +1843,11 @@ object Algos {
     // are strict local maxima, so same-round winners are never adjacent and
     // sequential color picks within a round see exactly the pre-round
     // colored set) — bit-identical to the distributed loop, parity-spec'd;
-    // raw-pair guard skips the symmetrize+distinct shuffle (the MIS note);
-    // probe + collect fused into one action (collectPairsAtMost)
-    val symPairs = collectPairsAtMost(sym0, localMaxEdges / 2)
-    if (symPairs.isDefined) {
-      val (ids, adj) = indexedAdj(symPairs.get)
-      val n = ids.length
-      adj.iterator.map(_.length).maxOption.foreach(d =>
+    // raw-pair guard skips the symmetrize+distinct shuffle (the MIS note)
+    val local = LocalGraph.collect(sym0, localMaxEdges / 2)
+    if (local.isDefined) {
+      val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
+      (0 until n).map(adj.degree).maxOption.foreach(d =>
         require(d < maxColors,
           s"maxColors=$maxColors <= max degree $d; JP needs maxDegree+1"))
       val p = new Array[String](n)
@@ -1955,10 +1862,10 @@ object Algos {
         if (r > maxRounds)
           throw new IllegalStateException(s"jpColoring did not drain within $maxRounds rounds")
         val win = (0 until n).filter { i =>
-          color(i) < 0 && adj(i).forall(j => color(j) >= 0 || p(i) > p(j))
+          color(i) < 0 && adj.forall(i)(j => color(j) >= 0 || p(i) > p(j))
         }
         win.foreach { i =>
-          val used = adj(i).iterator.map(color).filter(_ >= 0).toSet
+          val used = (adj.off(i) until adj.off(i + 1)).map(k => color(adj.adj(k))).toSet
           color(i) = (0 until maxColors).find(c => !used.contains(c)).get
           nLeft -= 1
         }
@@ -2043,39 +1950,42 @@ object Algos {
     // guard: at sf0.1 (2M edges, depth 4, local[32]) the local path reads
     // 2.7-3.9 s vs 2.7 s distributed — the collect + driver sets + 800k-row
     // re-upload cost more than four well-parallelized rounds — so it fires
-    // only on genuinely small DAGs. Probe + collect are one action per
-    // frame (collectAtMost); null ids fall through to the distributed
-    // rounds, which keep the pre-replay semantics for them (a null dst
-    // keeps its level row; a null src never matches a join)
-    val esOpt =
+    // only on genuinely small DAGs. Null ids fall through to the
+    // distributed rounds, which keep the pre-replay semantics for them (a
+    // null dst keeps its level row; a null src never matches a join)
+    val local =
       if (integralCols(e, "src", "dst") && integralCols(vertices, vertices.columns.head))
-        collectPairsAtMost(e.select(col("src").cast("long"), col("dst").cast("long")),
-          localMaxEdges)
+        LocalGraph.collect(e.select(col("src").cast("long"), col("dst").cast("long")),
+          localMaxEdges,
+          vertices.select(col(vertices.columns.head).cast("long")) -> localMaxEdges)
       else None
-    val vsOpt = if (esOpt.isEmpty) None
-      else collectLongsAtMost(vertices.select(col(vertices.columns.head).cast("long")),
-        localMaxEdges)
-    if (vsOpt.isDefined) {
-      val es = esOpt.get
-      val adj = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      es.foreach { case (s, d) =>
-        adj.getOrElseUpdate(s, new scala.collection.mutable.ArrayBuffer[Long]) += d
+    if (local.isDefined) {
+      val (g, Seq(vs)) = local.get
+      val level = Array.fill(g.n)(-1) // -1: no row
+      vs.foreach(v => level(g.index(v)) = 0)
+      // round r's frontier, deduped by stamping each vertex with the round
+      val stamp = new Array[Int](g.n)
+      def heads(round: Int, from: Iterator[Int]): Array[Int] = {
+        val next = new ArrayBuilder.ofInt
+        from.foreach(u => g.out.foreach(u) { v =>
+          if (stamp(v) != round) { stamp(v) = round; next += v }
+        })
+        next.result()
       }
-      val level = scala.collection.mutable.HashMap[Long, Int]()
-      vsOpt.get.foreach(v => level.getOrElseUpdate(v, 0))
-      var frontier: scala.collection.Set[Long] = es.iterator.map(_._2).toSet
-      frontier.foreach(v => level(v) = 1) // max-merge: round 1 beats the 0 init
+      // round 1 is every edge head; a later round always wins the max
+      var frontier = heads(1, Iterator.range(0, g.n))
+      frontier.foreach(level(_) = 1)
       var i = 1
       var done = frontier.isEmpty
       while (!done && i < maxIter) {
-        val next = scala.collection.mutable.HashSet[Long]()
-        frontier.foreach(v => adj.get(v).foreach(_.foreach(next += _)))
+        val next = heads(i + 1, frontier.iterator)
         if (next.isEmpty) done = true
-        else next.foreach(v => level(v) = i + 1) // later round always wins the max
+        else next.foreach(level(_) = i + 1)
         frontier = next
         i += 1
       }
-      return level.iterator.map { case (v, l) => (v, l) }.toSeq.toDF("id", "level")
+      return g.ids.indices.filter(level(_) >= 0).map(v => (g.ids(v), level(v)))
+        .toDF("id", "level")
     }
     // DELTA iteration: round i's frontier is exactly the heads of some
     // length-i path, so the level column is constant per round — each round
@@ -2205,9 +2115,9 @@ object Algos {
             "subgraph (edgeSubgraph/filter) before the flow analysis")
       import scala.jdk.CollectionConverters._
       val rows = sub.select(col("src").cast("long"), col("dst").cast("long")).toLocalIterator()
-      val (vis, _) = localBfs(localAdj(rows.asScala.map(r => (r.getLong(0), r.getLong(1)))),
-        Seq(entry), Int.MaxValue)
-      sub.join(vis.keys.toSeq.toDF("src"), Seq("src"), "left_semi")
+      val g = LocalGraph(rows.asScala.map(r => (r.getLong(0), r.getLong(1))), Seq(entry))
+      val (reached, _, _) = g.bfs(Seq(g.index(entry)), Int.MaxValue)
+      sub.join(reached.toSeq.map(g.ids).toDF("src"), Seq("src"), "left_semi")
     }
   }
 
@@ -2285,7 +2195,7 @@ object Algos {
     * the actionable message rather than collapse.
     *
     * An edge set of at most `localMaxEdges` integral non-null pairs is
-    * collected whole and walked by [[localBfs]]; past it, the flow subgraph
+    * collected whole and walked by [[LocalGraph.bfs]]; past it, the flow subgraph
     * is extracted by [[reachableEdges]] and only it is collected. Either
     * way the result is the distinct pairs whose src the entry reaches. */
   private[graft] def collectReachable(entry: Long, edges: DataFrame,
@@ -2300,13 +2210,18 @@ object Algos {
             "driver-side DFS analyses are CFG-scale; restrict the entry's subgraph " +
             "(edgeSubgraph/filter) or raise maxEdges explicitly")
     // the long casts (here and in the stream below) keep getLong safe for
-    // int-typed edge columns; a null endpoint falls back
+    // int-typed edge columns
     val local = if (!integralCols(edges, "src", "dst")) None
-      else collectPairsAtMost(edges.select(col("src").cast("long"), col("dst").cast("long")),
+      else LocalGraph.collect(edges.select(col("src").cast("long"), col("dst").cast("long")),
         localMaxEdges)
     if (local.isDefined) {
-      val (reached, _) = localBfs(localAdj(local.get.iterator), Seq(entry), Int.MaxValue)
-      val out = local.get.iterator.filter(p => reached.contains(p._1)).distinct.toArray
+      val g = local.get
+      val root = g.index(entry)
+      val reached = if (root < 0) Array.emptyIntArray else g.bfs(Seq(root), Int.MaxValue)._1
+      // out lists are in target order, so a duplicate edge is its neighbor
+      val out = reached.flatMap(u => (g.out.off(u) until g.out.off(u + 1))
+        .filter(k => k == g.out.off(u) || g.out.adj(k) != g.out.adj(k - 1))
+        .map(k => (g.ids(u), g.ids(g.out.adj(k)))))
       checkSize(out.length)
       return out
     }
@@ -2324,6 +2239,11 @@ object Algos {
     out
   }
 
+  /** The entry's flow subgraph ([[collectReachable]]) as a driver graph,
+    * with the entry a vertex even if it is on no edge. */
+  private def flowGraph(entry: Long, edges: DataFrame): LocalGraph =
+    LocalGraph(collectReachable(entry, edges).iterator, Seq(entry))
+
   /** Immediate dominators (fermor algo.clj `immediate-dominators`) via the
     * iterative Cooper–Harvey–Kennedy algorithm on reverse-postorder.
     * Dominance is DFS-order-sequential, so like the reference this runs
@@ -2336,53 +2256,25 @@ object Algos {
     // single-threaded on the driver, which at millions of CFG blocks cost
     // more than the CHK solve itself (the 10× sweep's whole q_dominators
     // overhead); RDD partitions encode in parallel across the executors
-    val arr = idomLocal(entry, collectReachable(entry, edges)).toArray
+    val g = flowGraph(entry, edges)
+    val (rpo, idom) = idomLocal(g, entry)
+    val arr = rpo.map(v => (g.ids(v), g.ids(idom(v))))
     spark.sparkContext
       .parallelize(arr.toIndexedSeq, math.min(32, 1 + arr.length / 65536))
       .toDF("id", "idom")
   }
 
-  /** Cooper–Harvey–Kennedy on reverse postorder, driver arrays. `es` must
-    * already be the entry's reachable subgraph. */
-  private def idomLocal(entry: Long, es: Array[(Long, Long)]): scala.collection.mutable.HashMap[Long, Long] = {
-    val succ = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    // iterative DFS from entry → reverse postorder (explicit stack: safe on
-    // deep chain graphs where recursion would blow the JVM stack)
-    val rpoList = scala.collection.mutable.ArrayBuffer[Long]()
-    val seen = scala.collection.mutable.HashSet[Long](entry)
-    val stack = scala.collection.mutable.Stack[(Long, Iterator[Long])](
-      (entry, succ.getOrElse(entry, Array.empty[Long]).iterator))
-    while (stack.nonEmpty) {
-      val (u, it) = stack.top
-      if (it.hasNext) {
-        val v = it.next()
-        if (!seen(v)) { seen += v; stack.push((v, succ.getOrElse(v, Array.empty[Long]).iterator)) }
-      } else { stack.pop(); rpoList += u }
-    }
-    val rpo = rpoList.reverse.toArray // entry first
+  /** Cooper–Harvey–Kennedy on reverse postorder, over `g`, the entry's
+    * reachable subgraph: the reverse postorder (entry first) and the
+    * immediate dominator of each of its vertices (the entry's is itself),
+    * as dense indices. Every dominator precedes what it dominates in it. */
+  private def idomLocal(g: LocalGraph, entry: Long): (Array[Int], Array[Int]) = {
+    val rpo = g.dfs(g.index(entry))._2.reverse
     val n = rpo.length
-    // index-based CHK from here: the fixpoint's intersect loop does two map
-    // lookups per dominator-chain step, and boxed-Long HashMaps made it the
-    // entire cost at millions of edges (the 10× sweep read 15× wall for 10×
-    // edges); remap vertices to 0..n-1 once and run the loops on int arrays
-    val ix = new scala.collection.mutable.HashMap[Long, Int]()
-    ix.sizeHint(n)
+    // CHK runs on rpo positions: a position's dominators sit at smaller ones
+    val pos = Array.fill(g.n)(-1)
     var i = 0
-    while (i < n) { ix(rpo(i)) = i; i += 1 } // ix == rpo position (entry = 0)
-    // CSR-style predecessor lists over reachable endpoints only
-    val predCnt = new Array[Int](n)
-    es.foreach { case (s, d) =>
-      if (ix.contains(s)) ix.get(d).foreach(di => predCnt(di) += 1)
-    }
-    val predOff = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { predOff(i + 1) = predOff(i) + predCnt(i); i += 1 }
-    val predArr = new Array[Int](predOff(n))
-    val fill = java.util.Arrays.copyOf(predOff, n)
-    es.foreach { case (s, d) =>
-      val si = ix.getOrElse(s, -1)
-      if (si >= 0) ix.get(d).foreach { di => predArr(fill(di)) = si; fill(di) += 1 }
-    }
+    while (i < n) { pos(rpo(i)) = i; i += 1 }
     val idom = Array.fill(n)(-1)
     idom(0) = 0
     def intersect(a: Int, b: Int): Int = {
@@ -2399,42 +2291,31 @@ object Algos {
       var v = 1
       while (v < n) {
         var ni = -1
-        var p = predOff(v)
-        while (p < predOff(v + 1)) {
-          val u = predArr(p)
-          if (idom(u) >= 0) ni = if (ni < 0) u else intersect(ni, u)
-          p += 1
+        g.in.foreach(rpo(v)) { p =>
+          val u = pos(p)
+          if (u >= 0 && idom(u) >= 0) ni = if (ni < 0) u else intersect(ni, u)
         }
         if (ni >= 0 && idom(v) != ni) { idom(v) = ni; changed = true }
         v += 1
       }
     }
-    val out = scala.collection.mutable.HashMap[Long, Long]()
-    out.sizeHint(n)
+    val byVertex = Array.fill(g.n)(-1)
     i = 0
-    while (i < n) { if (idom(i) >= 0) out(rpo(i)) = rpo(idom(i)); i += 1 }
-    out
+    while (i < n) { byVertex(rpo(i)) = rpo(idom(i)); i += 1 }
+    (rpo, byVertex)
   }
 
   /** Depth of each vertex in the dominator tree (fermor `dominator-depth`). */
   def dominatorDepth(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val idom = idomLocal(entry, collectReachable(entry, edges))
-    // memoized depths via an ITERATIVE chain walk: recursion here would blow
-    // the JVM stack on a deep linear CFG (10⁵-block chain) before the memo
-    // could help
-    val memo = scala.collection.mutable.HashMap[Long, Int](entry -> 0)
-    def depth(v0: Long): Int = memo.getOrElse(v0, {
-      val chain = scala.collection.mutable.ArrayBuffer[Long]()
-      var v = v0
-      while (!memo.contains(v)) { chain += v; v = idom(v) }
-      var d = memo(v)
-      var j = chain.length - 1
-      while (j >= 0) { d += 1; memo(chain(j)) = d; j -= 1 }
-      memo(v0)
-    })
-    val arr = idom.keysIterator.map(v => (v, depth(v))).toArray
+    val g = flowGraph(entry, edges)
+    val (rpo, idom) = idomLocal(g, entry)
+    // in reverse postorder a vertex's idom comes first: one pass, no chain
+    // walk (recursion would blow the JVM stack on a deep linear CFG)
+    val depth = new Array[Int](g.n)
+    rpo.drop(1).foreach(v => depth(v) = depth(idom(v)) + 1)
+    val arr = rpo.map(v => (g.ids(v), depth(v)))
     spark.sparkContext // parallel row encode — see immediateDominators
       .parallelize(arr.toIndexedSeq, math.min(32, 1 + arr.length / 65536))
       .toDF("id", "depth")
@@ -2456,25 +2337,9 @@ object Algos {
     * family: (preorder, postorder) vertex sequences from `entry`, successors
     * id-sorted so every walk order is deterministic. */
   private def dfsOrders(entry: Long, edges: DataFrame): (Array[Long], Array[Long]) = {
-    val es = collectReachable(entry, edges)
-    val succ = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.sorted }
-    val pre = scala.collection.mutable.ArrayBuffer[Long]()
-    val post = scala.collection.mutable.ArrayBuffer[Long]()
-    val seen = scala.collection.mutable.HashSet[Long]()
-    val stack = scala.collection.mutable.Stack[(Long, Iterator[Long])]()
-    seen += entry; pre += entry
-    stack.push((entry, succ.getOrElse(entry, Array.empty[Long]).iterator))
-    while (stack.nonEmpty) {
-      val (u, it) = stack.top
-      if (it.hasNext) {
-        val v = it.next()
-        if (!seen(v)) {
-          seen += v; pre += v
-          stack.push((v, succ.getOrElse(v, Array.empty[Long]).iterator))
-        }
-      } else { stack.pop(); post += u }
-    }
-    (pre.toArray, post.toArray)
+    val g = flowGraph(entry, edges)
+    val (pre, post) = g.dfs(g.index(entry))
+    (pre.map(g.ids), post.map(g.ids))
   }
 
   private def foldWalk[S](order: Array[Long], state: S, f: (S, Long) => S,
@@ -2518,36 +2383,33 @@ object Algos {
   def loopForest(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = collectReachable(entry, edges)
-    val idom = idomLocal(entry, es)
-    def dominates(h: Long, v0: Long): Boolean = {
+    val g = flowGraph(entry, edges)
+    val root = g.index(entry)
+    val idom = idomLocal(g, entry)._2
+    def dominates(h: Int, v0: Int): Boolean = {
       var v = v0
-      while (v != h && v != entry) v = idom(v)
+      while (v != h && v != root) v = idom(v)
       v == h
     }
-    val preds = es.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).distinct }
-    val backEdges = es.filter { case (u, h) => dominates(h, u) }
     // natural loop of back edge u->h: h plus all vertices reaching u without
     // passing through h
-    val loops = scala.collection.mutable.HashMap[Long, Set[Long]]().withDefaultValue(Set.empty)
-    backEdges.foreach { case (u, h) =>
-      val members = scala.collection.mutable.HashSet(h, u)
-      val work = scala.collection.mutable.Stack[Long]()
-      if (u != h) work.push(u)
-      while (work.nonEmpty) {
-        val v = work.pop()
-        preds.getOrElse(v, Array.empty[Long]).foreach { p =>
-          if (!members(p)) { members += p; work.push(p) }
-        }
+    val loops = scala.collection.mutable.HashMap[Int, Set[Int]]().withDefaultValue(Set.empty)
+    (0 until g.n).foreach(u => g.out.foreach(u) { h =>
+      if (dominates(h, u)) {
+        val members = scala.collection.mutable.HashSet(h, u)
+        val work = scala.collection.mutable.Stack[Int]()
+        if (u != h) work.push(u)
+        while (work.nonEmpty)
+          g.in.foreach(work.pop()) { p => if (!members(p)) { members += p; work.push(p) } }
+        loops(h) = loops(h) ++ members
       }
-      loops(h) = loops(h) ++ members
-    }
+    })
     val headers = loops.keySet
-    def depth(h: Long): Int =
+    def depth(h: Int): Int =
       headers.count(h2 => h2 != h && loops(h2).contains(h))
     loops.toSeq.flatMap { case (h, ms) =>
       val d = depth(h)
-      ms.toSeq.map(m => (m, h, d))
+      ms.toSeq.map(m => (g.ids(m), g.ids(h), d))
     }.toDF("id", "header", "header_depth")
   }
 
@@ -2676,23 +2538,20 @@ object Algos {
     val srcCol = col(sources.columns.head)
     val notConverged =
       s"taggedBfs: frontier still non-empty after maxIter=$maxIter rounds — raise maxIter"
-    // probe + collect fused into one action per frame (collectAtMost); the
-    // source guard now counts DISTINCT non-null sources — the quantity the
+    // the source guard counts DISTINCT non-null sources — the quantity the
     // replay's work actually scales with (the raw row count only bounded it
     // from above), and both regimes stay bit-identical either way
-    val esOpt = collectPairsAtMost(
-      eRaw.select(col("src").cast("long"), col("dst").cast("long")), localMaxEdges)
-    val srcsOpt = if (esOpt.isEmpty) None
-      else collectLongsAtMost(
-        sources.where(srcCol.isNotNull).select(srcCol.cast("long")).distinct(), 512L)
-    if (esOpt.isDefined && srcsOpt.isDefined) {
-      val adj = localAdj(esOpt.get.iterator)
-      val out = srcsOpt.get.flatMap { s =>
-        val (dist, converged) = localBfs(adj, Seq(s), maxIter)
-        if (!converged) throw new IllegalStateException(notConverged)
-        dist.iterator.map { case (v, d) => (s, v, d.toLong) }
-      }
-      return spark.createDataset(out.toSeq).toDF("s", "v", "d")
+    LocalGraph.collect(eRaw.select(col("src").cast("long"), col("dst").cast("long")),
+        localMaxEdges,
+        sources.where(srcCol.isNotNull).select(srcCol.cast("long")).distinct() -> 512L) match {
+      case Some((g, Seq(srcs))) =>
+        val out = srcs.flatMap { s =>
+          val (order, dist, converged) = g.bfs(Seq(g.index(s)), maxIter)
+          if (!converged) throw new IllegalStateException(notConverged)
+          order.map(v => (s, g.ids(v), dist(v).toLong))
+        }
+        return spark.createDataset(out.toSeq).toDF("s", "v", "d")
+      case _ => ()
     }
     val e = eRaw.localCheckpoint(eager = false)
     val (levels, converged) = bfsLevels(
@@ -2714,46 +2573,58 @@ object Algos {
   def intervals(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = collectReachable(entry, edges)
-    val succ = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.sorted }
-    val preds = es.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).distinct }
-    val assigned = scala.collection.mutable.HashMap[Long, Long]()
-    val headers = scala.collection.mutable.SortedSet[Long](entry)
-    val doneHeaders = scala.collection.mutable.HashSet[Long]()
+    // dense indices are in id order, so the sorted worklists keep theirs
+    val g = flowGraph(entry, edges)
+    val assigned = Array.fill(g.n)(-1)
+    val headers = scala.collection.mutable.SortedSet[Int](g.index(entry))
+    val doneHeaders = new Array[Boolean](g.n)
+    def succs(vs: Iterable[Int]) =
+      vs.toSeq.flatMap(v => (g.out.off(v) until g.out.off(v + 1)).map(g.out.adj))
     while (headers.nonEmpty) {
-      val h = headers.head; headers.remove(h); doneHeaders += h
-      if (!assigned.contains(h)) {
-        val interval = scala.collection.mutable.SortedSet[Long](h)
+      val h = headers.head; headers.remove(h); doneHeaders(h) = true
+      if (assigned(h) < 0) {
+        val interval = scala.collection.mutable.SortedSet[Int](h)
         assigned(h) = h
         var grew = true
         while (grew) {
           grew = false
-          val candidates = interval.toSeq
-            .flatMap(v => succ.getOrElse(v, Array.empty[Long]))
-            .distinct.sorted
-            .filterNot(assigned.contains)
-          candidates.foreach { v =>
-            if (preds.getOrElse(v, Array.empty[Long]).forall(interval.contains)) {
+          succs(interval).distinct.sorted.filter(assigned(_) < 0).foreach { v =>
+            if (g.in.forall(v)(interval.contains)) {
               interval += v; assigned(v) = h; grew = true
             }
           }
         }
         // unabsorbed successors of the interval become new headers
-        interval.toSeq.flatMap(v => succ.getOrElse(v, Array.empty[Long]))
-          .filterNot(assigned.contains)
-          .foreach(v => if (!doneHeaders(v)) headers += v)
+        succs(interval).filter(v => assigned(v) < 0 && !doneHeaders(v)).foreach(headers += _)
       }
     }
-    assigned.toSeq.toDF("id", "interval_header")
+    g.ids.indices.filter(assigned(_) >= 0).map(v => (g.ids(v), g.ids(assigned(v))))
+      .toDF("id", "interval_header")
   }
 
   /** Vertices lying on some path from `from` to `to` (fermor algo.clj
     * `non-loop-vertices-between`): forward-reachable(from) ∩
-    * backward-reachable(to) — two [[bfsDistances]] passes, each a driver
-    * walk below its edge guard and distributed BFS rounds above it. */
+    * backward-reachable(to). Below [[bfsDistances]]' edge guard one edge
+    * collect feeds both walks, forward on `out` and backward on `in`, on
+    * the driver; above it, two passes of [[bfsDistances]]' distributed
+    * rounds. */
   def verticesBetween(edges: DataFrame, from: DataFrame, to: DataFrame,
       fwdMaxIter: Int = 1000, bwdMaxIter: Int = 1000)(
       implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    def seed(df: DataFrame) = df.select(col(df.columns.head).as("id"))
+    // bfsDistances' gate and guard
+    val localMaxEdges = 50000L
+    if (longCols(edges, "src", "dst") && longCols(seed(from), "id") && longCols(seed(to), "id"))
+      LocalGraph.collect(edges.select("src", "dst"), localMaxEdges,
+          seed(from).where(col("id").isNotNull) -> localMaxEdges,
+          seed(to).where(col("id").isNotNull) -> localMaxEdges) match {
+        case Some((g, Seq(f, t))) =>
+          val fwd = g.bfs(f.map(g.index), fwdMaxIter)._2
+          val bwd = g.bfs(t.map(g.index), bwdMaxIter, g.in)._2
+          return g.ids.indices.filter(v => fwd(v) >= 0 && bwd(v) >= 0).map(g.ids).toDF("id")
+        case _ => ()
+      }
     // the two BFS passes are independent job sequences; run on two threads
     // their jobs interleave, so wall time is ~max of the passes
     // (q_between at local[4]: 1.16-1.32 s, against 1.57-1.97 s one after
@@ -2767,11 +2638,13 @@ object Algos {
     val sc = spark.sparkContext
     val group = Seq("spark.jobGroup.id", "spark.job.description",
       "spark.job.interruptOnCancel", "spark.job.tags").map(k => k -> sc.getLocalProperty(k))
-    def inGroup(body: => DataFrame) =
-      Future { group.foreach { case (k, v) => sc.setLocalProperty(k, v) }; body }
+    def rounds(from: String, to: String, sources: DataFrame, maxIter: Int) = Future {
+      group.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      bfsRounds(edges.select(col(from).as("__from"), col(to).as("__to"))
+        .localCheckpoint(eager = false), seed(sources), maxIter)
+    }
     val Seq(fwd, bwd) = Await.result(Future.sequence(Seq(
-      inGroup(bfsDistances(edges, from, maxIter = fwdMaxIter)),
-      inGroup(bfsDistances(edges, to, reverse = true, maxIter = bwdMaxIter)))), Duration.Inf)
+      rounds("src", "dst", from, fwdMaxIter), rounds("dst", "src", to, bwdMaxIter))), Duration.Inf)
     fwd.select("id").join(bwd.select("id"), "id")
   }
 
@@ -2789,18 +2662,18 @@ object Algos {
   def articulationPoints(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    biconnectivity(edges, localMaxEdges)(articulationLocal).toDF("id")
+    biconnectivity(edges, localMaxEdges)(_.lowLink.articulation).toDF("id")
   }
 
   /** The guard shared by [[articulationPoints]], [[biconnectedComponents]]
     * and [[bridges]]: one action collects the (src, dst) pairs, int ids
-    * upcast to long, and runs `f` over their adjacency on the driver when
+    * upcast to long, and runs `f` over their [[LocalGraph]] on the driver when
     * they number at most `localMaxEdges` (a null endpoint fails loudly).
     * Past it, `f` runs per connected component inside the executors, as
     * [[articulationPoints]] describes: one Pregel CC run + one keyed
     * shuffle, per-task memory bounded by the largest component. */
   private def biconnectivity[T: org.apache.spark.sql.Encoder](edges: DataFrame,
-      localMaxEdges: Long)(f: Map[Long, Array[Long]] => Seq[T]): org.apache.spark.sql.Dataset[T] = {
+      localMaxEdges: Long)(f: LocalGraph => Seq[T]): org.apache.spark.sql.Dataset[T] = {
     implicit val spark: SparkSession = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -2808,7 +2681,7 @@ object Algos {
       case Some(rows) =>
         if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
           throw new IllegalArgumentException("biconnectivity input has a null src or dst")
-        spark.createDataset(f(buildAdj(rows.map(r => (r.getLong(0), r.getLong(1))))))
+        spark.createDataset(f(LocalGraph(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))))
       case None =>
         val ec = e.localCheckpoint(eager = false)
         val vs = ec.select(col("src").as("id")).unionAll(ec.select(col("dst").as("id")))
@@ -2817,7 +2690,7 @@ object Algos {
           .select(col("component"), col("src"), col("dst"))
           .as[(Long, Long, Long)]
           .groupByKey(_._1)
-          .flatMapGroups((_, it) => f(buildAdj(it.map(t => (t._2, t._3)).toArray)).iterator)
+          .flatMapGroups((_, it) => f(LocalGraph(it.map(t => (t._2, t._3)))).iterator)
     }
   }
 
@@ -2835,69 +2708,6 @@ object Algos {
     if (s.length >= 20) s else "0" * (20 - s.length) + s
   }
 
-  /** Int-indexed symmetrized deduped adjacency from RAW directed pairs,
-    * built in one driver pass — the guarded local replays collect the
-    * pre-distinct pair stream precisely so the distributed
-    * symmetrize+distinct SHUFFLE (and its checkpoint materialization)
-    * never runs; the dedup that shuffle performed happens here, per
-    * adjacency list. Int indices keep the round loops on primitive
-    * arrays instead of Long-keyed hash lookups. */
-  private def indexedAdj(arr: Array[(Long, Long)]): (Array[Long], Array[Array[Int]]) = {
-    val idx = scala.collection.mutable.HashMap[Long, Int]()
-    val ids = scala.collection.mutable.ArrayBuffer[Long]()
-    def ix(v: Long): Int =
-      idx.getOrElseUpdate(v, { ids += v; ids.length - 1 })
-    val nbr = scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]()
-    def grow(i: Int): Unit =
-      while (nbr.length <= i) nbr += new scala.collection.mutable.ArrayBuffer[Int]
-    arr.foreach { case (s, d) =>
-      val a = ix(s); val b = ix(d)
-      grow(math.max(a, b)); nbr(a) += b; nbr(b) += a
-    }
-    (ids.toArray, nbr.iterator.map(_.distinct.toArray).toArray)
-  }
-
-  /** Undirected adjacency (dedup + symmetrize) from an edge list. */
-  private def buildAdj(es: Array[(Long, Long)]): Map[Long, Array[Long]] =
-    (es ++ es.map(_.swap)).distinct
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
-
-  private def articulationLocal(adj: Map[Long, Array[Long]]): Seq[Long] = {
-    val disc = scala.collection.mutable.HashMap[Long, Int]()
-    val low = scala.collection.mutable.HashMap[Long, Int]()
-    val arts = scala.collection.mutable.HashSet[Long]()
-    var timer = 0
-    adj.keys.foreach { root =>
-      if (!disc.contains(root)) {
-        // iterative DFS: stack of (vertex, parent, child-iterator)
-        var rootChildren = 0
-        val stack = scala.collection.mutable.Stack[(Long, Long, Iterator[Long])]()
-        disc(root) = timer; low(root) = timer; timer += 1
-        stack.push((root, -1L, adj(root).iterator))
-        while (stack.nonEmpty) {
-          val (u, parent, it) = stack.top
-          if (it.hasNext) {
-            val v = it.next()
-            if (!disc.contains(v)) {
-              if (u == root) rootChildren += 1
-              disc(v) = timer; low(v) = timer; timer += 1
-              stack.push((v, u, adj(v).iterator))
-            } else if (v != parent) low(u) = math.min(low(u), disc(v))
-          } else {
-            stack.pop()
-            if (stack.nonEmpty) {
-              val (p, _, _) = stack.top
-              low(p) = math.min(low(p), low(u))
-              if (p != root && low(u) >= disc(p)) arts += p
-            }
-          }
-        }
-        if (rootChildren >= 2) arts += root
-      }
-    }
-    arts.toSeq.sorted
-  }
-
   /** Biconnected components (fermor algo.clj `biconnected-components`):
     * edge-partition into maximal 2-connected subgraphs via Tarjan's edge
     * stack. Returns (src, dst, component) with component = min edge-endpoint
@@ -2906,7 +2716,7 @@ object Algos {
   def biconnectedComponents(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    biconnectivity(edges, localMaxEdges)(bccLocal).toDF("src", "dst", "component")
+    biconnectivity(edges, localMaxEdges)(_.lowLink.components).toDF("src", "dst", "component")
   }
 
   /** Bridges (cut edges): tree edges with low(child) > disc(parent) —
@@ -2920,90 +2730,7 @@ object Algos {
   def bridges(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    biconnectivity(edges, localMaxEdges)(bridgesLocal).toDF("lo", "hi")
-  }
-
-  private def bridgesLocal(adj: Map[Long, Array[Long]]): Seq[(Long, Long)] = {
-    val disc = scala.collection.mutable.HashMap[Long, Int]()
-    val low = scala.collection.mutable.HashMap[Long, Int]()
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    var timer = 0
-    adj.keys.foreach { root =>
-      if (!disc.contains(root)) {
-        val stack = scala.collection.mutable.Stack[(Long, Long, Iterator[Long])]()
-        disc(root) = timer; low(root) = timer; timer += 1
-        stack.push((root, -1L, adj(root).iterator))
-        while (stack.nonEmpty) {
-          val (u, parent, it) = stack.top
-          if (it.hasNext) {
-            val v = it.next()
-            if (!disc.contains(v)) {
-              disc(v) = timer; low(v) = timer; timer += 1
-              stack.push((v, u, adj(v).iterator))
-            } else if (v != parent) low(u) = math.min(low(u), disc(v))
-          } else {
-            stack.pop()
-            if (stack.nonEmpty) {
-              val (p, _, _) = stack.top
-              low(p) = math.min(low(p), low(u))
-              if (low(u) > disc(p)) out += ((math.min(p, u), math.max(p, u)))
-            }
-          }
-        }
-      }
-    }
-    out.toSeq
-  }
-
-  private def bccLocal(adj: Map[Long, Array[Long]]): Seq[(Long, Long, Long)] = {
-    val disc = scala.collection.mutable.HashMap[Long, Int]()
-    val low = scala.collection.mutable.HashMap[Long, Int]()
-    val estack = scala.collection.mutable.Stack[(Long, Long)]()
-    val comps = scala.collection.mutable.ArrayBuffer[Seq[(Long, Long)]]()
-    adj.keys.foreach { root =>
-      if (!disc.contains(root)) {
-        var timer0 = disc.size
-        val stack = scala.collection.mutable.Stack[(Long, Long, Iterator[Long])]()
-        disc(root) = timer0; low(root) = timer0
-        stack.push((root, -1L, adj(root).iterator))
-        while (stack.nonEmpty) {
-          val (u, parent, it) = stack.top
-          if (it.hasNext) {
-            val v = it.next()
-            if (!disc.contains(v)) {
-              estack.push((u, v))
-              val t = disc.size
-              disc(v) = t; low(v) = t
-              stack.push((v, u, adj(v).iterator))
-            } else if (v != parent && disc(v) < disc(u)) {
-              estack.push((u, v))
-              low(u) = math.min(low(u), disc(v))
-            }
-          } else {
-            stack.pop()
-            if (stack.nonEmpty) {
-              val (p, _, _) = stack.top
-              low(p) = math.min(low(p), low(u))
-              if (low(u) >= disc(p)) {
-                // pop the component rooted at edge (p, u)
-                val comp = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-                var done = false
-                while (!done && estack.nonEmpty) {
-                  val e = estack.pop()
-                  comp += e
-                  if (e == ((p, u))) done = true
-                }
-                if (comp.nonEmpty) comps += comp.toSeq
-              }
-            }
-          }
-        }
-      }
-    }
-    comps.toSeq.flatMap { comp =>
-      val label = comp.iterator.flatMap(e => Iterator(e._1, e._2)).min
-      comp.map { case (s, d) => (s, d, label) }
-    }
+    biconnectivity(edges, localMaxEdges)(_.lowLink.bridges).toDF("lo", "hi")
   }
 
   /** Dominance frontiers (fermor `dominance-frontiers`), from idom by the
@@ -3011,21 +2738,19 @@ object Algos {
   def dominanceFrontiers(entry: Long, edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = collectReachable(entry, edges)
-    val idomMap = idomLocal(entry, es)
-    val preds = es.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).distinct }
-    val df = scala.collection.mutable.HashMap[Long, Set[Long]]().withDefaultValue(Set.empty)
-    idomMap.keys.foreach { b =>
-      val ps = preds.getOrElse(b, Array.empty[Long])
-      if (ps.length >= 2) ps.foreach { p =>
+    val g = flowGraph(entry, edges)
+    val (rpo, idom) = idomLocal(g, entry)
+    val df = scala.collection.mutable.HashSet[(Long, Long)]()
+    rpo.foreach { b =>
+      if (g.in.degree(b) >= 2) g.in.foreach(b) { p =>
         var runner = p
-        while (runner != idomMap(b)) {
-          df(runner) = df(runner) + b
-          runner = idomMap(runner)
+        while (runner != idom(b)) {
+          df += ((g.ids(runner), g.ids(b)))
+          runner = idom(runner)
         }
       }
     }
-    df.toSeq.flatMap { case (v, fs) => fs.map(f => (v, f)) }.toDF("id", "frontier")
+    df.toSeq.toDF("id", "frontier")
   }
 
   /** Harmonic centrality (the closeness-family variant that stays defined on
@@ -3071,8 +2796,7 @@ object Algos {
     // guarded LOCAL replay of the identical hash-priority rounds —
     // bit-identical to the distributed loop (parity-spec'd), replacing
     // per-round scheduling latency below the guard; raw-pair guard skips
-    // the distinct shuffle (dedup happens driver-side instead); probe and
-    // collect are ONE action (collectPairsAtMost).
+    // the distinct shuffle (the dedup happens in `sym`).
     //
     // Priorities stay PACKED LONGS, never strings: the priority string
     // hex(md5) ++ pad20(lo) ++ pad20(hi) orders exactly like the tuple
@@ -3084,10 +2808,11 @@ object Algos {
     // holds every cached table (full-GC churn). Negative ids — where the
     // pad20 form orders non-numerically — fall back to the distributed
     // loop, which defines the semantics.
-    val pool0 = collectPairsAtMost(canon0, localMaxEdges)
-      .filter(_.forall { case (l, h) => l >= 0L && h >= 0L })
-    if (pool0.isDefined) {
-      var pool = pool0.get.distinct
+    val local = LocalGraph.collect(canon0, localMaxEdges).filter(g => g.n == 0 || g.ids(0) >= 0L)
+    if (local.isDefined) {
+      val g = local.get
+      var pool = (0 until g.n).flatMap(u => (g.sym.off(u) until g.sym.off(u + 1))
+        .map(g.sym.adj).filter(_ > u).map(v => (g.ids(u), g.ids(v)))).toArray
       val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
       var r = 0
       while (pool.nonEmpty) {
@@ -3202,64 +2927,50 @@ object Algos {
     // (a shallow wide DAG can imply far more pairs than it has edges), so
     // the replay also bails back to the distributed loop — resuming from
     // the same cached edge frame — if implied pairs outgrow 16× the guard.
-    val pairsOpt =
-      if (integralCols(edges, "src", "dst"))
-        // probe + collect fused into one action (collectAtMost); no
-        // null-endpoint branch needed, unlike the CC/relax replays: this
-        // operator's prep filter (src =!= dst, null-safe SQL inequality)
-        // already drops null-endpoint rows on BOTH regimes
-        collectPairsAtMost(e, localMaxEdges)
+    // no null-endpoint branch needed, unlike the CC/relax replays: this
+    // operator's prep filter (src =!= dst, null-safe SQL inequality)
+    // already drops null-endpoint rows on BOTH regimes
+    val local = if (integralCols(edges, "src", "dst")) LocalGraph.collect(e, localMaxEdges)
       else None
-    val localResult: Option[DataFrame] =
-      if (pairsOpt.isDefined) {
-        val pairs = pairsOpt.get
-        locally {
-          val adj = scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-          pairs.foreach { case (s0, d0) =>
-            adj.getOrElseUpdate(s0, new scala.collection.mutable.ArrayBuffer[Long]) += d0
-          }
-          val implied = scala.collection.mutable.HashMap[Long, scala.collection.mutable.HashSet[Long]]()
-          def impliedHas(s0: Long, v0: Long) = implied.get(s0).exists(_.contains(v0))
-          var nImplied = 0L
-          // saturate: a force-local caller passes localMaxEdges = MaxValue
-          // and 16 * MaxValue would wrap
-          // negative, silently bailing every call to the distributed path
-          val pairCap =
-            if (localMaxEdges > Long.MaxValue / 16) Long.MaxValue
-            else 16L * math.max(localMaxEdges, 1L)
-          var frontier: Array[(Long, Long)] = pairs
-          var d = 1
-          var drained = false
-          var bail = false
-          while (!drained && !bail) {
-            val nextSet = scala.collection.mutable.LinkedHashSet[(Long, Long)]()
-            frontier.foreach { case (s0, v0) =>
-              adj.get(v0).foreach(_.foreach { w =>
-                if (!impliedHas(s0, w)) nextSet += ((s0, w))
-              })
-            }
-            d += 1
-            if (nextSet.isEmpty) drained = true
-            else {
-              if (d > maxDepth)
-                throw new IllegalStateException(
-                  s"transitiveReduction: paths deeper than maxDepth=$maxDepth — not a bounded DAG?")
-              if (nextSet.exists { case (s0, v0) => s0 == v0 })
-                throw new IllegalStateException(
-                  "transitiveReduction: input contains a cycle — defined on DAGs only")
-              nextSet.foreach { case (s0, v0) =>
-                implied.getOrElseUpdate(s0, new scala.collection.mutable.HashSet[Long]) += v0
-              }
-              nImplied += nextSet.size
-              if (nImplied > pairCap) bail = true
-              else frontier = nextSet.toArray
-            }
-          }
-          if (bail) None
-          else Some(pairs.filterNot { case (s0, v0) => impliedHas(s0, v0) }
-            .toSeq.toDF("src", "dst"))
+    val localResult: Option[DataFrame] = local.flatMap { g =>
+      // a pair (s, v) of dense indices as one long
+      def key(s0: Int, v0: Int): Long = (s0.toLong << 32) | v0
+      val edgeKeys = (0 until g.n).flatMap(u => (g.out.off(u) until g.out.off(u + 1))
+        .map(k => key(u, g.out.adj(k)))).toArray
+      val implied = scala.collection.mutable.HashSet[Long]()
+      // saturate: a force-local caller passes localMaxEdges = MaxValue
+      // and 16 * MaxValue would wrap
+      // negative, silently bailing every call to the distributed path
+      val pairCap =
+        if (localMaxEdges > Long.MaxValue / 16) Long.MaxValue
+        else 16L * math.max(localMaxEdges, 1L)
+      var frontier = edgeKeys
+      var d = 1
+      var drained = false
+      var bail = false
+      while (!drained && !bail) {
+        val nextSet = scala.collection.mutable.LinkedHashSet[Long]()
+        frontier.foreach { p =>
+          val s0 = (p >>> 32).toInt
+          g.out.foreach(p.toInt) { w => if (!implied(key(s0, w))) nextSet += key(s0, w) }
         }
-      } else None
+        d += 1
+        if (nextSet.isEmpty) drained = true
+        else {
+          if (d > maxDepth)
+            throw new IllegalStateException(
+              s"transitiveReduction: paths deeper than maxDepth=$maxDepth — not a bounded DAG?")
+          if (nextSet.exists(p => (p >>> 32).toInt == p.toInt))
+            throw new IllegalStateException(
+              "transitiveReduction: input contains a cycle — defined on DAGs only")
+          implied ++= nextSet
+          if (implied.size > pairCap) bail = true
+          else frontier = nextSet.toArray
+        }
+      }
+      Option.when(!bail)(edgeKeys.filterNot(implied)
+        .map(p => (g.ids((p >>> 32).toInt), g.ids(p.toInt))).toSeq.toDF("src", "dst"))
+    }
     localResult match {
       case Some(r) => return r
       case None    => () // distributed loop below, reading the same cached e

@@ -122,8 +122,11 @@ object Scale {
     * plain parallel collect on a warm 16 k-row frame). One wave of
     * `defaultParallelism` partitions keeps the early-stop property on
     * genuinely large inputs (a cluster frame with 10⁴ partitions still
-    * stops after core-count partitions if the limit is already exceeded)
-    * while making the common bench-scale case one parallel job. The
+    * stops after core-count partitions if the limit is already exceeded).
+    * A frame of at most `defaultParallelism` partitions takes one parallel
+    * job; one with more that stays under the limit reads every partition,
+    * one wave (job) after another — a 10-partition frame at 4 cores takes
+    * 3 jobs of 4 + 3 + 3 tasks. The
     * set/restore is synchronized on the owning session so two concurrent
     * guard probes cannot interleave their save/restore and leave the conf
     * permanently set (or apply the widened wave to an unrelated concurrent

@@ -420,6 +420,10 @@ class AlgosSpec extends AnyFunSuite {
     val d = Algos.weightedShortestPath(es, Seq(1L).toDF("id"), col("w"))
       .as[(Long, Long)].collect().toMap
     assert(d === Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 4L))
+    // the same graph with int-typed negative ids: the driver replay reads them as longs
+    val neg = Seq((-1, -2, 10L), (-1, -3, 1L), (-3, -2, 2L), (-2, -4, 1L)).toDF("src", "dst", "w")
+    assert(Algos.weightedShortestPath(neg, Seq(-1).toDF("id"), col("w"))
+      .as[(Long, Long)].collect().toMap === Map(-1L -> 0L, -2L -> 3L, -3L -> 1L, -4L -> 4L))
   }
 
   test("weightedShortestPath reverse follows dst→src with edge costs") {
@@ -649,6 +653,9 @@ class AlgosSpec extends AnyFunSuite {
     assert(bccDriver === Set((1L, 2L, 1L), (2L, 3L, 2L),
       (10L, 11L, 10L), (11L, 12L, 10L), (10L, 12L, 10L)))
     assert(bccDist === bccDriver)
+    val bridgesDriver = Algos.bridges(es).as[(Long, Long)].collect().toSet
+    assert(bridgesDriver === Set((1L, 2L), (2L, 3L)))
+    assert(Algos.bridges(es, localMaxEdges = 0L).as[(Long, Long)].collect().toSet === bridgesDriver)
   }
 
   test("brandesBetweenness: star, path, and split-sigma diamond closed forms") {
