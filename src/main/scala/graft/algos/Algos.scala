@@ -815,15 +815,16 @@ object Algos {
     val sym = raw.unionAll(raw.select(col("dst").as("src"), col("src").as("dst")))
       .dropDuplicates("src", "dst")
       .localCheckpoint(false)
-    val deg = sym.groupBy(col("src").as("k")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(false) // two consumers: the moment agg and the S-join
+    // two consumers: the moment agg and the S-join
+    val (deg, degRows, _) =
+      Scale.checkpointed(sym.groupBy(col("src").as("k")).agg(count(lit(1)).as("d")))
     // the checkpoint blanks deg's stats, so the S-join below planned as a
     // SortMergeJoin that exchanged the |E| sym list twice. deg is one row
-    // per VERTEX — usually broadcastable — so take the measured-guard
-    // broadcast (≤2M rows ≈ 32 MB built) and keep the stats-blind SMJ only
-    // for degree tables past the guard (removed 2 of the 3 |E| Exchanges;
+    // per VERTEX — usually broadcastable — so it broadcasts within the
+    // Scale.guarded budget and the stats-blind SMJ stays only for degree
+    // tables past it (removed 2 of the 3 |E| Exchanges;
     // plans/r10/q_assortativity_*.txt)
-    val degJ = if (Scale.fitsBroadcast(deg, 2000000L)) broadcast(deg) else deg
+    val degJ = Scale.guarded(deg, degRows)
     val dec = "decimal(38,0)"
     def d(c: Column): Column = c.cast(dec)
     val zero = lit(0).cast(dec)

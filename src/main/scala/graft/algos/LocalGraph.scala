@@ -1,8 +1,8 @@
 package graft.algos
 
+import org.apache.spark.{FutureAction, SparkException}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import graft.plans.Scale
 import scala.collection.mutable.ArrayBuilder
 
 /** The driver graph of the guarded local replays in [[Algos]]: an immutable
@@ -243,32 +243,43 @@ private[graft] object LocalGraph {
     new Csr(off, perm.map(to), if (w == null) null else perm.map(w))
   }
 
-  /** One limited collect for the local replays: runs the LIMITED plan once
-    * (first wave widened by [[Scale.oneWaveLimit]]) and returns the rows
-    * iff the frame holds at most n of them — a guard's cost stays capped at
-    * its threshold instead of a full count of an arbitrarily large input
-    * (the replays sit in front of billion-edge distributed paths). A
-    * separate probe + collect paid two sequential driver actions over the
-    * same frame; measured 0.2-0.4 s of pure probe latency per qualifying
-    * query at sf0.1. Above the guard the wasted transfer is bounded by the
-    * guard constant itself (n+1 rows). One action is one Spark job per
-    * incremental-limit wave: a single job while the frame has at most
-    * `defaultParallelism` partitions, more when a frame that fits has more
-    * (every partition must be read; a 10-partition frame at 4 cores takes
-    * 3 waves of 4 + 3 + 3 tasks).
+  /** The rows of `df` iff it holds at most `n` of them, in ONE Spark job
+    * over every partition, with no conf change: a task that alone holds
+    * more than `n` rows ships none, and the driver cancels the job once the
+    * shipped rows pass `n`. A guard's cost stays capped at its threshold
+    * instead of a full count of an arbitrarily large input (the replays sit
+    * in front of billion-edge distributed paths). A failing query throws;
+    * only a counted overflow gives None.
     *
     * INTERNAL rows, not external ones: Dataset.collect() wraps every row
     * in a boxed GenericRow (~100 B and 5 objects per row — ~200 MB of
     * simultaneously-live garbage at the 2 M guard), which a fresh JVM
     * absorbs but the bench JVM (heap already holding every cached table)
-    * answers with full-GC churn. executeCollect returns the compact
+    * answers with full-GC churn. The tasks ship copies of the compact
     * UnsafeRows as-is; isNullAt/getLong read them directly. */
-  private[algos] def collectAtMost(df: DataFrame, n: Long): Option[Array[InternalRow]] = {
+  private[graft] def collectAtMost(df: DataFrame, n: Long): Option[Array[InternalRow]] = {
     if (n < 0) return None
-    val probe = math.min(n, Int.MaxValue - 1L).toInt + 1
-    val rows = Scale.oneWaveLimit(df)(
-      df.limit(probe).queryExecution.executedPlan.executeCollect())
-    if (rows.length <= n) Some(rows) else None
+    val take = math.min(n, Int.MaxValue - 1L).toInt + 1
+    val rdd = df.queryExecution.toRdd
+    val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+    var total = 0L
+    @volatile var over = false
+    @volatile var job: FutureAction[Unit] = null
+    // results arrive one at a time on the scheduler thread, possibly before
+    // `job` is assigned: hence the second cancel after submitJob
+    job = df.sparkSession.sparkContext.submitJob(rdd, (it: Iterator[InternalRow]) => {
+        val rows = it.take(take).map(_.copy()).toArray
+        if (rows.length > n) null else rows
+      }, parts.indices, (i: Int, rows: Array[InternalRow]) => if (!over) {
+        if (rows == null || { total += rows.length; total > n }) {
+          over = true
+          parts.mapInPlace(_ => null)
+          if (job != null) job.cancel()
+        } else parts(i) = rows
+      }, ())
+    if (over) job.cancel()
+    try job.get() catch { case _: SparkException if over => }
+    if (over) None else Some(parts.flatten)
   }
 
   /** The prelude of every guarded replay: the graph of `pairs`, a frame of

@@ -509,18 +509,18 @@ object Dedup {
     // without the checkpoint Catalyst re-derives the explode + distinct
     // subtree per reference (the r11 q_source_sim plan audit found the
     // Generate + two HashAggregates running THREE times).
-    val sh = docs.select(col(groupCol).as("grp"),
+    val (sh, shRows, _) = graft.plans.Scale.checkpointed(docs.select(col(groupCol).as("grp"),
         explode(graft.functions.NativeOps.wordShingles(col(textCol), k)).as("gram"))
-      .dropDuplicates("grp", "gram")
-      .localCheckpoint(false)
+      .dropDuplicates("grp", "gram"))
     val sizes = sh.groupBy("grp").agg(count(lit(1)).as("n"))
     // the checkpoint blinds stats, so the gram-keyed probe side must be
-    // broadcast EXPLICITLY under a measured guard (the degreeAssortativity
-    // idiom; ~500k gram-string rows ≈ a 32 MB build). Past the guard the
-    // shuffle join stands — group-shingle sets are corpus-sized in general.
+    // broadcast EXPLICITLY: the counted rows, ~32 B each (a group and a
+    // gram string), within the Scale.guarded budget (500k rows). Past it
+    // the shuffle join stands — group-shingle sets are corpus-sized in
+    // general.
     val b = sh.select(col("grp").as("__gb"), col("gram").as("__gramb"))
-    val bSide = if (graft.plans.Scale.fitsBroadcast(sh, 500000L)) broadcast(b) else b
-    sh.join(bSide, col("gram") === col("__gramb") && col("grp") < col("__gb"))
+    sh.join(graft.plans.Scale.guarded(b, shRows, 32L),
+        col("gram") === col("__gramb") && col("grp") < col("__gb"))
       .groupBy(col("grp").as("grp_a"), col("__gb").as("grp_b"))
       .agg(count(lit(1)).as("n_common"))
       .join(broadcast(sizes.select(col("grp").as("grp_a"), col("n").as("__na"))), "grp_a")

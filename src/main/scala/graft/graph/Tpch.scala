@@ -119,6 +119,12 @@ object Tpch {
     * TIMESTAMP_NTZ — cast to the session-UTC timestamp). Dispatch on the
     * observed schema so either generation loads. */
   def events(spark: SparkSession, dir: String): DataFrame = cached(spark, (dir, "__events")) {
+    // a session-wide write, and it stays one: Spark 4.1's ParquetOptions
+    // has no nanos-as-long read option, and ParquetFileFormat reads this
+    // key from the session conf when the scan is planned and run — after
+    // this method has returned its lazy (or cached) frame, so a set/restore
+    // around the read would not cover the scan. Nor can it move into
+    // SparkEntry.localSession: perfbench's Runner builds its own session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {

@@ -340,22 +340,18 @@ final case class Traversal(g: PropertyGraph, df: DataFrame) {
     * and equi-joined back against the edge table — recovers the edge in
     * either traversal direction, stays a hash join (no OR-condition BNL). */
   def pathEdges: DataFrame = {
-    val hops = df.select(explode(zip_with(
+    val (hops, hopRows, _) = graft.plans.Scale.checkpointed(df.select(explode(zip_with(
         slice(col("path"), lit(1), size(col("path")) - 1),
         slice(col("path"), lit(2), size(col("path")) - 1),
         (a, b) => struct(least(a, b).as("lo"), greatest(a, b).as("hi")))).as("h"))
-      .select(col("h.lo"), col("h.hi")).dropDuplicates("lo", "hi")
-      .localCheckpoint(false)
-    // measured-guard broadcast of the deduped hop set (the assortativity
-    // degJ idiom): the semi join's build side is path-bounded, but its
-    // post-agg stats are unknown, so the static plan exchanged AND sorted
-    // the |E| edge side on the computed (least, greatest) keys — and AQE
-    // did not convert it at runtime. Below the guard the hop set
-    // broadcasts and the edge side becomes a pure scan probe; past it
-    // (traversal-sized hop sets) the SMJ stands.
-    val hopsJ =
-      if (graft.plans.Scale.fitsBroadcast(hops, 2000000L)) broadcast(hops) else hops
-    g.edges.join(hopsJ,
+      .select(col("h.lo"), col("h.hi")).dropDuplicates("lo", "hi"))
+    // the semi join's build side is path-bounded, but its post-agg stats
+    // are unknown, so the static plan exchanged AND sorted the |E| edge
+    // side on the computed (least, greatest) keys — and AQE did not
+    // convert it at runtime. The counted hop set broadcasts within the
+    // Scale.guarded budget, so the edge side becomes a pure scan probe;
+    // past it (traversal-sized hop sets) the SMJ stands.
+    g.edges.join(graft.plans.Scale.guarded(hops, hopRows),
       least(col("src"), col("dst")) === col("lo") &&
         greatest(col("src"), col("dst")) === col("hi"), "left_semi")
   }

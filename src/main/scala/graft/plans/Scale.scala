@@ -103,45 +103,6 @@ object Scale {
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
 
-  /** Measured broadcast guard of the broadcast-or-SMJ decisions (the
-    * degreeAssortativity degJ idiom): true iff `df` holds at most `n` rows
-    * — one limited count whose first incremental-limit wave is widened to
-    * the session's core count ([[oneWaveLimit]]). Callers pick `n` so
-    * n·rowWidth stays a sane broadcast build (~32 MB for long pairs at
-    * 2 M). */
-  def fitsBroadcast(df: DataFrame, n: Long): Boolean = {
-    if (n < 0) return false
-    val probe = math.min(n, Int.MaxValue - 1L).toInt + 1
-    oneWaveLimit(df)(df.limit(probe).count() <= n)
-  }
-
-  /** Runs `body` with Spark's incremental-limit first wave widened from 1
-    * partition to the session's core count: a guard probe/collect over a
-    * 32-partition frame otherwise executes as up to 4 SEQUENTIAL jobs
-    * (waves of 1, 4, 16, 32 partitions — measured 0.33 s vs 0.09 s for a
-    * plain parallel collect on a warm 16 k-row frame). One wave of
-    * `defaultParallelism` partitions keeps the early-stop property on
-    * genuinely large inputs (a cluster frame with 10⁴ partitions still
-    * stops after core-count partitions if the limit is already exceeded).
-    * A frame of at most `defaultParallelism` partitions takes one parallel
-    * job; one with more that stays under the limit reads every partition,
-    * one wave (job) after another — a 10-partition frame at 4 cores takes
-    * 3 jobs of 4 + 3 + 3 tasks. The
-    * set/restore is synchronized on the owning session so two concurrent
-    * guard probes cannot interleave their save/restore and leave the conf
-    * permanently set (or apply the widened wave to an unrelated concurrent
-    * limit). The lock is held only for the probe's single bounded action. */
-  private[graft] def oneWaveLimit[A](df: DataFrame)(body: => A): A = {
-    val spark = df.sparkSession
-    spark.synchronized {
-      val conf = spark.conf
-      val key = "spark.sql.limit.initialNumPartitions"
-      val prev = conf.getOption(key)
-      conf.set(key, spark.sparkContext.defaultParallelism.toString)
-      try body finally prev.fold(conf.unset(key))(conf.set(key, _))
-    }
-  }
-
   /** Row guard of every broadcast join whose side is sized at run time (the
     * iterative loops' frontiers, Descend's tails, loader-counted edge
     * slices): a checkpointed frame blinds the planner's stats, so a join

@@ -155,6 +155,14 @@ class AlgosSpec extends AnyFunSuite {
     assert(between === Set(1L, 2L, 3L, 4L)) // 5 is a dead end
   }
 
+  test("verticesBetween: the distributed BFS pair past the 50k-edge guard") {
+    // a 50,001-edge chain 0 -> 1 -> ... -> 50001
+    val es = spark.range(50001L).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val between = Algos.verticesBetween(es, Seq(0L).toDF("id"), Seq(3L).toDF("id"),
+      fwdMaxIter = 3, bwdMaxIter = 3).as[Long].collect().toSet
+    assert(between === Set(0L, 1L, 2L, 3L))
+  }
+
   test("force layout: deterministic, and pulls connected pairs together") {
     // two 3-cliques joined by one bridge edge
     val vs = (1L to 6L).toDF("id")

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algos.LocalGraph
 
@@ -51,5 +56,53 @@ class LocalGraphSpec extends AnyFunSuite {
     assert(LocalGraph.collect(es, 1L).isEmpty) // past the limit
     assert(LocalGraph.collect(Seq((1L, Some(2L)), (2L, None)).toDF("src", "dst"), 10L).isEmpty)
     assert(LocalGraph.collect(es, 10L, Seq(Some(1L), None).toDF("id") -> 10L).isEmpty)
+  }
+
+  /** `body`'s result and the Spark jobs it ran, counted in a job group of
+    * its own; a sentinel job in another group flushes the listener bus,
+    * which delivers events in order. */
+  private def jobs[A](body: => A): (A, Int) = {
+    val sc = TestSpark.spark.sparkContext
+    val started = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case "collect-spec" => started.incrementAndGet()
+          case "collect-spec-sentinel" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("collect-spec", "collect-spec")
+      val a = try body finally sc.clearJobGroup()
+      sc.setJobGroup("collect-spec-sentinel", "collect-spec-sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS))
+      (a, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("collectAtMost: one job over every partition; None only past the limit") {
+    val spark = TestSpark.spark
+    val parts = 4 * spark.sparkContext.defaultParallelism + 1
+    // 10 rows per task, checkpointed as the replays' inputs are: the
+    // planner knows no row count for it
+    val frame = spark.range(0, 10L * parts, 1, parts).toDF().localCheckpoint()
+    def ids(rows: Option[Array[InternalRow]]) = rows.map(_.toSeq.map(_.getLong(0)))
+    assert(jobs(ids(LocalGraph.collectAtMost(frame, 10L * parts))) ===
+      ((Some(0L until 10L * parts), 1)))
+    // over the limit, though no task alone is
+    assert(jobs(LocalGraph.collectAtMost(frame, 10L * parts - 1)) === ((None, 1)))
+    // one task alone over the limit
+    assert(LocalGraph.collectAtMost(spark.range(0, 100, 1, 1).toDF(), 99L).isEmpty)
+    assert(ids(LocalGraph.collectAtMost(spark.range(0, 0, 1, parts).toDF(), 5L)) === Some(Nil))
+    assert(LocalGraph.collectAtMost(frame, -1L).isEmpty)
+    // a failing query is never "past the guard"
+    val failing = frame.select(expr("if(id = 5, raise_error('collect-spec boom'), id)"))
+    val e = intercept[Exception](LocalGraph.collectAtMost(failing, 10L * parts))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("collect-spec boom")))
   }
 }
