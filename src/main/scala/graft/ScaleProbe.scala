@@ -62,6 +62,14 @@ object ScaleProbe {
     def minTime(f: => Long): (Double, Long) = {
       val a = time(f); val b = time(f); (math.min(a._1, b._1), b._2)
     }
+    // a probe wrapped in `distributed` measures the DISTRIBUTED rounds, not
+    // the guarded local replay: every replay guard is 0 while `f` runs
+    val key = graft.algos.LocalGraph.ReplayLimitKey
+    def distributed(f: => Long): Long = {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, 0L)
+      try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
     val probes: Seq[(String, PropertyGraph => Long)] = Seq(
       "two_hop_agg" -> { g =>
@@ -69,17 +77,14 @@ object ScaleProbe {
           .df.groupBy("id").agg(count(lit(1))).count()
       },
       "topo_levels" -> { g =>
-        // localMaxEdges = 0: the probe must measure the DISTRIBUTED rounds,
-        // not the guarded local replay
-        graft.algos.Algos.topoLevels(g.vertices.select("id"), g.edges, maxIter = 4,
-          localMaxEdges = 0L).count()
+        distributed(graft.algos.Algos.topoLevels(g.vertices.select("id"), g.edges,
+          maxIter = 4).count())
       },
       "conn_components" -> { g =>
         implicit val sp: SparkSession = spark
-        graft.algos.Algos.connectedComponents(
+        distributed(graft.algos.Algos.connectedComponents(
           g.kind("customer").select("id").unionAll(g.kind("orders").select("id")),
-          g.edges.where(col("label") === "order_customer"),
-          localMaxEdges = 0L).count()
+          g.edges.where(col("label") === "order_customer")).count())
       },
       "descend_deepest" -> { g =>
         graft.graph.Descend.deepest(g,
@@ -88,9 +93,9 @@ object ScaleProbe {
       },
       "weighted_sp" -> { g =>
         implicit val sp: SparkSession = spark
-        graft.algos.Algos.weightedShortestPath(g.edges,
+        distributed(graft.algos.Algos.weightedShortestPath(g.edges,
           g.kind("customer").select("id").limit(1000),
-          lit(1L), reverse = true, maxIter = 2, localMaxEdges = 0L).count()
+          lit(1L), reverse = true, maxIter = 2).count())
       },
       "cc_alternating" -> { g =>
         // the diameter-independent CC: round count stays O(log² n), so wall
@@ -122,15 +127,15 @@ object ScaleProbe {
           g.edges.where(col("label") === "order_customer").select("src", "dst")).count()
       },
       "layout_dist" -> { g =>
-        // the DISTRIBUTED FA2 path (localMax = 0 pins the guard off — the
-        // driver-array path covers <100k vertices): per-iteration cost is
+        // the DISTRIBUTED FA2 path (the driver-array path covers <100k
+        // vertices): per-iteration cost is
         // the doubled-edge attraction join + the grid-centroid repulsion
         // agg, O(V + E + cells) per round, so 8× facts should hold the
         // data factor; the one subsystem previously unprobed at scale
-        graft.algos.ForceLayout.run(
+        distributed(graft.algos.ForceLayout.run(
           g.kind("orders").select("id").unionAll(g.kind("customer").select("id")),
           g.edges.where(col("label") === "order_customer").select("src", "dst"),
-          iters = 3, localMax = 0L).count()
+          iters = 3).count())
       })
 
     // optional probe-name substring filter (arg 2) — run matching probes
@@ -446,11 +451,10 @@ object ScaleProbe {
     // per-part degrees — and so the peeling cascade depth — stay constant:
     // per-round cost is keyed degree agg + semi-joins on the shrinking edges
     val liPK = replicate(lineitem1, Seq("l_orderkey", "l_partkey"), span).localCheckpoint(true)
+    def partSupplier(li: DataFrame): DataFrame = li.select(
+      Vid.vid("part", col("l_partkey")).as("src"), Vid.vid("supplier", col("l_suppkey")).as("dst"))
     def kcoreOf(li: DataFrame): Long =
-      graft.algos.Algos.kCore(li.select(
-        Vid.vid("part", col("l_partkey")).as("src"),
-        Vid.vid("supplier", col("l_suppkey")).as("dst")), k = 28,
-        localMaxEdges = 0L).count()
+      distributed(graft.algos.Algos.kCore(partSupplier(li), k = 28).count())
     val (kc1, kn1) = minTime(kcoreOf(lineitem1))
     val (kcK, knK) = minTime(kcoreOf(liPK))
     println(f"[scale] kcore              1x: $kc1%6.2f s (n=$kn1%9d)   ${k}x: $kcK%6.2f s (n=$knK%9d)   time-ratio: ${kcK / math.max(kc1, 1e-9)}%5.2f")
@@ -469,11 +473,7 @@ object ScaleProbe {
     // k× larger with constant degrees, so Luby's round count (O(log n)
     // expected) grows only additively while per-round joins track edges
     def misOf(li: DataFrame): Long =
-      // localMaxEdges = 0: the probe must measure the DISTRIBUTED rounds,
-      // not the guarded local replay (same for matching below)
-      graft.algos.Algos.maximalIndependentSet(li.select(
-        Vid.vid("part", col("l_partkey")).as("src"),
-        Vid.vid("supplier", col("l_suppkey")).as("dst")), localMaxEdges = 0L).count()
+      distributed(graft.algos.Algos.maximalIndependentSet(partSupplier(li)).count())
     val (mi1, mn1) = minTime(misOf(lineitem1))
     val (miK, mnK) = minTime(misOf(liPK))
     println(f"[scale] mis                1x: $mi1%6.2f s (n=$mn1%9d)   ${k}x: $miK%6.2f s (n=$mnK%9d)   time-ratio: ${miK / math.max(mi1, 1e-9)}%5.2f")
@@ -482,9 +482,7 @@ object ScaleProbe {
     // constant degrees, hash-priority rounds grow additively while each
     // round's joins track the SHRINKING edge set
     def matchingOf(li: DataFrame): Long =
-      graft.algos.Algos.maximalMatching(li.select(
-        Vid.vid("part", col("l_partkey")).as("src"),
-        Vid.vid("supplier", col("l_suppkey")).as("dst")), localMaxEdges = 0L).count()
+      distributed(graft.algos.Algos.maximalMatching(partSupplier(li)).count())
     val (ma1, man1) = minTime(matchingOf(lineitem1))
     val (maK, manK) = minTime(matchingOf(liPK))
     println(f"[scale] matching           1x: $ma1%6.2f s (n=$man1%9d)   ${k}x: $maK%6.2f s (n=$manK%9d)   time-ratio: ${maK / math.max(ma1, 1e-9)}%5.2f")
@@ -504,11 +502,9 @@ object ScaleProbe {
       val sc = orders.join(c, col("o_custkey") === col("c_custkey"))
         .select(Vid.vid("orders", col("o_orderkey")).as("src"),
           Vid.vid("nation", col("c_nationkey")).as("dst"))
-      // localMaxEdges = 0: the probe must measure the DISTRIBUTED rounds,
-      // not the guarded local replay (its 1x arm fits the default guard)
-      graft.algos.Algos.transitiveReduction(
-        oc.unionAll(cn).unionAll(nr).unionAll(sc), maxDepth = 6,
-        localMaxEdges = 0L).count()
+      // distributed: its 1x arm fits the default guard
+      distributed(graft.algos.Algos.transitiveReduction(
+        oc.unionAll(cn).unionAll(nr).unionAll(sc), maxDepth = 6).count())
     }
     val (tr1, trn1) = minTime(tredOf(orders1))
     val (trK, trnK) = minTime(tredOf(ordersK))

@@ -7,16 +7,17 @@ import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.plans.Scale
 import graft.plans.Scale.{checkpointed, guarded, minOf, sumOf}
-import graft.algos.LocalGraph.collectAtMost
+import graft.algos.LocalGraph.{Guard, collectAtMost, replayLimit}
 import scala.collection.mutable.ArrayBuilder
 
 /** Graph algorithms — the Spark re-expression of fermor graph/algo.clj.
   *
-  * Iterative whole-graph algorithms (CC, SCC, BFS, PageRank, triangles,
-  * label propagation) run on GraphX/Pregel: vertex-parallel, partitioned,
-  * and checkpoint-friendly — the right execution model for 100 TB graphs,
+  * PageRank, triangle counts and the distributed branches of CC and SCC
+  * run on GraphX/Pregel: vertex-parallel, partitioned, and
+  * checkpoint-friendly — the right execution model for 100 TB graphs,
   * where fermor's single-heap recursion (algo.clj walks Java arrays) cannot
-  * go. Order-dependent compiler analyses (dominators, DFS numberings —
+  * go; the other iterative algorithms run DataFrame rounds. Order-dependent
+  * compiler analyses (dominators, DFS numberings —
   * algo.clj:immediate-dominators, post-order-numbering) are inherently
   * sequential on DFS order; like the reference we run them single-node, but
   * behind an API that first extracts + filters the CFG-scale subgraph —
@@ -26,7 +27,10 @@ import scala.collection.mutable.ArrayBuilder
   * Below their guards the iterative algorithms replay on the driver, all
   * on one kernel: [[LocalGraph]], collected by one limited action per
   * frame ([[LocalGraph.collect]]), with CSR out/in/undirected adjacencies,
-  * a BFS, a DFS and one low-link walk.
+  * a BFS, a DFS and one low-link walk. Each guard's default is in
+  * [[LocalGraph.Guard]]; the session key `spark.graft.replayLimit` sets
+  * them all ([[LocalGraph.replayLimit]]), and 0 forces every distributed
+  * branch.
   */
 object Algos {
 
@@ -87,12 +91,9 @@ object Algos {
     *
     *  - below the guard, a local min-root union-find over the collected
     *    edge list (the kCore/MIS/matching guarded-replay pattern): one
-    *    linear pass replaces GraphX's per-superstep scheduling latency.
-    *    The 50k default is MEASURED (sf0.1 local[32], warm): at 5k edges
-    *    local wins ~3× (0.7 vs 2.0-2.3 s — the dedup-cluster pair-graph
-    *    shape), at 50k ~2× (1.1 vs 2.3 s), at 165k it is a tie (~0.9 s
-    *    both — output materialization dominates), so larger inputs stay
-    *    on GraphX;
+    *    linear pass replaces GraphX's per-superstep scheduling latency
+    *    ([[Guard.RoundLatency]]: the measured tie is ~165k edges, where
+    *    output materialization dominates both);
     *  - distributed, GraphX Pregel min-id propagation. Pregel costs one
     *    superstep per hop — the right trade on the small-diameter graphs
     *    this serves (FK stars, near-dup pair graphs, where it converges in
@@ -104,8 +105,8 @@ object Algos {
     * Output universe matches GraphX's graph: `vertices` ∪ edge endpoints
     * (endpoints absent from `vertices` still get a component; isolated
     * vertices are their own). */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
+  def connectedComponents(vertices: DataFrame, edges: DataFrame)(
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val headV = vertices.columns.head
     // one narrow lazy materialization shared by the guard probe, the local
@@ -115,9 +116,10 @@ object Algos {
     val vs0 = vertices.select(col(headV).as("id")).localCheckpoint(eager = false)
     // null ids fall through: GraphX's typed conversion raises the same loud
     // failure it always has for them
+    val limit = replayLimit(spark, Guard.RoundLatency)
     if (integralCols(e0, "src", "dst") && integralCols(vs0, "id"))
       LocalGraph.collect(e0.select(col("src").cast("long"), col("dst").cast("long")),
-          localMaxEdges, vs0.select(col("id").cast("long")) -> localMaxEdges) match {
+          limit, vs0.select(col("id").cast("long")) -> limit) match {
         case Some((g, _)) =>
           val uf = new MinUnionFind
           g.ids.indices.foreach(u => g.out.foreach(u)(v => uf.union(g.ids(u), g.ids(v))))
@@ -142,10 +144,11 @@ object Algos {
     * (the same CFG-scale hybrid as [[immediateDominators]]). A residual too
     * large to collect falls back to GraphX's Pregel SCC on just the residual
     * subgraph — strictly less work than running it on the whole graph. */
-  def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame, numIter: Int = 20,
-      residualMax: Long = 2000000)(implicit spark: SparkSession): DataFrame = {
+  def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame, numIter: Int = 20)(
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val vs0 = vertices.select(col(vertices.columns.head).as("id"))
+    val limit = replayLimit(spark, Guard.Collect)
     // guarded WHOLE-GRAPH Tarjan before any distributed trimming: the trim
     // loop exists to shrink a graph too big to collect, but below the
     // residual guard the ~2 actions/round it schedules ARE the query's cost
@@ -156,11 +159,11 @@ object Algos {
     // the distributed path preserves vs0's id type in its output schema,
     // and the local toDF emits longs — narrower int ids stay distributed.
     // Raw-pair guard (counting before the dedup skips that shuffle; Tarjan
-    // reads duplicate edges harmlessly). The residualMax=0 parity spec
-    // forces the old path and pins equality.
+    // reads duplicate edges harmlessly). The guard-0 parity spec forces
+    // the old path and pins equality.
     if (longCols(vs0, "id") && longCols(edges, "src", "dst"))
       LocalGraph.collect(edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")),
-          residualMax, vs0 -> residualMax) match {
+          limit, vs0 -> limit) match {
         // Gate, don't filter: both pre-existing paths let a cycle run
         // THROUGH endpoints absent from `vertices` (GraphX's Graph()
         // auto-adds them; the converged-without-trim residual Tarjan
@@ -193,9 +196,8 @@ object Algos {
     // residual under the vertex cap can still hold edge counts that OOM the
     // driver; the edge probe and collect are one limited action
     val residual =
-      if (prev == 0 || prev > residualMax) None
-      else LocalGraph.collect(e.select(col("src").cast("long"), col("dst").cast("long")),
-        residualMax)
+      if (prev == 0 || prev > limit) None
+      else LocalGraph.collect(e.select(col("src").cast("long"), col("dst").cast("long")), limit)
     val residualComps: DataFrame =
       if (prev == 0) Seq.empty[(Long, Long)].toDF("id", "component")
       else if (residual.isDefined)
@@ -273,18 +275,17 @@ object Algos {
     * `shortest-path`, `breadth-first-nodes`). `reverse` follows edges
     * dst→src (e.g. down a FK hierarchy). Returns reachable (id, dist).
     *
-    * Below `localMaxEdges` edges the walk runs on the driver: one guarded
+    * Below [[Guard.RoundLatency]] edges the walk runs on the driver: one guarded
     * collect of the edge pairs, one of the sources, then [[LocalGraph.bfs]].
     * Above it, a level-synchronous DataFrame delta BFS: each round expands
     * only the newest frontier (semi-join on the edge table) and anti-joins
     * the visited set, so per-round work tracks frontier size — the same
     * shape GraphX Pregel computes, without the RDD conversion and
     * vertex-state machinery, and AQE-planned per round. A null source
-    * identifies no vertex and is dropped. Set the guard to 0 to force the
-    * distributed rounds. */
+    * identifies no vertex and is dropped. */
   def bfsDistances(edges: DataFrame, sources: DataFrame,
-      reverse: Boolean = false, maxIter: Int = 1000,
-      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
+      reverse: Boolean = false, maxIter: Int = 1000)(
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
     // duplicate edges are harmless (per-round dropDuplicates on ids): no
@@ -294,8 +295,9 @@ object Algos {
     val seed = sources.select(col(sources.columns.head).as("id"))
     // LongType only (the SCC rule): the distributed union keeps the id
     // columns' type, the driver walk emits bigint
+    val limit = replayLimit(spark, Guard.RoundLatency)
     if (longCols(e, "__from", "__to") && longCols(seed, "id"))
-      LocalGraph.collect(e, localMaxEdges, seed.where(col("id").isNotNull) -> localMaxEdges) match {
+      LocalGraph.collect(e, limit, seed.where(col("id").isNotNull) -> limit) match {
         case Some((g, Seq(seeds))) =>
           val (order, dist, _) = g.bfs(seeds.map(g.index), maxIter)
           return order.toSeq.map(v => (g.ids(v), dist(v))).toDF("id", "dist")
@@ -386,9 +388,8 @@ object Algos {
     * tracks frontier size; no priority queue, no driver state). Returns every
     * reachable (id, cost) with cost = minimal path cost from any source. */
   def weightedShortestPath(edges: DataFrame, sources: DataFrame, cost: Column,
-      reverse: Boolean = false, maxIter: Int = 50,
-      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame =
-    relaxLoop(relaxEdges(edges, cost, reverse), sources, maxIter, accept = None, localMaxEdges)
+      reverse: Boolean = false, maxIter: Int = 50)(implicit spark: SparkSession): DataFrame =
+    relaxLoop(relaxEdges(edges, cost, reverse), sources, maxIter, accept = None)
 
   /** [[weightedShortestPath]] + PARENT POINTERS — the reference's
     * shortest-path returns the actual path; distributed, the path tree IS
@@ -397,8 +398,7 @@ object Algos {
     * (cost, parent) pair — parent = the least-id predecessor among those on
     * a minimal-cost path. Sources carry a null parent. */
   def weightedShortestPathWithParent(edges: DataFrame, sources: DataFrame, cost: Column,
-      reverse: Boolean = false, maxIter: Int = 50,
-      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
+      reverse: Boolean = false, maxIter: Int = 50)(implicit spark: SparkSession): DataFrame = {
     // Two phases, not a fatter loop: (1) the plain cost relaxation to its
     // fixpoint (narrow 2-column rounds), then (2) ONE post-pass join derives
     // parents from the optimality invariant — p is an optimal predecessor of
@@ -407,7 +407,7 @@ object Algos {
     // "refinement" rounds whenever an equal-cost smaller-id predecessor
     // appears late (strictly more rounds, wider shuffles, same answer).
     val e = relaxEdges(edges, cost, reverse)
-    val dist = relaxLoop(e, sources, maxIter, accept = None, localMaxEdges)
+    val dist = relaxLoop(e, sources, maxIter, accept = None)
     val parents = e
       .join(dist.select(col("id").as("__from"), col("cost").as("__pc")), "__from")
       .join(dist.select(col("id").as("__to"), col("cost").as("__tc")), "__to")
@@ -425,13 +425,8 @@ object Algos {
     * replicated — so the returned dist table is bit-identical to the
     * distributed loop's in every regime, converged or capped (parity-spec'd
     * at guard = 0). `accept` is evaluated ONCE, distributedly, over the
-    * graph's bounded vertex set, never per round.
-    *
-    * The 50k guard default is a MEASURED rejection of a bigger one: on the
-    * sf0.1 FK graph (2M weighted edges, 4-5 effective rounds, local[32])
-    * the local path reads 3.0-5.4 s vs 2.3-3.5 s distributed — collecting
-    * the edge frame costs more than the well-parallelized rounds save — so
-    * the replay only fires where fixed per-round latency dominates. */
+    * graph's bounded vertex set, never per round. Its guard is
+    * [[Guard.RoundLatency]]: a bigger one measured slower at sf0.1. */
   private def relaxLocal(spark: SparkSession, g: LocalGraph, sources: Array[Long],
       maxIter: Int, accept: Option[Column]): DataFrame = {
     import spark.implicits._
@@ -482,10 +477,9 @@ object Algos {
     * strictly positive), so the search stops without exhausting the graph.
     * Returns the accepted vertices tied at the minimal cost. */
   def cheapestAccepted(edges: DataFrame, sources: DataFrame, cost: Column, accept: Column,
-      reverse: Boolean = false, maxIter: Int = 50,
-      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
+      reverse: Boolean = false, maxIter: Int = 50)(implicit spark: SparkSession): DataFrame = {
     val dist = relaxLoop(relaxEdges(edges, cost, reverse), sources, maxIter,
-      accept = Some(accept), localMaxEdges)
+      accept = Some(accept))
     val hits = dist.where(accept).localCheckpoint(eager = false)
     hits.join(hits.agg(min(col("cost")).as("cost")), Seq("cost"), "left_semi")
       .select("id", "cost")
@@ -512,45 +506,45 @@ object Algos {
     * cheapest accepted cost, nothing later can beat it. Below the guard the
     * same recurrence replays on the driver ([[relaxLocal]]). */
   private def relaxLoop(e: DataFrame, sources: DataFrame, maxIter: Int,
-      accept: Option[Column], localMaxEdges: Long): DataFrame = {
+      accept: Option[Column]): DataFrame = {
     // collect the CHECKPOINTED frame: a derived edge graph evaluates its
     // upstream once (the kTruss probe rule). Sources are guarded too: a
     // huge source set over a small subgraph must not be collected; the type
     // gate keeps non-long ids on the distributed path, where a null key
     // simply never joins
+    val limit = replayLimit(e.sparkSession, Guard.RoundLatency)
     if (integralCols(e, "__from", "__to") && integralCols(sources, sources.columns.head))
       LocalGraph.collect(
           e.select(col("__from").cast("long"), col("__to").cast("long"), col("__w")),
-          localMaxEdges,
-          sources.select(col(sources.columns.head).cast("long")) -> localMaxEdges) match {
+          limit, sources.select(col(sources.columns.head).cast("long")) -> limit) match {
         case Some((g, Seq(ss))) => return relaxLocal(e.sparkSession, g, ss, maxIter, accept)
         case _ => ()
       }
+    // dist carries each id's cost and whether the last round improved it:
+    // the improved rows are the next frontier
     var (dist, frontierRows, _) = checkpointed(
       sources.select(col(sources.columns.head).as("id")).dropDuplicates("id")
-        .withColumn("cost", lit(0L)))
-    var frontier = dist
+        .withColumn("cost", lit(0L)).withColumn("improved", lit(true)))
     val accepted = accept.getOrElse(lit(false))
     var bestAccepted = Long.MaxValue
     var done = false
     var i = 0
     while (!done && i < maxIter) {
-      // one job completes the improved set and yields its size (the drain
-      // probe and the guard of both broadcasts), min and min accepted cost
-      val (improved, n, Seq(minCost, minAccepted)) = checkpointed(
-        e.join(guarded(frontier, frontierRows).withColumnRenamed("id", "__from"), "__from")
-          .select(col("__to").as("id"), (col("cost") + col("__w")).as("cost"))
-          .groupBy("id").agg(min(col("cost")).as("cost")) // map-side partial min
-          .join(dist.withColumnRenamed("cost", "__old"), Seq("id"), "left")
-          .where(col("__old").isNull || col("cost") < col("__old"))
-          .select("id", "cost"),
-        minOf(col("cost")), minOf(when(accepted, col("cost"))))
+      val cand = e.join(guarded(dist.where(col("improved")), frontierRows)
+          .select(col("id").as("__from"), col("cost")), "__from")
+        .groupBy(col("__to").as("id")).agg(min(col("cost") + col("__w")).as("__new"))
+      val better = col("__new").isNotNull && (col("cost").isNull || col("__new") < col("cost"))
+      // ONE job merges the round into dist and yields the improved count
+      // (the drain probe and the frontier's broadcast guard), their min
+      // cost and their min accepted cost
+      val (merged, _, Seq(n, minCost, minAccepted)) = checkpointed(
+        dist.select("id", "cost").join(cand, Seq("id"), "full_outer")
+          .select(col("id"), least(col("cost"), col("__new")).as("cost"), better.as("improved")),
+        sumOf(when(col("improved"), 1L)), minOf(when(col("improved"), col("cost"))),
+        minOf(when(col("improved") && accepted, col("cost"))))
+      dist = merged
       if (n == 0L) done = true
       else {
-        // dist (|reached|-sized) stays unshuffled under the guard
-        dist = dist.join(guarded(improved.select("id"), n), Seq("id"), "left_anti")
-          .unionByName(improved).localCheckpoint(eager = false)
-        frontier = improved
         frontierRows = n
         bestAccepted = math.min(bestAccepted, minAccepted)
         // strictly positive costs: every future relaxation strictly exceeds
@@ -559,7 +553,7 @@ object Algos {
       }
       i += 1
     }
-    dist
+    dist.select("id", "cost")
   }
 
   /** Materialize full paths from a parent-pointer tree (the output of
@@ -597,10 +591,9 @@ object Algos {
     * THEIR paths. Empty result = no accepted vertex reachable (the
     * reference's nil). */
   def shortestPathTo(edges: DataFrame, sources: DataFrame, cost: Column, accept: Column,
-      reverse: Boolean = false, maxIter: Int = 50, maxHops: Int = 50,
-      localMaxEdges: Long = 50000L)(implicit spark: SparkSession): DataFrame = {
-    val tree = weightedShortestPathWithParent(edges, sources, cost, reverse, maxIter,
-      localMaxEdges)
+      reverse: Boolean = false, maxIter: Int = 50, maxHops: Int = 50)(
+      implicit spark: SparkSession): DataFrame = {
+    val tree = weightedShortestPathWithParent(edges, sources, cost, reverse, maxIter)
       .localCheckpoint(eager = false)
     val hits = tree.where(accept).localCheckpoint(eager = false)
     val best = hits.join(hits.agg(min(col("cost")).as("cost")), Seq("cost"), "left_semi")
@@ -618,8 +611,7 @@ object Algos {
     * only MERGE existing components, so the CC that actually has to run is
     * over the COMPONENT graph — the batch projected through the previous
     * assignment — whose size is bounded by the batch, never |V| + |batch|.
-    * Those component edges are collected under `deltaMaxEdges` (the 2M /
-    * ~32 MB driver-collect convention of the PPR/walks replays) and merged
+    * Those component edges are collected under [[Guard.Collect]] and merged
     * by a local min-root union-find; the |V|-sized mapping then updates
     * with ONE distributed remap join against the (touched-components-only,
     * broadcast-sized) relabel table. The old path re-ran full CC over
@@ -638,10 +630,10 @@ object Algos {
     * back to the verbatim old path, which defines the semantics
     * (parity-spec'd: AlgosSpec runs both). Non-integral id types fall back
     * too (the integralCols replay rule). */
-  def incrementalCC(prev: DataFrame, batchEdges: DataFrame,
-      localMaxEdges: Long = 50000L, deltaMaxEdges: Long = 2000000L)(
+  def incrementalCC(prev: DataFrame, batchEdges: DataFrame)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
+    val limit = replayLimit(spark, Guard.Collect)
     if (integralCols(prev, "id", "component") && integralCols(batchEdges, "src", "dst")) {
       // ONE job sizes the assignment AND materializes its checkpoint (four
       // readers below); a measured-small pm broadcasts into the
@@ -652,7 +644,7 @@ object Algos {
         col("component").cast("long").as("component")))
       val be = batchEdges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")).localCheckpoint(eager = false)
-      val pmB = if (pmN <= deltaMaxEdges) broadcast(pm) else pm
+      val pmB = if (pmN <= limit) broadcast(pm) else pm
       // Exactness gate, ONE shuffle: both roles of every prev row grouped
       // by the vertex they mention — duplicate ids (__nid > 1), a label
       // with no self-row (__isc without __self), and null ids all surface
@@ -688,9 +680,9 @@ object Algos {
       // (the collectAtMost convention, one job instead of two)
       val combined = violations.unionAll(
         compEdges.select(lit(1L).as("t"), col("__cs").as("a"), col("__cd").as("b")))
-      collectAtMost(combined, deltaMaxEdges + 1) match {
+      collectAtMost(combined, limit + 1) match {
         case Some(rows) if !rows.exists(r => r.getLong(0) == 0L || r.isNullAt(1) || r.isNullAt(2))
-            && rows.length <= deltaMaxEdges =>
+            && rows.length <= limit =>
           val uf = new MinUnionFind
           rows.foreach(r => uf.union(r.getLong(1), r.getLong(2)))
           // relabel table: touched components only; cluster label = min
@@ -719,7 +711,7 @@ object Algos {
       .unionAll(batchEdges.select(col("src").as("id")))
       .unionAll(batchEdges.select(col("dst").as("id")))
       .dropDuplicates("id")
-    connectedComponents(vs, e, localMaxEdges)
+    connectedComponents(vs, e)
   }
 
   /** PageRank (capability class inherited from the reference's Pacer
@@ -899,14 +891,6 @@ object Algos {
           .otherwise(expr("(n_edges * 2 * 10000) div (n_nodes * (n_nodes - 1))")))
   }
 
-  /** Community detection via label propagation. */
-  def labelPropagation(vertices: DataFrame, edges: DataFrame, iters: Int = 10)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    org.apache.spark.graphx.lib.LabelPropagation
-      .run(buildGraph(vertices, edges), iters).vertices.toDF("id", "community")
-  }
-
   /** DETERMINISTIC synchronous label propagation (fermor/gremlin community
     * recipe, made engine-portable): every vertex starts labeled with its own
     * id; each round, all vertices SIMULTANEOUSLY adopt the most frequent
@@ -921,8 +905,7 @@ object Algos {
     * window keyed by dst, one label join-back — all shuffles keyed by vertex
     * id, per-round cost linear in |E|. Labels are checkpointed each round so
     * the plan doesn't nest `iters` deep. */
-  def labelPropagationSync(vertices: DataFrame, edges: DataFrame, iters: Int,
-      localMaxEdges: Long = 2000000L)(
+  def labelPropagationSync(vertices: DataFrame, edges: DataFrame, iters: Int)(
       implicit spark: SparkSession): DataFrame = {
     val idc = vertices.columns.head
     // guarded LOCAL replay of the exact synchronous rounds (the hits/ppr
@@ -930,8 +913,9 @@ object Algos {
     // labels, max count then smallest label — so the replay is
     // bit-identical to the distributed rounds; parity-spec'd with the
     // guard forced off. Duplicate vertex ids fall back (bag labels).
+    val limit = replayLimit(spark, Guard.Collect)
     LocalGraph.collect(edges.select(col("src").cast("long"), col("dst").cast("long")),
-        localMaxEdges, vertices.select(col(idc).cast("long")) -> localMaxEdges) match {
+        limit, vertices.select(col(idc).cast("long")) -> limit) match {
       case Some((g, Seq(ids))) if ids.length == ids.distinct.length =>
         import spark.implicits._
         // only edges between two vertices count
@@ -997,8 +981,7 @@ object Algos {
     * Scale: per round two edge-keyed aggregations (sum over in/out
     * neighbors) + a join back — |E|-linear keyed shuffles, checkpointed
     * per round like the LPA/walk loops. */
-  def hits(vertices: DataFrame, edges: DataFrame, iters: Int,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def hits(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1010,8 +993,8 @@ object Algos {
     // count iff both endpoints are in `vertices`, mirroring the keyed-join
     // + left-join semantics; addExact mirrors ANSI error-on-overflow).
     // Callers pass distinct vertex ids (both forms assume it).
-    LocalGraph.collect(e, localMaxEdges,
-        vertices.select(col(idc).cast("long")) -> localMaxEdges) match {
+    val limit = replayLimit(spark, Guard.Collect)
+    LocalGraph.collect(e, limit, vertices.select(col(idc).cast("long")) -> limit) match {
       case Some((g, Seq(vIds))) =>
         val isV = new Array[Boolean](g.n)
         vIds.foreach(v => isV(g.index(v)) = true)
@@ -1064,8 +1047,7 @@ object Algos {
     * one dst-keyed sum, one full-outer merge with the restart vector;
     * checkpointed per round like the hits/LPA/walk loops. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-      alphaBp: Long = 8500L, scale: Long = 1000000000000L,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+      alphaBp: Long = 8500L, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && alphaBp >= 0 && alphaBp <= 10000 && scale > 0)
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .localCheckpoint(eager = false)
@@ -1075,8 +1057,9 @@ object Algos {
     // error-on-overflow) — so the replay is bit-identical, parity-spec'd.
     // Duplicate seed rows fall back to the distributed path: the full_outer
     // merge there has per-row bag semantics a keyed map can't mirror.
-    LocalGraph.collect(e, localMaxEdges,
-        seeds.select(col(seeds.columns.head).cast("long")) -> localMaxEdges) match {
+    val limit = replayLimit(edges.sparkSession, Guard.Collect)
+    LocalGraph.collect(e, limit,
+        seeds.select(col(seeds.columns.head).cast("long")) -> limit) match {
       case Some((g, Seq(seedArr))) if seedArr.length == seedArr.distinct.length =>
         val spark = edges.sparkSession
         import spark.implicits._
@@ -1142,8 +1125,7 @@ object Algos {
     * Scale: per step, one join of the walker frontier against the edge
     * table (keyed by current vertex) + one walker-keyed argmin window —
     * frontier-size work per round, checkpointed per step. */
-  def deterministicWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def deterministicWalks(edges: DataFrame, starts: DataFrame, steps: Int): DataFrame = {
     require(steps >= 0)
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .localCheckpoint(eager = false)
@@ -1153,8 +1135,9 @@ object Algos {
     // compares identically as a Java String and a UTF8String — so the
     // replay is bit-identical; parity-spec'd with the guard forced off.
     // Duplicate walker rows fall back (bag-of-walkers semantics).
-    LocalGraph.collect(e, localMaxEdges,
-        starts.select(col(starts.columns.head).cast("long")) -> localMaxEdges) match {
+    val limit = replayLimit(edges.sparkSession, Guard.Collect)
+    LocalGraph.collect(e, limit,
+        starts.select(col(starts.columns.head).cast("long")) -> limit) match {
       case Some((g, Seq(ws))) if ws.length == ws.distinct.length =>
         val spark = edges.sparkSession
         import spark.implicits._
@@ -1212,8 +1195,7 @@ object Algos {
     * SHRINKING symmetrized edge set — per-round cost tracks surviving
     * edges, never the original graph after early rounds; the rounds run
     * on [[peelRounds]] (one checkpoint-and-count job each). */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1224,7 +1206,7 @@ object Algos {
     // order yields the identical answer — one linear queue pass replaces
     // per-round scheduling latency below the guard; raw-pair guard skips
     // the symmetrize+distinct shuffle (the dedup happens in `sym`)
-    val local = LocalGraph.collect(sym, localMaxEdges / 2)
+    val local = LocalGraph.collect(sym, replayLimit(spark, Guard.Collect) / 2)
     if (local.isDefined) {
       val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       val deg = Array.tabulate(n)(adj.degree)
@@ -1278,14 +1260,13 @@ object Algos {
     *    raise it (or pre-contract degree-1 chains) for pathological
     *    diameters. Both regimes are parity-spec'd against each other on
     *    randomized graphs. */
-  def coreNumbers(edges: DataFrame, maxRounds: Int = 100,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def coreNumbers(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
     import spark.implicits._
     val sym0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-    val local = LocalGraph.collect(sym0, localMaxEdges / 2)
+    val local = LocalGraph.collect(sym0, replayLimit(spark, Guard.Collect) / 2)
     if (local.isDefined) {
       val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       val deg = Array.tabulate(n)(adj.degree)
@@ -1365,8 +1346,7 @@ object Algos {
     * work is deg², so pre-capping hubs (e.g. via [[linkPrediction]]'s
     * maxDeg rule on the generating projection) bounds the round cost.
     * The rounds run on [[peelRounds]]. */
-  def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 3)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1389,7 +1369,7 @@ object Algos {
     // joins whose sf0.1 cost is pure round-scheduling latency; the
     // distributed loop runs above the guard (parity-spec'd both regimes).
     // Raw-pair guard: counting BEFORE distinct skips that shuffle here.
-    val local = LocalGraph.collect(raw, localMaxEdges)
+    val local = LocalGraph.collect(raw, replayLimit(spark, Guard.Collect))
     if (local.isDefined) {
       val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       def ekey(i: Int, j: Int): Long =
@@ -1505,8 +1485,7 @@ object Algos {
     * wins, and hash-uniform priorities remove a constant expected edge
     * fraction per round ⇒ O(log n) expected rounds). The rounds run on
     * [[peelRounds]]. */
-  def maximalIndependentSet(edges: DataFrame, maxRounds: Int = 64,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def maximalIndependentSet(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -1518,7 +1497,7 @@ object Algos {
     // loop (parity-spec'd) — above the guard the distributed path runs.
     // The guard counts RAW pairs (>= the distinct symmetrized edge count /
     // 2), so qualifying inputs skip the symmetrize+distinct shuffle too.
-    val local = LocalGraph.collect(sym0, localMaxEdges / 2)
+    val local = LocalGraph.collect(sym0, replayLimit(spark, Guard.Collect) / 2)
     if (local.isDefined) {
       val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       val alive = Array.fill(n)(true)
@@ -1690,13 +1669,12 @@ object Algos {
     * contraction: [[ccAlternating]] runs on the chosen-edge graph whose
     * vertex set is the current components — never the full graph — and
     * shrinks geometrically. Each round's crossing set ends in one
-    * [[Scale.checkpointed]] job. Once it fits `localMaxEdges`, a guarded KRUSKAL
+    * [[Scale.checkpointed]] job. Once it fits [[Guard.Kruskal]], a guarded KRUSKAL
     * finish (sorted partition-at-a-time stream + driver union-find over
     * component ids) completes the identical unique forest in one pass —
     * the geometric shrink lands every run's TAIL there, where per-round
     * scheduling latency would otherwise dominate. */
-  def boruvkaForest(edges: DataFrame, maxRounds: Int = 40,
-      localMaxEdges: Long = 1000000L): DataFrame = {
+  def boruvkaForest(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1708,7 +1686,8 @@ object Algos {
     // parallel-collapse groupBy SHUFFLE never runs either — collect the
     // raw weighted pairs, take min-w per pair driver-side, and Kruskal
     // the whole unique forest in one pass
-    val rawRows = collectAtMost(canonRaw, localMaxEdges)
+    val limit = replayLimit(spark, Guard.Kruskal)
+    val rawRows = collectAtMost(canonRaw, limit)
       .filter(!_.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
     if (rawRows.isDefined) {
       val best = scala.collection.mutable.HashMap[(Long, Long), Long]()
@@ -1742,7 +1721,7 @@ object Algos {
           .join(comp.select(col("id").as("dst"), col("comp").as("cb")), "dst")
           .where(col("ca") =!= col("cb")))
       if (nx == 0) done = true
-      else if (nx <= localMaxEdges) {
+      else if (nx <= limit) {
         // Guarded KRUSKAL finish: the forest is UNIQUE under the
         // (w, src, dst) total order, so completing it with a different MST
         // algorithm yields the identical edge set. The crossing set
@@ -1832,8 +1811,7 @@ object Algos {
     * MIS shape), plus a bounded `maxColors`-way candidate explode
     * anti-joined against neighbor colors — all keyed, all on the SHRINKING
     * uncolored set. The rounds run on [[peelRounds]]. */
-  def jpColoring(edges: DataFrame, maxColors: Int = 64, maxRounds: Int = 256,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def jpColoring(edges: DataFrame, maxColors: Int = 64, maxRounds: Int = 256): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym0 = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -1845,7 +1823,7 @@ object Algos {
     // sequential color picks within a round see exactly the pre-round
     // colored set) — bit-identical to the distributed loop, parity-spec'd;
     // raw-pair guard skips the symmetrize+distinct shuffle (the MIS note)
-    val local = LocalGraph.collect(sym0, localMaxEdges / 2)
+    val local = LocalGraph.collect(sym0, replayLimit(spark, Guard.Collect) / 2)
     if (local.isDefined) {
       val (ids, adj, n) = (local.get.ids, local.get.sym, local.get.n)
       (0 until n).map(adj.degree).maxOption.foreach(d =>
@@ -1930,8 +1908,7 @@ object Algos {
     * level cap: vertices deeper than maxIter report level <= maxIter+1
     * (callers that know the exact depth pass it to skip the detection
     * round). */
-  def topoLevels(vertices: DataFrame, edges: DataFrame, maxIter: Int = 10,
-      localMaxEdges: Long = 50000L): DataFrame = {
+  def topoLevels(vertices: DataFrame, edges: DataFrame, maxIter: Int = 10): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // parallel edges can't change a max-level fixpoint, and each round
@@ -1947,18 +1924,14 @@ object Algos {
     // round i-1's, level(v) = max round that reached v — run on a collected
     // adjacency; identical semantics INCLUDING the maxIter level cap, so
     // the replay is bit-exact under truncation too (parity-spec'd at
-    // guard = 0). The 50k default is a MEASURED rejection of a bigger
-    // guard: at sf0.1 (2M edges, depth 4, local[32]) the local path reads
-    // 2.7-3.9 s vs 2.7 s distributed — the collect + driver sets + 800k-row
-    // re-upload cost more than four well-parallelized rounds — so it fires
-    // only on genuinely small DAGs. Null ids fall through to the
-    // distributed rounds, which keep the pre-replay semantics for them (a
-    // null dst keeps its level row; a null src never matches a join)
+    // guard = 0). Null ids fall through to the distributed rounds, which
+    // keep the pre-replay semantics for them (a null dst keeps its level
+    // row; a null src never matches a join)
+    val limit = replayLimit(spark, Guard.RoundLatency)
     val local =
       if (integralCols(e, "src", "dst") && integralCols(vertices, vertices.columns.head))
         LocalGraph.collect(e.select(col("src").cast("long"), col("dst").cast("long")),
-          localMaxEdges,
-          vertices.select(col(vertices.columns.head).cast("long")) -> localMaxEdges)
+          limit, vertices.select(col(vertices.columns.head).cast("long")) -> limit)
       else None
     if (local.isDefined) {
       val (g, Seq(vs)) = local.get
@@ -2195,12 +2168,12 @@ object Algos {
     * is the caller using a compiler analysis on a fact table — fail with
     * the actionable message rather than collapse.
     *
-    * An edge set of at most `localMaxEdges` integral non-null pairs is
+    * An edge set of at most [[Guard.RoundLatency]] integral non-null pairs is
     * collected whole and walked by [[LocalGraph.bfs]]; past it, the flow subgraph
     * is extracted by [[reachableEdges]] and only it is collected. Either
     * way the result is the distinct pairs whose src the entry reaches. */
   private[graft] def collectReachable(entry: Long, edges: DataFrame,
-      maxEdges: Long = 10000000L, localMaxEdges: Long = 50000L): Array[(Long, Long)] = {
+      maxEdges: Long = 10000000L): Array[(Long, Long)] = {
     // the array index is an Int, so Int.MaxValue bounds the collect even if
     // a caller raises maxEdges past it — fail loudly, never wrap n.toInt
     val lim = math.min(maxEdges, Int.MaxValue.toLong)
@@ -2214,7 +2187,7 @@ object Algos {
     // int-typed edge columns
     val local = if (!integralCols(edges, "src", "dst")) None
       else LocalGraph.collect(edges.select(col("src").cast("long"), col("dst").cast("long")),
-        localMaxEdges)
+        replayLimit(edges.sparkSession, Guard.RoundLatency))
     if (local.isDefined) {
       val g = local.get
       val root = g.index(entry)
@@ -2508,8 +2481,8 @@ object Algos {
     * (and max eccentricity over all sources = the graph diameter).
     * `sources` bounds the work (sample for approximation, all for exact). */
   def closenessCentrality(edges: DataFrame, sources: DataFrame, directed: Boolean = false,
-      maxIter: Int = 100, localMaxEdges: Long = 200000L)(implicit spark: SparkSession): DataFrame =
-    taggedBfs(edges, sources, directed, maxIter, localMaxEdges)
+      maxIter: Int = 100)(implicit spark: SparkSession): DataFrame =
+    taggedBfs(edges, sources, directed, maxIter)
       .groupBy(col("s").as("id"))
       .agg((count(lit(1)) - 1).as("n_reach"), sum(col("d")).as("farness"),
         max(col("d")).as("eccentricity"))
@@ -2521,18 +2494,16 @@ object Algos {
     * never |V|². Fails LOUDLY if `maxIter` rounds leave a non-empty
     * frontier: a silent truncation would undercount every downstream sum. */
   private def taggedBfs(edges: DataFrame, sources: DataFrame, directed: Boolean,
-      maxIter: Int, localMaxEdges: Long = 200000L): DataFrame = {
+      maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = edges.select("src", "dst").dropDuplicates("src", "dst")
     val eRaw = if (directed) e0
       else e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         .dropDuplicates("src", "dst")
-    // guarded LOCAL replay (the maximalMatching convention): multi-source
-    // BFS is |sources|·O(E) driver work — trivially below the per-round
-    // scheduling floor for small graphs (measured at sf0.1: q_harmonic
-    // 1.8 s warm -> the scan cost; distances are unique facts, so the
-    // replay is bit-identical by construction, parity-spec'd)
+    // guarded LOCAL replay (the maximalMatching convention, guard
+    // Guard.MultiSource): distances are unique facts, so the replay is
+    // bit-identical by construction, parity-spec'd
     // a NULL source identifies no vertex: dropped in BOTH paths (the BFS
     // driver drops null-keyed seed rows; the local replay would NPE
     // unboxing it — parity-spec'd)
@@ -2543,7 +2514,7 @@ object Algos {
     // replay's work actually scales with (the raw row count only bounded it
     // from above), and both regimes stay bit-identical either way
     LocalGraph.collect(eRaw.select(col("src").cast("long"), col("dst").cast("long")),
-        localMaxEdges,
+        replayLimit(spark, Guard.MultiSource),
         sources.where(srcCol.isNotNull).select(srcCol.cast("long")).distinct() -> 512L) match {
       case Some((g, Seq(srcs))) =>
         val out = srcs.flatMap { s =>
@@ -2615,11 +2586,11 @@ object Algos {
     import spark.implicits._
     def seed(df: DataFrame) = df.select(col(df.columns.head).as("id"))
     // bfsDistances' gate and guard
-    val localMaxEdges = 50000L
+    val limit = replayLimit(spark, Guard.RoundLatency)
     if (longCols(edges, "src", "dst") && longCols(seed(from), "id") && longCols(seed(to), "id"))
-      LocalGraph.collect(edges.select("src", "dst"), localMaxEdges,
-          seed(from).where(col("id").isNotNull) -> localMaxEdges,
-          seed(to).where(col("id").isNotNull) -> localMaxEdges) match {
+      LocalGraph.collect(edges.select("src", "dst"), limit,
+          seed(from).where(col("id").isNotNull) -> limit,
+          seed(to).where(col("id").isNotNull) -> limit) match {
         case Some((g, Seq(f, t))) =>
           val fwd = g.bfs(f.map(g.index), fwdMaxIter)._2
           val bwd = g.bfs(t.map(g.index), bwdMaxIter, g.in)._2
@@ -2655,30 +2626,30 @@ object Algos {
     * Tarjan low-link is DFS-order-sequential, so SOME single-threaded walk is
     * unavoidable; what must not happen at 100 TB is an unguarded collect of
     * the whole edge set to the driver. Guard: if the edge count exceeds
-    * `localMaxEdges`, fall back to the distributed per-component plan —
+    * [[Guard.LowLink]], fall back to the distributed per-component plan —
     * connected components first (Pregel), then each component's edge list is
     * walked WITHIN an executor via flatMapGroups. Biconnectivity never
     * crosses a connected component, so the partition is exact; the collect
     * unit shrinks from "the graph" to "the largest component". */
-  def articulationPoints(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
+  def articulationPoints(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    biconnectivity(edges, localMaxEdges)(_.lowLink.articulation).toDF("id")
+    biconnectivity(edges)(_.lowLink.articulation).toDF("id")
   }
 
   /** The guard shared by [[articulationPoints]], [[biconnectedComponents]]
     * and [[bridges]]: one action collects the (src, dst) pairs, int ids
     * upcast to long, and runs `f` over their [[LocalGraph]] on the driver when
-    * they number at most `localMaxEdges` (a null endpoint fails loudly).
+    * they number at most [[Guard.LowLink]] (a null endpoint fails loudly).
     * Past it, `f` runs per connected component inside the executors, as
     * [[articulationPoints]] describes: one Pregel CC run + one keyed
     * shuffle, per-task memory bounded by the largest component. */
-  private def biconnectivity[T: org.apache.spark.sql.Encoder](edges: DataFrame,
-      localMaxEdges: Long)(f: LocalGraph => Seq[T]): org.apache.spark.sql.Dataset[T] = {
+  private def biconnectivity[T: org.apache.spark.sql.Encoder](edges: DataFrame)(
+      f: LocalGraph => Seq[T]): org.apache.spark.sql.Dataset[T] = {
     implicit val spark: SparkSession = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    collectAtMost(e, localMaxEdges) match {
+    collectAtMost(e, replayLimit(spark, Guard.LowLink)) match {
       case Some(rows) =>
         if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
           throw new IllegalArgumentException("biconnectivity input has a null src or dst")
@@ -2714,10 +2685,10 @@ object Algos {
     * stack. Returns (src, dst, component) with component = min edge-endpoint
     * id in the component (deterministic labeling). Same guard + distributed
     * per-component fallback as [[articulationPoints]]. */
-  def biconnectedComponents(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
+  def biconnectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    biconnectivity(edges, localMaxEdges)(_.lowLink.components).toDF("src", "dst", "component")
+    biconnectivity(edges)(_.lowLink.components).toDF("src", "dst", "component")
   }
 
   /** Bridges (cut edges): tree edges with low(child) > disc(parent) —
@@ -2728,10 +2699,10 @@ object Algos {
     * input is treated as a SIMPLE undirected graph (duplicates and
     * orientations collapse). Returns canonical (lo, hi), independent of
     * the DFS tree. */
-  def bridges(edges: DataFrame, localMaxEdges: Long = 3000000L): DataFrame = {
+  def bridges(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    biconnectivity(edges, localMaxEdges)(_.lowLink.bridges).toDF("lo", "hi")
+    biconnectivity(edges)(_.lowLink.bridges).toDF("lo", "hi")
   }
 
   /** Dominance frontiers (fermor `dominance-frontiers`), from idom by the
@@ -2763,9 +2734,8 @@ object Algos {
     * join + (s,v) dedup + anti-join vs visited — work tracks frontier size,
     * never |V|·|V|. Returns (id, n_reach, harmonic). */
   def harmonicCentrality(edges: DataFrame, sources: DataFrame, directed: Boolean = false,
-      scale: Long = 840L, maxIter: Int = 100, localMaxEdges: Long = 200000L)(
-      implicit spark: SparkSession): DataFrame = {
-    val acc = taggedBfs(edges, sources, directed, maxIter, localMaxEdges)
+      scale: Long = 840L, maxIter: Int = 100)(implicit spark: SparkSession): DataFrame = {
+    val acc = taggedBfs(edges, sources, directed, maxIter)
     acc.where(col("d") > 0)
       .groupBy(col("s").as("id"))
       .agg(count(lit(1)).as("n_reach"),
@@ -2787,8 +2757,7 @@ object Algos {
     * agg + one priority join + two semi/anti joins on the SHRINKING edge
     * set, O(log n) expected rounds, run on [[peelRounds]].
     * Returns matched edges as (lo, hi). */
-  def maximalMatching(edges: DataFrame, maxRounds: Int = 64,
-      localMaxEdges: Long = 2000000L): DataFrame = {
+  def maximalMatching(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val canon0 = edges.select(least(col("src"), col("dst")).cast("long").as("lo"),
@@ -2809,7 +2778,8 @@ object Algos {
     // holds every cached table (full-GC churn). Negative ids — where the
     // pad20 form orders non-numerically — fall back to the distributed
     // loop, which defines the semantics.
-    val local = LocalGraph.collect(canon0, localMaxEdges).filter(g => g.n == 0 || g.ids(0) >= 0L)
+    val local = LocalGraph.collect(canon0, replayLimit(spark, Guard.Collect))
+      .filter(g => g.n == 0 || g.ids(0) >= 0L)
     if (local.isDefined) {
       val g = local.get
       var pool = (0 until g.n).flatMap(u => (g.sym.off(u) until g.sym.off(u + 1))
@@ -2915,8 +2885,7 @@ object Algos {
     * `maxDepth` bounds the expansion (DAG depth; loud failure beats a
     * silent wrong answer if the graph is deeper). Returns the kept
     * (src, dst) edges. */
-  def transitiveReduction(edges: DataFrame, maxDepth: Int = 20,
-      localMaxEdges: Long = 500000L): DataFrame = {
+  def transitiveReduction(edges: DataFrame, maxDepth: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -2931,7 +2900,8 @@ object Algos {
     // no null-endpoint branch needed, unlike the CC/relax replays: this
     // operator's prep filter (src =!= dst, null-safe SQL inequality)
     // already drops null-endpoint rows on BOTH regimes
-    val local = if (integralCols(edges, "src", "dst")) LocalGraph.collect(e, localMaxEdges)
+    val limit = replayLimit(spark, Guard.Reduction)
+    val local = if (integralCols(edges, "src", "dst")) LocalGraph.collect(e, limit)
       else None
     val localResult: Option[DataFrame] = local.flatMap { g =>
       // a pair (s, v) of dense indices as one long
@@ -2939,12 +2909,11 @@ object Algos {
       val edgeKeys = (0 until g.n).flatMap(u => (g.out.off(u) until g.out.off(u + 1))
         .map(k => key(u, g.out.adj(k)))).toArray
       val implied = scala.collection.mutable.HashSet[Long]()
-      // saturate: a force-local caller passes localMaxEdges = MaxValue
-      // and 16 * MaxValue would wrap
+      // saturate: a force-local limit of Long.MaxValue would wrap 16×
       // negative, silently bailing every call to the distributed path
       val pairCap =
-        if (localMaxEdges > Long.MaxValue / 16) Long.MaxValue
-        else 16L * math.max(localMaxEdges, 1L)
+        if (limit > Long.MaxValue / 16) Long.MaxValue
+        else 16L * math.max(limit, 1L)
       var frontier = edgeKeys
       var d = 1
       var drained = false

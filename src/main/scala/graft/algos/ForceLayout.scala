@@ -116,7 +116,8 @@ object ForceLayout {
   /** Returns (id, x, y) after `iters` FA2 rounds.
     *
     * Layout graphs come in two regimes, and like [[Algos.immediateDominators]]
-    * we pick the execution site per regime: at or below `localMax` vertices
+    * we pick the execution site per regime: at or below
+    * [[LocalGraph.Guard.LayoutVertices]] vertices
     * (the reference's own regime — it lays out in-heap arrays) the whole
     * loop runs on driver arrays — one collect, zero per-iteration jobs;
     * above it, the distributed join+grid-centroid path, which survives
@@ -145,7 +146,7 @@ object ForceLayout {
     * starts fresh (the reference's or-defaults do the same on a graph
     * whose meta lost :speed). */
   def run(vertices: DataFrame, edges: DataFrame, iters: Int = 30,
-      cell: Double = 10.0, localMax: Long = 100000,
+      cell: Double = 10.0,
       defaultGravity: Double = 0.0, startIter: Int = 0,
       gridRes: Int = 64): DataFrame = {
     val idc = col(vertices.columns.head).as("id")
@@ -187,7 +188,7 @@ object ForceLayout {
     val vc = pos.count()
     if (vc == 0) return pos.select("id", "x", "y")
 
-    if (vc <= localMax)
+    if (vc <= LocalGraph.replayLimit(vertices.sparkSession, LocalGraph.Guard.LayoutVertices))
       return runLocal(pos, e2, iters, cell, defaultGravity, startIter, gridRes)
 
     var tuning = Tuning(1.0, 1.0, 3500.0 * vc)

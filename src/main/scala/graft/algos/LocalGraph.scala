@@ -1,7 +1,7 @@
 package graft.algos
 
 import org.apache.spark.{FutureAction, SparkException}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import scala.collection.mutable.ArrayBuilder
 
@@ -281,6 +281,58 @@ private[graft] object LocalGraph {
     try job.get() catch { case _: SparkException if over => }
     if (over) None else Some(parts.flatten)
   }
+
+  /** The defaults of the replay guards: the most rows (edges, unless said
+    * otherwise) an operator collects for its driver replay before it takes
+    * its distributed branch instead. Every use of a guard reads its value
+    * through [[replayLimit]]. */
+  object Guard {
+    /** The replays that pay only while fixed per-round latency dominates:
+      * CC, the BFS family (bfsDistances, verticesBetween, the flow-subgraph
+      * extraction), topoLevels and the relaxation family. CC ties by ~165k
+      * edges (sf0.1 local[32], warm: local wins ~3× at 5k edges, ~2× at
+      * 50k); relax: a bigger guard measured slower at sf0.1 (2M weighted
+      * edges: 3.0-5.4 s local against 2.3-3.5 s distributed, the edge
+      * collect costs more than the parallel rounds save); topoLevels
+      * likewise (2.7-3.9 s local against 2.7 s distributed at depth 4). */
+    val RoundLatency = 50000L
+    /** The multi-source tagged BFS of closeness and harmonic centrality:
+      * |sources| · O(E) driver work, below the per-round scheduling floor
+      * on small graphs (q_harmonic at sf0.1: 1.8 s warm down to the scan
+      * cost). */
+    val MultiSource = 200000L
+    /** transitiveReduction, whose replay also holds up to 16× this many
+      * implied pairs before it hands back to the distributed rounds. */
+    val Reduction = 500000L
+    /** Borůvka's whole-graph Kruskal and the Kruskal finish its crossing
+      * set shrinks into. */
+    val Kruskal = 1000000L
+    /** The driver-collect convention of the fixed-round and peel replays
+      * (HITS, PPR, walks, LPA, kCore, coreNumbers, kTruss, MIS, coloring,
+      * matching), SCC's whole-graph and residual Tarjan, and incrementalCC's
+      * component-edge collect and assignment broadcast: 2M pairs, ~32 MB
+      * of long pairs on the driver. */
+    val Collect = 2000000L
+    /** The biconnectivity trio's low-link walk: DFS-order-sequential, so
+      * some single walk is unavoidable; past this the walk runs per
+      * connected component inside the executors. */
+    val LowLink = 3000000L
+    /** ForceLayout, in VERTICES: its driver arrays run the whole layout
+      * loop with no per-iteration job. */
+    val LayoutVertices = 100000L
+  }
+
+  /** The session key that sets every replay guard at once. */
+  val ReplayLimitKey = "spark.graft.replayLimit"
+
+  /** The guard a replay uses in `session`: its [[ReplayLimitKey]] when set,
+    * else `default` (one of [[Guard]]'s). 0 sends every operator down its
+    * distributed branch; a value that is no non-negative long throws. */
+  def replayLimit(session: SparkSession, default: Long): Long =
+    session.conf.getOption(ReplayLimitKey).fold(default) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$ReplayLimitKey must be a non-negative long, got '$v'"))
+    }
 
   /** The prelude of every guarded replay: the graph of `pairs`, a frame of
     * (from, to) or (from, to, weight) long columns, if it holds at most

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algos.Algos
+import TestSpark.withReplayLimit
 
 /** Algorithm semantics on hand-built graphs with known answers — the
   * genuinely-cyclic cases the TPC-H FK DAG can't exercise. */
@@ -286,8 +287,8 @@ class AlgosSpec extends AnyFunSuite {
         edges: org.apache.spark.sql.DataFrame): Unit = {
       val local = toMap(graft.algos.ForceLayout.run(vs, edges, iters = iters,
         defaultGravity = grav, startIter = startIter))
-      val dist = toMap(graft.algos.ForceLayout.run(vs, edges, iters = iters,
-        defaultGravity = grav, startIter = startIter, localMax = 0))
+      val dist = toMap(withReplayLimit(0L)(graft.algos.ForceLayout.run(vs, edges, iters = iters,
+        defaultGravity = grav, startIter = startIter)))
       local.foreach { case (id, (lx, ly)) =>
         val (dx2, dy2) = dist(id)
         assert(math.abs(lx - dx2) <= 1e-6 * math.max(1.0, math.abs(lx)), s"x($id) @$startIter")
@@ -337,11 +338,11 @@ class AlgosSpec extends AnyFunSuite {
     assert(Algos.brandesBetweenness(noEdges, vs).as[(Long, Double)].collect().isEmpty)
   }
 
-  test("SCC guard: residualMax=0 forces the GraphX fallback, same components") {
+  test("SCC guard: a replay limit of 0 forces the GraphX fallback, same components") {
     val vs = Seq(1L, 2L, 3L, 4L).toDF("id")
     val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
     val a = Algos.stronglyConnectedComponents(vs, es).as[(Long, Long)].collect().toMap
-    val b = Algos.stronglyConnectedComponents(vs, es, residualMax = 0L)
+    val b = withReplayLimit(0L)(Algos.stronglyConnectedComponents(vs, es))
       .as[(Long, Long)].collect().toMap
     assert(a === b)
   }
@@ -355,7 +356,7 @@ class AlgosSpec extends AnyFunSuite {
     val vs = Seq(1L, 2L).toDF("id")
     val es = Seq((1L, 3L), (3L, 2L), (2L, 1L)).toDF("src", "dst")
     val fast = Algos.stronglyConnectedComponents(vs, es).as[(Long, Long)].collect().toMap
-    val dist = Algos.stronglyConnectedComponents(vs, es, residualMax = 0L)
+    val dist = withReplayLimit(0L)(Algos.stronglyConnectedComponents(vs, es))
       .as[(Long, Long)].collect().toMap
     assert(fast === dist)
     assert(fast(1L) === fast(2L)) // one SCC, not two singletons
@@ -385,8 +386,8 @@ class AlgosSpec extends AnyFunSuite {
         (1L, 2L, Some(1L)), (2L, 3L, Some(1L)), (3L, 5L, Some(1L)), (2L, 5L, None), (3L, 7L, None))
       .toDF("src", "dst", "w")
     Seq(50000L, 0L).foreach { guard =>
-      val r = Algos.weightedShortestPathWithParent(es, Seq(1L).toDF("id"), col("w"),
-          localMaxEdges = guard)
+      val r = withReplayLimit(guard)(
+          Algos.weightedShortestPathWithParent(es, Seq(1L).toDF("id"), col("w")))
         .collect().map(x => x.getLong(0) -> ((x.getLong(1), if (x.isNullAt(2)) -1L else x.getLong(2)))).toMap
       assert(r.keySet === Set(1L, 2L, 3L, 5L, 9L), s"guard $guard")
       assert(r(1L) === ((0L, -1L))) // source: null parent
@@ -406,7 +407,7 @@ class AlgosSpec extends AnyFunSuite {
       val sources = Seq(1L).toDF("id")
       // both branches of bfsDistances: the driver walk and the rounds
       for (guard <- Seq(50000L, 0L)) {
-        def run() = (Algos.bfsDistances(es, sources, localMaxEdges = guard)
+        def run() = (withReplayLimit(guard)(Algos.bfsDistances(es, sources))
             .as[(Long, Int)].collect().toSet,
           Algos.reachableEdges(1L, es).as[(Long, Long)].collect().toSet)
         val sc = spark.sparkContext
@@ -434,6 +435,18 @@ class AlgosSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap === Map(-1L -> 0L, -2L -> 3L, -3L -> 1L, -4L -> 4L))
   }
 
+  test("weightedShortestPath: a distributed relaxation round takes at most 5 jobs") {
+    // a unit-cost 40-chain improves one vertex a round, so maxIter 4 runs
+    // exactly one round more than maxIter 3
+    val chain = (1L to 40L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "w")
+    def jobsAt(maxIter: Int) = TestSpark.jobs(withReplayLimit(0L)(
+      Algos.weightedShortestPath(chain, Seq(1L).toDF("id"), col("w"), maxIter = maxIter)
+        .count()))._2
+    val perRound = jobsAt(4) - jobsAt(3)
+    info(s"$perRound jobs per round")
+    assert(perRound <= 5, s"$perRound jobs per round")
+  }
+
   test("weightedShortestPath reverse follows dst→src with edge costs") {
     val es = Seq((2L, 1L, 5L), (3L, 2L, 7L)).toDF("src", "dst", "w")
     val d = Algos.weightedShortestPath(es, Seq(1L).toDF("id"), col("w"), reverse = true)
@@ -450,9 +463,9 @@ class AlgosSpec extends AnyFunSuite {
         accept = col("id").isin(2L, 4L, 5L))
       .as[(Long, Long)].collect().toMap
     assert(r === Map(2L -> 5L, 4L -> 5L))
-    // localMaxEdges = 0 forces the distributed relaxation: identical set
-    assert(Algos.cheapestAccepted(es, Seq(1L).toDF("id"), col("w"),
-        accept = col("id").isin(2L, 4L, 5L), localMaxEdges = 0L)
+    // a replay limit of 0 forces the distributed relaxation: identical set
+    assert(withReplayLimit(0L)(Algos.cheapestAccepted(es, Seq(1L).toDF("id"), col("w"),
+        accept = col("id").isin(2L, 4L, 5L)))
       .as[(Long, Long)].collect().toMap === r)
   }
 
@@ -461,11 +474,11 @@ class AlgosSpec extends AnyFunSuite {
     // both branches: the driver walk and the distributed extraction
     for (guard <- Seq(50000L, 0L)) {
       val ex = intercept[IllegalStateException] {
-        Algos.collectReachable(1L, es, maxEdges = 1L, localMaxEdges = guard)
+        withReplayLimit(guard)(Algos.collectReachable(1L, es, maxEdges = 1L))
       }
       assert(ex.getMessage.contains("maxEdges"), s"guard $guard")
       // under the guard it still works
-      assert(Algos.collectReachable(1L, es, maxEdges = 10L, localMaxEdges = guard).length === 2,
+      assert(withReplayLimit(guard)(Algos.collectReachable(1L, es, maxEdges = 10L)).length === 2,
         s"guard $guard")
     }
   }
@@ -474,7 +487,7 @@ class AlgosSpec extends AnyFunSuite {
     def both(es: org.apache.spark.sql.DataFrame, srcs: org.apache.spark.sql.DataFrame,
         maxIter: Int = 1000): Map[Long, Int] = {
       val Seq(local, rounds) = Seq(50000L, 0L).map(g =>
-        Algos.bfsDistances(es, srcs, maxIter = maxIter, localMaxEdges = g)
+        withReplayLimit(g)(Algos.bfsDistances(es, srcs, maxIter = maxIter))
           .as[(Long, Int)].collect())
       assert(local.length === local.map(_._1).distinct.length, "one row per vertex")
       assert(local.sorted.toSeq === rounds.sorted.toSeq)
@@ -503,8 +516,8 @@ class AlgosSpec extends AnyFunSuite {
     assert(ints.as[(Int, Int)].collect().toMap === Map(1 -> 0, 2 -> 1, 3 -> 2))
     // long ids: the driver walk emits the distributed rounds' schema
     for (guard <- Seq(50000L, 0L))
-      assert(types(Algos.bfsDistances(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("id"),
-          localMaxEdges = guard)) === Seq("id" -> LongType, "dist" -> IntegerType), s"guard $guard")
+      assert(types(withReplayLimit(guard)(Algos.bfsDistances(Seq((1L, 2L)).toDF("src", "dst"),
+          Seq(1L).toDF("id")))) === Seq("id" -> LongType, "dist" -> IntegerType), s"guard $guard")
   }
 
   test("collectReachable: the driver walk and the distributed extraction agree, as sets") {
@@ -515,10 +528,10 @@ class AlgosSpec extends AnyFunSuite {
         pairs.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst"))) {
       val want = pairs.filter(_._1 != 5L).toSet
       for (guard <- Seq(50000L, 0L)) {
-        val got = Algos.collectReachable(1L, es, localMaxEdges = guard)
+        val got = withReplayLimit(guard)(Algos.collectReachable(1L, es))
         assert(got.length === want.size && got.toSet === want, s"guard $guard")
         // an entry on no edge reaches nothing
-        assert(Algos.collectReachable(9L, es, localMaxEdges = guard).isEmpty, s"guard $guard")
+        assert(withReplayLimit(guard)(Algos.collectReachable(9L, es)).isEmpty, s"guard $guard")
       }
     }
   }
@@ -539,8 +552,8 @@ class AlgosSpec extends AnyFunSuite {
       .toDF("src", "dst")
     val vs = es.select(col("src").as("id")).unionAll(es.select(col("dst").as("id")))
       .dropDuplicates("id")
-    // localMaxEdges = 0 keeps this an ACTUAL Pregel run, not the local replay
-    val pregel = Algos.connectedComponents(vs, es, localMaxEdges = 0L)
+    // a replay limit of 0 keeps this an ACTUAL Pregel run, not the local replay
+    val pregel = withReplayLimit(0L)(Algos.connectedComponents(vs, es))
       .as[(Long, Long)].collect().toMap
     val alt = Algos.ccAlternating(es).as[(Long, Long)].collect().toMap
     assert(alt === pregel)
@@ -610,6 +623,21 @@ class AlgosSpec extends AnyFunSuite {
     assert(cc3.as[(Long, Long)].collect().toMap === full3.as[(Long, Long)].collect().toMap)
   }
 
+  test("incrementalCC: the forced full recompute matches the delta path and one-shot CC") {
+    // a replay limit of 0 fails every component-edge collect below, so each
+    // batch takes the full recompute, and its CC the Pregel branch
+    val b1 = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
+    val b2 = Seq((2L, 3L), (10L, 11L)).toDF("src", "dst")
+    val empty = Seq.empty[(Long, Long)].toDF("id", "component")
+    def twoBatches() =
+      Algos.incrementalCC(Algos.incrementalCC(empty, b1).localCheckpoint(true), b2)
+        .as[(Long, Long)].collect().toMap
+    val forced = withReplayLimit(0L)(twoBatches())
+    assert(forced === twoBatches())
+    assert(forced === Algos.connectedComponents(Seq(1L, 2L, 3L, 4L, 10L, 11L).toDF("id"),
+      b1.unionAll(b2)).as[(Long, Long)].collect().toMap)
+  }
+
   test("incrementalCC: non-assignment prevs fall back to the full-recompute semantics") {
     // the delta fast path requires prev to BE an assignment; each violation
     // class must land on the old path, whose output (full CC over
@@ -650,20 +678,21 @@ class AlgosSpec extends AnyFunSuite {
     // and triangle 10-11-12 (no articulation; one BCC)
     val es = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L)).toDF("src", "dst")
     val artDriver = Algos.articulationPoints(es).as[Long].collect().toSet
-    val artDist = Algos.articulationPoints(es, localMaxEdges = 0L).as[Long].collect().toSet
+    val artDist = withReplayLimit(0L)(Algos.articulationPoints(es)).as[Long].collect().toSet
     assert(artDriver === Set(2L))
-    assert(artDist === artDriver) // localMaxEdges=0 forces the guard to trip
+    assert(artDist === artDriver) // a replay limit of 0 forces the guard to trip
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.select(least(col("src"), col("dst")), greatest(col("src"), col("dst")), col("component"))
         .as[(Long, Long, Long)].collect().toSet
     val bccDriver = norm(Algos.biconnectedComponents(es))
-    val bccDist = norm(Algos.biconnectedComponents(es, localMaxEdges = 0L))
+    val bccDist = norm(withReplayLimit(0L)(Algos.biconnectedComponents(es)))
     assert(bccDriver === Set((1L, 2L, 1L), (2L, 3L, 2L),
       (10L, 11L, 10L), (11L, 12L, 10L), (10L, 12L, 10L)))
     assert(bccDist === bccDriver)
     val bridgesDriver = Algos.bridges(es).as[(Long, Long)].collect().toSet
     assert(bridgesDriver === Set((1L, 2L), (2L, 3L)))
-    assert(Algos.bridges(es, localMaxEdges = 0L).as[(Long, Long)].collect().toSet === bridgesDriver)
+    assert(withReplayLimit(0L)(Algos.bridges(es)).as[(Long, Long)].collect().toSet
+      === bridgesDriver)
   }
 
   test("brandesBetweenness: star, path, and split-sigma diamond closed forms") {
@@ -718,12 +747,12 @@ class AlgosSpec extends AnyFunSuite {
     val b = Algos.labelPropagationSync(vs.repartition(3), es.repartition(5), iters = 4)
       .as[(Long, Long)].collect().toSet
     assert(a === b)
-    // localMaxEdges = 0 forces the distributed rounds: the guarded local
+    // a replay limit of 0 forces the distributed rounds: the guarded local
     // replay must be bit-identical, including duplicate-edge weighting
     val dup = es.unionByName(Seq((2L, 1L), (2L, 1L)).toDF("src", "dst"))
     for (iters <- Seq(1, 2, 4)) {
       val local = Algos.labelPropagationSync(vs, dup, iters).as[(Long, Long)].collect().toMap
-      val dist = Algos.labelPropagationSync(vs, dup, iters, localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.labelPropagationSync(vs, dup, iters))
         .as[(Long, Long)].collect().toMap
       assert(local === dist, s"iters=$iters")
     }
@@ -756,7 +785,7 @@ class AlgosSpec extends AnyFunSuite {
     val re = Algos.deterministicWalks(es.repartition(7), starts, steps = 5)
       .select("walker", "step", "v").as[(Long, Int, Long)].collect().toSet
     assert(re === walks)
-    // localMaxEdges = 0 forces the distributed hops: the guarded local
+    // a replay limit of 0 forces the distributed hops: the guarded local
     // replay must be bit-identical on a multi-walker, duplicate-edge graph
     val multi = Seq((1L, 2L), (1L, 3L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 1L))
       .toDF("src", "dst")
@@ -764,7 +793,7 @@ class AlgosSpec extends AnyFunSuite {
     for (steps <- Seq(0, 1, 4)) {
       val local = Algos.deterministicWalks(multi, starts3, steps)
         .select("walker", "step", "v").as[(Long, Int, Long)].collect().toSet
-      val dist = Algos.deterministicWalks(multi, starts3, steps, localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.deterministicWalks(multi, starts3, steps))
         .select("walker", "step", "v").as[(Long, Int, Long)].collect().toSet
       assert(local === dist, s"steps=$steps")
     }
@@ -773,7 +802,7 @@ class AlgosSpec extends AnyFunSuite {
     // then 1 row/step) — the guard must preserve that shape, not "fix" it
     val dupStarts = Seq(1L, 1L).toDF("id")
     val gotDup = Algos.deterministicWalks(es, dupStarts, 2).collect()
-    val gotDupDist = Algos.deterministicWalks(es, dupStarts, 2, localMaxEdges = 0L).collect()
+    val gotDupDist = withReplayLimit(0L)(Algos.deterministicWalks(es, dupStarts, 2)).collect()
     assert(gotDup.length === gotDupDist.length && gotDup.length === 4)
   }
 
@@ -830,14 +859,14 @@ class AlgosSpec extends AnyFunSuite {
     val gotP = Algos.personalizedPageRank(es.toDF("src", "dst").repartition(7), seeds, 3)
       .as[(Long, Long)].collect().toMap
     assert(gotP === ref(es, Set(1L), 3))
-    // localMaxEdges = 0 forces the distributed rounds: the guarded local
+    // a replay limit of 0 forces the distributed rounds: the guarded local
     // replay must be bit-identical to them on every (iters, seed set)
     for (iters <- Seq(1, 3, 5); seedIds <- Seq(Seq(1L), Seq(1L, 3L), Seq(4L, 9L))) {
       val sdf = seedIds.toDF("id")
       val local = Algos.personalizedPageRank(es.toDF("src", "dst"), sdf, iters)
         .as[(Long, Long)].collect().toMap
-      val dist = Algos.personalizedPageRank(es.toDF("src", "dst"), sdf, iters,
-        localMaxEdges = 0L).as[(Long, Long)].collect().toMap
+      val dist = withReplayLimit(0L)(Algos.personalizedPageRank(es.toDF("src", "dst"), sdf, iters))
+        .as[(Long, Long)].collect().toMap
       assert(local === dist, s"iters=$iters seeds=$seedIds")
     }
     // duplicate seed rows take the distributed path (bag semantics): the
@@ -845,8 +874,9 @@ class AlgosSpec extends AnyFunSuite {
     val dupSeeds = Seq(1L, 1L).toDF("id")
     val gotDup = Algos.personalizedPageRank(es.toDF("src", "dst"), dupSeeds, 2)
       .as[(Long, Long)].collect().toMap
-    val gotDupDist = Algos.personalizedPageRank(es.toDF("src", "dst"), dupSeeds, 2,
-      localMaxEdges = 0L).as[(Long, Long)].collect().toMap
+    val gotDupDist = withReplayLimit(0L)(
+        Algos.personalizedPageRank(es.toDF("src", "dst"), dupSeeds, 2))
+      .as[(Long, Long)].collect().toMap
     assert(gotDup === gotDupDist)
   }
 
@@ -956,10 +986,10 @@ class AlgosSpec extends AnyFunSuite {
     val gotM = Algos.kTruss(messy, k = 4)
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(gotM === got4)
-    // localMaxEdges = 0 forces the distributed per-round recompute; the
+    // a replay limit of 0 forces the distributed per-round recompute; the
     // default takes the local incremental peel — identical including
     // supports (unique-fixpoint argument)
-    val dist4 = Algos.kTruss(es.toDF("src", "dst"), k = 4, localMaxEdges = 0L)
+    val dist4 = withReplayLimit(0L)(Algos.kTruss(es.toDF("src", "dst"), k = 4))
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(dist4 === got4)
   }
@@ -980,7 +1010,7 @@ class AlgosSpec extends AnyFunSuite {
     for (k <- Seq(3, 4, 5, 6)) {
       val loc = Algos.kTruss(es, k)
         .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
-      val dist = Algos.kTruss(es, k, localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.kTruss(es, k))
         .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
       assert(dist === loc, s"k=$k regimes disagree")
     }
@@ -1023,12 +1053,12 @@ class AlgosSpec extends AnyFunSuite {
     // the distributed contraction path (guard disabled) returns the SAME
     // unique forest as the guarded Kruskal finish — on the chain AND on a
     // denser deterministic graph with chords and ties
-    assert(Algos.boruvkaForest(chain.toDF("src", "dst", "w"), localMaxEdges = 0L)
+    assert(withReplayLimit(0L)(Algos.boruvkaForest(chain.toDF("src", "dst", "w")))
       .as[(Long, Long, Long)].collect().toSet === got)
     val dense = (1L to 60L).flatMap(i =>
       Seq((i, i % 60 + 1, (i * 37) % 11), (i, (i * 7) % 60 + 1, (i * 13) % 11)))
     val df = dense.toDF("src", "dst", "w")
-    assert(Algos.boruvkaForest(df, localMaxEdges = 0L)
+    assert(withReplayLimit(0L)(Algos.boruvkaForest(df))
       .as[(Long, Long, Long)].collect().toSet
       === Algos.boruvkaForest(df).as[(Long, Long, Long)].collect().toSet)
   }
@@ -1079,65 +1109,65 @@ class AlgosSpec extends AnyFunSuite {
 
   test("hash-priority loops: guarded local replay == distributed rounds (MIS, coloring, matching)") {
     // a deterministic pseudo-random graph with hubs, chords, and ties;
-    // localMaxEdges = 0 forces the distributed loop, default takes the
+    // a replay limit of 0 forces the distributed loop, default takes the
     // local replay — the answers must be BIT-identical (same md5 rounds)
     val es = ((1L to 80L).map(i => (i, i % 80 + 1)) ++
       (1L to 80L).map(i => (i, (i * 13) % 80 + 1)) ++
       (1L to 20L).map(i => (i, 81L))).toDF("src", "dst")
     assert(Algos.maximalIndependentSet(es).as[Long].collect().toSet
-      === Algos.maximalIndependentSet(es, localMaxEdges = 0L).as[Long].collect().toSet)
+      === withReplayLimit(0L)(Algos.maximalIndependentSet(es)).as[Long].collect().toSet)
     assert(Algos.jpColoring(es, maxColors = 64).as[(Long, Int)].collect().toMap
-      === Algos.jpColoring(es, maxColors = 64, localMaxEdges = 0L)
+      === withReplayLimit(0L)(Algos.jpColoring(es, maxColors = 64))
         .as[(Long, Int)].collect().toMap)
     assert(Algos.maximalMatching(es).as[(Long, Long)].collect().toSet
-      === Algos.maximalMatching(es, localMaxEdges = 0L).as[(Long, Long)].collect().toSet)
+      === withReplayLimit(0L)(Algos.maximalMatching(es)).as[(Long, Long)].collect().toSet)
     // same for the unique-fixpoint peel and the exact integer recurrence
     assert(Algos.kCore(es, k = 3).as[(Long, Long)].collect().toSet
-      === Algos.kCore(es, k = 3, localMaxEdges = 0L).as[(Long, Long)].collect().toSet)
+      === withReplayLimit(0L)(Algos.kCore(es, k = 3)).as[(Long, Long)].collect().toSet)
     val vs = es.select(col("src").as("id")).unionAll(es.select(col("dst").as("id"))).distinct()
     assert(Algos.hits(vs, es, iters = 3).as[(Long, Long, Long)].collect().toSet
-      === Algos.hits(vs, es, iters = 3, localMaxEdges = 0L)
+      === withReplayLimit(0L)(Algos.hits(vs, es, iters = 3))
         .as[(Long, Long, Long)].collect().toSet)
     // duplicate edges multiply HITS contributions identically in both forms
     val dup = es.unionAll(es.limit(40))
     assert(Algos.hits(vs, dup, iters = 2).as[(Long, Long, Long)].collect().toSet
-      === Algos.hits(vs, dup, iters = 2, localMaxEdges = 0L)
+      === withReplayLimit(0L)(Algos.hits(vs, dup, iters = 2))
         .as[(Long, Long, Long)].collect().toSet)
   }
 
   test("peel caps on the distributed rounds: a pool one round short of done throws") {
-    // localMaxEdges = 0 forces the distributed rounds; every input below
+    // a replay limit of 0 forces the distributed rounds; every input below
     // needs a second round, so maxRounds = 1 must fail loudly
     def msg(f: => Any): String = intercept[IllegalStateException](f).getMessage
     val path5 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
-    assert(msg(Algos.kCore(path5, k = 2, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.kCore(path5, k = 2, maxRounds = 1)))
       === "kCore did not converge within 1 rounds")
-    assert(Algos.kCore(path5, k = 2, maxRounds = 2, localMaxEdges = 0L).isEmpty)
+    assert(withReplayLimit(0L)(Algos.kCore(path5, k = 2, maxRounds = 2)).isEmpty)
     val triPendant = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
-    assert(msg(Algos.kTruss(triPendant, k = 3, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.kTruss(triPendant, k = 3, maxRounds = 1)))
       === "kTruss did not converge within 1 rounds")
-    assert(Algos.kTruss(triPendant, k = 3, maxRounds = 2, localMaxEdges = 0L)
+    assert(withReplayLimit(0L)(Algos.kTruss(triPendant, k = 3, maxRounds = 2))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       === Set((1L, 2L), (1L, 3L), (2L, 3L)))
     val path40 = (1L to 40L).map(i => (i, i + 1)).toDF("src", "dst")
-    assert(msg(Algos.maximalIndependentSet(path40, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.maximalIndependentSet(path40, maxRounds = 1)))
       === "MIS did not drain within 1 rounds")
-    assert(msg(Algos.jpColoring(path40, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.jpColoring(path40, maxRounds = 1)))
       === "jpColoring did not drain within 1 rounds")
-    assert(msg(Algos.maximalMatching(path40, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.maximalMatching(path40, maxRounds = 1)))
       === "matching did not drain within 1 rounds")
   }
 
   test("coreNumbers and boruvkaForest caps on the distributed rounds throw") {
-    // localMaxEdges = 0 forces the distributed rounds; both inputs need a
+    // a replay limit of 0 forces the distributed rounds; both inputs need a
     // second round, so maxRounds = 1 must fail loudly
     def msg(f: => Any): String = intercept[IllegalStateException](f).getMessage
     val path8 = (1L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
-    assert(msg(Algos.coreNumbers(path8, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.coreNumbers(path8, maxRounds = 1)))
       === "coreNumbers h-index iteration did not converge within 1 rounds")
     val chain16 = (1L to 15L).map(i => (i, i + 1, if (i % 2 == 0) 2L else 1L))
       .toDF("src", "dst", "w")
-    assert(msg(Algos.boruvkaForest(chain16, maxRounds = 1, localMaxEdges = 0L))
+    assert(msg(withReplayLimit(0L)(Algos.boruvkaForest(chain16, maxRounds = 1)))
       === "boruvkaForest did not converge within 1 rounds")
   }
 
@@ -1217,7 +1247,7 @@ class AlgosSpec extends AnyFunSuite {
       === Set((1L, 2L), (2L, 3L), (3L, 4L)))
     // force-local convention: guard = MaxValue must SATURATE the 16x pair
     // cap (an overflowed cap would silently bail every call distributed)
-    assert(Algos.transitiveReduction(es, localMaxEdges = Long.MaxValue)
+    assert(withReplayLimit(Long.MaxValue)(Algos.transitiveReduction(es))
       .as[(Long, Long)].collect().toSet === Set((1L, 2L), (2L, 3L), (3L, 4L)))
     // exceeding maxDepth fails loudly rather than silently truncating
     intercept[IllegalStateException] {
@@ -1232,13 +1262,12 @@ class AlgosSpec extends AnyFunSuite {
     }
     // both loud failures hold on the DISTRIBUTED path too (guard = 0)
     intercept[IllegalStateException] {
-      Algos.transitiveReduction(
+      withReplayLimit(0L)(Algos.transitiveReduction(
         (1L to 12L).sliding(2).map(p => (p.head, p.last)).toSeq.toDF("src", "dst"),
-        maxDepth = 3, localMaxEdges = 0L)
+        maxDepth = 3))
     }
     intercept[IllegalStateException] {
-      Algos.transitiveReduction(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"),
-        localMaxEdges = 0L)
+      withReplayLimit(0L)(Algos.transitiveReduction(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")))
     }
   }
 
@@ -1251,9 +1280,9 @@ class AlgosSpec extends AnyFunSuite {
     val chain = (1000L to 1020L).sliding(2).map(p => (p.head, p.last)).toSeq
     val shortcut = Seq((1L, 1002L)) // implied via 1 -> 1000 -> 1001 -> 1002
     val es = (srcs ++ chain ++ shortcut).toDF("src", "dst")
-    val local = Algos.transitiveReduction(es, maxDepth = 30, localMaxEdges = 621L)
+    val local = withReplayLimit(621L)(Algos.transitiveReduction(es, maxDepth = 30))
       .as[(Long, Long)].collect().toSet
-    val dist = Algos.transitiveReduction(es, maxDepth = 30, localMaxEdges = 0L)
+    val dist = withReplayLimit(0L)(Algos.transitiveReduction(es, maxDepth = 30))
       .as[(Long, Long)].collect().toSet
     assert(local === dist)
     assert(!local.contains((1L, 1002L)) && local.contains((1L, 1000L)))
@@ -1262,7 +1291,7 @@ class AlgosSpec extends AnyFunSuite {
 
   test("taggedBfs guarded local replay is row-identical to the distributed rounds") {
     // deterministic pseudo-random multigraph with cycles, dead ends, and
-    // unreachable islands; localMaxEdges = 0 forces the distributed path
+    // unreachable islands; a replay limit of 0 forces the distributed path
     // (the hits-spec convention) — distances are unique facts, so the two
     // paths must agree EXACTLY, harmonic and closeness both
     val es = (1 to 300).map { i =>
@@ -1275,12 +1304,12 @@ class AlgosSpec extends AnyFunSuite {
     for (directed <- Seq(false, true)) {
       val loc = Algos.harmonicCentrality(es, srcs, directed = directed)
         .as[(Long, Long, Long)].collect().toSet
-      val dist = Algos.harmonicCentrality(es, srcs, directed = directed, localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.harmonicCentrality(es, srcs, directed = directed))
         .as[(Long, Long, Long)].collect().toSet
       assert(loc === dist, s"harmonic parity broke at directed=$directed")
       val locC = Algos.closenessCentrality(es, srcs, directed = directed)
         .as[(Long, Long, Long, Long)].collect().toSet
-      val distC = Algos.closenessCentrality(es, srcs, directed = directed, localMaxEdges = 0L)
+      val distC = withReplayLimit(0L)(Algos.closenessCentrality(es, srcs, directed = directed))
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(locC === distC, s"closeness parity broke at directed=$directed")
     }

@@ -1,12 +1,10 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algos.LocalGraph
+import TestSpark.{jobs, withReplayLimit}
 
 /** The driver graph's own contract: what the replay parity specs only see
   * through their answers. */
@@ -58,30 +56,20 @@ class LocalGraphSpec extends AnyFunSuite {
     assert(LocalGraph.collect(es, 10L, Seq(Some(1L), None).toDF("id") -> 10L).isEmpty)
   }
 
-  /** `body`'s result and the Spark jobs it ran, counted in a job group of
-    * its own; a sentinel job in another group flushes the listener bus,
-    * which delivers events in order. */
-  private def jobs[A](body: => A): (A, Int) = {
-    val sc = TestSpark.spark.sparkContext
-    val started = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.properties.getProperty("spark.jobGroup.id") match {
-          case "collect-spec" => started.incrementAndGet()
-          case "collect-spec-sentinel" => flushed.countDown()
-          case _ =>
-        }
+  test("replayLimit: the session key overrides every default; a bad value names the key") {
+    val spark = TestSpark.spark
+    val key = LocalGraph.ReplayLimitKey
+    assert(LocalGraph.replayLimit(spark, 7L) === 7L)
+    assert(withReplayLimit(0L)(LocalGraph.replayLimit(spark, 7L)) === 0L)
+    assert(withReplayLimit(Long.MaxValue)(LocalGraph.replayLimit(spark, 7L)) === Long.MaxValue)
+    for (bad <- Seq("-1", "2M", "")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](LocalGraph.replayLimit(spark, 7L))
+        assert(e.getMessage.contains(key), bad)
+      } finally spark.conf.unset(key)
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("collect-spec", "collect-spec")
-      val a = try body finally sc.clearJobGroup()
-      sc.setJobGroup("collect-spec-sentinel", "collect-spec-sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS))
-      (a, started.get)
-    } finally sc.removeSparkListener(listener)
+    assert(LocalGraph.replayLimit(spark, 7L) === 7L)
   }
 
   test("collectAtMost: one job over every partition; None only past the limit") {

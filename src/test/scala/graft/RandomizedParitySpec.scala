@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algos.Algos
+import TestSpark.withReplayLimit
 
 /** Randomized cross-checks: each distributed algorithm against a naive
   * driver-side reference implementation over seeded random graphs/documents
@@ -64,8 +65,8 @@ class RandomizedParitySpec extends AnyFunSuite {
         .as[(Long, Int)].collect().toMap
       assert(got === dist, s"seed=$seed es=$es")
       // guard = 0 forces the distributed rounds: both regimes match the model
-      val distributed = Algos.bfsDistances(es.toDF("src", "dst"), sources.toDF("id"),
-          localMaxEdges = 0L)
+      val distributed =
+        withReplayLimit(0L)(Algos.bfsDistances(es.toDF("src", "dst"), sources.toDF("id")))
         .as[(Long, Int)].collect().toMap
       assert(distributed === dist, s"seed=$seed distributed es=$es")
     }
@@ -84,7 +85,7 @@ class RandomizedParitySpec extends AnyFunSuite {
       }
       val want = es.filter(e => seen(e._1)).toSet
       for (guard <- Seq(50000L, 0L)) {
-        val got = Algos.collectReachable(entry, es.toDF("src", "dst"), localMaxEdges = guard)
+        val got = withReplayLimit(guard)(Algos.collectReachable(entry, es.toDF("src", "dst")))
         assert(got.length === got.distinct.length, s"seed=$seed guard=$guard duplicates")
         assert(got.toSet === want, s"seed=$seed guard=$guard es=$es")
       }
@@ -105,8 +106,8 @@ class RandomizedParitySpec extends AnyFunSuite {
         .as[(Long, Int)].collect().toMap
       assert(got === lvl, s"seed=$seed es=$es")
       // guard = 0 forces the distributed rounds: both regimes match the model
-      val dist = Algos.topoLevels(vs.toDF("id"), es.toDF("src", "dst"), maxIter,
-          localMaxEdges = 0L)
+      val dist =
+        withReplayLimit(0L)(Algos.topoLevels(vs.toDF("id"), es.toDF("src", "dst"), maxIter))
         .as[(Long, Int)].collect().toMap
       assert(dist === lvl, s"seed=$seed distributed es=$es")
     }
@@ -135,8 +136,8 @@ class RandomizedParitySpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(got === dist, s"seed=$seed es=$es")
       // guard = 0 forces the distributed rounds: both regimes match the model
-      assert(Algos.weightedShortestPath(es.toDF("src", "dst", "w"),
-          sources.toDF("id"), col("w"), localMaxEdges = 0L)
+      assert(withReplayLimit(0L)(Algos.weightedShortestPath(es.toDF("src", "dst", "w"),
+          sources.toDF("id"), col("w")))
         .as[(Long, Long)].collect().toMap === dist, s"seed=$seed distributed")
       // parent variant: same costs, and every parent is a valid optimal pred
       val withP = Algos.weightedShortestPathWithParent(es.toDF("src", "dst", "w"),
@@ -315,7 +316,7 @@ class RandomizedParitySpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toSet
       assert(got === naive, s"seed=$seed es=$es")
       // guard = 0 forces the distributed loop: both regimes match the model
-      assert(Algos.transitiveReduction(es.toDF("src", "dst"), localMaxEdges = 0L)
+      assert(withReplayLimit(0L)(Algos.transitiveReduction(es.toDF("src", "dst")))
         .as[(Long, Long)].collect().toSet === naive, s"seed=$seed distributed es=$es")
     }
   }
@@ -388,7 +389,7 @@ class RandomizedParitySpec extends AnyFunSuite {
       val naive = naiveCore(es)
       val local = Algos.coreNumbers(es.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
-      val dist = Algos.coreNumbers(es.toDF("src", "dst"), localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.coreNumbers(es.toDF("src", "dst")))
         .as[(Long, Long)].collect().toMap
       assert(local === naive, s"seed=$seed local es=$es")
       assert(dist === naive, s"seed=$seed h-index es=$es")
@@ -401,7 +402,7 @@ class RandomizedParitySpec extends AnyFunSuite {
     assert(Algos.coreNumbers(path.toDF("src", "dst")).as[(Long, Long)].collect().toMap ===
       (1L to 4L).map(_ -> 1L).toMap)
     val pend = k4 :+ ((3L, 9L))
-    assert(Algos.coreNumbers(pend.toDF("src", "dst"), localMaxEdges = 0L)
+    assert(withReplayLimit(0L)(Algos.coreNumbers(pend.toDF("src", "dst")))
       .as[(Long, Long)].collect().toMap ===
       ((0L to 3L).map(_ -> 3L) :+ (9L -> 1L)).toMap)
   }
@@ -411,8 +412,8 @@ class RandomizedParitySpec extends AnyFunSuite {
       val (vs, es) = randomGraph(seed, n = 10, nEdges = 9) // sparse: isolated vertices likely
       val local = Algos.connectedComponents(vs.toDF("id"), es.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
-      val pregel = Algos.connectedComponents(vs.toDF("id"), es.toDF("src", "dst"),
-          localMaxEdges = 0L)
+      val pregel =
+        withReplayLimit(0L)(Algos.connectedComponents(vs.toDF("id"), es.toDF("src", "dst")))
         .as[(Long, Long)].collect().toMap
       assert(local === pregel, s"seed=$seed es=$es")
       // and the naive model: component = min id reachable ignoring direction
@@ -441,8 +442,8 @@ class RandomizedParitySpec extends AnyFunSuite {
       val local = Algos.weightedShortestPath(es.toDF("src", "dst", "w"),
           sources.toDF("id"), col("w"), maxIter = maxIter)
         .as[(Long, Long)].collect().toMap
-      val dist = Algos.weightedShortestPath(es.toDF("src", "dst", "w"),
-          sources.toDF("id"), col("w"), maxIter = maxIter, localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.weightedShortestPath(es.toDF("src", "dst", "w"),
+          sources.toDF("id"), col("w"), maxIter = maxIter))
         .as[(Long, Long)].collect().toMap
       assert(local === dist, s"seed=$seed maxIter=$maxIter es=$es")
     }
@@ -461,8 +462,8 @@ class RandomizedParitySpec extends AnyFunSuite {
     // weighted relaxation: null dst edges relax into a null dist row on the
     // distributed path; the guarded call must return the identical table
     val nullW = Seq((Some(1L), Some(2L), 5L), (Some(2L), None, 7L)).toDF("src", "dst", "w")
-    def relax(guard: Long) = Algos.weightedShortestPath(nullW, Seq(1L).toDF("id"),
-        col("w"), localMaxEdges = guard)
+    def relax(guard: Long) =
+      withReplayLimit(guard)(Algos.weightedShortestPath(nullW, Seq(1L).toDF("id"), col("w")))
       .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0)) -> r.getLong(1)).toMap
     assert(relax(50000L) === relax(0L))
     // string ids: topoLevels' distributed rounds are type-agnostic and must
@@ -484,8 +485,8 @@ class RandomizedParitySpec extends AnyFunSuite {
       val local = Algos.cheapestAccepted(es.toDF("src", "dst", "w"),
           Seq(0L).toDF("id"), col("w"), accept)
         .as[(Long, Long)].collect().toMap
-      val dist = Algos.cheapestAccepted(es.toDF("src", "dst", "w"),
-          Seq(0L).toDF("id"), col("w"), accept, localMaxEdges = 0L)
+      val dist = withReplayLimit(0L)(Algos.cheapestAccepted(es.toDF("src", "dst", "w"),
+          Seq(0L).toDF("id"), col("w"), accept))
         .as[(Long, Long)].collect().toMap
       assert(local === dist, s"seed=$seed es=$es")
     }

@@ -1,20 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.graph.{Descend, PropertyGraph, Traversal}
-
-object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-}
 
 /** Traversal semantics on the reference's own example graph: the job-seekers
   * graph from fermor gremlin_examples_test.clj (bob/stephen applications →
