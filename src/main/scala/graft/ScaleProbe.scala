@@ -241,7 +241,7 @@ object ScaleProbe {
     // LAZY: the 64×-replicated corpus is the sweep's most expensive
     // materialization — a filtered run matching only graph probes (or a
     // typo'd filter dying at the require below) must not pay for it
-    lazy val docs1 = spark.read.parquet(s"$dir/documents.parquet")
+    lazy val docs1 = Tpch.readParquet(spark, s"$dir/documents.parquet")
       .select("doc_id", "text", "source").localCheckpoint(true)
     lazy val docsK = (0 until kk).map(i =>
         docs1.withColumn("doc_id", col("doc_id") + lit(i * 1000000L)))
@@ -306,7 +306,7 @@ object ScaleProbe {
     // per copy (a rotation: norms and within-replica similarity structure
     // preserved, directions spread across cells) so probes measure honest
     // data growth, not an all-duplicates corpus. LAZY like docsK.
-    lazy val emb1 = spark.read.parquet(s"$dir/embeddings.parquet")
+    lazy val emb1 = Tpch.readParquet(spark, s"$dir/embeddings.parquet")
       .select("vec_id", "embedding").localCheckpoint(true)
     def shifted(i: Int): org.apache.spark.sql.Column = {
       val s = i % 64
@@ -353,7 +353,7 @@ object ScaleProbe {
     // events replicas (user_id shifted: k× USERS, per-user history constant)
     // for the funnel/retention analytics probes — both are keyed joins +
     // keyed mins/distincts, so time must track scan volume linearly
-    lazy val ev1 = spark.read.parquet(s"$dir/events.parquet")
+    lazy val ev1 = Tpch.readParquet(spark, s"$dir/events.parquet")
       .select("user_id", "ts", "event_type").localCheckpoint(true)
     lazy val evK = (0 until k).map(i =>
         ev1.withColumn("user_id", col("user_id") + lit(i * 1000000L)))

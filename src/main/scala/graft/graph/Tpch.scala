@@ -1,7 +1,15 @@
 package graft.graph
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Global vertex-id namespacing (the Spark analogue of fermor's kind-graph
   * typed KindId, kind_graph.clj): `vid = kindTag * 10^12 + naturalKey`.
@@ -91,7 +99,39 @@ object Tpch {
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    cached(spark, (dir, name)) { spark.read.parquet(s"$dir/$name.parquet") }
+    cached(spark, (dir, name)) { readParquet(spark, s"$dir/$name.parquet") }
+
+  /** `spark.read.parquet(path)` with its schema read on the driver from one
+    * footer instead of by Spark's one-task schema-merge job (~75 ms a read).
+    * The footer is the one Spark infers from with `mergeSchema` off: a file
+    * is its own; a directory's is its first data file in name order (names
+    * starting with `_` or `.` skipped; a partitioned layout is not
+    * discovered). Spark's own schema in the footer's row metadata wins;
+    * otherwise the parquet schema is converted under a clone of the
+    * session's SQL conf, with nanosecond timestamps read as their raw long
+    * (see [[events]]) — the session conf itself is never written. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val hadoopConf = state.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val top = fs.getFileStatus(p)
+    val file = if (top.isFile) top else fs.listStatus(p)
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .minByOption(_.getPath.getName)
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file at the top level of $path"))
+    val meta = scala.util.Using.resource(
+      ParquetFileReader.open(HadoopInputFile.fromStatus(file, hadoopConf)))(_.getFileMetaData)
+    val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+      .getOrElse {
+        val conf = state.conf.clone()
+        conf.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+        new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema)
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** The compute-dense consumers' view of a payload corpus: same rows,
     * spread across cores when (and only when) the scan is under-split.
@@ -103,9 +143,9 @@ object Tpch {
     payloadTables.get(name) match {
       case None => table(spark, dir, name)
       case Some(q) =>
-        if (!shareScans) spread(spark, spark.read.parquet(s"$dir/$name.parquet"), q)
+        if (!shareScans) spread(spark, readParquet(spark, s"$dir/$name.parquet"), q)
         else tableCache.getOrElseUpdate((spark, dir, name + "#spread"), {
-          val raw = spark.read.parquet(s"$dir/$name.parquet")
+          val raw = readParquet(spark, s"$dir/$name.parquet")
           val df = spread(spark, raw, q)
           if (df eq raw) table(spark, dir, name) // no-op spread: share the plain copy
           else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -113,20 +153,14 @@ object Tpch {
     }
 
   /** events.parquet has shipped with two physical `ts` shapes across
-    * testdata generations: nanosecond timestamps (which Spark's vectorized
-    * reader rejects — read as long nanos and µs-truncate, the same
-    * truncation DuckDB applies) and plain microsecond timestamps (read as
-    * TIMESTAMP_NTZ — cast to the session-UTC timestamp). Dispatch on the
-    * observed schema so either generation loads. */
+    * testdata generations: nanosecond timestamps (which Spark's schema
+    * inference rejects — [[readParquet]]'s schema reads them as long nanos,
+    * µs-truncated here, the same truncation DuckDB applies) and plain
+    * microsecond timestamps (read as TIMESTAMP_NTZ — cast to the
+    * session-UTC timestamp). Dispatch on the observed schema so either
+    * generation loads. */
   def events(spark: SparkSession, dir: String): DataFrame = cached(spark, (dir, "__events")) {
-    // a session-wide write, and it stays one: Spark 4.1's ParquetOptions
-    // has no nanos-as-long read option, and ParquetFileFormat reads this
-    // key from the session conf when the scan is planned and run — after
-    // this method has returned its lazy (or cached) frame, so a set/restore
-    // around the read would not cover the scan. Nor can it move into
-    // SparkEntry.localSession: perfbench's Runner builds its own session.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = readParquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // integer division: `/` would go through double, whose 53-bit
@@ -167,15 +201,31 @@ object Tpch {
       // per-base-table layout whose big branches the guarded frontier
       // broadcasts already avoid shuffling.
       val persisted = g.edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // one label-count pass at load (also pre-warms the persisted union):
-      // exact per-label sizes let every traversal hop broadcast a
-      // measured-small label slice with zero per-query probes — see
-      // PropertyGraph.registerLabelRows for the staleness argument
-      val counts = persisted.groupBy("label").count().collect()
-      PropertyGraph.registerLabelRows(persisted,
-        counts.iterator.map(_.getLong(1)).sum,
-        counts.iterator.filterNot(_.isNullAt(0))
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      // one job at load fills the persisted union (and the table caches
+      // under it) and counts its rows per label: exact per-label sizes let
+      // every traversal hop broadcast a measured-small label slice with zero
+      // per-query probes — see PropertyGraph.registerLabelRows for the
+      // staleness argument. Each partition of a fresh projection counts its
+      // own rows (a groupBy-count is 3 jobs under AQE: cache stage, shuffle
+      // map, result). Never `persisted.queryExecution` itself: once run, its
+      // executed plan would stay alive with the retained graph.
+      val parts = persisted.select("label").queryExecution.toRdd.mapPartitions { rows =>
+        val n = scala.collection.mutable.HashMap.empty[UTF8String, Array[Long]]
+        var total = 0L
+        rows.foreach { r =>
+          total += 1
+          if (!r.isNullAt(0)) {
+            val l = r.getUTF8String(0) // points into a reused row buffer
+            n.get(l) match {
+              case Some(c) => c(0) += 1
+              case None => n(l.clone()) = Array(1L)
+            }
+          }
+        }
+        Iterator((total, n.iterator.map { case (l, c) => l.toString -> c(0) }.toMap))
+      }.collect()
+      PropertyGraph.registerLabelRows(persisted, parts.iterator.map(_._1).sum,
+        parts.iterator.flatMap(_._2).toSeq.groupMapReduce(_._1)(_._2)(_ + _))
       g.copy(edges = persisted)
     })
 
