@@ -64,7 +64,7 @@ object Algos {
     * cast('long') to NULL (silent corruption) and a float would truncate;
     * such inputs stay on the distributed path, which treats them exactly as
     * before the replays existed. */
-  private def integralCols(df: DataFrame, names: String*): Boolean = {
+  private[graft] def integralCols(df: DataFrame, names: String*): Boolean = {
     import org.apache.spark.sql.types._
     names.forall { n =>
       df.schema(n).dataType match {

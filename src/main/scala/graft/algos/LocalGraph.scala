@@ -289,7 +289,9 @@ private[graft] object LocalGraph {
   object Guard {
     /** The replays that pay only while fixed per-round latency dominates:
       * CC, the BFS family (bfsDistances, verticesBetween, the flow-subgraph
-      * extraction), topoLevels and the relaxation family. CC ties by ~165k
+      * extraction), topoLevels, the relaxation family, and Descend's
+      * walk-count outlets (all/deepest acyclic, allWithCycles; the guard
+      * bounds their emitted rows too). CC ties by ~165k
       * edges (sf0.1 local[32], warm: local wins ~3× at 5k edges, ~2× at
       * 50k); relax: a bigger guard measured slower at sf0.1 (2M weighted
       * edges: 3.0-5.4 s local against 2.3-3.5 s distributed, the edge

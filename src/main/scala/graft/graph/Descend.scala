@@ -2,6 +2,9 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuilder
+import graft.algos.{Algos, LocalGraph}
+import graft.algos.LocalGraph.{Guard, replayLimit}
 
 /** Recursive traversal power-tool — the distributed re-expression of fermor's
   * `descend`/`descents` (core.clj:978, descend.clj) and its derived helpers
@@ -23,6 +26,13 @@ import org.apache.spark.sql.functions._
   * k-th level is recomputed O(k) times (quadratic join work). The one count
   * job is also the drain probe and sizes the next frontier broadcast. Level
   * `maxDepth` feeds only the union, so it is neither checkpointed nor counted.
+  *
+  * Small slices replay on the driver: [[all]] and [[deepest]] with
+  * `acyclic`, and [[allWithCycles]] — the outlets whose rows are exactly
+  * walk counts — run on a [[graft.algos.LocalGraph]] below the
+  * [[graft.algos.LocalGraph.Guard.RoundLatency]] guard (two collects and
+  * the action instead of a Spark job per level). [[run]] and every
+  * path-carrying or cycle-cutting outlet always take the level loop.
   */
 object Descend {
   import graft.plans.Scale.{bcastRows, checkpointed, guarded}
@@ -42,10 +52,10 @@ object Descend {
       acyclic: Boolean = false): DataFrame = {
 
     // when the loader registered exact label counts and the traversed slice
-    // is measured-small, hint IT for broadcast: one build (ReusedExchange
-    // shares identical hinted subtrees across the level joins) beats
-    // re-broadcasting a growing frontier per level; the per-level frontier
-    // guard below then stands down
+    // is measured-small, hint IT for broadcast: each level's join probes the
+    // slice map-side instead of shuffling it, and the per-level frontier
+    // guard below stands down. The build is paid once per level — every
+    // level is its own checkpoint job, so no exchange is shared across them
     val eKnownSmall = g.labelRows(labels).exists(_ <= bcastRows)
     val e0 = g.labeledEdges(labels)
     val (from, to) = if (forward) ("src", "dst") else ("dst", "src")
@@ -113,48 +123,97 @@ object Descend {
     * id and depth, plus 8 B per element of a carried path. */
   private[graft] def frontierWidth(pathLen: Int): Long = 16L + 8L * pathLen
 
+  /** The guarded driver replay of the (id, depth) outlets whose rows are
+    * exactly walk counts — no path is cut, so level d holds v once per walk
+    * of d hops from a seed to v. Two guarded collects (the slice's long
+    * pairs, the seed ids) feed a level loop over [[LocalGraph.out]] that
+    * carries one multiplicity per vertex: cnt_0 is the seed multiset and
+    * cnt_{d+1}(v) = Σ_{u→v} cnt_d(u), parallel edges counted, until
+    * `maxDepth` or a drained frontier. `leaves` keeps only the slice's
+    * out-degree-0 vertices ([[deepest]]'s anti-join). One local frame of
+    * the distributed schema (id bigint, depth int); None — take the level
+    * loop — on a slice or seed list over the [[Guard.RoundLatency]] guard,
+    * a null or non-integral id, or more rows to emit than the guard. */
+  private def walkCounts(g: PropertyGraph, start: DataFrame, labels: Seq[String],
+      forward: Boolean, maxDepth: Int, leaves: Boolean): Option[DataFrame] = {
+    val spark = start.sparkSession
+    import spark.implicits._
+    val limit = replayLimit(spark, Guard.RoundLatency)
+    val (from, to) = if (forward) ("src", "dst") else ("dst", "src")
+    if (g.labelRows(labels).exists(_ > limit) || !Algos.integralCols(g.edges, from, to))
+      return None
+    val pairs = g.labeledEdges(labels).select(col(from).cast("long"), col(to).cast("long"))
+    val seedIds = start.select(col(start.columns.head).cast("long"))
+    LocalGraph.collect(pairs, limit, seedIds -> limit).flatMap { case (lg, Seq(seeds)) =>
+      val out = lg.out
+      var cnt = new Array[Long](lg.n)
+      var next = new Array[Long](lg.n)
+      val seedIx = seeds.map(lg.index)
+      seedIx.foreach(cnt(_) += 1L)
+      var frontier = seedIx.distinct
+      val rows = Vector.newBuilder[(Long, Int)]
+      var total = 0L
+      var d = 0
+      try {
+        while (frontier.nonEmpty && total <= limit) {
+          for (v <- frontier if !leaves || out.degree(v) == 0) {
+            total = Math.addExact(total, cnt(v))
+            if (total <= limit) rows ++= Iterator.fill(Math.toIntExact(cnt(v)))((lg.ids(v), d))
+          }
+          val reached = new ArrayBuilder.ofInt
+          if (d < maxDepth) frontier.foreach(u => out.foreach(u) { v =>
+            if (next(v) == 0L) reached += v
+            next(v) = Math.addExact(next(v), cnt(u))
+          })
+          frontier.foreach(cnt(_) = 0L)
+          val t = cnt; cnt = next; next = t
+          frontier = reached.result()
+          d += 1
+        }
+        if (total > limit) None else Some(rows.result().toDF("id", "depth"))
+      } catch { case _: ArithmeticException => None }
+    }
+  }
+
   /** fermor `all`: every element reachable within maxDepth, cycles cut —
     * [[run]]'s one checkpointed level loop with the default controls. Pass
     * `acyclic = true` on DAGs (e.g. FK hierarchies) to skip path
-    * accumulation — same rows, far narrower shuffles. */
+    * accumulation — same rows, far narrower shuffles — and to let a small
+    * slice replay on the driver ([[walkCounts]]). */
   def all(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int, acyclic: Boolean = false): DataFrame =
-    run(g, start, labels, forward, maxDepth, acyclic = acyclic)
-      .select("id", "depth")
+    (if (acyclic) walkCounts(g, start, labels, forward, maxDepth, leaves = false) else None)
+      .getOrElse(run(g, start, labels, forward, maxDepth, acyclic = acyclic).select("id", "depth"))
 
-  /** The anti-join side of [[deepest]]/[[deepestPaths]], broadcast under a
-    * measured guard (guide §3.1): Catalyst pushes the LeftAnti below the
-    * per-level result union, so with a shuffle join the tails distinct
-    * subtree is RE-DERIVED once per level branch with two Exchanges each
-    * (the r11 q_deepest plan audit found it running five times). A
-    * broadcast build is planned per branch too, but ReusedExchange dedups
-    * identical broadcast subtrees at execution (the richclub adjudication)
-    * — one distinct pass, five map-side probes, zero Exchanges. Past the
-    * guard — tails is every non-leaf vertex, |V|-sized in general — the
-    * shuffle join stands. */
+  /** The anti-join side of [[deepest]]/[[deepestPaths]], built ONCE: a
+    * lazy checkpoint of the distinct tails, broadcast when the slice's
+    * registered edge count (>= |tails|) fits the shared row guard (guide
+    * §3.1) — no probe job. Catalyst pushes the LeftAnti below the per-level
+    * result union, so the final action plans one anti-join per level
+    * branch; over the checkpoint (a plain RDD scan) their identical builds
+    * or shuffle sides are one exchange and ReusedExchanges. The checkpoint
+    * is what makes them shared: with the edges cached (Tpch's shareScans),
+    * Spark 4.1 plans every cached scan as a query stage of its own and
+    * reuses no exchange above one, so a distinct over the edges would run
+    * once per branch. Past the guard — tails is every non-leaf vertex,
+    * |V|-sized in general — the shuffle join stands. */
   private def guardedTails(g: PropertyGraph, labels: Seq[String],
       forward: Boolean): DataFrame = {
     val e0 = if (labels.isEmpty) g.edges else g.edges.where(col("label").isin(labels: _*))
     val tails = e0.select(col(if (forward) "src" else "dst").as("id")).distinct()
-    // |tails| <= the slice's registered edge count, so a loader-counted
-    // small slice broadcasts with NO probe — the per-branch anti-joins
-    // become map-side probes of one reused build. Without counts: lazy
-    // checkpoint, NOT a limited-count size probe — the probe is itself a
-    // distinct-scan job paid before the main action (A/B: bench q_deepest
-    // 2.59 -> 2.95 with probe+broadcast), while the checkpoint
-    // materializes the distinct ONCE for all pushed-down branches and
-    // ReusedExchange dedups their identical shuffle sides
-    if (g.labelRows(labels).exists(_ <= bcastRows)) broadcast(tails)
-    else tails.localCheckpoint(false)
+      .localCheckpoint(false)
+    if (g.labelRows(labels).exists(_ <= bcastRows)) broadcast(tails) else tails
   }
 
   /** fermor `deepest`: only elements with no further children (path-instances
-    * whose id has no outgoing hop). Anti-join against the edge tails. */
+    * whose id has no outgoing hop). Anti-join against the edge tails; with
+    * `acyclic`, a small slice replays on the driver ([[walkCounts]]). */
   def deepest(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int, acyclic: Boolean = false): DataFrame =
-    run(g, start, labels, forward, maxDepth, acyclic = acyclic)
-      .join(guardedTails(g, labels, forward), Seq("id"), "left_anti")
-      .select("id", "depth")
+    (if (acyclic) walkCounts(g, start, labels, forward, maxDepth, leaves = true) else None)
+      .getOrElse(run(g, start, labels, forward, maxDepth, acyclic = acyclic)
+        .join(guardedTails(g, labels, forward), Seq("id"), "left_anti")
+        .select("id", "depth"))
 
   /** fermor `deepest-paths`: like [[deepest]] but keeping the full path to
     * each terminal element (path-carrying mode, so no acyclic shortcut). */
@@ -166,11 +225,12 @@ object Descend {
 
   /** fermor `all-with-cycles` (core.clj:1112): like [[all]] but revisits are
     * allowed — the depth bound alone limits the walk, so every path instance
-    * within maxDepth is counted (bag semantics on cyclic graphs). */
+    * within maxDepth is counted (bag semantics on cyclic graphs). A small
+    * slice replays on the driver ([[walkCounts]]). */
   def allWithCycles(g: PropertyGraph, start: DataFrame, labels: Seq[String], forward: Boolean,
       maxDepth: Int): DataFrame =
-    run(g, start, labels, forward, maxDepth, allowCycles = true)
-      .select("id", "depth")
+    walkCounts(g, start, labels, forward, maxDepth, leaves = false)
+      .getOrElse(run(g, start, labels, forward, maxDepth, allowCycles = true).select("id", "depth"))
 
   /** fermor `all-paths` (core.clj:1138): every cycle-free path from start,
     * at every depth (not just the ones landing on a target — see

@@ -56,9 +56,11 @@ final case class PropertyGraph(
     * the registered exact count fits the shared row guard
     * [[graft.plans.Scale.bcastRows]] (guide §3.1): the hop join becomes a
     * map-side probe of the frontier — no |E|-slice exchange, no frontier
-    * exchange — and identical hinted subtrees share ONE broadcast build via
-    * ReusedExchange across a multi-hop chain. Unknown or over-guard sizes
-    * keep the shuffle plan untouched. */
+    * exchange. Over cached edges (Tpch's shareScans) every hop builds its
+    * own broadcast: Spark 4.1 plans each cached scan as a query stage of its
+    * own and reuses no exchange above one, so identical hinted slices in one
+    * plan are not shared. Unknown or over-guard sizes keep the shuffle plan
+    * untouched. */
   def labeledEdges(labels: Seq[String]): DataFrame = {
     val base = if (labels.isEmpty) edges else edges.where(col("label").isin(labels: _*))
     if (labelRows(labels).exists(_ <= graft.plans.Scale.bcastRows)) broadcast(base) else base
@@ -454,8 +456,8 @@ final case class PropertyGraph(
     def term(sv: String, lbl: Option[String], dv: String, undirected: Boolean,
         mn: Int, mx: Int): DataFrame = {
       // loader-counted small label slices broadcast: the cascade's keyed
-      // joins become map-side probes and identical hinted slices share one
-      // build (ReusedExchange); unknown/large slices keep the shuffle join
+      // joins become map-side probes, one build per term (no exchange is
+      // reused above a cached scan); unknown/large slices keep the shuffle join
       val e = labeledEdges(lbl.toSeq)
       def chain(len: Int): DataFrame = {
         // len-hop chain with internal join columns — Cypher's `*min..max`

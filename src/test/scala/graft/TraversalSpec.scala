@@ -661,6 +661,120 @@ class TraversalSpec extends AnyFunSuite with BeforeAndAfterAll {
       fd.groupBy("id", "depth").count().as[(Long, Int, Long)].collect().toSet)
   }
 
+  // -- Descend's driver replay against its distributed level loop ---------
+  // a diamond (1 -> {2, 3} -> 4), parallel edges 4 -> 5, a self-loop on 6,
+  // negative ids, and a second label; the seeds repeat 1 and name 99, which
+  // is on no edge
+  val replayEdges = Seq((1L, 2L, "a"), (1L, 3L, "a"), (2L, 4L, "a"), (3L, 4L, "a"),
+    (4L, 5L, "a"), (4L, 5L, "a"), (6L, 6L, "a"), (4L, 6L, "b"), (-7L, 1L, "a"),
+    (2L, -8L, "b"), (5L, -8L, "b"))
+  def edgeGraph(edges: DataFrame): PropertyGraph =
+    PropertyGraph(Map("n" -> edges.select(col("src").as("id"))), edges)
+  lazy val replayGraph = edgeGraph(replayEdges.toDF("src", "dst", "label"))
+  val walkOutlets: Seq[(String, (PropertyGraph, DataFrame, Seq[String], Boolean, Int) => DataFrame)] =
+    Seq(
+      "all" -> ((g, s, l, f, d) => Descend.all(g, s, l, f, d, acyclic = true)),
+      "deepest" -> ((g, s, l, f, d) => Descend.deepest(g, s, l, f, d, acyclic = true)),
+      "allWithCycles" -> ((g, s, l, f, d) => Descend.allWithCycles(g, s, l, f, d)))
+  def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+  def replayed(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  }
+  /** Each walk outlet under the session's guard against its distributed
+    * branch (every guard at 0): same rows as a multiset, same schema, and
+    * the replay taken iff `replays`. */
+  def replayParity(g: PropertyGraph, seeds: DataFrame, labels: Seq[String], forward: Boolean,
+      depth: Int, replays: Boolean = true): Unit =
+    walkOutlets.foreach { case (name, f) =>
+      val clue = s"$name labels=$labels forward=$forward maxDepth=$depth"
+      val got = f(g, seeds, labels, forward, depth)
+      val dist = TestSpark.withReplayLimit(0)(f(g, seeds, labels, forward, depth))
+      assert(replayed(got) === replays, clue)
+      assert(got.dtypes.toSeq === dist.dtypes.toSeq, clue)
+      assert(sortedRows(got) === sortedRows(dist), clue)
+    }
+
+  test("Descend replay: walk outlets == the distributed level loop, rows and schema") {
+    val seeds = Seq(1L, 1L, 99L, -7L, 6L).toDF("id")
+    for (forward <- Seq(true, false); labels <- Seq(Nil, Seq("a")); depth <- Seq(0, 1, 4))
+      replayParity(replayGraph, seeds, labels, forward, depth)
+    // int-typed ids and seeds: both branches emit (id bigint, depth int)
+    val intGraph = edgeGraph(replayEdges.map { case (s, d, l) => (s.toInt, d.toInt, l) }
+      .toDF("src", "dst", "label"))
+    for (forward <- Seq(true, false))
+      replayParity(intGraph, Seq(1, 1, 99, -7, 6).toDF("v"), Nil, forward, 4)
+    // the diamond gives two walks to 4, the parallel edges two per walk to 5
+    val all2 = Descend.all(replayGraph, Seq(1L).toDF("id"), Seq("a"), forward = true,
+      maxDepth = 3, acyclic = true).as[(Long, Int)].collect().toSeq
+    assert(all2.count(_ == (4L, 2)) === 2 && all2.count(_ == (5L, 3)) === 4)
+  }
+
+  test("Descend replay falls back on a null seed, an over-guard slice and an over-guard walk") {
+    replayParity(replayGraph, Seq(Some(1L), None).toDF("id"), Nil, forward = true, depth = 4,
+      replays = false)
+    // the slice (11 edges) past a guard of 5
+    assert(TestSpark.withReplayLimit(5)(
+      walkOutlets.forall { case (_, f) =>
+        !replayed(f(replayGraph, Seq(1L).toDF("id"), Nil, true, 4)) }))
+    // the slice fits a guard of 11, but the self-loop on 6 walks 21 rows
+    val (fellBack, rows) = TestSpark.withReplayLimit(replayEdges.size) {
+      val df = Descend.allWithCycles(replayGraph, Seq(6L).toDF("id"), Nil, forward = true,
+        maxDepth = 20)
+      (!replayed(df), sortedRows(df))
+    }
+    assert(fellBack && rows === (0 to 20).map(d => s"[6,$d]").sorted)
+  }
+
+  test("Descend job counts: deepest below the guard is two collects and the action") {
+    // the action is a noop write, as the benchmark times it
+    val seeds = Seq(1L, 1L, 99L).toDF("id")
+    val (_, replayJobs) = TestSpark.jobs(
+      Descend.deepest(replayGraph, seeds, Nil, forward = true, maxDepth = 4, acyclic = true)
+        .write.format("noop").mode("overwrite").save())
+    assert(replayJobs <= 3, s"$replayJobs jobs")
+  }
+
+  test("Descend job counts: distributed deepest builds its tails once") {
+    // every guard at 0, over a persisted, label-counted edge frame (the
+    // loader's shape): the final action's anti-join per level branch shares
+    // ONE broadcast build of the tails, and aggregates nothing itself
+    val tree = Seq((1L, 2L), (1L, 3L), (2L, 4L), (2L, 5L), (3L, 6L), (4L, 7L), (6L, 8L), (7L, 9L))
+    val edges = tree.map { case (s, d) => (s, d, "e") }.toDF("src", "dst", "label").persist()
+    try {
+      PropertyGraph.registerLabelRows(edges, edges.count(), Map("e" -> tree.size.toLong))
+      val g = PropertyGraph(Map("n" -> (1L to 9L).toDF("id")), edges)
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+      import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+      import org.apache.spark.sql.catalyst.plans.LeftAnti
+      def flat(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => p +: flat(a.executedPlan)
+        case q: QueryStageExec => p +: flat(q.plan)
+        case _ => p +: p.children.flatMap(flat)
+      }
+      val (rows, actionJobs, plan) = TestSpark.withReplayLimit(0) {
+        val df = Descend.deepest(g, Seq(1L).toDF("id"), Nil, forward = true, maxDepth = 4,
+          acyclic = true)
+        // df's own action, so its query execution holds the final plan
+        val (rows, jobs) = TestSpark.jobs(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
+        (rows, jobs, flat(df.queryExecution.executedPlan))
+      }
+      assert(rows === Set((5L, 2), (8L, 3), (9L, 4)))
+      // the two broadcasts (tails, edge slice) and the result
+      assert(actionJobs <= 3, s"$actionJobs jobs")
+      val antiBuilds = plan.collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => flat(j.right)
+      }
+      assert(antiBuilds.size >= 3, plan.head.toString)
+      assert(antiBuilds.count(!_.exists(_.isInstanceOf[ReusedExchangeExec])) === 1,
+        plan.head.toString)
+      assert(!plan.exists(_.isInstanceOf[HashAggregateExec]), plan.head.toString)
+    } finally edges.unpersist()
+  }
+
   test("fromTriples builds a graph whose vertex set is the distinct endpoints") {
     // fermor graph.clj `graph-from-triples`
     val t = Seq((1L, "knows", 2L, 5), (2L, "knows", 3L, 7), (1L, "likes", 3L, 1))
